@@ -171,13 +171,16 @@ def _split_top_commas(s: str) -> list[str]:
 
 # -- pattern parsing ---------------------------------------------------------
 
+# an inline property map; quoted values may hold braces (Sysmon GUIDs
+# are written '{...}')
+_MAP = r"\{(?:[^}'\"]|'[^']*'|\"[^\"]*\")*\}"
 _NODE_RE = re.compile(
     r"\(\s*(?P<var>\w+)?\s*(?::\s*(?P<label>\w+|`[^`]+`))?\s*"
-    r"(?P<props>\{[^}]*\})?\s*\)"
+    rf"(?P<props>{_MAP})?\s*\)"
 )
 _EDGE_RE = re.compile(
     r"(?P<back><)?-\s*\[\s*(?:(?P<ev>\w+))?\s*:\s*(?P<rel>\w+|`[^`]+`)\s*"
-    r"(?P<vspec>\*[\d.\s]*)?\s*(?P<eprops>\{[^}]*\})?\s*\]\s*-(?P<fwd>>)?"
+    rf"(?P<vspec>\*[\d.\s]*)?\s*(?P<eprops>{_MAP})?\s*\]\s*-(?P<fwd>>)?"
 )
 
 

@@ -31,18 +31,24 @@ Semantics replicated exactly (see SURVEY.md §1.3, §2.3):
 * **POSIX basename** — ``Image`` split on ``/`` only; backslashed
   Windows paths keep the full string (events.py:282).
 
-Scale notes: the span DataFrame is persisted once and re-read by ~22
-narrow projections (filter+project, no shuffle each); all conflict
-resolution happens in 3 shuffles total (process-key window, edge
-window, simple-node distinct).  At 100 TB the persist becomes a parquet
-staging write; everything else is unchanged.
+Scale notes: the span DataFrame, with every tag the routes read
+projected once, is persisted and read by three route tables — process
+writes, edges, simple nodes.  Each table is a list of ``(condition,
+row)`` entries emitted by ONE ``Generate`` over the cache (no shuffle),
+so a span reaches all of its routes in a single pass and the plan does
+not grow with the number of routes.  Only the WMI/registry-value write
+selects and the BIND_TO join read the cache on their own.  Conflict
+resolution is window/distinct shuffles over the generated rows
+(process-key window, edge-identity window, simple-node distinct).  At
+100 TB the persist becomes a parquet staging write; everything else is
+unchanged.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -84,6 +90,9 @@ class PropertyGraph:
     wmi_consumer: DataFrame  # name, command
     simple: DataFrame  # label, key
     edges: DataFrame  # rel, src, dst, <EDGE_PROPS>
+    # caches the build persisted and the tables read through (span
+    # cache, parsed traces); released by :meth:`unpersist`
+    held: list[DataFrame] = field(default_factory=list)
 
     def nodes(self) -> DataFrame:
         """Unified ``(label, key)`` view over every node table."""
@@ -156,18 +165,15 @@ class PropertyGraph:
             )
 
     def unpersist(self) -> None:
-        pass
+        """Release the caches the build persisted.  The tables stay
+        usable: a later action recomputes from the source."""
+        for df in self.held:
+            df.unpersist()
+        self.held.clear()
 
 
 def _null(tpe: str = "string") -> Column:
     return F.lit(None).cast(tpe)
-
-
-def _edge_row(rel: str, src: Column, dst: Column, **props: Column) -> list[Column]:
-    cols = [F.lit(rel).alias("rel"), src.alias("src"), dst.alias("dst"), F.col("ord")]
-    for name, tpe in EDGE_PROPS:
-        cols.append(props.get(name, _null(tpe)).alias(name))
-    return cols
 
 
 def _derive(spans: DataFrame) -> DataFrame:
@@ -228,6 +234,15 @@ def _derive(spans: DataFrame) -> DataFrame:
     )
 
 
+def _route(df: DataFrame, table: list[tuple[Column, Column]], *carry: str) -> DataFrame:
+    """Emit, beside the ``carry`` columns, the struct of every
+    ``(condition, struct)`` entry whose condition holds on a row — one
+    ``Generate`` over ``df``, so a span reaches all of its routes in a
+    single pass instead of one filter+select branch per route."""
+    hits = F.filter(F.array(*[F.when(c, s) for c, s in table]), lambda x: x.isNotNull())
+    return df.select(*carry, F.inline(hits))
+
+
 def build_graph_from_spans(traces: DataFrame, spans: DataFrame) -> PropertyGraph:
     return _build_graph_from_derived(traces, _derive(spans))
 
@@ -235,60 +250,84 @@ def build_graph_from_spans(traces: DataFrame, spans: DataFrame) -> PropertyGraph
 def _build_graph_from_derived(traces: DataFrame, derived: DataFrame) -> PropertyGraph:
     """Graph build over an already-derived span DF (the output of
     :func:`_derive`, possibly round-tripped through a parquet stage)."""
-    d = derived.persist()
-    # ~22 event branches each scan this cache; right-size partitions to
-    # ~50k spans apiece so small corpora don't pay 22 × n_partitions of
-    # task overhead (a no-op at real scale, where spans >> 50k/partition)
-    n_spans = d.count()
-    current = d.rdd.getNumPartitions()
-    target = max(1, min(current, n_spans // 50_000 + 1))
-    if target < current:
-        d = d.coalesce(target)
     t = F.col("tags")
+    # the per-event tag reads, projected once beside the routing columns
+    cached = derived.select(
+        "*",
+        tag(t, "TargetFilename", "Path").alias("target"),
+        tag(t, "DestinationIp", "dst_ip").alias("dip"),
+        tag(t, "DestinationPort", "dst_port").alias("dport"),
+        t["Protocol"].alias("proto"),
+        F.lower(t["DestinationHostname"]).alias("dhost"),
+        tag(t, "ImageLoaded", "Image").alias("img_loaded"),
+        t["Device"].alias("device"),
+        t["GrantedAccess"].alias("granted_access"),
+        t["TargetObject"].alias("tobj"),
+        F.lower(F.coalesce(t["EventType"], F.lit(""))).alias("etype_l"),
+        reg_key_path(t["TargetObject"]).alias("kp"),
+        reg_value_name(t["TargetObject"]).alias("vn"),
+        tag(t, "NewName", "NewDetails").alias("new_name"),
+        tag(t, "StreamName", "Stream").alias("stream"),
+        tag(t, "Hash", "Hashes").alias("hash"),
+        tag(t, "PipeName", "Pipe").alias("pname"),
+        tag(t, "Details", "Info").alias("details"),
+    ).persist()
+    # the route generators and the WMI/registry-value selects each scan
+    # this cache; right-size partitions to ~50k spans apiece so small
+    # corpora don't pay a task per tiny partition per scan (a no-op at
+    # real scale, where spans >> 50k/partition)
+    n_spans = cached.count()
+    d = cached
+    current = d.rdd.getNumPartitions()
+    target_parts = max(1, min(current, n_spans // 50_000 + 1))
+    if target_parts < current:
+        d = d.coalesce(target_parts)
+
+    c = F.col
+    # every write, node and edge below hangs off a span's process key
+    d = d.filter(c("pkey").isNotNull())
+    ev, evp, pkey = c("ev"), c("ev_long"), c("pkey")
+    target, tobj, new_name = c("target"), c("tobj"), c("new_name")
+    null = _null()
+    # built once, shared by every edge route that leaves a prop unset
+    nulls = {name: _null(tpe).alias(name) for name, tpe in EDGE_PROPS}
+
+    def on(*ids: str) -> Column:
+        return ev.isin(*ids)
+
+    def has(*names: str) -> Column:
+        return reduce(Column.__and__, [c(n).isNotNull() for n in names])
 
     # ------------------------------------------------------------------
     # Process writes: main span + parent stub + event-8/10/25 target stub
     # (each CYPHER["process"] call also MERGEs Trace-[:HAS_PROCESS]->p).
-    # seq encodes statement order within one span for upsert resolution.
+    # seq encodes statement order within one span for upsert resolution;
+    # the parent stub passes ProcessGuid=pguid (NULL on the ppid path),
+    # everything else NULL (events.py:312-317).
     # ------------------------------------------------------------------
-    def pw(df: DataFrame, seq: int, key: Column, guid: Column, pguid: Column,
-           image: Column, cmd: Column) -> DataFrame:
-        return df.select(
-            F.struct(
-                F.col("ord.file"), F.col("ord.start_time"), F.col("ord.span_idx"),
-                F.lit(seq).alias("seq"),
-            ).alias("word"),
-            key.alias("key"),
-            F.col("trace_id"),
-            guid.alias("w_guid"),
-            pguid.alias("w_pguid"),
-            image.alias("w_image"),
-            cmd.alias("w_cmd"),
+    is_parent = has("parent_key")
+    is_target = on("8", "10", "25") & has("dst_key")
+
+    def pw(seq: int, key: str, guid: str, pguid: Column = null,
+           image: Column = null, cmd: Column = null) -> Column:
+        return F.struct(
+            F.lit(seq).alias("seq"), c(key).alias("key"), c(guid).alias("w_guid"),
+            pguid.alias("w_pguid"), image.alias("w_image"), cmd.alias("w_cmd"),
         )
 
-    has_pkey = d.filter(F.col("pkey").isNotNull())
-    main_w = pw(has_pkey, 0, F.col("pkey"), F.col("guid"), F.col("pguid"),
-                F.col("image"), F.col("cmd"))
-    # parent stub passes ProcessGuid=pguid (NULL on the ppid path),
-    # everything else NULL (events.py:312-317)
-    parent_w = pw(
-        has_pkey.filter(F.col("parent_key").isNotNull()), 1,
-        F.col("parent_key"), F.col("pguid"), _null(), _null(), _null(),
-    )
-    target_w = pw(
-        d.filter(F.col("ev").isin("8", "10", "25")
-                 & F.col("pkey").isNotNull() & F.col("dst_key").isNotNull()),
-        2, F.col("dst_key"), F.col("dst_guid"), _null(), _null(), _null(),
-    )
-    writes = main_w.unionByName(parent_w).unionByName(target_w)
+    writes = _route(d, [
+        (F.lit(True), pw(0, "pkey", "guid", c("pguid"), c("image"), c("cmd"))),
+        (is_parent, pw(1, "parent_key", "pguid")),
+        (is_target, pw(2, "dst_key", "dst_guid")),
+    ], "ord")
 
-    wk = Window.partitionBy("key").orderBy("word")
+    wk = Window.partitionBy("key").orderBy("ord", "seq")
     wk_all = wk.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     rn = F.row_number().over(wk)
     # ON CREATE SET omits ProcessGuid/ParentProcessGuid → the creating
     # write's values are dropped (events.py:80-88)
-    guid_eff = F.when(rn == 1, _null()).otherwise(F.col("w_guid"))
-    pguid_eff = F.when(rn == 1, _null()).otherwise(F.col("w_pguid"))
+    guid_eff = F.when(rn == 1, null).otherwise(F.col("w_guid"))
+    pguid_eff = F.when(rn == 1, null).otherwise(F.col("w_pguid"))
     process = (
         writes.withColumn("process_guid", F.last(guid_eff, ignorenulls=True).over(wk_all))
         .withColumn("parent_process_guid", F.last(pguid_eff, ignorenulls=True).over(wk_all))
@@ -299,163 +338,123 @@ def _build_graph_from_derived(traces: DataFrame, derived: DataFrame) -> Property
         .dropDuplicates(["key"])
     )
 
-    has_process = writes.select(
-        F.lit("HAS_PROCESS").alias("rel"),
-        F.col("trace_id").alias("src"),
-        F.col("key").alias("dst"),
-        F.struct(
-            F.col("word.file").alias("file"),
-            F.col("word.start_time").alias("start_time"),
-            F.col("word.span_idx").alias("span_idx"),
-        ).alias("ord"),
-        *[_null(tpe).alias(name) for name, tpe in EDGE_PROPS],
-    )
-    spawns = has_pkey.filter(F.col("parent_key").isNotNull()).select(
-        *_edge_row("SPAWNS", F.col("parent_key"), F.col("pkey"))
-    )
+    # ------------------------------------------------------------------
+    # Event routes (events.py:321-504): one (condition, row) entry per
+    # MERGE the reference issues for a span of that event.
+    # ------------------------------------------------------------------
+    def edge(rel: str, src: Column, dst: Column, **props: Column) -> Column:
+        return F.struct(
+            F.lit(rel).alias("rel"), src.alias("src"), dst.alias("dst"),
+            *[props[name].alias(name) if name in props else col
+              for name, col in nulls.items()],
+        )
 
-    # ------------------------------------------------------------------
-    # Event-specific branches (events.py:321-504)
-    # ------------------------------------------------------------------
-    evp = F.col("ev_long")
-    simple_nodes: list[DataFrame] = [
-        traces.select(F.lit("Trace").alias("label"), F.col("trace_id").alias("key"))
+    net = {"event_id": evp, "proto": c("proto"), "dport": c("dport")}
+    renamed = on("14") & has("tobj", "new_name")
+    edge_routes = [
+        (F.lit(True), edge("HAS_PROCESS", c("trace_id"), pkey)),
+        (is_parent, edge("HAS_PROCESS", c("trace_id"), c("parent_key"))),
+        (is_target, edge("HAS_PROCESS", c("trace_id"), c("dst_key"))),
+        (is_parent, edge("SPAWNS", c("parent_key"), pkey)),
+        # 2: FileCreateTime changed
+        (on("2") & has("target"), edge("MODIFIED_FILE_TIME", pkey, target,
+                                       event_id=evp, what=F.lit("CreationTime"))),
+        # 3: NetworkConnect — ip row and (lowercased) hostname row
+        (on("3") & has("dip"), edge("CONNECTED_TO", pkey, c("dip"), **net)),
+        (on("3") & has("dhost"), edge("CONNECTED_TO", pkey, c("dhost"), **net)),
+        # 6 / 7: driver / module load
+        (on("6") & has("img_loaded"),
+         edge("LOADED_DRIVER", pkey, c("img_loaded"), event_id=evp)),
+        (on("7") & has("img_loaded"),
+         edge("LOADED_MODULE", pkey, c("img_loaded"), event_id=evp)),
+        # 8: CreateRemoteThread (target Process stub is a process write)
+        (on("8") & has("dst_key"),
+         edge("INJECTED_THREAD", pkey, c("dst_key"), event_id=evp)),
+        # 9: RawAccessRead
+        (on("9") & has("device"), edge("RAW_READ", pkey, c("device"), event_id=evp)),
+        # 10: ProcessAccess
+        (on("10") & has("dst_key"), edge("ACCESSED_PROCESS", pkey, c("dst_key"),
+                                         event_id=evp, granted_access=c("granted_access"))),
+        # 11: FileCreate
+        (on("11") & has("target"), edge("CREATED_FILE", pkey, target, event_id=evp)),
+        # 12: RegistryKey create/delete — EventType prefix routing; note
+        # "DeleteValue" also lands on DELETED_REG_KEY (reference quirk,
+        # events.py:395-405)
+        (on("12") & has("tobj") & c("etype_l").startswith("create"),
+         edge("CREATED_REG_KEY", pkey, tobj, event_id=evp)),
+        (on("12") & has("tobj") & c("etype_l").startswith("delete"),
+         edge("DELETED_REG_KEY", pkey, tobj, event_id=evp)),
+        # 13: RegistryValueSet — TargetObject splits into key path + value name
+        (on("13") & has("tobj", "kp"), edge("UNDER_KEY", tobj, c("kp"))),
+        (on("13") & has("tobj"),
+         edge("SET_REG_VALUE", pkey, tobj, event_id=evp, value_name=c("vn"))),
+        # 14: Registry rename.  NOTE deliberate parity-by-omission: the
+        # reference ships a RENAMED_REG_VALUE Cypher template
+        # (events.py:231-238) but its event-14 handler only
+        # ever calls renamed_reg_key (events.py:420-427) — the value-rename
+        # template is dead code, so no RENAMED_REG_VALUE edge exists here
+        # either.
+        (renamed, edge("RENAMED_REG_KEY", pkey, new_name, event_id=evp)),
+        (renamed, edge("RENAMED_TO", tobj, new_name)),
+        # 15: FileCreateStreamHash
+        (on("15") & has("target"), edge("CREATED_STREAM", pkey, target, event_id=evp,
+                                        stream=c("stream"), hash=c("hash"))),
+        # 17 / 18: pipes
+        (on("17") & has("pname"), edge("CREATED_PIPE", pkey, c("pname"), event_id=evp)),
+        (on("18") & has("pname"), edge("CONNECTED_PIPE", pkey, c("pname"), event_id=evp)),
+        # 23 / 26: FileDelete
+        (on("23", "26") & has("target"), edge("DELETED_FILE", pkey, target, event_id=evp)),
+        # 25: ProcessTampering (details keeps old when new is NULL)
+        (on("25") & has("dst_key"), edge("TAMPERED", pkey, c("dst_key"),
+                                         event_id=evp, details=c("details"))),
+        # 27 / 29: executable blocked / detected
+        (on("27") & has("target"), edge("CREATED_EXECUTABLE", pkey, target,
+                                        event_id=evp, mode=F.lit("blocked"))),
+        (on("29") & has("target"), edge("CREATED_EXECUTABLE", pkey, target,
+                                        event_id=evp, mode=F.lit("detected"))),
     ]
-    edge_parts: list[DataFrame] = [spawns]
 
-    def node(df: DataFrame, label: str, key: Column) -> None:
-        simple_nodes.append(df.select(F.lit(label).alias("label"), key.alias("key")))
+    def node(label: str, key: Column) -> Column:
+        return F.struct(F.lit(label).alias("label"), key.alias("key"))
 
-    def edge(df: DataFrame, rel: str, src: Column, dst: Column, **props: Column) -> None:
-        edge_parts.append(df.select(*_edge_row(rel, src, dst, **props)))
+    node_routes = [
+        (on("2", "11", "15", "23", "26", "27", "29") & has("target"), node("File", target)),
+        (on("3") & has("dip"), node("Ip", c("dip"))),
+        (on("3") & has("dhost"), node("Ip", c("dhost"))),
+        (on("6", "7") & has("img_loaded"), node("File", c("img_loaded"))),
+        (on("9") & has("device"), node("Device", c("device"))),
+        (on("12") & has("tobj"), node("RegistryKey", tobj)),
+        (on("13") & has("tobj", "kp"), node("RegistryKey", c("kp"))),
+        (renamed, node("RegistryKey", tobj)),
+        (renamed, node("RegistryKey", new_name)),
+        (on("17", "18") & has("pname"), node("Pipe", c("pname"))),
+    ]
 
-    target = tag(t, "TargetFilename", "Path")
-
-    # 2: FileCreateTime changed
-    e2 = d.filter((F.col("ev") == "2") & F.col("pkey").isNotNull() & target.isNotNull())
-    node(e2, "File", target)
-    edge(e2, "MODIFIED_FILE_TIME", F.col("pkey"), target,
-         event_id=evp, what=F.lit("CreationTime"))
-
-    # 3: NetworkConnect — ip row and (lowercased) hostname row
-    e3 = d.filter((F.col("ev") == "3") & F.col("pkey").isNotNull())
-    dip = tag(t, "DestinationIp", "dst_ip")
-    dport = tag(t, "DestinationPort", "dst_port")
-    proto = t["Protocol"]
-    dhost_l = F.lower(t["DestinationHostname"])
-    e3ip = e3.filter(dip.isNotNull())
-    node(e3ip, "Ip", dip)
-    edge(e3ip, "CONNECTED_TO", F.col("pkey"), dip, event_id=evp, proto=proto, dport=dport)
-    e3host = e3.filter(t["DestinationHostname"].isNotNull())
-    node(e3host, "Ip", dhost_l)
-    edge(e3host, "CONNECTED_TO", F.col("pkey"), dhost_l,
-         event_id=evp, proto=proto, dport=dport)
-
-    # 6 / 7: driver / module load
-    img_loaded = tag(t, "ImageLoaded", "Image")
-    for ev_id, rel in (("6", "LOADED_DRIVER"), ("7", "LOADED_MODULE")):
-        e = d.filter((F.col("ev") == ev_id) & F.col("pkey").isNotNull()
-                     & img_loaded.isNotNull())
-        node(e, "File", img_loaded)
-        edge(e, rel, F.col("pkey"), img_loaded, event_id=evp)
-
-    # 8: CreateRemoteThread (target Process stub already in `writes`)
-    e8 = d.filter((F.col("ev") == "8") & F.col("pkey").isNotNull()
-                  & F.col("dst_key").isNotNull())
-    edge(e8, "INJECTED_THREAD", F.col("pkey"), F.col("dst_key"), event_id=evp)
-
-    # 9: RawAccessRead
-    e9 = d.filter((F.col("ev") == "9") & F.col("pkey").isNotNull()
-                  & t["Device"].isNotNull())
-    node(e9, "Device", t["Device"])
-    edge(e9, "RAW_READ", F.col("pkey"), t["Device"], event_id=evp)
-
-    # 10: ProcessAccess
-    e10 = d.filter((F.col("ev") == "10") & F.col("pkey").isNotNull()
-                   & F.col("dst_key").isNotNull())
-    edge(e10, "ACCESSED_PROCESS", F.col("pkey"), F.col("dst_key"),
-         event_id=evp, granted_access=t["GrantedAccess"])
-
-    # 11: FileCreate
-    e11 = d.filter((F.col("ev") == "11") & F.col("pkey").isNotNull() & target.isNotNull())
-    node(e11, "File", target)
-    edge(e11, "CREATED_FILE", F.col("pkey"), target, event_id=evp)
-
-    # 12: RegistryKey create/delete — EventType prefix routing; note
-    # "DeleteValue" also lands on DELETED_REG_KEY (reference quirk,
-    # events.py:395-405)
-    e12 = d.filter((F.col("ev") == "12") & F.col("pkey").isNotNull()
-                   & t["TargetObject"].isNotNull())
-    etype_l = F.lower(F.coalesce(t["EventType"], F.lit("")))
-    node(e12, "RegistryKey", t["TargetObject"])
-    edge(e12.filter(etype_l.startswith("create")), "CREATED_REG_KEY",
-         F.col("pkey"), t["TargetObject"], event_id=evp)
-    edge(e12.filter(etype_l.startswith("delete")), "DELETED_REG_KEY",
-         F.col("pkey"), t["TargetObject"], event_id=evp)
-
-    # 13: RegistryValueSet — TargetObject splits into key path + value name
-    e13 = d.filter((F.col("ev") == "13") & F.col("pkey").isNotNull()
-                   & t["TargetObject"].isNotNull())
-    kp = reg_key_path(t["TargetObject"])
-    vn = reg_value_name(t["TargetObject"])
-    node(e13.filter(kp.isNotNull()), "RegistryKey", kp)
-    reg_value_writes = e13.select(
-        t["TargetObject"].alias("path"), vn.alias("w_value_name"), F.col("ord"))
-    edge(e13.filter(kp.isNotNull()), "UNDER_KEY", t["TargetObject"], kp)
-    edge(e13, "SET_REG_VALUE", F.col("pkey"), t["TargetObject"],
-         event_id=evp, value_name=vn)
-
-    # 14: Registry rename.  NOTE deliberate parity-by-omission: the
-    # reference ships a RENAMED_REG_VALUE Cypher template
-    # (/root/reference/events.py:231-238) but its event-14 handler only
-    # ever calls renamed_reg_key (events.py:420-427) — the value-rename
-    # template is dead code, so no RENAMED_REG_VALUE edge exists here
-    # either.
-    e14 = d.filter((F.col("ev") == "14") & F.col("pkey").isNotNull()
-                   & t["TargetObject"].isNotNull()
-                   & tag(t, "NewName", "NewDetails").isNotNull())
-    new_name = tag(t, "NewName", "NewDetails")
-    node(e14, "RegistryKey", t["TargetObject"])
-    node(e14, "RegistryKey", new_name)
-    edge(e14, "RENAMED_REG_KEY", F.col("pkey"), new_name, event_id=evp)
-    edge(e14, "RENAMED_TO", t["TargetObject"], new_name)
-
-    # 15: FileCreateStreamHash
-    e15 = d.filter((F.col("ev") == "15") & F.col("pkey").isNotNull() & target.isNotNull())
-    node(e15, "File", target)
-    edge(e15, "CREATED_STREAM", F.col("pkey"), target, event_id=evp,
-         stream=tag(t, "StreamName", "Stream"), hash=tag(t, "Hash", "Hashes"))
-
-    # 17 / 18: pipes
-    pname = tag(t, "PipeName", "Pipe")
-    for ev_id, rel in (("17", "CREATED_PIPE"), ("18", "CONNECTED_PIPE")):
-        e = d.filter((F.col("ev") == ev_id) & F.col("pkey").isNotNull()
-                     & pname.isNotNull())
-        node(e, "Pipe", pname)
-        edge(e, rel, F.col("pkey"), pname, event_id=evp)
+    # 13: RegistryValue writes
+    reg_value_writes = d.filter(on("13") & has("tobj")).select(
+        tobj.alias("path"), c("vn").alias("w_value_name"), "ord")
 
     # 19 / 20: WMI filter / consumer nodes (props last-non-null via
     # SET x = coalesce($new, x))
-    e19 = d.filter((F.col("ev") == "19") & F.col("pkey").isNotNull()
-                   & tag(t, "FilterName", "Name", "EventFilterName").isNotNull())
-    wmi_filter_writes = e19.select(
+    wmi_filter_writes = d.filter(
+        on("19") & tag(t, "FilterName", "Name", "EventFilterName").isNotNull()
+    ).select(
         tag(t, "FilterName", "Name", "EventFilterName").alias("name"),
-        tag(t, "Query", "QueryName").alias("w_query"), F.col("ord"))
-    e20 = d.filter((F.col("ev") == "20") & F.col("pkey").isNotNull()
-                   & tag(t, "ConsumerName", "Name", "Consumer").isNotNull())
-    wmi_consumer_writes = e20.select(
+        tag(t, "Query", "QueryName").alias("w_query"), "ord")
+    wmi_consumer_writes = d.filter(
+        on("20") & tag(t, "ConsumerName", "Name", "Consumer").isNotNull()
+    ).select(
         tag(t, "ConsumerName", "Name", "Consumer").alias("name"),
-        tag(t, "CommandLine", "Command").alias("w_command"), F.col("ord"))
+        tag(t, "CommandLine", "Command").alias("w_command"), "ord")
 
     # 21: BIND_TO — MATCH (not MERGE) on both endpoints: the edge only
     # lands if both nodes exist *earlier* in the stream (events.py:155-160)
-    e21 = d.filter((F.col("ev") == "21") & F.col("pkey").isNotNull()
-                   & tag(t, "FilterName", "Filter").isNotNull()
-                   & tag(t, "ConsumerName", "Consumer").isNotNull())
-    bind_candidates = e21.select(
+    bind_candidates = d.filter(
+        on("21") & tag(t, "FilterName", "Filter").isNotNull()
+        & tag(t, "ConsumerName", "Consumer").isNotNull()
+    ).select(
         tag(t, "FilterName", "Filter").alias("f_name"),
-        tag(t, "ConsumerName", "Consumer").alias("c_name"),
-        F.col("ord"), evp.alias("event_id"))
+        tag(t, "ConsumerName", "Consumer").alias("c_name"), "ord", evp.alias("event_id"))
     f_first = wmi_filter_writes.groupBy("name").agg(F.min("ord").alias("f_first"))
     c_first = wmi_consumer_writes.groupBy("name").agg(F.min("ord").alias("c_first"))
     binds = (
@@ -463,34 +462,15 @@ def _build_graph_from_derived(traces: DataFrame, derived: DataFrame) -> Property
         .join(F.broadcast(f_first), bind_candidates["f_name"] == f_first["name"])
         .join(F.broadcast(c_first), bind_candidates["c_name"] == c_first["name"])
         .filter((F.col("f_first") < F.col("ord")) & (F.col("c_first") < F.col("ord")))
+        .select("ord", edge("BIND_TO", c("f_name"), c("c_name"),
+                            event_id=c("event_id")).alias("e"))
+        .select("ord", "e.*")
     )
-    edge_parts.append(binds.select(*_edge_row(
-        "BIND_TO", F.col("f_name"), F.col("c_name"), event_id=F.col("event_id"))))
-
-    # 23 / 26: FileDelete
-    e23 = d.filter(F.col("ev").isin("23", "26") & F.col("pkey").isNotNull()
-                   & target.isNotNull())
-    node(e23, "File", target)
-    edge(e23, "DELETED_FILE", F.col("pkey"), target, event_id=evp)
-
-    # 25: ProcessTampering (details keeps old when new is NULL)
-    e25 = d.filter((F.col("ev") == "25") & F.col("pkey").isNotNull()
-                   & F.col("dst_key").isNotNull())
-    edge(e25, "TAMPERED", F.col("pkey"), F.col("dst_key"),
-         event_id=evp, details=tag(t, "Details", "Info"))
-
-    # 27 / 29: executable blocked / detected
-    for ev_id, mode in (("27", "blocked"), ("29", "detected")):
-        e = d.filter((F.col("ev") == ev_id) & F.col("pkey").isNotNull()
-                     & target.isNotNull())
-        node(e, "File", target)
-        edge(e, "CREATED_EXECUTABLE", F.col("pkey"), target,
-             event_id=evp, mode=F.lit(mode))
 
     # ------------------------------------------------------------------
     # Conflict resolution + dedup
     # ------------------------------------------------------------------
-    edges_all = reduce(DataFrame.unionByName, edge_parts + [has_process])
+    edges_all = _route(d, edge_routes, "ord").unionByName(binds)
     we = Window.partitionBy("rel", "src", "dst").orderBy("ord")
     we_all = we.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     prop_cols = [
@@ -505,7 +485,8 @@ def _build_graph_from_derived(traces: DataFrame, derived: DataFrame) -> Property
     )
 
     simple = (
-        reduce(DataFrame.unionByName, simple_nodes)
+        traces.select(F.lit("Trace").alias("label"), F.col("trace_id").alias("key"))
+        .unionByName(_route(d, node_routes))
         .filter(F.col("key").isNotNull())
         .distinct()
     )
@@ -535,6 +516,7 @@ def _build_graph_from_derived(traces: DataFrame, derived: DataFrame) -> Property
         wmi_consumer=_wmi(wmi_consumer_writes, "w_command", "command"),
         simple=simple,
         edges=edges,
+        held=[cached],
     )
 
 
@@ -607,4 +589,6 @@ def build_graph(
         return _build_graph_from_derived(traces, derived)
 
     traces = read_traces(spark, path).persist()
-    return build_graph_from_spans(traces, spans_from_traces(traces))
+    g = build_graph_from_spans(traces, spans_from_traces(traces))
+    g.held.append(traces)
+    return g

@@ -113,6 +113,7 @@ def stream_graph_ingest(
             df.select("*", bid).write.mode("append").partitionBy(
                 "batch_id"
             ).parquet(f"{log_path}/{name}")
+        g.unpersist()  # the batch's span cache would outlive it otherwise
 
     stream = stream_spans(spark, input_path)
     writer = stream.writeStream.foreachBatch(process_batch).option(

@@ -191,6 +191,39 @@ def test_shortest_path_composes_with_match(gq):
     }
 
 
+def test_braced_guid_keys_in_property_maps(spark):
+    """Sysmon writes process GUIDs as ``{...}`` and the ingest keys
+    Process nodes by them verbatim, so a quoted ``}`` inside a property
+    map must not end the map: keyed lookups, edge-property maps and
+    both shortestPath endpoints take such literals."""
+    g1 = "{0d9f3a51-7b2e-5f21-0000-0010aa6b0a00}"
+    g2 = "{0d9f3a51-7b2e-5f21-0000-0010bb6b0a00}"
+    g3 = "{0d9f3a51-7b2e-5f21-0000-0010cc6b0a00}"
+    gq = GraphQuery(
+        nodes=spark.createDataFrame(
+            [("Process", g1), ("Process", g2), ("Process", g3)], ["label", "key"]
+        ),
+        edges=spark.createDataFrame(
+            [("SPAWNS", g1, g2, "{a}"), ("SPAWNS", g2, g3, "b")],
+            ["rel", "src", "dst", "tag"],
+        ),
+    )
+    rows = cypher(
+        gq, f"MATCH (a:Process {{key: '{g1}'}})-[:SPAWNS]->(b) RETURN a, b"
+    ).collect()
+    assert [(r.a, r.b) for r in rows] == [(g1, g2)]
+    rows = cypher(
+        gq, "MATCH (a)-[e:SPAWNS {tag: '{a}'}]->(b) RETURN b"
+    ).collect()
+    assert [r.b for r in rows] == [g2]
+    rows = cypher(
+        gq,
+        f"MATCH p = shortestPath((a {{key: '{g1}'}})-[:SPAWNS*]->(b {{key: '{g3}'}})) "
+        "RETURN b, p, length(p) AS hops",
+    ).collect()
+    assert [(r.b, list(r.p), r.hops) for r in rows] == [(g3, [g1, g2, g3], 2)]
+
+
 def test_shortest_path_bounds_and_errors(gq):
     # upper bound cuts the 2-hop path
     rows = cypher(

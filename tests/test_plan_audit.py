@@ -146,6 +146,82 @@ def test_graph_rel_filter_prunes_partitions(spark, tmp_path):
     assert "PartitionFilters" in plan and "rel" in plan.split("PartitionFilters")[1][:200]
 
 
+def _write_small_traces(tmp_path) -> str:
+    """Two tiny Jaeger/Sysmon trace files (process create, file create,
+    network connect); returns their glob."""
+    import json
+
+    def span(start, **tags):
+        return {"spanID": "s", "startTime": start, "tags": [
+            {"key": k, "type": "int64" if isinstance(v, int) else "string",
+             "value": v} for k, v in tags.items()]}
+
+    for i in range(2):
+        doc = {"traceID": f"t{i}", "spans": [
+            span(0, ID=1, ProcessGuid=f"G{i}", ParentProcessGuid="P",
+                 Image="C:\\w\\a.exe"),
+            span(1, ID=11, ProcessGuid=f"G{i}", TargetFilename=f"C:\\f{i}"),
+            span(2, ID=3, ProcessGuid=f"G{i}", DestinationIp="1.2.3.4"),
+        ]}
+        (tmp_path / f"t{i}.json").write_text(json.dumps(doc))
+    return f"{tmp_path}/*.json"
+
+
+def test_ingest_routes_each_table_in_one_generate(spark, tmp_path):
+    """The ingest routes every span through ONE Generate per graph
+    table over the span cache: the optimized plans of ``edges`` and
+    ``simple`` each hold exactly one Generate, it reads the cache, and
+    no Union has more than 3 children — so the router cannot grow back
+    into one filter+select branch per event route."""
+    from graphdb_neo4j_spark.operators.ingest import build_graph
+    from graphdb_neo4j_spark.plans.audit import _jchildren
+
+    def nodes_named(root, name):
+        out, stack = [], [root]
+        while stack:
+            n = stack.pop()
+            if n.nodeName() == name:
+                out.append(n)
+            stack.extend(_jchildren(n))
+        return out
+
+    g = build_graph(spark, _write_small_traces(tmp_path))
+    try:
+        for table, df in (("edges", g.edges), ("simple", g.simple)):
+            root = df._jdf.queryExecution().optimizedPlan()
+            gens = nodes_named(root, "Generate")
+            assert len(gens) == 1, (table, root.toString())
+            assert nodes_named(gens[0], "InMemoryRelation"), (table, root.toString())
+            widths = [len(_jchildren(u)) for u in nodes_named(root, "Union")]
+            assert max(widths, default=0) <= 3, (table, widths)
+    finally:
+        g.unpersist()
+
+
+def test_build_graph_unpersist_releases_its_caches(spark, tmp_path):
+    """Release contract: ``build_graph`` persists the parsed traces and
+    the span cache; ``PropertyGraph.unpersist()`` frees both, and the
+    tables still answer afterwards (recomputed from the source)."""
+    from graphdb_neo4j_spark.operators.ingest import build_graph
+
+    def persistent_ids() -> set[int]:
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next())
+        return ids
+
+    # compare ID sets, not counts: the ContextCleaner may release an
+    # earlier test's blocks mid-test
+    before = persistent_ids()
+    g = build_graph(spark, _write_small_traces(tmp_path))
+    n_edges = g.edges.count()
+    assert len(persistent_ids() - before) == 2
+    g.unpersist()
+    assert not persistent_ids() - before
+    assert g.edges.count() == n_edges
+
+
 def test_q40_grouping_sets_single_expand(spark):
     """GROUPING SETS must plan as ONE Expand + one aggregate over one
     scan — not a union of four groupBys."""

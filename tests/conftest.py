@@ -1,8 +1,15 @@
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from graphdb_neo4j_spark import get_spark
+
+# the reference's ATT&CK detonation corpus (1,202 Jaeger trace files);
+# tests that assert its content skip where it is absent
+REFERENCE_MALWARE = "/root/reference/malware"
 
 
 @pytest.fixture(scope="session")
@@ -10,6 +17,67 @@ def spark():
     s = get_spark("tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture(scope="session")
+def reference_corpus():
+    """The reference corpus directory; skips the requesting test where
+    this host lacks it (golden constants, event counts and oracle rows
+    derived from the corpus cannot be checked without it)."""
+    if not os.path.isdir(REFERENCE_MALWARE):
+        pytest.skip(f"reference trace corpus not available at {REFERENCE_MALWARE}")
+    return REFERENCE_MALWARE
+
+
+@pytest.fixture(scope="session")
+def write_traces():
+    """``write_traces(directory, n_files=2)`` writes ``n_files`` tiny
+    Jaeger/Sysmon trace files into ``directory`` and returns their glob,
+    for tests that need a corpus-shaped input but none of the reference
+    corpus's content.
+
+    File ``i`` (trace ``t{i}``) holds a three-level process chain
+    ``P → G{i} → C{i}`` (two event-1 spans), a file create (event 11)
+    and a network connect (event 3).  Spans are one hour apart in event
+    time, continuing across files, so watermarks over several files
+    close windows."""
+    hour_us = 3_600_000_000
+    t0_us = 1_756_137_600_000_000  # 2025-08-25 16:00 UTC, the corpus's era
+
+    def write(directory, n_files: int = 2) -> str:
+        for i in range(n_files):
+            tags = [
+                dict(ID=1, ProcessGuid=f"G{i}", ParentProcessGuid="P",
+                     Image="C:\\w\\a.exe"),
+                dict(ID=1, ProcessGuid=f"C{i}", ParentProcessGuid=f"G{i}",
+                     Image="C:\\w\\b.exe"),
+                dict(ID=11, ProcessGuid=f"G{i}", TargetFilename=f"C:\\f{i}"),
+                dict(ID=3, ProcessGuid=f"G{i}", DestinationIp="1.2.3.4"),
+            ]
+            spans = [
+                {"spanID": f"s{j}",
+                 "startTime": t0_us + (len(tags) * i + j) * hour_us,
+                 "tags": [{"key": k,
+                           "type": "int64" if isinstance(v, int) else "string",
+                           "value": v} for k, v in t.items()]}
+                for j, t in enumerate(tags)
+            ]
+            with open(os.path.join(directory, f"t{i}.json"), "w") as f:
+                json.dump({"traceID": f"t{i}", "spans": spans}, f)
+        return f"{directory}/*.json"
+
+    return write
+
+
+@pytest.fixture
+def spawn_chain_trace(tmp_path, write_traces):
+    """One trace with a non-empty SPAWNS hop: the reference's
+    T1003.002 trace where the corpus is present, else a written one."""
+    ref = os.path.join(REFERENCE_MALWARE, "T1003.002.json")
+    if os.path.exists(ref):
+        return ref
+    return write_traces(tmp_path, n_files=1)
+
 
 # ---------------------------------------------------------------------------
 # slow-test marking (r11, VERDICT r10 #3): the full suite takes ~70-80

@@ -21,7 +21,7 @@ calc = pytest.importorskip("tools.corpus_golden_calc")
 
 
 @pytest.fixture(scope="module")
-def computed():
+def computed(reference_corpus):
     return calc.compute_all()
 
 

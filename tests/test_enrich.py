@@ -19,7 +19,7 @@ CORPUS = "/root/reference/malware/*.json"
 
 
 @pytest.fixture(scope="module")
-def spans(spark):
+def spans(spark, reference_corpus):
     return read_spans(spark, CORPUS).persist()
 
 

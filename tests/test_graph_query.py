@@ -168,7 +168,7 @@ def test_motif_varlen_rejects(gq):
             gq.find(bad)
 
 
-def test_varlen_corpus_matches_layered_joins(spark):
+def test_varlen_corpus_matches_layered_joins(spark, reference_corpus):
     """g58's oracle: motif [SPAWNS*1..3] over the corpus process tree is
     an exact multiset match of the explicit layered-join formulation
     SPAWNS ∪ SPAWNS² ∪ SPAWNS³."""

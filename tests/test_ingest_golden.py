@@ -9,8 +9,6 @@ DELETED_REG_KEY, POSIX basename, ON CREATE/ON MATCH asymmetry.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from graphdb_neo4j_spark.operators import build_graph
@@ -42,9 +40,7 @@ GOLD_EDGES = {
 
 
 @pytest.fixture(scope="module")
-def graph(spark):
-    if not os.path.exists("/root/reference/malware"):
-        pytest.skip("reference corpus not available")
+def graph(spark, reference_corpus):
     return build_graph(spark, CORPUS)
 
 

@@ -110,14 +110,14 @@ def test_q27_lsh_single_scan(spark):
     assert plan.count("embeddings.parquet") <= 2, plan
 
 
-def test_motif_two_hop_zero_shuffle_on_bucketed_tables(spark):
+def test_motif_two_hop_zero_shuffle_on_bucketed_tables(spark, spawn_chain_trace):
     """GraphQuery.find over the doubly-bucketed edge orientations plans
     a 2-hop chain with NO shuffle Exchange: both join sides arrive
     pre-bucketed on their join keys."""
     from graphdb_neo4j_spark.operators.graph import GraphQuery
     from graphdb_neo4j_spark.operators.ingest import build_graph
 
-    g = build_graph(spark, "/root/reference/malware/T1003.002.json")
+    g = build_graph(spark, spawn_chain_trace)
     g.save_bucketed(name_prefix="audit_graph", buckets=8)
     gq = GraphQuery.load_bucketed(spark, nodes=g.nodes(), name_prefix="audit_graph")
 
@@ -135,10 +135,10 @@ def test_motif_two_hop_zero_shuffle_on_bucketed_tables(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-def test_graph_rel_filter_prunes_partitions(spark, tmp_path):
+def test_graph_rel_filter_prunes_partitions(spark, tmp_path, spawn_chain_trace):
     from graphdb_neo4j_spark.operators.ingest import build_graph
 
-    g = build_graph(spark, "/root/reference/malware/T1003.002.json")
+    g = build_graph(spark, spawn_chain_trace)
     out = str(tmp_path / "g")
     g.save(out)
     edges = spark.read.parquet(f"{out}/edges")
@@ -146,28 +146,7 @@ def test_graph_rel_filter_prunes_partitions(spark, tmp_path):
     assert "PartitionFilters" in plan and "rel" in plan.split("PartitionFilters")[1][:200]
 
 
-def _write_small_traces(tmp_path) -> str:
-    """Two tiny Jaeger/Sysmon trace files (process create, file create,
-    network connect); returns their glob."""
-    import json
-
-    def span(start, **tags):
-        return {"spanID": "s", "startTime": start, "tags": [
-            {"key": k, "type": "int64" if isinstance(v, int) else "string",
-             "value": v} for k, v in tags.items()]}
-
-    for i in range(2):
-        doc = {"traceID": f"t{i}", "spans": [
-            span(0, ID=1, ProcessGuid=f"G{i}", ParentProcessGuid="P",
-                 Image="C:\\w\\a.exe"),
-            span(1, ID=11, ProcessGuid=f"G{i}", TargetFilename=f"C:\\f{i}"),
-            span(2, ID=3, ProcessGuid=f"G{i}", DestinationIp="1.2.3.4"),
-        ]}
-        (tmp_path / f"t{i}.json").write_text(json.dumps(doc))
-    return f"{tmp_path}/*.json"
-
-
-def test_ingest_routes_each_table_in_one_generate(spark, tmp_path):
+def test_ingest_routes_each_table_in_one_generate(spark, tmp_path, write_traces):
     """The ingest routes every span through ONE Generate per graph
     table over the span cache: the optimized plans of ``edges`` and
     ``simple`` each hold exactly one Generate, it reads the cache, and
@@ -185,7 +164,7 @@ def test_ingest_routes_each_table_in_one_generate(spark, tmp_path):
             stack.extend(_jchildren(n))
         return out
 
-    g = build_graph(spark, _write_small_traces(tmp_path))
+    g = build_graph(spark, write_traces(tmp_path))
     try:
         for table, df in (("edges", g.edges), ("simple", g.simple)):
             root = df._jdf.queryExecution().optimizedPlan()
@@ -198,7 +177,7 @@ def test_ingest_routes_each_table_in_one_generate(spark, tmp_path):
         g.unpersist()
 
 
-def test_build_graph_unpersist_releases_its_caches(spark, tmp_path):
+def test_build_graph_unpersist_releases_its_caches(spark, tmp_path, write_traces):
     """Release contract: ``build_graph`` persists the parsed traces and
     the span cache; ``PropertyGraph.unpersist()`` frees both, and the
     tables still answer afterwards (recomputed from the source)."""
@@ -214,7 +193,7 @@ def test_build_graph_unpersist_releases_its_caches(spark, tmp_path):
     # compare ID sets, not counts: the ContextCleaner may release an
     # earlier test's blocks mid-test
     before = persistent_ids()
-    g = build_graph(spark, _write_small_traces(tmp_path))
+    g = build_graph(spark, write_traces(tmp_path))
     n_edges = g.edges.count()
     assert len(persistent_ids() - before) == 2
     g.unpersist()

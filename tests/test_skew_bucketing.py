@@ -52,12 +52,12 @@ def test_two_phase_agg_rejects_non_algebraic(spark, skewed):
         two_phase_agg(skewed, "k", {"a": ("v", "avg")})
 
 
-def test_bucketed_edges_join_without_exchange(spark, tmp_path):
+def test_bucketed_edges_join_without_exchange(spark, tmp_path, spawn_chain_trace):
     """A motif hop over the doubly-bucketed edge tables must plan with
     zero Exchange operators (the whole point of bucketing)."""
     from graphdb_neo4j_spark.operators.ingest import build_graph
 
-    g = build_graph(spark, "/root/reference/malware/T1003.002.json")
+    g = build_graph(spark, spawn_chain_trace)
     g.save_bucketed("t_bucket", buckets=8)
     # disable broadcast so the join must choose SMJ — on big data it
     # would anyway; the point is the bucketed scans satisfy the join's

@@ -9,7 +9,7 @@ from graphdb_neo4j_spark.sql import ANALYST_QUERIES, register_graph_views, run_a
 
 
 @pytest.fixture(scope="module")
-def graph_views(spark):
+def graph_views(spark, reference_corpus):
     g = build_graph(spark, "/root/reference/malware/*.json")
     register_graph_views(spark, g)
     return g

@@ -20,10 +20,16 @@ N_FILES = 40
 
 
 @pytest.fixture(scope="module")
-def trace_dir(tmp_path_factory):
+def trace_dir(tmp_path_factory, write_traces):
+    """The first N_FILES reference corpus files where the corpus is
+    present, else 4 written traces spanning 16 hours of event time (so
+    the windowed tests' watermarks close windows)."""
     d = tmp_path_factory.mktemp("traces")
-    for p in sorted(glob.glob("/root/reference/malware/*.json"))[:N_FILES]:
+    files = sorted(glob.glob("/root/reference/malware/*.json"))[:N_FILES]
+    for p in files:
         shutil.copy(p, d)
+    if not files:
+        write_traces(d, n_files=4)
     return str(d)
 
 

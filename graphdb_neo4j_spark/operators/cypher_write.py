@@ -50,7 +50,7 @@ window (shuffle on merge key); per rel the same on (src, dst).  Nothing
 row-at-a-time, nothing driver-side; store tables are plain DataFrames a
 caller can persist, bucket, or save partitioned-by-label exactly like
 `PropertyGraph.save`.  Lineage across many ``execute`` calls grows like
-any iterative algorithm — ``GraphStore.compact()`` (localCheckpoint) or
+any iterative algorithm — ``GraphStore.compact()`` (a freeze) or
 ``GraphStore.save`` (parquet stage) truncates it, mirroring the
 iterative-traversal discipline in `operators/traversal.py`.
 """
@@ -506,14 +506,18 @@ class GraphStore:
         return self.to_graph_query().cypher(query, props=props)
 
     def compact(self) -> None:
-        """localCheckpoint every table — truncates the lineage that
-        repeated ``execute`` calls grow (call between template batches
-        on long pipelines; on a real cluster prefer ``save`` to a
-        parquet stage for fault tolerance)."""
+        """Freeze every table through :func:`order.checkpoint_eager` —
+        truncates the lineage that repeated ``execute`` calls grow (call
+        between template batches on long pipelines; on a real cluster
+        prefer ``save`` to a parquet stage, or set
+        ``SPARK_GRAFT_RELIABLE_FREEZE=1``, for fault tolerance).  The
+        previous tables' blocks are not released here."""
+        from graphdb_neo4j_spark.operators.order import checkpoint_eager
+
         for label, df in self.nodes.items():
-            self.nodes[label] = df.localCheckpoint(eager=True)
+            self.nodes[label] = checkpoint_eager(df)[0]
         for rel, df in self.edges.items():
-            self.edges[rel] = df.localCheckpoint(eager=True)
+            self.edges[rel] = checkpoint_eager(df)[0]
 
     def save(self, path: str) -> None:
         """Parquet layout mirroring `PropertyGraph.save`: per-label node

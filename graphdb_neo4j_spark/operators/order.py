@@ -1,33 +1,41 @@
-"""Distributed total-order utilities.
+"""Distributed total-order utilities, and the library's one freeze.
 
 A global ``row_number()`` over an unpartitioned window collapses to a
 single task — the classic 100 TB bottleneck.  ``contiguous_index``
 produces the same contiguous 0-based global index with a RANGE
 partition + per-partition rank + cumulative per-partition offsets (one
 int per partition crosses the driver, never data).
+
+:func:`checkpoint_eager` is the only place the library freezes a
+DataFrame (materializes it and truncates its lineage); every iterative
+kernel freezes and releases its rounds through it.
 """
 
 from __future__ import annotations
+
+import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
 class CheckpointHandle:
-    """Deterministic releaser for a ``localCheckpoint``-ed DataFrame.
+    """Deterministic releaser for a frame frozen by :func:`checkpoint_eager`.
 
-    ``DataFrame.unpersist()`` does NOT free localCheckpoint blocks (it
+    ``DataFrame.unpersist()`` does NOT free local-checkpoint blocks (it
     only touches the SQL CacheManager), and ContextCleaner frees them
     only after a JVM GC notices the dropped reference — so long-lived
     sessions that loop over checkpointing operators accumulate blocks.
-    This handle records the RDD ids the checkpoint created and releases
-    exactly those via ``SparkContext.getPersistentRDDs``.
+    This handle records the RDD id the checkpoint created and releases
+    exactly that RDD.
 
-    After ``release()`` the checkpointed DataFrame is UNUSABLE — any
-    further action fails loudly with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-    (the fail-loud contract: never silently recompute a plan whose
-    partitioning was sampled).  Call it only after the final consuming
-    action has run.
+    After ``release()`` the frozen DataFrame — and every lazy frame
+    that reads it — is UNUSABLE: any further action fails loudly with
+    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the fail-loud contract: never
+    silently recompute a plan whose partitioning was sampled).  Call it
+    only after the final consuming action has run.  Releasing twice is
+    a no-op.
     """
 
     def __init__(self, spark: SparkSession, rdd_ids: frozenset[int]):
@@ -39,85 +47,81 @@ class CheckpointHandle:
         if self._released:
             return
         self._released = True
-        jsc = self._spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().toList().iterator()
-        while it.hasNext():
-            pair = it.next()
-            if pair._1() in self._rdd_ids:
-                pair._2().unpersist(False)
+        persistent = self._spark.sparkContext._jsc.sc().getPersistentRDDs()
+        for rdd_id in self._rdd_ids:
+            rdd = persistent.get(rdd_id)
+            if rdd.isDefined():
+                rdd.get().unpersist(False)
 
     # drop-in for callers that held the old DataFrame handle
     unpersist = release
 
 
+def _ensure_checkpoint_dir(spark: SparkSession) -> None:
+    """Set a session checkpoint dir if none is configured (local runs:
+    a tempdir; on a cluster, configure a durable FS dir up front and
+    this is a no-op)."""
+    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
+        spark.sparkContext.setCheckpointDir(
+            tempfile.mkdtemp(prefix="spark-graft-ckpt-")
+        )
+
+
 def checkpoint_eager(
     df: DataFrame, reliable: bool | None = None
 ) -> tuple[DataFrame, CheckpointHandle]:
-    """``localCheckpoint(eager=True)`` plus a working release handle.
+    """Freeze ``df``: materialize it eagerly, truncate its lineage, and
+    return the frozen frame plus a handle that releases its blocks.
 
-    The checkpointed frame's analyzed plan is a ``LogicalRDD`` wrapping
-    EXACTLY the persisted RDD, so the handle captures that one id
-    directly — precise under CONCURRENT queries on the same session
-    (r10 review: the streaming sinks call this from ``foreachBatch``,
-    where another stream's checkpoint may materialize at any moment;
-    the previous persistent-set-delta capture could adopt — and later
-    force-release — a foreign query's blocks).  The delta capture
-    survives only as a fallback for a future Spark whose plan shape
-    changes, with its original no-concurrent-persist assumption.
+    Every iterative kernel freezes each round's state here (without a
+    freeze the plan tree grows every round and the driver spends its
+    time re-analyzing it) and releases round r−1's handle once round r
+    has materialized and nothing it still holds reads round r−1.  A
+    round's convergence count rides in the freeze's own job: attach it
+    with ``df.observe(Observation, ...)`` before the call and read it
+    after.
 
-    RECOVERY CONTRACT (r11): ``localCheckpoint`` stores blocks on
+    The default is a local checkpoint.  Its analyzed plan is a
+    ``LogicalRDD`` wrapping EXACTLY the persisted RDD, so the handle
+    captures that one id — precise under CONCURRENT queries on the
+    same session (the streaming sinks call this from ``foreachBatch``,
+    where another stream's checkpoint may materialize at any moment).
+    Any other plan shape fails loudly rather than guess.
+
+    RECOVERY CONTRACT: a local checkpoint stores blocks on
     executor-local storage — fast, but a lost executor (dynamic
     allocation, preemption, hardware) makes the frozen blocks
     unrecoverable MID-QUERY and the query fails.  On deployments where
     that matters, pass ``reliable=True`` — or set
-    ``SPARK_GRAFT_RELIABLE_FREEZE=1`` to flip every call site at once
-    (q166's edge freeze, the curation pack stage, the Hamming-LSH
-    keeper ledgers) — and the freeze becomes an eager RELIABLE
+    ``SPARK_GRAFT_RELIABLE_FREEZE=1`` to flip every freeze in the
+    library at once — and the freeze becomes an eager RELIABLE
     ``Dataset.checkpoint`` to the configured checkpoint dir (set a
     durable FS dir up front on a cluster; a session tempdir is created
     locally).  Semantics are identical; the handle's ``release()`` is
     then a no-op because checkpoint files are owned by the session
     (``spark.cleaner.referenceTracking.cleanCheckpoints=true`` deletes
-    them once the RDD is GC'd).  Local default stays ``localCheckpoint``:
-    at local[n] there is no executor to lose, and the reliable write
-    costs a filesystem round-trip per freeze.
+    them once the RDD is GC'd).  The eager reliable checkpoint
+    computes the plan once: the job that writes the checkpoint files
+    is the only job over it (Spark 4.1: one evaluation per row, and an
+    ``Observation`` attached before the freeze reports each row once),
+    so its extra cost over the local freeze is the filesystem write
+    and the read back.  The local default stays: at local[n] there is
+    no executor to lose.
     """
     if reliable is None:
-        import os
-
-        reliable = (
-            os.environ.get("SPARK_GRAFT_RELIABLE_FREEZE", "0") == "1"
-        )
+        reliable = os.environ.get("SPARK_GRAFT_RELIABLE_FREEZE", "0") == "1"
+    spark = df.sparkSession
     if reliable:
-        from graphdb_neo4j_spark.operators.traversal import (
-            _ensure_checkpoint_dir,
-        )
-
-        _ensure_checkpoint_dir(df.sparkSession)
-        return df.checkpoint(eager=True), CheckpointHandle(
-            df.sparkSession, frozenset()
-        )
-    sc = df.sparkSession.sparkContext._jsc.sc()
-
-    def _ids() -> set[int]:
-        it = sc.getPersistentRDDs().keys().iterator()
-        out = set()
-        while it.hasNext():
-            out.add(it.next())
-        return out
-
-    before = _ids()
+        _ensure_checkpoint_dir(spark)
+        return df.checkpoint(eager=True), CheckpointHandle(spark, frozenset())
     out = df.localCheckpoint(eager=True)
-    ids: frozenset[int] | None = None
-    try:
-        node = out._jdf.queryExecution().analyzed()
-        if node.nodeName() == "LogicalRDD":
-            ids = frozenset([node.rdd().id()])
-    except Exception:
-        ids = None
-    if ids is None:
-        ids = frozenset(_ids() - before)
-    return out, CheckpointHandle(df.sparkSession, ids)
+    node = out._jdf.queryExecution().analyzed()
+    if node.nodeName() != "LogicalRDD":
+        raise RuntimeError(
+            f"checkpoint_eager: frozen plan is {node.nodeName()}, not "
+            "LogicalRDD — cannot name the RDD to release"
+        )
+    return out, CheckpointHandle(spark, frozenset([node.rdd().id()]))
 
 
 def contiguous_index(
@@ -130,10 +134,10 @@ def contiguous_index(
     without collapsing to one partition.
 
     Returns ``(indexed_df, handle)``: the range-partitioned
-    intermediate is ``localCheckpoint``-ed (not merely cached) — range
-    boundaries are sampled per evaluation, so a recomputation between
-    the counts pass and the rank pass could repartition differently and
-    corrupt the offsets; checkpointing freezes the partitioning, and a
+    intermediate is frozen by :func:`checkpoint_eager` (not merely
+    cached) — range boundaries are sampled per evaluation, so a
+    recomputation between the counts pass and the rank pass could
+    repartition differently and corrupt the offsets; checkpointing freezes the partitioning, and a
     lost block fails loudly instead of silently resampling.  Release
     the blocks DETERMINISTICALLY with ``handle.release()`` (alias
     ``unpersist()``) after the caller's final consuming action — after

@@ -5,7 +5,7 @@ algorithms without touching the engine's internals.
 The engine's own iterative operators (PageRank, components, SSSP, LPA,
 …, ``operators/traversal.py``) each hand-roll the same loop: build
 messages along triplets, aggregate per destination, update vertex
-state, checkpoint, repeat.  This module exposes that loop:
+state, freeze, release the previous round, repeat.  This module exposes that loop:
 
 * :func:`triplets` — the edge ⋈ src-state ⋈ dst-state view with
   ``src_*`` / ``dst_*`` prefixed vertex columns (GraphX's
@@ -21,9 +21,11 @@ expressions / DataFrame transforms, so each superstep is the usual
 co-partitioned join + grouped aggregate (one shuffle pair), AQE
 coalesces as state shrinks, and nothing ever collects to the driver.
 
-Scale notes match traversal.py: ``localCheckpoint`` per superstep
-truncates the exploding plan lineage; on a real cluster prefer
-reliable ``checkpoint()`` for executor-loss tolerance.
+Scale notes match traversal.py: each superstep's state is frozen
+through :func:`order.checkpoint_eager` (truncating the exploding plan
+lineage; ``SPARK_GRAFT_RELIABLE_FREEZE=1`` makes it a reliable
+checkpoint that survives executor loss), and superstep r−1's state is
+released once superstep r has materialized.
 """
 
 from __future__ import annotations
@@ -32,6 +34,8 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from graphdb_neo4j_spark.operators.order import checkpoint_eager
 
 
 def triplets(vertices: DataFrame, edges: DataFrame) -> DataFrame:
@@ -108,7 +112,7 @@ def pregel(
     components or BFS levels; leave it off for float states like
     PageRank, where fixed iteration counts are the convention.
     """
-    cur = vertices.localCheckpoint()
+    cur, handle = checkpoint_eager(vertices)
     for _ in range(max_iter):
         msgs = aggregate_messages(
             cur, edges, to_dst=to_dst, to_src=to_src, agg=agg
@@ -116,13 +120,14 @@ def pregel(
         nxt = update(cur.join(msgs, "key", "left"))
         if "msg" in nxt.columns:
             nxt = nxt.drop("msg")
-        nxt = nxt.localCheckpoint()
-        if (
+        nxt, nxt_handle = checkpoint_eager(nxt)
+        fixpoint = (
             stop_at_fixpoint
             and nxt.exceptAll(cur).isEmpty()
             and cur.exceptAll(nxt).isEmpty()
-        ):
-            cur = nxt
+        )
+        handle.release()
+        cur, handle = nxt, nxt_handle
+        if fixpoint:
             break
-        cur = nxt
     return cur

@@ -150,6 +150,7 @@ def interval_concurrency(
         run = net.withColumn("c", F.sum("net").over(w))
     else:
         from graphdb_neo4j_spark.operators.order import (
+            checkpoint_eager,
             prefix_sum_distributed,
         )
 
@@ -161,7 +162,7 @@ def interval_concurrency(
     )
     if keys:
         return agg
-    out = agg.localCheckpoint(eager=True)
+    out, _ = checkpoint_eager(agg)  # the caller owns the returned frame
     handle.release()
     return out
 

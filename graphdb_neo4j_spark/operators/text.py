@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.operators.order import checkpoint_eager
+
 # small multilingual stopword table for the n-gram/stopword language vote
 LANG_STOPWORDS = {
     "en": ["the", "and", "of", "to", "a"],
@@ -780,8 +782,8 @@ def bpe_learn(
     4. repeat.
 
     Each step is one vocabulary-table shuffle + a 1-row driver fetch +
-    a map-side array fold; ``localCheckpoint`` truncates the per-step
-    lineage.  The merge table IS the tokenizer artifact.
+    a map-side array fold; a freeze per step truncates the lineage
+    and releases the previous step's vocabulary.  The merge table IS the tokenizer artifact.
     """
     spark = df.sparkSession
     words = (
@@ -797,7 +799,7 @@ def bpe_learn(
         ),
         F.array(F.lit("</w>")),
     )
-    vocab = words.select("cnt", syms.alias("syms")).localCheckpoint()
+    vocab, handle = checkpoint_eager(words.select("cnt", syms.alias("syms")))
     merges = []
     for step in range(1, num_merges + 1):
         pairs = (
@@ -833,7 +835,10 @@ def bpe_learn(
                 ),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        vocab = vocab.select("cnt", folded.alias("syms")).localCheckpoint()
+        vocab, nxt = checkpoint_eager(vocab.select("cnt", folded.alias("syms")))
+        handle.release()
+        handle = nxt
+    handle.release()
     return spark.createDataFrame(
         merges, ["step", "left", "right", "merged", "pair_count"]
     )
@@ -859,7 +864,7 @@ def bpe_encode_words(words: DataFrame, merges_df: DataFrame) -> DataFrame:
         ),
         F.array(F.lit("</w>")),
     )
-    vocab = words.select("word", syms.alias("syms")).localCheckpoint()
+    vocab, handle = checkpoint_eager(words.select("word", syms.alias("syms")))
     for l, r in merges:
         ll, rr = F.lit(l), F.lit(r)
         folded = F.aggregate(
@@ -872,7 +877,9 @@ def bpe_encode_words(words: DataFrame, merges_df: DataFrame) -> DataFrame:
                 ),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        vocab = vocab.select("word", folded.alias("syms")).localCheckpoint()
+        vocab, nxt = checkpoint_eager(vocab.select("word", folded.alias("syms")))
+        handle.release()
+        handle = nxt
     return vocab
 
 

@@ -6,10 +6,7 @@ Spark SQL lacks; the standard Spark-first answer (SURVEY.md §2.D, §4)
 is a driver-side loop over DataFrames:
 
 * **semi-naive frontier BFS** — each iteration expands only the delta
-  frontier (new nodes), unions into the visited set, and
-  ``localCheckpoint()``s to truncate lineage (without it the plan tree
-  doubles every iteration and the driver OOMs on plan analysis long
-  before data is a problem).
+  frontier (new nodes) and unions it into the visited set.
 * **HashMin connected components** — propagate min component id along
   undirected edges until a fixed point; converges in O(diameter)
   iterations.  (GraphX's alternating large-star/small-star converges in
@@ -19,17 +16,33 @@ is a driver-side loop over DataFrames:
   grouped by dst.  Fixed iteration count, no convergence test, matching
   GraphX's default mode.
 
+Round discipline, shared by every kernel here: each round's state is
+frozen through :func:`order.checkpoint_eager` (without a freeze the
+plan tree doubles every iteration and the driver OOMs on plan analysis
+long before data is a problem), and the handle of round r−1 is
+released once round r has materialized and no frame the kernel still
+holds reads it — so a long-lived session does not accumulate blocks
+(release contract), and ``SPARK_GRAFT_RELIABLE_FREEZE=1`` makes every
+round a reliable checkpoint that survives executor loss (recovery
+contract).  Frames a kernel returns stay owned by the caller.  Where a
+round's convergence signal is a count over the state it freezes, the
+count is observed in the freeze's own job (:func:`_observing`) instead
+of costing a second one.
+
 Scale notes: every iteration is one shuffle (groupBy dst).  The frontier
 DataFrame stays partitioned by key; AQE coalesces as the frontier
-shrinks.  ``localCheckpoint(eager=True)`` materializes to executor
-storage — on a real cluster prefer reliable ``checkpoint()`` to survive
-executor loss on long traversals.
+shrinks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from graphdb_neo4j_spark.operators.order import (
+    CheckpointHandle,
+    checkpoint_eager,
+)
 
 
 def _as_undirected(edges: DataFrame) -> DataFrame:
@@ -38,21 +51,30 @@ def _as_undirected(edges: DataFrame) -> DataFrame:
     return fwd.unionByName(rev)
 
 
-def partitioned_checkpoint(df: DataFrame, col: str) -> DataFrame:
-    """Checkpoint ``df`` hash-partitioned on ``col``.
+def _release(*handles: CheckpointHandle | None) -> None:
+    for h in handles:
+        if h is not None:
+            h.release()
 
-    CAVEAT (measured r7): a checkpointed Dataset scans as an
-    ``ExistingRDD`` with ``UnknownPartitioning``, so downstream plans
-    CANNOT see the layout — a per-round join on ``col`` still inserts
-    a full Exchange + Sort on this side every round.  The physical
-    rows being pre-grouped makes that exchange mostly node-local, but
-    it is not free.  For a LOOP-INVARIANT table whose layout must be
-    visible to Catalyst, use :func:`partitioned_cache` instead; keep
-    this for state that must be hard-frozen (lineage truncation)."""
-    n_shuffle = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    return df.repartition(n_shuffle, col).localCheckpoint()
+
+def _step(
+    df: DataFrame, *done: CheckpointHandle | None
+) -> tuple[DataFrame, CheckpointHandle]:
+    """Freeze one round's state through :func:`checkpoint_eager`, then
+    release ``done`` — the handles of the frames it replaces, which
+    nothing the kernel still holds reads once it has materialized."""
+    out, handle = checkpoint_eager(df)
+    _release(*done)
+    return out, handle
+
+
+def _observing(df: DataFrame, **metrics) -> tuple[DataFrame, Observation]:
+    """``df`` with ``metrics`` (name → aggregate Column) observed by the
+    job that materializes it — freeze the result and read
+    ``obs.get[name]``: a round's convergence signal with no job of its
+    own."""
+    obs = Observation()
+    return df.observe(obs, *[c.alias(k) for k, c in metrics.items()]), obs
 
 
 def partitioned_cache(df: DataFrame, col: str) -> DataFrame:
@@ -65,20 +87,20 @@ def partitioned_cache(df: DataFrame, col: str) -> DataFrame:
     plan's outputPartitioning and outputOrdering metadata, so every
     round's join sees this side as already hash-partitioned AND
     sorted: zero Exchange, zero Sort, only the vertex-sized state
-    moves.  (Verified empirically: the same frame localCheckpoint'd
-    scans as UnknownPartitioning and re-exchanges + re-sorts 2|E| rows
-    EVERY round; swapping the Louvain edge frame to this cache
-    measured median round exec 13.5s -> 6.2s, −54%, over 16
+    moves.  (Verified empirically: the same frame frozen by a local
+    checkpoint scans as UnknownPartitioning and re-exchanges +
+    re-sorts 2|E| rows EVERY round; swapping the Louvain edge frame to
+    this cache measured median round exec 13.5s -> 6.2s, −54%, over 16
     interleaved rounds at sf0.1, assignments bit-identical.)
 
     Cache ≠ freeze: lineage is retained, so this is ONLY for
     loop-invariant frames computed once — per-round evolving state
-    still needs :func:`df_freeze`.  MEMORY_AND_DISK spills rather than
-    evicting, so release is safe under pressure; the CALLER owns
-    ``unpersist()``.  On a real cluster the equivalent durable layout
-    is a bucketed+sorted table (same metadata visibility); measured
-    here, the one-time bucketed write cost exceeds the cache's at
-    local scale (see the kernel's negative-result notes)."""
+    still needs :func:`order.checkpoint_eager`.  MEMORY_AND_DISK spills
+    rather than evicting, so release is safe under pressure; the CALLER
+    owns ``unpersist()``.  On a real cluster the equivalent durable
+    layout is a bucketed+sorted table (same metadata visibility);
+    measured here, the one-time bucketed write cost exceeds the
+    cache's at local scale (see the kernel's negative-result notes)."""
     n_shuffle = int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
@@ -87,118 +109,6 @@ def partitioned_cache(df: DataFrame, col: str) -> DataFrame:
     )
     out.count()
     return out
-
-
-def rdd_freeze(df_in: DataFrame, prev_rdd=None):
-    """Materialize ``df_in`` to a persisted RDD and rebase the DataFrame
-    on it — the hard per-round state freeze for iterative loops.
-
-    ``Dataset.localCheckpoint`` is unreliable under AQE for loop shapes
-    that reference the per-round state several times in the next round's
-    plan: the checkpoint marker can land on a pre-replan RDD whose full
-    lineage is retained, so round cost compounds (measured on the
-    Louvain kernel: 0.7s -> 67s over 8 rounds).  Persisting the final
-    RDD explicitly and rebasing via ``createDataFrame`` pins the actual
-    computed partitions; rounds stay O(1).
-
-    Returns ``(frozen_df, rdd)``; pass the previous round's ``rdd`` back
-    as ``prev_rdd`` so it unpersists only AFTER the new round is
-    materialized (the new plan may read it).
-
-    Audit note (this session, local[32]): the simpler loops here — the
-    pagerank power iteration, label_propagation, k_core peel, HashMin
-    components — were probed at 4/8/16-20 rounds and show FLAT
-    per-round cost with plain ``localCheckpoint``; only the Louvain
-    local-moving shape (state referenced ~4x per round) exhibited the
-    pathology.  Use this helper for any new operator with that shape.
-    """
-    spark = df_in.sparkSession
-    rdd = df_in.rdd
-    rdd.persist()
-    rdd.count()
-    out = spark.createDataFrame(rdd, df_in.schema)
-    if prev_rdd is not None:
-        prev_rdd.unpersist()
-    return out, rdd
-
-
-def rdd_freeze_counting(df_in, count_where, prev_rdd=None):
-    """`rdd_freeze` variant that folds a row-predicate count into the
-    SAME materialization job (persist caches the parent's partitions
-    while the filtered count runs), so convergence checks like "how
-    many rows moved this round" cost zero extra jobs.  The predicate
-    runs on the already-Python-side Row objects of the freeze path —
-    vertex-sized state, never data-sized.
-
-    Returns ``(frozen_df, rdd, n_matching)``.
-    """
-    spark = df_in.sparkSession
-    rdd = df_in.rdd
-    rdd.persist()
-    n = rdd.filter(count_where).count()
-    out = spark.createDataFrame(rdd, df_in.schema)
-    if prev_rdd is not None:
-        prev_rdd.unpersist()
-    return out, rdd, n
-
-
-def _ensure_checkpoint_dir(spark) -> None:
-    """Set a session checkpoint dir if none is configured (local runs:
-    a tempdir; on a cluster, configure a durable FS dir up front and
-    this is a no-op)."""
-    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-        import tempfile
-
-        spark.sparkContext.setCheckpointDir(
-            tempfile.mkdtemp(prefix="spark-graft-ckpt-")
-        )
-
-
-def df_freeze(df_in: DataFrame, prev=None):
-    """JVM-side hard per-round freeze: eager RELIABLE
-    ``Dataset.checkpoint`` — materializes the final (post-AQE) RDD to
-    the checkpoint dir and rebases the plan on it, truncating lineage
-    without ever piping rows through Python workers (``rdd_freeze``
-    deserializes the vertex state in Python once per materialization
-    AND once per downstream JVM read — measured ~2x the Louvain
-    kernel's exec time at sf0.1).  ``prev`` is accepted for signature
-    parity and ignored: checkpoint files are owned by the session —
-    ``get_spark`` sets ``spark.cleaner.referenceTracking
-    .cleanCheckpoints=true`` so the ContextCleaner deletes each round's
-    file once its RDD is GC'd (ADVICE r6: without it a long-lived
-    session accumulated checkpoints unboundedly), and on local runs the
-    tempdir dies with the box regardless.
-
-    Returns ``(frozen_df, None)`` matching ``rdd_freeze``'s shape.
-    """
-    _ensure_checkpoint_dir(df_in.sparkSession)
-    return df_in.checkpoint(eager=True), None
-
-
-def df_freeze_counting(df_in: DataFrame, cond, prev=None):
-    """``df_freeze`` + a row-predicate count evaluated JVM-side on the
-    already-checkpointed data (``cond`` is a Column, not a Python
-    lambda).  Returns ``(frozen_df, None, n_matching)``."""
-    out, _ = df_freeze(df_in, prev)
-    return out, None, out.filter(cond).count()
-
-
-def _chain_persist(df: DataFrame, prev: DataFrame | None = None) -> DataFrame:
-    """Eagerly materialize ``df`` in the DataFrame cache and release the
-    previous round's cache handle AFTERWARDS (the new plan may read it).
-
-    The walk/accumulator loops use this so at most two round-frames are
-    cached at any moment instead of one per step.  MEMORY_AND_DISK (the
-    DataFrame default) spills instead of evicting, so releasing the
-    upstream handle cannot trigger a lineage recompute cascade under
-    memory pressure; on a real cluster swap the terminal frame for a
-    fault-tolerant ``checkpoint()``.
-    """
-    df = df.persist()
-    df.count()
-    if prev is not None:
-        prev.unpersist()
-    return df
 
 
 def bfs(
@@ -215,38 +125,48 @@ def bfs(
     """
     e = edges.select("src", "dst") if directed else _as_undirected(edges)
     key_col = sources.columns[0]
-    visited = (
+    visited, vh = checkpoint_eager(
         sources.select(F.col(key_col).alias("key")).distinct()
         .withColumn("dist", F.lit(0))
-        .localCheckpoint()
     )
+    # visited stays a LAZY union of frozen frontier frames (r11): every
+    # child is frozen, so the anti-join below scans the same rows either
+    # way, and the per-hop re-freeze of the whole visited set — one
+    # extra job + full copy per hop, O(hops·|V|) total writes — is
+    # gone.  ``parts`` holds the handles that union reads; they are
+    # released when it is consolidated: every 32 hops (so an
+    # unbounded-depth chain cannot grow the union plan without limit)
+    # and once at the end, so the caller gets one frozen frame.
+    parts = [vh]
+    stale = None  # a frontier only the next hop's join still reads
     frontier = visited
     hop = 0
     while True:
         hop += 1
         if max_hops is not None and hop > max_hops:
             break
-        nxt = (
+        nxt, seen = _observing(
             frontier.join(e, frontier["key"] == e["src"])
             .select(F.col("dst").alias("key"))
             .distinct()
             .join(visited.select("key"), "key", "left_anti")
-            .withColumn("dist", F.lit(hop))
+            .withColumn("dist", F.lit(hop)),
+            n=F.count(F.lit(1)),
         )
-        nxt = nxt.localCheckpoint()
-        if nxt.isEmpty():
+        nxt, nh = _step(nxt, stale)
+        stale = None
+        if seen.get["n"] == 0:
+            nh.release()
             break
-        # visited stays a LAZY union of already-checkpointed frontier
-        # frames (r11): every child is frozen, so the anti-join above
-        # scans the same rows either way, and the per-hop re-checkpoint
-        # of the whole visited set — one extra action + full copy per
-        # hop, O(hops·|V|) total writes — is gone (guide §2 fewer
-        # jobs).  Consolidate every 32 hops so an unbounded-depth chain
-        # graph cannot grow the union plan without limit.
         visited = visited.unionByName(nxt)
+        parts.append(nh)
         if hop % 32 == 0:
-            visited = visited.localCheckpoint()
+            visited, vh = _step(visited, *parts[:-1])
+            parts, stale = [vh], nh
         frontier = nxt
+    _release(stale)
+    if len(parts) > 1:
+        visited, vh = _step(visited, *parts)
     return visited
 
 
@@ -264,24 +184,29 @@ def shortest_path_length(
     Early-exits as soon as the destination enters the visited set."""
     spark = edges.sparkSession
     e = edges.select("src", "dst") if directed else _as_undirected(edges)
-    visited = spark.createDataFrame([(src_key, 0)], ["key", "dist"]).localCheckpoint()
-    frontier = visited
+    visited, vh = checkpoint_eager(
+        spark.createDataFrame([(src_key, 0)], ["key", "dist"])
+    )
+    frontier, fh = visited, None
+    found = None
     for hop in range(1, max_hops + 1):
-        nxt = (
+        nxt, nh = checkpoint_eager(
             frontier.join(e, frontier["key"] == e["src"])
             .select(F.col("dst").alias("key"))
             .distinct()
             .join(visited.select("key"), "key", "left_anti")
             .withColumn("dist", F.lit(hop))
-            .localCheckpoint()
         )
+        _release(fh)
+        frontier, fh = nxt, nh
         if nxt.isEmpty():
-            return None
+            break
         if not nxt.filter(F.col("key") == dst_key).isEmpty():
-            return hop
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
-    return None
+            found = hop
+            break
+        visited, vh = _step(visited.unionByName(nxt), vh)
+    _release(vh, fh)
+    return found
 
 
 def bfs_tree(
@@ -306,19 +231,18 @@ def bfs_tree(
         until.select(F.col(until.columns[0]).alias("key")).distinct()
         if until is not None else None
     )
-    visited = (
+    visited, vh = checkpoint_eager(
         sources.select(F.col(key_col).alias("key")).distinct()
         .withColumn("dist", F.lit(0))
         .withColumn("pred", F.lit(None).cast(e.schema["src"].dataType))
-        .localCheckpoint()
     )
-    frontier = visited
+    frontier, fh = visited, None
     hop = 0
     while True:
         hop += 1
         if max_hops is not None and hop > max_hops:
             break
-        nxt = (
+        nxt, nh = checkpoint_eager(
             frontier.join(e, frontier["key"] == e["src"])
             .select(F.col("dst").alias("key"), frontier["key"].alias("pred"))
             .groupBy("key")
@@ -326,14 +250,15 @@ def bfs_tree(
             .join(visited.select("key"), "key", "left_anti")
             .withColumn("dist", F.lit(hop))
             .select("key", "dist", "pred")
-            .localCheckpoint()
         )
         if nxt.isEmpty():
+            nh.release()
             break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+        visited, vh = _step(visited.unionByName(nxt), vh, fh)
+        frontier, fh = nxt, nh
         if stop is not None and stop.join(visited, "key", "left_anti").isEmpty():
             break
+    _release(fh)
     return visited
 
 
@@ -359,11 +284,11 @@ def _backtrace_paths_doubling(
     if max_rounds is None:
         n = tree.count()
         max_rounds = math.ceil(math.log2(max(n, 2))) + 1
-    p = tree.select(
+    p, ph = checkpoint_eager(tree.select(
         "key", "dist",
         F.col("pred").alias("anc"),
         F.array("key").alias("seg"),
-    ).localCheckpoint()
+    ))
     rounds = 0
     while rounds < max_rounds:
         rounds += 1
@@ -380,10 +305,8 @@ def _backtrace_paths_doubling(
             F.col("anc2").alias("anc"),
             F.concat(F.col("seg2"), F.col("seg")).alias("seg"),
         )
-        p = (
-            p.filter(F.col("anc").isNull())
-            .unionByName(stepped)
-            .localCheckpoint()
+        p, ph = _step(
+            p.filter(F.col("anc").isNull()).unionByName(stepped), ph
         )
     # rows still carrying an ancestor at the bound are cyclic pred
     # chains (never reach a root) — cut, not returned with partial paths
@@ -419,30 +342,32 @@ def _backtrace_paths(
             F.col(targets.columns[0]).alias("key")
         ).distinct()
         start = tree.join(t, "key", "left_semi")
-    paths = start.select(
+    paths, th = checkpoint_eager(start.select(
         "key", "dist",
         F.col("pred").alias("cur"),
         F.array("key").alias("path"),
-    ).localCheckpoint()
+    ))
     done = paths.filter(F.col("cur").isNull()).select("key", "dist", "path")
-    todo = paths.filter(F.col("cur").isNotNull())
+    dh = None  # set once ``done`` is frozen apart from ``paths``
+    todo = paths.filter(F.col("cur").isNotNull())  # th: its frozen source
     links = tree.select(F.col("key").alias("cur"), F.col("pred").alias("nxt"))
     rounds = 0
     while not todo.isEmpty() and rounds < max_rounds:
         rounds += 1
-        stepped = (
+        stepped, sh = checkpoint_eager(
             todo.join(links, "cur")
             .select(
                 "key", "dist",
                 F.col("nxt").alias("cur"),
                 F.concat(F.array(F.col("cur")), F.col("path")).alias("path"),
             )
-            .localCheckpoint()
         )
-        done = done.unionByName(
+        done, dh = _step(done.unionByName(
             stepped.filter(F.col("cur").isNull()).select("key", "dist", "path")
-        ).localCheckpoint()
-        todo = stepped.filter(F.col("cur").isNotNull())
+        ), dh, th)
+        todo, th = stepped.filter(F.col("cur").isNotNull()), sh
+    if dh is not None:
+        th.release()
     return done
 
 
@@ -493,33 +418,32 @@ def connected_components(
     """(key, component) — component = min key (lexicographic) in the
     weakly-connected component.  HashMin label propagation.
     """
-    e = _as_undirected(edges).distinct().localCheckpoint()
+    e, eh = checkpoint_eager(_as_undirected(edges).distinct())
     key_col = nodes.columns[0]
-    comp = (
+    comp, ch = checkpoint_eager(
         nodes.select(F.col(key_col).alias("key")).distinct()
         .withColumn("component", F.col("key"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
-        # candidate component = min over self and neighbors' components
+        # candidate component = min over self and neighbors' components;
+        # the self row also carries the old component, so the changed
+        # count rides in the freeze's own job
         msgs = (
             comp.join(e, comp["key"] == e["src"])
             .select(F.col("dst").alias("key"), "component")
+            .withColumn("old", F.lit(None).cast(comp.schema["component"].dataType))
         )
-        new_comp = (
-            comp.select("key", "component").unionByName(msgs)
+        new_comp, changed = _observing(
+            comp.select("key", "component", F.col("component").alias("old"))
+            .unionByName(msgs)
             .groupBy("key")
-            .agg(F.min("component").alias("component"))
-            .localCheckpoint()
+            .agg(F.min("component").alias("component"), F.min("old").alias("old")),
+            n=F.count_if(F.col("component") != F.col("old")),
         )
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), "key")
-            .filter(F.col("n.component") != F.col("o.component"))
-        )
-        comp = new_comp
-        if changed.isEmpty():
+        comp, ch = _step(new_comp.select("key", "component"), ch)
+        if changed.get["n"] == 0:
             break
+    eh.release()
     return comp
 
 
@@ -536,11 +460,10 @@ def connected_components_twophase(
     contracts toward a star per component, whose center is the
     component minimum.  Results are identical to HashMin.
     """
-    e = (
+    e, eh = checkpoint_eager(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
     prev_sig = None
     for _ in range(max_iter):
@@ -572,7 +495,7 @@ def connected_components_twophase(
         g2 = canon.groupBy("u").agg(
             F.min("v").alias("m"), F.collect_set("v").alias("ns")
         )
-        small = (
+        small, sig_obs = _observing(
             g2.select(
                 "u",
                 "m",
@@ -580,15 +503,13 @@ def connected_components_twophase(
             )
             .filter(F.col("v") != F.col("m"))
             .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-            .distinct()
-            .localCheckpoint()
+            .distinct(),
+            n=F.count(F.lit(1)),
+            h=F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
         )
-        sig_row = small.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-        ).head()
-        sig = (sig_row["n"], sig_row["h"])
-        e = small
+        # the edge set's signature is observed in its freeze's own job
+        e, eh = _step(small, eh)
+        sig = (sig_obs.get["n"], sig_obs.get["h"])
         if sig == prev_sig:
             break
         prev_sig = sig
@@ -620,7 +541,7 @@ def pagerank(
         )
     else:
         verts = nodes.select(F.col(nodes.columns[0]).alias("key")).distinct()
-    verts = verts.localCheckpoint()
+    verts, vh = checkpoint_eager(verts)
     # the edge table is partitioned on src ONCE, up front: the
     # out-degree aggregate and its join back reuse that single
     # exchange during SETUP.  Honesty note (r7 finding): the
@@ -641,12 +562,11 @@ def pagerank(
     out_deg = e_p.groupBy(F.col("src").alias("key")).agg(
         F.count("*").alias("out_degree")
     )
-    links = (
+    links, lh = checkpoint_eager(
         e_p.join(out_deg, e_p["src"] == out_deg["key"])
         .select("src", "dst", "out_degree")
-        .localCheckpoint()
     )
-    ranks = verts.withColumn("rank", F.lit(1.0))
+    ranks, rh = verts.withColumn("rank", F.lit(1.0)), None
     for _ in range(iterations):
         contribs = (
             links.join(ranks, links["src"] == ranks["key"])
@@ -657,16 +577,18 @@ def pagerank(
             .groupBy("key")
             .agg(F.sum("contrib").alias("contrib"))
         )
-        ranks = (
+        ranks, rh = _step(
             verts.join(contribs, "key", "left")
             .select(
                 "key",
                 (F.lit(1.0 - damping)
                  + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
                  ).alias("rank"),
-            )
-            .localCheckpoint()
+            ),
+            rh,
         )
+    # the returned ranks are frozen apart from verts unless no round ran
+    _release(lh, vh if iterations > 0 else None)
     return ranks
 
 
@@ -678,28 +600,31 @@ def k_core(nodes: DataFrame, edges: DataFrame, k: int, max_iter: int = 100) -> D
     peeling depth (small for provenance graphs).
     """
     key_col = nodes.columns[0]
-    und = (
+    und, uh = checkpoint_eager(
         _as_undirected(edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    remaining = nodes.select(F.col(key_col).alias("key")).distinct().localCheckpoint()
+    remaining, rh = checkpoint_eager(
+        nodes.select(F.col(key_col).alias("key")).distinct()
+    )
     for _ in range(max_iter):
         e = (
             und.join(remaining.select(F.col("key").alias("src")), "src", "left_semi")
             .join(remaining.select(F.col("key").alias("dst")), "dst", "left_semi")
         )
         deg = e.groupBy(F.col("src").alias("key")).agg(F.count("*").alias("deg"))
-        keep = (
+        keep, kh = checkpoint_eager(
             remaining.join(deg, "key", "left")
             .filter(F.coalesce(F.col("deg"), F.lit(0)) >= k)
             .select("key")
-            .localCheckpoint()
         )
         if keep.count() == remaining.count():
+            kh.release()
             break
-        remaining = keep
+        rh.release()
+        remaining, rh = keep, kh
+    uh.release()
     return remaining
 
 
@@ -721,19 +646,20 @@ def core_decomposition(
     step a plain aggregate.
     """
     key_col = nodes.columns[0]
-    und = (
+    und, uh = checkpoint_eager(
         _as_undirected(edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    remaining = (
-        nodes.select(F.col(key_col).alias("key")).distinct().localCheckpoint()
+    remaining, rh = checkpoint_eager(
+        nodes.select(F.col(key_col).alias("key")).distinct()
     )
     spark = nodes.sparkSession
-    out = spark.createDataFrame([], "v string, coreness int").localCheckpoint()
+    out, oh = checkpoint_eager(
+        spark.createDataFrame([], "v string, coreness int")
+    )
     for k in range(1, max_core + 1):
-        survivors = remaining
+        survivors, sh = remaining, rh
         while True:
             e = (
                 und.join(
@@ -745,22 +671,27 @@ def core_decomposition(
             deg = e.groupBy(F.col("src").alias("key")).agg(
                 F.count("*").alias("deg")
             )
-            keep = (
+            keep, kh = checkpoint_eager(
                 survivors.join(deg, "key", "left")
                 .filter(F.coalesce(F.col("deg"), F.lit(0)) >= k)
                 .select("key")
-                .localCheckpoint()
             )
             if keep.count() == survivors.count():
+                kh.release()
                 break
-            survivors = keep
+            if sh is not rh:  # remaining is read by this stage's peel
+                sh.release()
+            survivors, sh = keep, kh
         peeled = remaining.join(survivors, "key", "left_anti").select(
             F.col("key").alias("v"), F.lit(k - 1).cast("int").alias("coreness")
         )
-        out = out.unionByName(peeled).localCheckpoint()
-        remaining = survivors
+        out, oh = _step(out.unionByName(peeled), oh)
+        if sh is not rh:
+            rh.release()
+        remaining, rh = survivors, sh
         if remaining.isEmpty():
             break
+    _release(uh, rh)
     return out
 
 
@@ -783,11 +714,15 @@ def strongly_connected_components(
     driver-side graph state.
     """
     key_col = nodes.columns[0]
-    remaining = nodes.select(F.col(key_col).alias("key")).distinct().localCheckpoint()
-    e_all = edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct().localCheckpoint()
-    parts: list[DataFrame] = []
+    remaining, rh = checkpoint_eager(
+        nodes.select(F.col(key_col).alias("key")).distinct()
+    )
+    e_rem, eh = checkpoint_eager(
+        edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+    )
+    parts: list[DataFrame] = []  # frozen; the returned union reads them
 
-    def trim(rem: DataFrame, e: DataFrame):
+    def trim(rem: DataFrame, rh, e: DataFrame, eh):
         """Bulk-peel trivial SCCs: a vertex with no incoming or no
         outgoing edge (within the remaining graph) cannot be on a
         cycle.  Peeling exposes new such vertices, so iterate to a
@@ -797,91 +732,93 @@ def strongly_connected_components(
         while not rem.isEmpty():
             has_in = e.select(F.col("dst").alias("key")).distinct()
             has_out = e.select(F.col("src").alias("key")).distinct()
-            keep = (
+            keep, kh = checkpoint_eager(
                 rem.join(has_in, "key", "left_semi")
                 .join(has_out, "key", "left_semi")
-                .localCheckpoint()
             )
             trivial = rem.join(keep, "key", "left_anti")
             if trivial.isEmpty():
+                kh.release()
                 break
-            parts.append(
-                trivial.select("key", F.col("key").alias("component")).localCheckpoint()
-            )
-            rem = keep
-            e = (
+            parts.append(checkpoint_eager(
+                trivial.select("key", F.col("key").alias("component"))
+            )[0])
+            rh.release()
+            rem, rh = keep, kh
+            e, eh = _step(
                 e.join(rem.select(F.col("key").alias("src")), "src", "left_semi")
-                .join(rem.select(F.col("key").alias("dst")), "dst", "left_semi")
-                .localCheckpoint()
+                .join(rem.select(F.col("key").alias("dst")), "dst", "left_semi"),
+                eh,
             )
-        return rem, e
+        return rem, rh, e, eh
 
     # self-loops are cycles of length 1 but carry no inter-vertex SCC
-    # structure; with them filtered from e_all they trim as trivial,
+    # structure; with them filtered from the edges they trim as trivial,
     # which is correct (a self-loop vertex is its own SCC)
-    remaining, e_rem = trim(remaining, e_all)
+    remaining, rh, e_rem, eh = trim(remaining, rh, e_rem, eh)
     for _ in range(max_outer):
         if remaining.isEmpty():
             break
         e = e_rem
         # forward min-propagation to fixed point: color(v) = min id
-        # reaching v (including v itself)
-        color = remaining.withColumn("color", F.col("key")).localCheckpoint()
+        # reaching v (including v itself); the changed count rides in
+        # each round's freeze, as in :func:`connected_components`
+        color, ch = checkpoint_eager(
+            remaining.withColumn("color", F.col("key"))
+        )
         for _ in range(max_prop):
             msgs = (
                 color.join(e, color["key"] == e["src"])
                 .select(F.col("dst").alias("key"), "color")
+                .withColumn("old", F.lit(None).cast(color.schema["color"].dataType))
             )
-            new_color = (
-                color.select("key", "color").unionByName(msgs)
+            new_color, changed = _observing(
+                color.select("key", "color", F.col("color").alias("old"))
+                .unionByName(msgs)
                 .groupBy("key")
-                .agg(F.min("color").alias("color"))
-                .localCheckpoint()
+                .agg(F.min("color").alias("color"), F.min("old").alias("old")),
+                n=F.count_if(F.col("color") != F.col("old")),
             )
-            changed = (
-                new_color.alias("n")
-                .join(color.alias("o"), "key")
-                .filter(F.col("n.color") != F.col("o.color"))
-            )
-            color = new_color
-            if changed.isEmpty():
+            color, ch = _step(new_color.select("key", "color"), ch)
+            if changed.get["n"] == 0:
                 break
         # SCC of root r = backward closure of r within color class r
-        assigned = (
+        assigned, ah = checkpoint_eager(
             color.filter(F.col("color") == F.col("key"))
             .select("key", F.col("key").alias("component"))
-            .localCheckpoint()
         )
-        frontier = assigned
+        frontier, fh = assigned, None
         while True:
             preds = (
                 frontier.join(e, frontier["key"] == e["dst"])
                 .select(F.col("src").alias("key"), "component")
                 .distinct()
             )
-            preds = (
+            preds, ph = checkpoint_eager(
                 preds.join(color, "key")
                 .filter(F.col("color") == F.col("component"))
                 .select("key", "component")
                 .join(assigned.select("key"), "key", "left_anti")
-                .localCheckpoint()
             )
             if preds.isEmpty():
+                ph.release()
                 break
-            assigned = assigned.unionByName(preds).localCheckpoint()
-            frontier = preds
+            assigned, ah = _step(assigned.unionByName(preds), ah, fh)
+            frontier, fh = preds, ph
+        _release(fh)
         parts.append(assigned)
-        remaining = remaining.join(
-            assigned.select("key"), "key", "left_anti"
-        ).localCheckpoint()
-        e_rem = (
+        remaining, rh = _step(
+            remaining.join(assigned.select("key"), "key", "left_anti"), rh
+        )
+        e_rem, eh = _step(
             e.join(remaining.select(F.col("key").alias("src")), "src", "left_semi")
-            .join(remaining.select(F.col("key").alias("dst")), "dst", "left_semi")
-            .localCheckpoint()
+            .join(remaining.select(F.col("key").alias("dst")), "dst", "left_semi"),
+            eh, ch,
         )
         # extraction exposes new zero-degree vertices — re-trim before
         # paying for another coloring fixed point
-        remaining, e_rem = trim(remaining, e_rem)
+        remaining, rh, e_rem, eh = trim(remaining, rh, e_rem, eh)
+    _release(rh, eh)
     from functools import reduce
 
     return reduce(DataFrame.unionByName, parts)
@@ -911,8 +848,12 @@ def betweenness_approx(
     max simply contributes no rows at the deeper levels.
     """
     key_col = nodes.columns[0]
-    verts = nodes.select(F.col(key_col).alias("key")).distinct().localCheckpoint()
-    e = (edges.select("src", "dst") if directed else _as_undirected(edges)).distinct().localCheckpoint()
+    verts, vh = checkpoint_eager(
+        nodes.select(F.col(key_col).alias("key")).distinct()
+    )
+    e, eh = checkpoint_eager(
+        (edges.select("src", "dst") if directed else _as_undirected(edges)).distinct()
+    )
     n_vertices = verts.count()
     pivots = [
         r["key"]
@@ -922,37 +863,39 @@ def betweenness_approx(
         .collect()
     ]
     spark = edges.sparkSession
-    acc = verts.withColumn("betweenness", F.lit(0.0)).localCheckpoint()
+    acc, ah = _step(verts.withColumn("betweenness", F.lit(0.0)), vh)
     if not pivots:
+        eh.release()
         return acc.select("key", "betweenness")
     # forward pass: tagged path counts σ per (pivot, key), one level of
     # ALL pivots per round; levels[h] = (pivot, key, sigma)
-    level = (
+    level, lh = checkpoint_eager(
         spark.createDataFrame([(p,) for p in pivots], ["pivot"])
         .select("pivot", F.col("pivot").alias("key"))
         .withColumn("sigma", F.lit(1.0))
-        .localCheckpoint()
     )
-    levels = [level]
-    seen = level.select("pivot", "key").localCheckpoint()
+    levels, level_handles = [level], [lh]
+    seen, sh = checkpoint_eager(level.select("pivot", "key"))
     for _ in range(max_hops):
-        nxt = (
+        nxt, nh = checkpoint_eager(
             level.join(e, level["key"] == e["src"])
             .groupBy("pivot", F.col("dst").alias("k2"))
             .agg(F.sum("sigma").alias("sigma"))
             .select("pivot", F.col("k2").alias("key"), "sigma")
             .join(seen, ["pivot", "key"], "left_anti")
-            .localCheckpoint()
         )
         if nxt.isEmpty():
+            nh.release()
             break
         levels.append(nxt)
-        seen = seen.unionByName(nxt.select("pivot", "key")).localCheckpoint()
+        level_handles.append(nh)
+        seen, sh = _step(seen.unionByName(nxt.select("pivot", "key")), sh)
         level = nxt
+    sh.release()
     # backward dependency sweep, level-synchronous across pivots
-    delta = levels[-1].select(
+    delta, dh = checkpoint_eager(levels[-1].select(
         "pivot", "key", F.lit(0.0).alias("delta")
-    ).localCheckpoint()
+    ))
     for h in range(len(levels) - 1, 0, -1):
         child = levels[h].join(delta, ["pivot", "key"], "left").select(
             "pivot",
@@ -983,12 +926,12 @@ def betweenness_approx(
             )
             .groupBy("pivot", "key")
             .agg(F.sum("contrib").alias("delta"))
-            .localCheckpoint()
         )
-        delta = contribs  # level h-1's dependencies, consumed next round
+        # level h-1's dependencies, consumed next round
+        delta, dh = _step(contribs, dh)
         if h - 1 > 0:  # each pivot's own dependency is not counted
-            per_key = contribs.groupBy("key").agg(F.sum("delta").alias("__d"))
-            acc = (
+            per_key = delta.groupBy("key").agg(F.sum("delta").alias("__d"))
+            acc, ah = _step(
                 acc.join(per_key, "key", "left")
                 .select(
                     "key",
@@ -996,9 +939,10 @@ def betweenness_approx(
                         F.col("betweenness")
                         + F.coalesce(F.col("__d"), F.lit(0.0))
                     ).alias("betweenness"),
-                )
-                .localCheckpoint()
+                ),
+                ah,
             )
+    _release(eh, dh, *level_handles)
     scale = float(n_vertices) / float(max(len(pivots), 1))
     return acc.select("key", (F.col("betweenness") * F.lit(scale)).alias("betweenness"))
 
@@ -1030,9 +974,9 @@ def random_walks(
     (nodes × walks_per_node).  Hot-node skew is bounded: the frontier
     row count never grows, unlike BFS frontiers.
 
-    Cache discipline: the output accumulator is chained-persisted each
-    step (its cached data absorbs the prior steps' rows), so step s-1's
-    frontier cache is RELEASED once step s materializes — peak cached
+    Freeze discipline: the output accumulator is frozen each step (its
+    frozen blocks absorb the prior steps' rows), so step s-1's frontier
+    and output are RELEASED once step s materializes — peak frozen
     state is ~2× the final output + two frontiers, never L frontiers.
     """
     und = _as_undirected(edges).distinct()
@@ -1048,14 +992,13 @@ def random_walks(
     )
     out = frontier.select("start", "w", F.lit(0).alias("step"),
                           F.col("cur").alias("node"))
-    prev_f: DataFrame | None = None
-    prev_out: DataFrame | None = None
+    fh = oh = None  # handles of the current frontier and output
     for step in range(1, walk_length + 1):
         key = F.concat_ws(
             "|", F.col("start"), F.col("w"), F.lit(step), F.col("cur")
         )
         h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint")
-        frontier = _chain_persist(
+        frontier, nfh = checkpoint_eager(
             frontier.join(adj, frontier["cur"] == adj["src"]).select(
                 "start",
                 "w",
@@ -1064,18 +1007,15 @@ def random_walks(
                 ).alias("cur"),
             )
         )
-        out = _chain_persist(
+        out, oh = _step(
             out.unionByName(
                 frontier.select("start", "w", F.lit(step).alias("step"),
                                 F.col("cur").alias("node"))
             ),
-            prev_out,
+            oh, fh,
         )
-        if prev_f is not None:
-            prev_f.unpersist()  # its rows are baked into out's cache now
-        prev_f, prev_out = frontier, out
-    if prev_f is not None:
-        prev_f.unpersist()
+        fh = nfh
+    _release(fh)
     adj.unpersist()
     return out
 
@@ -1143,8 +1083,7 @@ def weighted_random_walks(
     out = frontier.select(
         "start", "w", F.lit(0).alias("step"), F.col("cur").alias("node")
     )
-    prev_f: DataFrame | None = None
-    prev_out: DataFrame | None = None
+    fh = oh = None  # handles of the current frontier and output
     for step in range(1, walk_length + 1):
         key = F.concat_ws(
             "|", F.col("start"), F.col("w"), F.lit(step), F.col("cur")
@@ -1152,27 +1091,24 @@ def weighted_random_walks(
         h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint")
         r = h % F.col("total")
         idx = F.size(F.filter("cumw", lambda c: c <= r)) + F.lit(1)
-        frontier = _chain_persist(
+        frontier, nfh = checkpoint_eager(
             frontier.join(adj, frontier["cur"] == adj["src"]).select(
                 "start",
                 "w",
                 F.element_at(F.col("nbrs"), idx).alias("cur"),
             )
         )
-        out = _chain_persist(
+        out, oh = _step(
             out.unionByName(
                 frontier.select(
                     "start", "w", F.lit(step).alias("step"),
                     F.col("cur").alias("node"),
                 )
             ),
-            prev_out,
+            oh, fh,
         )
-        if prev_f is not None:
-            prev_f.unpersist()
-        prev_f, prev_out = frontier, out
-    if prev_f is not None:
-        prev_f.unpersist()
+        fh = nfh
+    _release(fh)
     adj.unpersist()
     return out
 
@@ -1229,8 +1165,7 @@ def node2vec_walks(
     )
     a_cur = adj.select(F.col("src").alias("__cs"), F.col("nbrs").alias("__cn"))
     a_prev = adj.select(F.col("src").alias("__ps"), F.col("nbrs").alias("__pn"))
-    prev_f: DataFrame | None = None
-    prev_out: DataFrame | None = None
+    fh = oh = None  # handles of the current frontier and output
     for step in range(1, walk_length + 1):
         key = F.concat_ws(
             "|", F.col("start"), F.col("w"), F.lit(step), F.col("cur")
@@ -1260,7 +1195,7 @@ def node2vec_walks(
         # two-step select: computing the pick and renaming cur->prev in ONE
         # list would let Spark's lateral-column-alias resolution bind the
         # `prev` inside `weights` to the new alias instead of the input row
-        frontier = _chain_persist(
+        frontier, nfh = checkpoint_eager(
             frontier.join(a_cur, frontier["cur"] == a_cur["__cs"])
             .join(a_prev, frontier["prev"] == a_prev["__ps"], "left")
             .select(
@@ -1274,20 +1209,17 @@ def node2vec_walks(
                 F.col("__next").alias("cur"),
             )
         )
-        out = _chain_persist(
+        out, oh = _step(
             out.unionByName(
                 frontier.select(
                     "start", "w", F.lit(step).alias("step"),
                     F.col("cur").alias("node"),
                 )
             ),
-            prev_out,
+            oh, fh,
         )
-        if prev_f is not None:
-            prev_f.unpersist()
-        prev_f, prev_out = frontier, out
-    if prev_f is not None:
-        prev_f.unpersist()
+        fh = nfh
+    _release(fh)
     adj.unpersist()
     return out
 
@@ -1299,23 +1231,24 @@ def triangle_count(edges: DataFrame) -> int:
     enumeration a<b<c — each triangle counted exactly once.  Shuffles:
     2 joins on node id; at scale pre-bucket the canonical edge table.
     """
-    e = (
+    e, eh = checkpoint_eager(
         _as_undirected(edges)
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
     ab = e.select(F.col("a"), F.col("b"))
     bc = e.select(F.col("a").alias("b2"), F.col("b").alias("c"))
     ac = e.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
-    return (
+    n = (
         ab.join(bc, ab["b"] == bc["b2"])
         .join(ac, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
         .count()
     )
+    eh.release()
+    return n
 
 
 def label_propagation(
@@ -1337,17 +1270,15 @@ def label_propagation(
     n_shuffle = int(
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
-    e = (
+    e, eh = checkpoint_eager(
         _as_undirected(edges)
         .repartition(n_shuffle, "src")
         .distinct()
-        .localCheckpoint()
     )
     key_col = nodes.columns[0]
-    labels = (
+    labels, lh = checkpoint_eager(
         nodes.select(F.col(key_col).alias("key")).distinct()
         .withColumn("label", F.col("key"))
-        .localCheckpoint()
     )
     for _ in range(max_iter):
         msgs = (
@@ -1362,13 +1293,14 @@ def label_propagation(
             .groupBy("key")
             .agg(F.min("label").alias("new_label"))  # ties → smallest label
         )
-        labels = (
+        labels, lh = _step(
             labels.join(best, "key", "left")
             .select(
                 "key", F.coalesce(F.col("new_label"), F.col("label")).alias("label")
-            )
-            .localCheckpoint()
+            ),
+            lh,
         )
+    eh.release()
     return labels
 
 
@@ -1404,20 +1336,18 @@ def personalized_pagerank(
         )
     else:
         verts = nodes.select(F.col(nodes.columns[0]).alias("key")).distinct()
-    verts = verts.localCheckpoint()
+    verts, vh = checkpoint_eager(verts)
     # restart mass is assigned to DISTINCT sources, so |S| must be the
     # distinct count too — a duplicated source row must not deflate the
     # restart vector below sum=1
-    src_distinct = (
-        sources.select(F.col(sources.columns[0]).alias("key"))
-        .distinct()
-        .localCheckpoint()
+    src_distinct, sh = checkpoint_eager(
+        sources.select(F.col(sources.columns[0]).alias("key")).distinct()
     )
     n_src = src_distinct.count()
     restart = src_distinct.withColumn("restart", F.lit(1.0 / float(n_src)))
-    base = verts.join(restart, "key", "left").select(
+    base, bh = _step(verts.join(restart, "key", "left").select(
         "key", F.coalesce(F.col("restart"), F.lit(0.0)).alias("restart")
-    ).localCheckpoint()
+    ), vh, sh)
     # pagerank's layout discipline: one up-front src exchange reused by
     # the out-degree aggregate, the join back, and the per-round layout
     e_p = e.repartition(
@@ -1427,12 +1357,11 @@ def personalized_pagerank(
     out_deg = e_p.groupBy(F.col("src").alias("key")).agg(
         F.count("*").alias("out_degree")
     )
-    links = (
+    links, lh = checkpoint_eager(
         e_p.join(out_deg, e_p["src"] == out_deg["key"])
         .select("src", "dst", "out_degree")
-        .localCheckpoint()
     )
-    ranks = base.select("key", F.col("restart").alias("rank"))
+    ranks, rh = base.select("key", F.col("restart").alias("rank")), None
     for _ in range(iterations):
         contribs = (
             links.join(ranks, links["src"] == ranks["key"])
@@ -1443,16 +1372,17 @@ def personalized_pagerank(
             .groupBy("key")
             .agg(F.sum("contrib").alias("contrib"))
         )
-        ranks = (
+        ranks, rh = _step(
             base.join(contribs, "key", "left")
             .select(
                 "key",
                 (F.lit(1.0 - damping) * F.col("restart")
                  + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
                  ).alias("rank"),
-            )
-            .localCheckpoint()
+            ),
+            rh,
         )
+    _release(lh, bh if iterations > 0 else None)
     return ranks
 
 
@@ -1493,16 +1423,16 @@ def sssp_weighted(
                 F.col("dst").alias("src"), F.col("src").alias("dst"), w.alias("w")
             )
         )
-    e = e.localCheckpoint()
+    e, eh = checkpoint_eager(e)
     if not e.filter(F.col("w") < 0).isEmpty():
+        eh.release()
         raise ValueError("sssp_weighted requires non-negative weights")
-    dist = (
+    dist, dh = checkpoint_eager(
         sources.select(F.col(sources.columns[0]).alias("key")).distinct()
         .withColumn("dist", F.lit(0.0))
         .withColumn("pred", F.lit(None).cast(e.schema["src"].dataType))
-        .localCheckpoint()
     )
-    frontier = dist
+    frontier, fh = dist, None
     for _ in range(max_iter):
         cand = (
             frontier.join(e, frontier["key"] == e["src"])
@@ -1518,22 +1448,23 @@ def sssp_weighted(
                 "key", F.col("m.cand").alias("cand"), F.col("m.parent").alias("parent")
             )
         )
-        improved = (
+        improved, ih = checkpoint_eager(
             cand.join(dist.select("key", "dist"), "key", "left")
             .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
             .select(
                 "key", F.col("cand").alias("dist"), F.col("parent").alias("pred")
             )
-            .localCheckpoint()
         )
         if improved.isEmpty():
+            ih.release()
             break
-        dist = (
+        dist, dh = _step(
             dist.join(improved.select("key"), "key", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint()
+            .unionByName(improved),
+            dh, fh,
         )
-        frontier = improved
+        frontier, fh = improved, ih
+    _release(eh, fh)
     return dist if with_pred else dist.select("key", "dist")
 
 
@@ -1573,13 +1504,12 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     join Catalyst plans — no driver-side adjacency.  Rounds are bounded
     by the peeling depth.  Returns canonical src < dst pairs.
     """
-    canon = (
+    canon, ch = checkpoint_eager(
         edges.select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
     while max_iter > 0:
         max_iter -= 1
@@ -1596,15 +1526,16 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
             .groupBy(canon["src"], canon["dst"])
             .agg(F.count("*").alias("support"))
         )
-        keep = (
+        keep, kh = checkpoint_eager(
             canon.join(support, ["src", "dst"], "left")
             .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
             .select("src", "dst")
-            .localCheckpoint()
         )
         if keep.count() == canon.count():
+            kh.release()
             break
-        canon = keep
+        ch.release()
+        canon, ch = keep, kh
     return canon
 
 
@@ -1629,14 +1560,13 @@ def temporal_bfs(
     join + one grouped min per round.
     """
     e = edges.select("src", "dst", F.col(time_col).cast("long").alias("t"))
-    e = e.localCheckpoint()
+    e, eh = checkpoint_eager(e)
     neg_inf = F.lit(-(1 << 62)).cast("long")
-    arrive = (
+    arrive, ah = checkpoint_eager(
         sources.select(F.col(sources.columns[0]).alias("key")).distinct()
         .withColumn("earliest", neg_inf)
-        .localCheckpoint()
     )
-    frontier = arrive
+    frontier, fh = arrive, None
     for _ in range(max_iter):
         cand = (
             frontier.join(e, frontier["key"] == e["src"])
@@ -1645,20 +1575,21 @@ def temporal_bfs(
             .groupBy("key")
             .agg(F.min("cand").alias("cand"))
         )
-        improved = (
+        improved, ih = checkpoint_eager(
             cand.join(arrive, "key", "left")
             .filter(F.col("earliest").isNull() | (F.col("cand") < F.col("earliest")))
             .select("key", F.col("cand").alias("earliest"))
-            .localCheckpoint()
         )
         if improved.isEmpty():
+            ih.release()
             break
-        arrive = (
+        arrive, ah = _step(
             arrive.join(improved.select("key"), "key", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint()
+            .unionByName(improved),
+            ah, fh,
         )
-        frontier = improved
+        frontier, fh = improved, ih
+    _release(eh, fh)
     return arrive
 
 
@@ -1684,7 +1615,9 @@ def closeness_approx(
     frontier DataFrame.
     """
     key_col = nodes.columns[0]
-    verts = nodes.select(F.col(key_col).alias("key")).distinct().localCheckpoint()
+    verts, _ = checkpoint_eager(  # the returned frame reads it
+        nodes.select(F.col(key_col).alias("key")).distinct()
+    )
     n_vertices = verts.count()
     pivots = [
         r["key"]
@@ -1694,32 +1627,34 @@ def closeness_approx(
         .collect()
     ]
     spark = edges.sparkSession
-    e = (edges.select("src", "dst") if directed else _as_undirected(edges)).localCheckpoint()
+    e, eh = checkpoint_eager(
+        edges.select("src", "dst") if directed else _as_undirected(edges)
+    )
     # ONE tagged multi-source BFS: frontier rows carry their pivot, so
     # all k sweeps advance together — k× fewer rounds/jobs than looping
     # pivots, and each round is still a single co-partitioned join
-    visited = (
+    visited, vh = checkpoint_eager(
         spark.createDataFrame([(p,) for p in pivots], ["pivot"])
         .select("pivot", F.col("pivot").alias("key"))
         .withColumn("dist", F.lit(0))
-        .localCheckpoint()
     )
-    frontier = visited
+    frontier, fh = visited, None
     hop = 0
     while hop < max_hops:
         hop += 1
-        nxt = (
+        nxt, nh = checkpoint_eager(
             frontier.join(e, frontier["key"] == e["src"])
             .select("pivot", F.col("dst").alias("key"))
             .distinct()
             .join(visited.select("pivot", "key"), ["pivot", "key"], "left_anti")
             .withColumn("dist", F.lit(hop))
-            .localCheckpoint()
         )
         if nxt.isEmpty():
+            nh.release()
             break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+        visited, vh = _step(visited.unionByName(nxt), vh, fh)
+        frontier, fh = nxt, nh
+    _release(eh, fh)
     scale = float(n_vertices) / float(len(pivots)) if pivots else 0.0
     summed = (
         visited.filter(F.col("dist") > 0)
@@ -1756,7 +1691,7 @@ def pagerank_weighted(
         )
     else:
         verts = nodes.select(F.col(nodes.columns[0]).alias("key")).distinct()
-    verts = verts.localCheckpoint()
+    verts, vh = checkpoint_eager(verts)
     # same layout discipline as pagerank: one up-front src exchange
     # reused by the out-weight aggregate, the join back, and the
     # checkpointed per-round layout (same no-per-round-broadcast
@@ -1768,12 +1703,11 @@ def pagerank_weighted(
     out_w = e_p.groupBy(F.col("src").alias("key")).agg(
         F.sum("w").alias("out_w")
     )
-    links = (
+    links, lh = checkpoint_eager(
         e_p.join(out_w, e_p["src"] == out_w["key"])
         .select("src", "dst", (F.col("w") / F.col("out_w")).alias("frac"))
-        .localCheckpoint()
     )
-    ranks = verts.withColumn("rank", F.lit(1.0))
+    ranks, rh = verts.withColumn("rank", F.lit(1.0)), None
     for _ in range(iterations):
         contribs = (
             links.join(ranks, links["src"] == ranks["key"])
@@ -1784,16 +1718,17 @@ def pagerank_weighted(
             .groupBy("key")
             .agg(F.sum("contrib").alias("contrib"))
         )
-        ranks = (
+        ranks, rh = _step(
             verts.join(contribs, "key", "left")
             .select(
                 "key",
                 (F.lit(1.0 - damping)
                  + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
                  ).alias("rank"),
-            )
-            .localCheckpoint()
+            ),
+            rh,
         )
+    _release(lh, vh if iterations > 0 else None)
     return ranks
 
 
@@ -1816,46 +1751,49 @@ def densest_subgraph(
     the degree table (|E| = Σdeg/2 by the handshake lemma) — no
     separate edge count / vertex count / emptiness probe.
     """
-    und = (
+    cur_edges, ch = checkpoint_eager(
         edges.select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    cur_edges = und
     best_verts: DataFrame | None = None
+    bh = None
     best_density = -1.0
     for _ in range(max_iter):
-        deg = (
+        deg, dh = checkpoint_eager(
             cur_edges.select(F.col("src").alias("key"))
             .unionByName(cur_edges.select(F.col("dst").alias("key")))
             .groupBy("key")
             .agg(F.count("*").alias("deg"))
-            .localCheckpoint()
         )
         stats = deg.agg(
             F.count("*").alias("n_v"), F.sum("deg").alias("sum_deg")
         ).head()
         n_v = stats["n_v"]
         if not n_v:
+            dh.release()
             break
         n_e = int(stats["sum_deg"]) // 2  # handshake lemma
         density = n_e / n_v
         if density > best_density:
             best_density = density
-            best_verts = deg.select("key")
+            _release(bh)
+            best_verts, bh = deg.select("key"), dh
         threshold = (1.0 + epsilon) * 2.0 * density  # avg degree = 2|E|/|V|
         # peel: strictly fewer vertices survive every round (not every
         # degree can exceed (1+eps) x the average), so an empty keep set
         # simply yields an empty degree table next round
-        keep = deg.filter(F.col("deg") > threshold).select("key").localCheckpoint()
-        cur_edges = (
-            cur_edges.join(keep.withColumnRenamed("key", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("key", "dst"), "dst", "left_semi")
-            .localCheckpoint()
+        keep, kh = checkpoint_eager(
+            deg.filter(F.col("deg") > threshold).select("key")
         )
+        cur_edges, ch = _step(
+            cur_edges.join(keep.withColumnRenamed("key", "src"), "src", "left_semi")
+            .join(keep.withColumnRenamed("key", "dst"), "dst", "left_semi"),
+            ch, kh, None if dh is bh else dh,
+        )
+    ch.release()
     if best_verts is None:
         spark = edges.sparkSession
         return spark.createDataFrame([], "key string"), 0.0
@@ -1877,14 +1815,13 @@ def four_clique_count(edges: DataFrame) -> DataFrame:
     which AQE can broadcast when the graph is small and which should be
     pre-bucketed by src at 100 TB.
     """
-    e = (
+    e, _ = checkpoint_eager(
         _as_undirected(edges)
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
     ab = e.select(F.col("a"), F.col("b"))
     bc = e.select(F.col("a").alias("b2"), F.col("b").alias("c"))
@@ -1987,17 +1924,16 @@ def minimum_spanning_forest(
         .filter(F.col("u") != F.col("v"))
         .groupBy("u", "v")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint()
     )
-    labels = (
+    e, eh = checkpoint_eager(e)
+    labels, lh = checkpoint_eager(
         e.select(F.col("u").alias("key"))
         .unionByName(e.select(F.col("v").alias("key")))
         .distinct()
         .withColumn("c", F.col("key"))
-        .localCheckpoint()
     )
     spark = edges.sparkSession
-    forest = spark.createDataFrame([], e.schema).localCheckpoint()
+    forest, fh = checkpoint_eager(spark.createDataFrame([], e.schema))
     for _ in range(max_iter):
         el = (
             e.join(labels.select(F.col("key").alias("u"), F.col("c").alias("cu")), "u")
@@ -2008,17 +1944,17 @@ def minimum_spanning_forest(
         cand = el.select(F.col("cu").alias("component"), pick.alias("s")).unionByName(
             el.select(F.col("cv").alias("component"), pick.alias("s"))
         )
-        chosen = (
+        chosen, chh = checkpoint_eager(
             cand.groupBy("component")
             .agg(F.min("s").alias("s"))
             .select("s.u", "s.v", "s.w", "s.cu", "s.cv")
-            .localCheckpoint()
         )
         if chosen.isEmpty():
+            chh.release()
             break
-        forest = forest.unionByName(
+        forest, fh = _step(forest.unionByName(
             chosen.select("u", "v", "w").distinct()
-        ).localCheckpoint()
+        ), fh)
         # contract the component graph (two-phase: O(log n) rounds even
         # for chain-shaped merge patterns)
         cedges = chosen.select(F.col("cu").alias("src"), F.col("cv").alias("dst"))
@@ -2026,11 +1962,12 @@ def minimum_spanning_forest(
         cmap = connected_components_twophase(cnodes, cedges).select(
             F.col("key").alias("c"), F.col("component").alias("c_new")
         )
-        labels = (
+        labels, lh = _step(
             labels.join(cmap, "c", "left")
-            .select("key", F.coalesce(F.col("c_new"), F.col("c")).alias("c"))
-            .localCheckpoint()
+            .select("key", F.coalesce(F.col("c_new"), F.col("c")).alias("c")),
+            lh, chh,
         )
+    _release(eh, lh)
     return forest
 
 
@@ -2062,8 +1999,11 @@ def shortest_path_length_bidirectional(
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
     def new_side(key):
-        v = spark.createDataFrame([(key, 0)], ["key", "dist"]).localCheckpoint()
-        return {"visited": v, "frontier": v, "depth": 0, "alive": True}
+        v, vh = checkpoint_eager(
+            spark.createDataFrame([(key, 0)], ["key", "dist"])
+        )
+        return {"visited": v, "frontier": v, "depth": 0, "alive": True,
+                "vh": vh, "fh": None}
 
     fwd, bwd = new_side(src_key), new_side(dst_key)
     best: int | None = None
@@ -2083,16 +2023,19 @@ def shortest_path_length_bidirectional(
             .distinct()
             .join(side["visited"].select("key"), "key", "left_anti")
             .withColumn("dist", F.lit(side["depth"] + 1))
-            .localCheckpoint()
         )
+        nxt, nh = checkpoint_eager(nxt)
         side["depth"] += 1
         if nxt.isEmpty():
+            nh.release()
             side["alive"] = False
             if not fwd["alive"] and not bwd["alive"]:
                 break
         else:
-            side["visited"] = side["visited"].unionByName(nxt).localCheckpoint()
-            side["frontier"] = nxt
+            side["visited"], side["vh"] = _step(
+                side["visited"].unionByName(nxt), side["vh"], side["fh"]
+            )
+            side["frontier"], side["fh"] = nxt, nh
         meet = (
             fwd["visited"].alias("f")
             .join(bwd["visited"].alias("b"), "key")
@@ -2104,9 +2047,10 @@ def shortest_path_length_bidirectional(
         # no shorter crossing can appear once the combined reached depth
         # meets the best known distance
         if best is not None and fwd["depth"] + bwd["depth"] >= best:
-            return best
+            break
         if not fwd["alive"] and not bwd["alive"]:
             break
+    _release(fwd["vh"], fwd["fh"], bwd["vh"], bwd["fh"])
     return best
 
 
@@ -2143,13 +2087,13 @@ def shortest_path_bidirectional(
     key_t = e.schema["src"].dataType
 
     def new_side(key):
-        v = (
+        v, vh = checkpoint_eager(
             spark.createDataFrame([(key, 0)], ["key", "dist"])
             .select(F.col("key").cast(key_t).alias("key"), "dist")
             .withColumn("pred", F.lit(None).cast(key_t))
-            .localCheckpoint()
         )
-        return {"visited": v, "frontier": v, "depth": 0, "alive": True}
+        return {"visited": v, "frontier": v, "depth": 0, "alive": True,
+                "vh": vh, "fh": None}
 
     fwd, bwd = new_side(src_key), new_side(dst_key)
     best: int | None = None
@@ -2170,16 +2114,19 @@ def shortest_path_bidirectional(
             .join(side["visited"].select("key"), "key", "left_anti")
             .withColumn("dist", F.lit(side["depth"] + 1))
             .select("key", "dist", "pred")
-            .localCheckpoint()
         )
+        nxt, nh = checkpoint_eager(nxt)
         side["depth"] += 1
         if nxt.isEmpty():
+            nh.release()
             side["alive"] = False
             if not fwd["alive"] and not bwd["alive"]:
                 break
         else:
-            side["visited"] = side["visited"].unionByName(nxt).localCheckpoint()
-            side["frontier"] = nxt
+            side["visited"], side["vh"] = _step(
+                side["visited"].unionByName(nxt), side["vh"], side["fh"]
+            )
+            side["frontier"], side["fh"] = nxt, nh
         meet = (
             fwd["visited"].alias("f")
             .join(bwd["visited"].alias("b"), "key")
@@ -2193,6 +2140,7 @@ def shortest_path_bidirectional(
         if not fwd["alive"] and not bwd["alive"]:
             break
     if best is None or best > max_hops:
+        _release(fwd["vh"], fwd["fh"], bwd["vh"], bwd["fh"])
         return None
     # deterministic meet node: min key realizing the optimal crossing
     meet_row = (
@@ -2213,6 +2161,7 @@ def shortest_path_bidirectional(
     b_path = list(
         _backtrace_paths(bwd["visited"], targets=meet_df).head()["path"]
     )  # [dst .. meet] (backward tree is rooted at dst)
+    _release(fwd["vh"], fwd["fh"], bwd["vh"], bwd["fh"])
     return f_path + b_path[-2::-1]
 
 
@@ -2233,7 +2182,7 @@ def hyperball(
     ``groupBy(key, bucket).max(reg)``.  Semi-naive: only registers that
     INCREASED last round are re-propagated (max is idempotent, so the
     delta frontier is sufficient, mirroring :func:`bfs`).  Shuffle per
-    round carries (key, bucket, reg) triples only; ``localCheckpoint``
+    round carries (key, bucket, reg) triples only; the per-round freeze
     truncates lineage exactly like the other iterative operators.
 
     Returns one dict per completed radius t (t=0 is the singleton
@@ -2259,13 +2208,13 @@ def hyperball(
     )
 
     e = edges.select("src", "dst") if directed else _as_undirected(edges)
-    e = e.distinct().localCheckpoint()
+    e, eh = checkpoint_eager(e.distinct())
     nodes = e.select(F.col("src").alias("key")).union(
         e.select(F.col("dst").alias("key"))
     ).distinct()
     bucket, rho = hll_bucket_rho(F.col("key"))
-    state = nodes.select("key", bucket, rho.alias("reg")).localCheckpoint()
-    frontier = state
+    state, sh = checkpoint_eager(nodes.select("key", bucket, rho.alias("reg")))
+    frontier, fh = state, None
 
     def _nf_row(st: DataFrame):
         # one action: per-node harmonic fold, then the global roll-up
@@ -2327,7 +2276,7 @@ def hyperball(
             F.col("bucket").alias("s_bucket"),
             F.col("reg").alias("old"),
         )
-        improved = (
+        improved, ih = checkpoint_eager(
             cand.join(
                 old,
                 (cand["key"] == old["s_key"])
@@ -2336,18 +2285,19 @@ def hyperball(
             )
             .filter(F.col("old").isNull() | (F.col("reg") > F.col("old")))
             .select("key", "bucket", "reg")
-            .localCheckpoint()
         )
         if improved.isEmpty():
+            ih.release()
             break
-        state = (
+        state, sh = _step(
             state.unionByName(improved)
             .groupBy("key", "bucket")
-            .agg(F.max("reg").alias("reg"))
-            .localCheckpoint()
+            .agg(F.max("reg").alias("reg")),
+            sh, fh,
         )
-        frontier = improved
+        frontier, fh = improved, ih
         out.append({"t": t, **_nf_row(state)})
+    _release(eh, sh, fh)
     return out
 
 
@@ -2450,21 +2400,19 @@ def hits(
 
     100 TB shape: the score vectors co-partition with the edge list on
     the join key — two shuffles per iteration (one per direction), both
-    map-side pre-aggregated; each iteration ends in a localCheckpoint
-    to truncate lineage (same discipline as :func:`pagerank`; on a
-    cluster swap for checkpoint() to a fault-tolerant dir).
+    map-side pre-aggregated; each iteration ends in a freeze to
+    truncate lineage (same discipline as :func:`pagerank`).
     """
     if iters < 1:
         raise ValueError(f"hits() needs iters >= 1, got {iters}")
-    e = edges.select("src", "dst").distinct().localCheckpoint()
-    nodes = (
+    e, eh = checkpoint_eager(edges.select("src", "dst").distinct())
+    nodes, _ = checkpoint_eager(  # the returned frame reads it
         e.select(F.col("src").alias("v"))
         .union(e.select(F.col("dst").alias("v")))
         .distinct()
-        .localCheckpoint()
     )
-    h = nodes.withColumn("h", F.lit(int(scale)).cast("bigint"))
-    a = None
+    h, hh = nodes.withColumn("h", F.lit(int(scale)).cast("bigint")), None
+    a, ah = None, None
     for _ in range(iters):
         a_raw = (
             e.join(h, h["v"] == e["src"])
@@ -2472,7 +2420,7 @@ def hits(
             .agg(F.sum("h").alias("raw"))
         )
         a_tot = a_raw.agg(F.sum("raw").alias("tot"))
-        a = (
+        a, ah = _step(
             nodes.join(a_raw, nodes["v"] == a_raw["av"], "left")
             .crossJoin(a_tot)  # 1x1 scalar join, broadcast by AQE
             .select(
@@ -2483,8 +2431,8 @@ def hits(
                 )
                 .cast("bigint")
                 .alias("a"),
-            )
-            .localCheckpoint()
+            ),
+            ah,
         )
         h_raw = (
             e.join(a, a["v"] == e["dst"])
@@ -2492,7 +2440,7 @@ def hits(
             .agg(F.sum("a").alias("raw"))
         )
         h_tot = h_raw.agg(F.sum("raw").alias("tot"))
-        h = (
+        h, hh = _step(
             nodes.join(h_raw, nodes["v"] == h_raw["hv"], "left")
             .crossJoin(h_tot)
             .select(
@@ -2503,9 +2451,10 @@ def hits(
                 )
                 .cast("bigint")
                 .alias("h"),
-            )
-            .localCheckpoint()
+            ),
+            hh,
         )
+    eh.release()
     return (
         nodes.join(h, "v", "left")
         .join(a, "v", "left")
@@ -2587,9 +2536,8 @@ def louvain_one_level(
     100 TB shape per round: one join edge×assignment (shuffle on the
     edge key), one (v, C) hash-agg, one community-degree hash-agg
     (broadcast back — #communities ≤ #nodes and shrinks fast), one
-    argmax per node via max_by.  Assignment is localCheckpointed per
-    round (iterative-operator discipline; swap for checkpoint() on a
-    cluster).
+    argmax per node via max_by.  The assignment is frozen by a reliable
+    checkpoint per round (see :func:`_louvain_local_moving`).
     """
     if prepartitioned:
         # ``edges`` IS the undirected weighted frame in the per-round
@@ -2637,19 +2585,17 @@ def maximal_independent_set(
     driver sees only the loop counter and emptiness probes.
     """
     key_col = nodes.columns[0]
-    und = (
+    und, uh = checkpoint_eager(
         _as_undirected(edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    act = (
+    act, ah = checkpoint_eager(
         nodes.select(F.col(key_col).alias("v")).distinct()
         .withColumn("pri", F.md5(F.col("v")))
-        .localCheckpoint()
     )
     spark = nodes.sparkSession
-    mis = spark.createDataFrame([], "v string").localCheckpoint()
+    mis, mh = checkpoint_eager(spark.createDataFrame([], "v string"))
     for _ in range(max_iter):
         if act.isEmpty():
             break
@@ -2672,18 +2618,18 @@ def maximal_independent_set(
                 | (F.struct(F.col("pri"), F.col("v")) < F.col("nm"))
             )
             .select("v")
-            .localCheckpoint()
         )
-        mis = mis.unionByName(winners).localCheckpoint()
+        winners, wh = checkpoint_eager(winners)
+        mis, mh = _step(mis.unionByName(winners), mh)
         nbrs = (
             e_act.join(winners.select(F.col("v").alias("src")), "src", "left_semi")
             .select(F.col("dst").alias("v"))
             .distinct()
         )
-        act = (
-            act.join(winners.unionByName(nbrs), "v", "left_anti")
-            .localCheckpoint()
+        act, ah = _step(
+            act.join(winners.unionByName(nbrs), "v", "left_anti"), ah, wh
         )
+    _release(uh, ah)
     return mis
 
 
@@ -2708,30 +2654,29 @@ def greedy_coloring(
     count is (Δ+1)-bounded like any greedy scheme.
     """
     key_col = nodes.columns[0]
-    und = (
+    und, uh = checkpoint_eager(
         _as_undirected(edges)
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    pending = (
+    pending, ph = checkpoint_eager(
         nodes.select(F.col(key_col).alias("v")).distinct()
-        .localCheckpoint()
     )
     pri = pending.withColumn(
         "pri", F.struct(F.md5(F.col("v")).alias("h"), F.col("v"))
     )
     # the priority-dominance graph (dst outranks src) is STATIC —
     # computed once; each round only membership changes
-    dom = (
+    dom, dh = checkpoint_eager(
         und.join(pri.select(F.col("v").alias("src"), "pri"), "src")
         .join(pri.select(F.col("v").alias("dst"), F.col("pri").alias("dpri")), "dst")
         .filter(F.col("dpri") < F.col("pri"))
         .select("src", "dst")
-        .localCheckpoint()
     )
     spark = nodes.sparkSession
-    colored = spark.createDataFrame([], "v string, color int").localCheckpoint()
+    colored, ch = checkpoint_eager(
+        spark.createDataFrame([], "v string, color int")
+    )
     for _ in range(max_iter):
         if pending.isEmpty():
             break
@@ -2756,16 +2701,18 @@ def greedy_coloring(
             F.lit(0),
             lambda acc, c: F.when(c == acc, acc + 1).otherwise(acc),
         )
-        newly = (
+        newly, nh = checkpoint_eager(
             ready.join(nb_colors, "v", "left")
             .select(
                 "v",
                 F.coalesce(mex, F.lit(0)).cast("int").alias("color"),
             )
-            .localCheckpoint()
         )
-        colored = colored.unionByName(newly).localCheckpoint()
-        pending = pending.join(newly.select("v"), "v", "left_anti").localCheckpoint()
+        colored, ch = _step(colored.unionByName(newly), ch)
+        pending, ph = _step(
+            pending.join(newly.select("v"), "v", "left_anti"), ph, nh
+        )
+    _release(uh, dh, ph)
     return colored
 
 
@@ -2797,9 +2744,9 @@ def greedy_matching(edges: DataFrame, max_iter: int = 50) -> DataFrame:
             "dst",
             F.md5(F.concat_ws("|", "src", "dst")).alias("pri"),
         )
-        .localCheckpoint()
     )
-    matched_edges = None
+    und, uh = checkpoint_eager(und)
+    matched_edges, mh = None, None
     for _ in range(max_iter):
         if und.isEmpty():
             break
@@ -2811,28 +2758,28 @@ def greedy_matching(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         pick = incid.groupBy("v").agg(
             F.min(F.struct("pri", "src", "dst")).alias("e")
         ).select("v", F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
-        handshake = (
+        handshake, hh = checkpoint_eager(
             pick.groupBy("src", "dst")
             .agg(F.count("*").alias("n"))
             .filter(F.col("n") == 2)
             .select("src", "dst")
-            .localCheckpoint()
         )
         if handshake.isEmpty():
+            hh.release()
             break
-        matched_edges = (
-            handshake
-            if matched_edges is None
-            else matched_edges.unionByName(handshake).localCheckpoint()
-        )
+        if matched_edges is None:
+            matched_edges, mh = handshake, hh
+        else:
+            matched_edges, mh = _step(matched_edges.unionByName(handshake), mh)
         mv = handshake.select(F.col("src").alias("v")).unionByName(
             handshake.select(F.col("dst").alias("v"))
         ).distinct()
-        und = (
+        und, uh = _step(
             und.join(mv.select(F.col("v").alias("src")), "src", "left_anti")
-            .join(mv.select(F.col("v").alias("dst")), "dst", "left_anti")
-            .localCheckpoint()
+            .join(mv.select(F.col("v").alias("dst")), "dst", "left_anti"),
+            uh, None if hh is mh else hh,
         )
+    uh.release()
     if matched_edges is None:
         return edges.sparkSession.createDataFrame([], "src string, dst string")
     return matched_edges
@@ -2859,8 +2806,8 @@ def local_clustering(edges: DataFrame) -> DataFrame:
         .filter(F.col("src") < F.col("dst"))
         .distinct()
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .localCheckpoint()
     )
+    e, _ = checkpoint_eager(e)  # the returned frame reads it
     und = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = und.groupBy("u").agg(F.count("*").alias("d"))
     wedge = und.select(F.col("u"), F.col("v").alias("mid")).join(
@@ -2885,13 +2832,6 @@ def local_clustering(edges: DataFrame) -> DataFrame:
         .cast("bigint")
         .alias("clustering_micro"),
     )
-
-
-def _dst_partitioned_cache(und: DataFrame) -> DataFrame:
-    """Cache the bidirectional edge table hash-partitioned AND sorted
-    on ``dst`` — the metadata-visible layout every local-moving round
-    joins on (see :func:`partitioned_cache`).  Caller unpersists."""
-    return partitioned_cache(und, "dst")
 
 
 def _louvain_local_moving(
@@ -2938,20 +2878,15 @@ def _louvain_local_moving(
     of a broadcast vertex state is exactly the memory blow-up the
     co-partitioned joins avoid.
     """
-    # this loop shape NEEDS a hard freeze (see rdd_freeze docstring).
-    # Default since r6: JVM-side reliable Dataset.checkpoint
-    # (df_freeze) — the r5 Python-RDD freeze piped the vertex state
-    # through Python workers on every materialization and every
-    # downstream read (~4x/round); swapping it measured warm exec
-    # 108.5s -> 87.0s (-20%) and warm wall 11.75 -> 10.37s on the
-    # sf0.1 copurchase graph, cold exec neutral (181 -> 175s),
-    # assignment bit-identical.  "rdd" kept as an env fallback for
-    # A/B and for environments without a writable checkpoint dir.
-    import os as _os
-
-    _mode = _os.environ.get("SPARK_GRAFT_LOUVAIN_FREEZE", "checkpoint")
-    _freeze = df_freeze if _mode == "checkpoint" else rdd_freeze
-
+    # this loop shape references the per-round assignment ~4x in the
+    # next round's plan, and a LOCAL checkpoint of it under AQE could
+    # land on a pre-replan RDD whose full lineage is retained, so round
+    # cost compounded (measured 0.7s -> 67s over 8 rounds).  The
+    # assignment is therefore frozen by a RELIABLE checkpoint
+    # (``reliable=True``), which pins the computed partitions; it also
+    # measured warm exec 108.5s -> 87.0s (-20%) against the earlier
+    # Python-RDD freeze on the sf0.1 copurchase graph, assignment
+    # bit-identical.
     ideg = und.groupBy(F.col("src").alias("v")).agg(
         F.sum("w").cast("bigint").alias("ideg")
     )
@@ -2966,7 +2901,7 @@ def _louvain_local_moving(
                 ).cast("bigint").alias("ideg"),
             )
         )
-    nodes = ideg.select("v", F.col("ideg").alias("deg")).localCheckpoint()
+    nodes, nh = checkpoint_eager(ideg.select("v", F.col("ideg").alias("deg")))
     s_total = nodes.agg(F.sum("deg")).collect()[0][0] or 0
     # node-sized frames broadcast only while they are actually small
     # (see docstring); identity above the gate
@@ -3020,7 +2955,9 @@ def _louvain_local_moving(
     # ADD two joins (encode at entry, decode at exit) plus a dense-id
     # assignment shuffle per level.  Nothing on the profile charges to
     # key width; skip unless rows ever become array-indexed.
-    asg, asg_rdd = _freeze(nodes.select("v", F.col("v").alias("c")))
+    asg, ah = checkpoint_eager(
+        nodes.select("v", F.col("v").alias("c")), reliable=True
+    )
 
     quiet_streak = 0
     for it in range(max_iter):
@@ -3116,18 +3053,14 @@ def _louvain_local_moving(
             F.col("b.c_cur").alias("c_old"),
         )
         # moved-count folds into the freeze's own materialization job
-        if _mode == "checkpoint":
-            nxt, asg_rdd, n_moved = df_freeze_counting(
-                pre, F.col("c") != F.col("c_old"), asg_rdd
-            )
-        else:
-            nxt, asg_rdd, n_moved = rdd_freeze_counting(
-                pre, lambda r: r["c"] != r["c_old"], asg_rdd
-            )
-        asg = nxt.select("v", "c")
-        quiet_streak = quiet_streak + 1 if n_moved == 0 else 0
+        pre, moved = _observing(pre, n=F.count_if(F.col("c") != F.col("c_old")))
+        nxt, nxh = checkpoint_eager(pre, reliable=True)
+        ah.release()
+        asg, ah = nxt.select("v", "c"), nxh
+        quiet_streak = quiet_streak + 1 if moved.get["n"] == 0 else 0
         if quiet_streak >= 2:
             break
+    nh.release()
     return asg
 
 
@@ -3152,8 +3085,8 @@ def louvain(
     100 TB shape: each level shrinks the graph (typically sharply
     after level 1), so cost is dominated by level 0 — the same
     per-round joins as :func:`louvain_one_level`; the aggregation
-    itself is one join + two hash-aggs.  localCheckpoint per level
-    bounds lineage.
+    itself is one join + two hash-aggs.  A freeze per level bounds
+    lineage.
     """
     if weight_col is None:
         base = (
@@ -3194,19 +3127,24 @@ def louvain(
         .persist()
     )
     und.count()
-    loops = None
+    loops, lh = None, None
     mapping = None  # original v -> current-level community
     for _ in range(max_levels):
         asg = _louvain_local_moving(und, loops, max_iter)
         n_nodes = asg.count()
         n_comms = asg.select("c").distinct().count()
+        # frozen like the assignment it composes (reliable: no
+        # executor-local block to release)
         mapping = (
             asg
             if mapping is None
-            else mapping.join(
-                asg.select(F.col("v").alias("c"), F.col("c").alias("c_new")),
-                "c",
-            ).select("v", F.col("c_new").alias("c")).localCheckpoint()
+            else checkpoint_eager(
+                mapping.join(
+                    asg.select(F.col("v").alias("c"), F.col("c").alias("c_new")),
+                    "c",
+                ).select("v", F.col("c_new").alias("c")),
+                reliable=True,
+            )[0]
         )
         if n_comms == n_nodes:
             break
@@ -3216,10 +3154,12 @@ def louvain(
             .join(asg.select(F.col("v").alias("dst"), F.col("c").alias("cd")), "dst")
             .select("cs", "cd", "w")
         )
-        new_und = _dst_partitioned_cache(
+        # the metadata-visible layout every local-moving round joins on
+        new_und = partitioned_cache(
             proj.filter(F.col("cs") != F.col("cd"))
             .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
-            .agg(F.sum("w").cast("bigint").alias("w"))
+            .agg(F.sum("w").cast("bigint").alias("w")),
+            "dst",
         )
         intra = (
             proj.filter(F.col("cs") == F.col("cd"))
@@ -3240,14 +3180,15 @@ def louvain(
             .groupBy("v")
             .agg(F.sum("loop_w").cast("bigint").alias("loop_w"))
         )
-        loops = new_loops.localCheckpoint()
-        # new_und (persist+count) and loops (eager localCheckpoint) are
-        # both materialized — the previous level's cache can go
+        loops, lh = _step(new_loops, lh)
+        # new_und (persist+count) and loops (frozen) are both
+        # materialized — the previous level's cache can go
         und.unpersist()
         und = new_und
         if und.isEmpty():
             break
     und.unpersist()
+    _release(lh)
     return mapping.select("v", F.col("c").alias("community"))
 
 
@@ -3266,39 +3207,45 @@ def topological_levels(
 
     100 TB shape per round: peel = one anti-join (active edges whose
     src is still unpeeled) + one distinct on dst; the frontier is the
-    current level, edges shrink monotonically; ``localCheckpoint``
-    per round truncates lineage.  Rounds = DAG depth (the SPAWNS
+    current level, edges shrink monotonically; a freeze per round
+    truncates lineage.  Rounds = DAG depth (the SPAWNS
     forest is tens deep, not thousands); for adversarially deep
     chains, pair with :func:`connected_components_twophase`-style
     contraction first.
     """
     key_col = nodes.columns[0]
-    verts = nodes.select(F.col(key_col).alias("v")).distinct().localCheckpoint()
-    e = (
+    verts, _ = checkpoint_eager(  # the returned frame reads it
+        nodes.select(F.col(key_col).alias("v")).distinct()
+    )
+    e, eh = checkpoint_eager(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .join(verts.select(F.col("v").alias("src")), "src", "left_semi")
         .join(verts.select(F.col("v").alias("dst")), "dst", "left_semi")
-        .localCheckpoint()
     )
     spark = nodes.sparkSession
-    out = spark.createDataFrame([], "v string, level int").localCheckpoint()
-    remaining = verts
+    out, oh = checkpoint_eager(spark.createDataFrame([], "v string, level int"))
+    remaining, rh = verts, None
     for level in range(max_iter):
         if remaining.isEmpty():
             break
         has_incoming = e.select(F.col("dst").alias("v")).distinct()
-        frontier = remaining.join(has_incoming, "v", "left_anti").localCheckpoint()
+        frontier, fh = checkpoint_eager(
+            remaining.join(has_incoming, "v", "left_anti")
+        )
         if frontier.isEmpty():
+            fh.release()
             break  # every remaining vertex sits on/behind a cycle
-        out = out.unionByName(
-            frontier.withColumn("level", F.lit(level))
-        ).localCheckpoint()
-        remaining = remaining.join(frontier, "v", "left_anti").localCheckpoint()
-        e = e.join(
-            frontier.select(F.col("v").alias("src")), "src", "left_anti"
-        ).localCheckpoint()
+        out, oh = _step(
+            out.unionByName(frontier.withColumn("level", F.lit(level))), oh
+        )
+        remaining, rh = _step(remaining.join(frontier, "v", "left_anti"), rh)
+        e, eh = _step(
+            e.join(frontier.select(F.col("v").alias("src")), "src", "left_anti"),
+            eh, fh,
+        )
+    _release(eh, rh)
     # cycle residue: unpeelable vertices, level NULL
     return verts.join(out, "v", "left").select("v", "level")
 
@@ -3327,24 +3274,25 @@ def harmonic_centrality_exact(
     Vertices are the endpoints of ``edges`` (both directions when
     ``directed=False``).
     """
-    e = (edges.select("src", "dst") if directed else _as_undirected(edges)).localCheckpoint()
-    verts = (
+    e, eh = checkpoint_eager(
+        edges.select("src", "dst") if directed else _as_undirected(edges)
+    )
+    verts, uh = checkpoint_eager(
         e.select(F.col("src").alias("key"))
         .unionByName(e.select(F.col("dst").alias("key")))
         .distinct()
-        .localCheckpoint()
     )
-    visited = (
+    visited, vh = _step(
         verts.select(F.col("key").alias("pivot"))
         .select("pivot", F.col("pivot").alias("key"))
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint()
+        .withColumn("dist", F.lit(0)),
+        uh,
     )
-    frontier = visited
+    frontier, fh = visited, None
     hop = 0
     while hop < max_hops:
         hop += 1
-        nxt = (
+        nxt, nh = checkpoint_eager(
             frontier.join(e, frontier["key"] == e["src"])
             .select("pivot", F.col("dst").alias("key"))
             .distinct()
@@ -3352,12 +3300,13 @@ def harmonic_centrality_exact(
                 visited.select("pivot", "key"), ["pivot", "key"], "left_anti"
             )
             .withColumn("dist", F.lit(hop))
-            .localCheckpoint()
         )
         if nxt.isEmpty():
+            nh.release()
             break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+        visited, vh = _step(visited.unionByName(nxt), vh, fh)
+        frontier, fh = nxt, nh
+    _release(eh, fh)
     return (
         visited.filter(F.col("dist") > 0)
         .groupBy("key")

@@ -52,12 +52,13 @@ def get_spark(app_name: str = "graphdb-neo4j-spark", **extra_conf: str) -> Spark
         # dedup expression in tags_map
         .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # reliable-checkpoint GC: the per-round Dataset.checkpoint in
-        # the iterative kernels (traversal.df_freeze) writes one file
-        # per round; with cleanCheckpoints on, the ContextCleaner
-        # deletes each file once its RDD is GC'd on the driver, so a
-        # long-lived session running many Louvain/PageRank invocations
-        # does not accumulate checkpoint data unboundedly (ADVICE r6)
+        # reliable-checkpoint GC: a reliable freeze
+        # (order.checkpoint_eager — Louvain's per-round assignment, or
+        # every round under SPARK_GRAFT_RELIABLE_FREEZE=1) writes one
+        # checkpoint file per round; with cleanCheckpoints on, the
+        # ContextCleaner deletes each file once its RDD is GC'd on the
+        # driver, so a long-lived session running many iterative
+        # kernels does not accumulate checkpoint data unboundedly
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
     )

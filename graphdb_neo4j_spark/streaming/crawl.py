@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from graphdb_neo4j_spark.operators.order import checkpoint_eager
 from graphdb_neo4j_spark.sources.compressed import decode_shards_union
 from graphdb_neo4j_spark.sources.warc import warc_records
 
@@ -339,7 +340,7 @@ def streaming_frontier_ingest(
         # write below targets — cutting the lineage means the write
         # job never re-scans the ledger mid-overwrite, and the
         # anti-join runs once, not once per action
-        new = new.localCheckpoint()
+        new, new_handle = checkpoint_eager(new)
         if gidx_handle is not None:
             # the eager checkpoint above materialized the slots; the
             # group-index intermediate can now be released (the order.py
@@ -358,6 +359,7 @@ def streaming_frontier_ingest(
             [(run_id, batch_id, n_new)],
             "run_id string, batch_id long, n_new long",
         ).write.mode("append").parquet(meta_path)
+        new_handle.release()
 
     return urls_stream.writeStream.foreachBatch(_process)
 

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.operators.drift import EPS, _bucketed_share
+from graphdb_neo4j_spark.operators.order import checkpoint_eager
 
 
 def streaming_drift(
@@ -39,10 +40,10 @@ def streaming_drift(
     if lo is None or n_ref == 0:
         raise ValueError("streaming_drift: reference has no non-null rows")
     width = (hi - lo) / n_buckets if hi > lo else 1.0
-    ref_shares = (
+    # frozen for the stream's lifetime: never recomputed per batch
+    ref_shares, _ = checkpoint_eager(
         _bucketed_share(ref, col, lo, width, n_buckets)
         .withColumnRenamed("share", "p_ref")
-        .localCheckpoint()  # frozen: never recomputed per batch
     )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.operators.order import checkpoint_eager
+
 _EMPTY_SCHEMA = "v string, component string"
 
 
@@ -120,21 +122,19 @@ def streaming_connected_components(
         spark = batch_df.sparkSession
         if batch_id in _done_batches(spark, f"{state_path}/meta"):
             return
-        e = (
+        e, e_handle = checkpoint_eager(
             batch_df.select(
                 F.col(src_col).cast("string").alias("src"),
                 F.col(dst_col).cast("string").alias("dst"),
             )
             .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
             .distinct()
-            .localCheckpoint()
         )
-        bverts = (
+        bverts, bverts_handle = checkpoint_eager(
             e.select(F.col("src").alias("v"))
             .unionByName(e.select(F.col("dst").alias("v")))
             .distinct()
             .withColumn("shard", _shard_of(F.col("v"), n_shards))
-            .localCheckpoint()
         )
         bshards = {r.shard for r in bverts.select("shard").distinct().collect()}
         # prior state for the batch's vertices only — a partition-pruned
@@ -163,12 +163,15 @@ def streaming_connected_components(
         # components over the CONTRACTED graph — batch-proportional.
         # component ids are min member ids; since prior component ids
         # are min vertex ids of their sets, the merged min is the
-        # global min vertex — batch-equivalent by induction.
-        merged = connected_components(cnodes, contracted).localCheckpoint()
+        # global min vertex — batch-equivalent by induction.  (The
+        # kernel returns a frozen frame.)
+        merged = connected_components(cnodes, contracted)
         # CHANGED component ids only: old component c now maps to m ≠ c
-        mapping = merged.filter(F.col("key") != F.col("component")).select(
-            F.col("key").alias("component"), F.col("component").alias("m")
-        ).localCheckpoint()
+        mapping, mapping_handle = checkpoint_eager(
+            merged.filter(F.col("key") != F.col("component")).select(
+                F.col("key").alias("component"), F.col("component").alias("m")
+            )
+        )
         new_verts = bverts.join(prior_b.select("v"), "v", "left_anti")
         # touched shards = shards holding a CHANGED component (one-column
         # scan of the latest state: shard is a partition col) ∪ shards of
@@ -230,6 +233,8 @@ def streaming_connected_components(
                         and int(bname.split("=")[1]) < batch_id
                     ):
                         fs.delete(bdir.getPath(), True)
+        for handle in (e_handle, bverts_handle, mapping_handle):
+            handle.release()
 
     return edges_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", f"{state_path}/_ckpt_cc"
@@ -295,7 +300,9 @@ def streaming_triangle_count(
             prev_total = row["total"] if row else 0
         else:
             old = spark.createDataFrame([], "u string, v string")
-        new_e = new_raw.join(old, ["u", "v"], "left_anti").localCheckpoint()
+        new_e, new_e_handle = checkpoint_eager(
+            new_raw.join(old, ["u", "v"], "left_anti")
+        )
         # adjacency with each edge's order key: old edges sort below all
         # new edges; new edges order by canonical (u, v)
         okey = lambda n, u, v: F.struct(  # noqa: E731
@@ -339,6 +346,7 @@ def streaming_triangle_count(
         spark.createDataFrame([(batch_id,)], "batch_id long").write.mode(
             "append"
         ).parquet(f"{state_path}/meta")
+        new_e_handle.release()
 
     return edges_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", f"{state_path}/_ckpt_tri"

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.operators.ingest import PropertyGraph, build_graph_from_spans
+from graphdb_neo4j_spark.operators.order import checkpoint_eager
 from graphdb_neo4j_spark.sources.jaeger import TRACE_SCHEMA, read_spans, read_traces
 
 
@@ -394,10 +395,9 @@ def streaming_neardup_dedup(
         # a NULL token array); such docs must still flow through — they
         # dedup among themselves under the sentinel signature, never
         # silently vanish
-        keyed = (
+        keyed, keyed_handle = checkpoint_eager(
             docs.join(sigs.withColumnRenamed("id", id_col), id_col, "left")
             .withColumn("simhash", F.coalesce(F.col("simhash"), F.lit("")))
-            .localCheckpoint()
         )
         # a signature expires once the batch's max event time passes
         # last_seen + delay — dropDuplicatesWithinWatermark's contract;
@@ -415,7 +415,7 @@ def streaming_neardup_dedup(
 
         firsts = group_argmin(keyed, ["simhash"], ["__ts_us", id_col])
         kept = firsts.join(prior.select("simhash"), "simhash", "left_anti")
-        kept = kept.localCheckpoint()
+        kept, kept_handle = checkpoint_eager(kept)
         # new horizon-pruned snapshot: every signature seen recently
         seen = (
             prior.unionByName(
@@ -453,6 +453,8 @@ def streaming_neardup_dedup(
                 if name.startswith("batch_id=") and name.split("=")[1].isdigit():
                     if int(name.split("=")[1]) < batch_id:
                         fs.delete(st.getPath(), True)
+        keyed_handle.release()
+        kept_handle.release()
 
     return docs_stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", f"{state_path}/_ckpt_neardup"

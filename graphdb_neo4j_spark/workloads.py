@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from graphdb_neo4j_spark.operators import dedup as D
 from graphdb_neo4j_spark.operators import similarity as S
 from graphdb_neo4j_spark.operators import text as T
+from graphdb_neo4j_spark.operators.order import checkpoint_eager
 from graphdb_neo4j_spark.sources.tables import load_table
 
 from graphdb_neo4j_spark import corpus_golden as CG
@@ -1079,10 +1080,10 @@ def q44(spark: SparkSession, sf: str) -> DataFrame:
         docs, budget=2048, token_col="n_tokens", order_col="doc_id",
         by_col="source",
     )
-    out = packed.groupBy("source", "bin").agg(
+    out, _ = checkpoint_eager(packed.groupBy("source", "bin").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("sum_tokens"),
-    ).localCheckpoint(eager=True)
+    ))
     handle.release()
     return out
 
@@ -3014,7 +3015,7 @@ def q70(spark: SparkSession, sf: str) -> DataFrame:
     # consume internally: the 10-row result is checkpointed and the
     # full-size index checkpoint is released deterministically — a
     # loop of q70 runs holds no growing block set
-    out = hist.localCheckpoint(eager=True)
+    out, _ = checkpoint_eager(hist)
     th.release()
     return out
 
@@ -3316,10 +3317,10 @@ def q74(spark: SparkSession, sf: str) -> DataFrame:
         keyed, budget=2048, token_col="n_tokens", order_col="doc_id",
         by_col="source",
     )
-    out = packed.groupBy("source", "bin").agg(
+    out, _ = checkpoint_eager(packed.groupBy("source", "bin").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("sum_tokens"),
-    ).localCheckpoint(eager=True)
+    ))
     handle.release()
     return out
 
@@ -5090,7 +5091,7 @@ def q105(spark: SparkSession, sf: str) -> DataFrame:
     100 TB shape: the rank vector and the edge list co-partition on
     the join key every iteration (one shuffle per iter), the degree
     table is computed once, and each iteration ends in a
-    localCheckpoint to truncate lineage — the same discipline as
+    freeze to truncate lineage — the same discipline as
     traversal.pagerank."""
     SCALE = 10**12
     o = load_table(spark, sf, "orders")
@@ -5113,7 +5114,7 @@ def q105(spark: SparkSession, sf: str) -> DataFrame:
     n = nodes.count()
     deg = e.groupBy("src").agg(F.count("*").cast("bigint").alias("d"))
     teleport = (15 * SCALE) // (100 * n)
-    r = nodes.withColumn("r", F.lit(SCALE // n).cast("bigint")).localCheckpoint()
+    r, handle = checkpoint_eager(nodes.withColumn("r", F.lit(SCALE // n).cast("bigint")))
     for _ in range(4):
         inc = (
             e.join(r, r["v"] == e["src"])
@@ -5125,7 +5126,7 @@ def q105(spark: SparkSession, sf: str) -> DataFrame:
             .groupBy("v")
             .agg(F.sum("share").alias("s"))
         )
-        r = (
+        r, nxt = checkpoint_eager(
             nodes.join(inc, "v", "left")
             .select(
                 "v",
@@ -5134,8 +5135,9 @@ def q105(spark: SparkSession, sf: str) -> DataFrame:
                     + F.expr("(85 * COALESCE(s, 0)) DIV 100")
                 ).alias("r"),
             )
-            .localCheckpoint()
         )
+        handle.release()
+        handle = nxt
     return r.orderBy(F.col("r").desc(), "v").limit(20)
 
 
@@ -5191,10 +5193,9 @@ def q106(spark: SparkSession, sf: str) -> DataFrame:
     e = base.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         base.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     ).persist()
-    c = (
+    c, handle = checkpoint_eager(
         e.select(F.col("src").alias("v")).distinct()
         .withColumn("lbl", F.col("v"))
-        .localCheckpoint()
     )
     for _ in range(6):
         m = (
@@ -5202,14 +5203,15 @@ def q106(spark: SparkSession, sf: str) -> DataFrame:
             .groupBy(F.col("dst").alias("v"))
             .agg(F.min("lbl").alias("mn"))
         )
-        c = (
+        c, nxt = checkpoint_eager(
             c.join(m, "v", "left")
             .select(
                 "v",
                 F.least(F.col("lbl"), F.coalesce(F.col("mn"), F.col("lbl"))).alias("lbl"),
             )
-            .localCheckpoint()
         )
+        handle.release()
+        handle = nxt
     return c.groupBy(F.col("lbl").alias("component")).agg(
         F.count("*").cast("bigint").alias("n_nodes")
     )
@@ -5280,13 +5282,12 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
         .unionAll(e.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w"))
         .persist()
     )
-    d = (
+    d, handle = checkpoint_eager(
         e2.select(F.col("src").alias("v")).distinct()
         .withColumn(
             "dist",
             F.when(F.col("v") == SRC, F.lit(0).cast("bigint")),
         )
-        .localCheckpoint()
     )
     for _ in range(6):
         m = (
@@ -5297,7 +5298,7 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
             .groupBy(F.col("dst").alias("v"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("mn"))
         )
-        d = (
+        d, nxt = checkpoint_eager(
             d.join(m, "v", "left")
             .select(
                 "v",
@@ -5307,8 +5308,9 @@ def q107(spark: SparkSession, sf: str) -> DataFrame:
                     F.col("mn").isNull(), F.col("dist")
                 ).otherwise(F.least(F.col("dist"), F.col("mn"))).alias("dist"),
             )
-            .localCheckpoint()
         )
+        handle.release()
+        handle = nxt
     return (
         d.filter(F.col("dist").isNotNull())
         .orderBy("dist", "v")
@@ -5391,10 +5393,9 @@ def q109(spark: SparkSession, sf: str) -> DataFrame:
     e = base.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         base.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     ).persist()
-    c = (
+    c, handle = checkpoint_eager(
         e.select(F.col("src").alias("v")).distinct()
         .withColumn("lbl", F.col("v"))
-        .localCheckpoint()
     )
     w = Window.partitionBy("v").orderBy(F.col("n").desc(), "lbl")
     for _ in range(4):
@@ -5408,11 +5409,12 @@ def q109(spark: SparkSession, sf: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select("v", F.col("lbl").alias("wl"))
         )
-        c = (
+        c, nxt = checkpoint_eager(
             c.join(win, "v", "left")
             .select("v", F.coalesce(F.col("wl"), F.col("lbl")).alias("lbl"))
-            .localCheckpoint()
         )
+        handle.release()
+        handle = nxt
     return c.groupBy(F.col("lbl").alias("community")).agg(
         F.count("*").cast("bigint").alias("n_nodes")
     )
@@ -5606,10 +5608,10 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
     ).persist()
     nodes = e2.select(F.col("src").alias("v")).distinct().persist()
     deg = e2.groupBy("src").agg(F.count("*").cast("bigint").alias("d"))
-    r = nodes.withColumn(
+    r, handle = checkpoint_eager(nodes.withColumn(
         "r",
         F.when(F.col("v") == SEED, F.lit(SCALE)).otherwise(F.lit(0)).cast("bigint"),
-    ).localCheckpoint()
+    ))
     for _ in range(4):
         inc = (
             e2.join(
@@ -5620,7 +5622,7 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
             .groupBy("v")
             .agg(F.sum("share").alias("s"))
         )
-        r = (
+        r, nxt = checkpoint_eager(
             nodes.join(inc, "v", "left")
             .select(
                 "v",
@@ -5632,8 +5634,9 @@ def q112(spark: SparkSession, sf: str) -> DataFrame:
                     + F.expr("(85 * COALESCE(s, 0)) DIV 100")
                 ).alias("r"),
             )
-            .localCheckpoint()
         )
+        handle.release()
+        handle = nxt
     return (
         r.filter(F.col("r") > 0).orderBy(F.col("r").desc(), "v").limit(20)
     )
@@ -6739,7 +6742,7 @@ def g72(spark: SparkSession, sf: str) -> DataFrame:
 
     g = _corpus_graph(spark)
     spawns = g.edges.filter(F.col("rel") == "SPAWNS").select("src", "dst")
-    m = greedy_matching(spawns).localCheckpoint()
+    m, _ = checkpoint_eager(greedy_matching(spawns))
     size = m.agg(F.count("*").alias("n")).select(
         F.lit("__size__").alias("src"), F.col("n").cast("string").alias("dst")
     )
@@ -7570,7 +7573,7 @@ def g75(spark: SparkSession, sf: str) -> DataFrame:
         .unionByName(spawns.select(F.col("dst").alias("key")))
         .distinct()
     )
-    mis = maximal_independent_set(verts, spawns).localCheckpoint()
+    mis, _ = checkpoint_eager(maximal_independent_set(verts, spawns))
     size = mis.agg(F.count("*").alias("n")).select(
         F.lit("size").alias("kind"), F.col("n").cast("string").alias("value")
     )
@@ -8457,7 +8460,7 @@ def q154(spark: SparkSession, sf: str) -> DataFrame:
     # consume internally (q70's contract): the per-doc verdict frame is
     # checkpointed and every stage cache curate() pinned is released —
     # repeated runs hold only result-sized blocks
-    out = res.labeled.localCheckpoint(eager=True)
+    out, _ = checkpoint_eager(res.labeled)
     res.release()
     return out
 
@@ -8851,7 +8854,7 @@ def q161(spark: SparkSession, sf: str) -> DataFrame:
     tiled, th = ntile_distributed(
         scored, ["neg_score", "doc_id"], k=4, out_col="phase"
     )
-    out = (
+    out, _ = checkpoint_eager(  # 4 rows; then free the big index
         tiled.groupBy("phase")
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
@@ -8861,7 +8864,6 @@ def q161(spark: SparkSession, sf: str) -> DataFrame:
         )
         .select(F.col("phase").cast("int"), "n_docs", "total_tokens",
                 "min_score_micro", "max_score_micro")
-        .localCheckpoint(eager=True)  # 4 rows; then free the big index
     )
     th.release()
     return out
@@ -9154,7 +9156,6 @@ def _q166_scores(spark: SparkSession, sf: str):
     keep passing on the stale copy).  Caller owns ``handle.release()``
     after its final action."""
     from graphdb_neo4j_spark.operators.linkpred import link_prediction_scores
-    from graphdb_neo4j_spark.operators.order import checkpoint_eager
 
     # the cached edges already carry src < dst and the per-pair order
     # count as support, so the market-basket prune is a filter.  The
@@ -9200,7 +9201,7 @@ def q166(spark: SparkSession, sf: str) -> DataFrame:
     # handle because the caller consumes it AFTER return — releasing
     # here would break it; ContextCleaner frees the blocks on GC like
     # every other tiny result checkpoint here.
-    out = scores.localCheckpoint(eager=True)
+    out, _ = checkpoint_eager(scores)
     handle.release()
     return out
 
@@ -10532,7 +10533,7 @@ def q186(spark: SparkSession, sf: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_customers"),
         F.min("o_custkey").cast("bigint").alias("sample_customer"),
     )
-    out = cells.localCheckpoint(eager=True)
+    out, _ = checkpoint_eager(cells)
     for h in handles:
         h.release()
     return out
@@ -11391,20 +11392,18 @@ def q197(spark: SparkSession, sf: str) -> DataFrame:
     ).agg(F.min("l_linenumber").alias("ln"))
     w = Window.partitionBy("o").orderBy("ln", "p")
     seq = op.select("p", F.lead("p").over(w).alias("np"))
-    e0 = (
+    e0, _ = checkpoint_eager(
         seq.filter(F.col("np").isNotNull() & (F.col("p") != F.col("np")))
         .select(
             F.least("p", "np").alias("a"), F.greatest("p", "np").alias("b")
         )
         .distinct()
-        .localCheckpoint()
     )
-    deg = (
+    deg, _ = checkpoint_eager(
         e0.select(F.col("a").alias("v"))
         .unionByName(e0.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count("*").cast("bigint").alias("d"))
-        .localCheckpoint()
     )
     rows = None
     for k in (4, 8, 16):
@@ -11606,11 +11605,10 @@ def q200(spark: SparkSession, sf: str) -> DataFrame:
     ).agg(F.min("l_linenumber").alias("ln"))
     w = Window.partitionBy("o").orderBy("ln", "p")
     seq = op.select("p", F.lead("p").over(w).alias("np"))
-    e = (
+    e, _ = checkpoint_eager(
         seq.filter(F.col("np").isNotNull() & (F.col("p") != F.col("np")))
         .select(F.col("p").alias("src"), F.col("np").alias("dst"))
         .distinct()
-        .localCheckpoint()
     )
     rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     n_edges = e.count()
@@ -11809,7 +11807,7 @@ def q203(spark: SparkSession, sf: str) -> DataFrame:
     res = curate(injected, ev, pii=True)
     # consume internally (q70's contract): checkpoint the verdict
     # frame, release the scrub/survivor stage caches deterministically
-    out = res.labeled.localCheckpoint(eager=True)
+    out, _ = checkpoint_eager(res.labeled)
     res.release()
     return out
 
@@ -12275,13 +12273,12 @@ def q209(spark: SparkSession, sf: str) -> DataFrame:
         .otherwise("C")
         .alias("abc"),
     )
-    out = (
+    out, _ = checkpoint_eager(
         classed.groupBy("abc")
         .agg(
             F.count("*").cast("bigint").alias("n_parts"),
             F.sum("cents").cast("bigint").alias("revenue_cents"),
         )
-        .localCheckpoint(eager=True)
     )
     handle.release()
     return out
@@ -13770,7 +13767,7 @@ def q224(spark: SparkSession, sf: str) -> DataFrame:
         default_delay_s=_Q224_DEFAULT_DELAY,
         rules=entry_groups(robots),
     )
-    out = sched.localCheckpoint(eager=True)
+    out, _ = checkpoint_eager(sched)
     handle.release()
     return out
 
@@ -13975,11 +13972,9 @@ def q225(spark: SparkSession, sf: str) -> DataFrame:
     # LSH pairer and both dhash joins), and without the freeze each
     # would re-run the Arrow decode pass — the single-decode-pass
     # discipline every decode gate here follows (plan-audited).
-    # checkpoint_eager, not a bare localCheckpoint: the handle gives
-    # deterministic block release below (the q70/q224 contract —
-    # bare checkpoints leak blocks until JVM GC, r9 verdict item #4)
-    from graphdb_neo4j_spark.operators.order import checkpoint_eager
-
+    # checkpoint_eager's handle gives deterministic block release
+    # below (the q70/q224 contract — unreleased checkpoints leak blocks
+    # until JVM GC, r9 verdict item #4)
     hashes, h_handle = checkpoint_eager(perceptual_hashes(media))
     pairs, p_handle = hamming_neardup_pairs(
         hashes,
@@ -13990,7 +13985,7 @@ def q225(spark: SparkSession, sf: str) -> DataFrame:
         out_col="phash_hamming",
     )
     dh = hashes.select("media_id", "dhash")
-    out = (
+    out, _ = checkpoint_eager(
         pairs.join(
             dh.select(
                 F.col("media_id").alias("id_a"), F.col("dhash").alias("_da")
@@ -14014,7 +14009,6 @@ def q225(spark: SparkSession, sf: str) -> DataFrame:
         # eager-freeze the tiny pair result, then release the full-size
         # hash + LSH intermediates so driver/bench loops hold no
         # growing block set
-        .localCheckpoint(eager=True)
     )
     p_handle.release()
     h_handle.release()
@@ -14094,7 +14088,6 @@ def q226(spark: SparkSession, sf: str) -> DataFrame:
     media = spark.createDataFrame(
         rows, "media_id long, payload binary"
     ).repartition(4)
-    from graphdb_neo4j_spark.operators.order import checkpoint_eager
 
     hashes, h_handle = checkpoint_eager(perceptual_hashes(media))
     out = hamming_neardup_clusters(
@@ -14258,7 +14251,7 @@ def q227(spark: SparkSession, sf: str) -> DataFrame:
         max_hamming=_Q227_MAX_HAMMING,
         out_col="afp_hamming",
     )
-    out = pairs.localCheckpoint(eager=True)  # tiny pair result
+    out, _ = checkpoint_eager(pairs)  # tiny pair result
     handle.release()
     return out
 
@@ -14433,10 +14426,9 @@ def q228(spark: SparkSession, sf: str) -> DataFrame:
         )
         run_once()
         # freeze the tiny keeper set before the temp ledger is deleted
-        out = (
+        out, _ = checkpoint_eager(
             fingerprint_kept(spark, state)
             .select("media_id", "phash")
-            .localCheckpoint(eager=True)
         )
     finally:
         _shutil.rmtree(root, ignore_errors=True)
@@ -14520,7 +14512,6 @@ def q229(spark: SparkSession, sf: str) -> DataFrame:
         encode_png,
         perceptual_hashes,
     )
-    from graphdb_neo4j_spark.operators.order import checkpoint_eager
 
     def media(img_map):
         return spark.createDataFrame(
@@ -14551,7 +14542,7 @@ def q229(spark: SparkSession, sf: str) -> DataFrame:
     per_train = hits.groupBy("id_a").agg(
         F.count("*").cast("int").alias("n_eval_hits")
     )
-    out = (
+    out, _ = checkpoint_eager(
         t_hashes.select("media_id")
         .join(per_train, t_hashes["media_id"] == per_train["id_a"], "left")
         .select(
@@ -14563,7 +14554,6 @@ def q229(spark: SparkSession, sf: str) -> DataFrame:
                 "contaminated"
             ),
         )
-        .localCheckpoint(eager=True)
     )
     t_handle.release()
     return out

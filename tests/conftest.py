@@ -70,6 +70,16 @@ def write_traces():
 
 
 @pytest.fixture
+def trace_glob(tmp_path, write_traces):
+    """A trace glob for tests that compare two code paths over a
+    corpus-shaped input but assert none of the corpus's content: the
+    reference corpus where present, else 4 written traces."""
+    if os.path.isdir(REFERENCE_MALWARE):
+        return f"{REFERENCE_MALWARE}/*.json"
+    return write_traces(tmp_path, n_files=4)
+
+
+@pytest.fixture
 def spawn_chain_trace(tmp_path, write_traces):
     """One trace with a non-empty SPAWNS hop: the reference's
     T1003.002 trace where the corpus is present, else a written one."""
@@ -166,6 +176,8 @@ _SLOW_TESTS = frozenset((
     "test_louvain.py::test_louvain_multilevel_ring_of_cliques",  # 10s
     "test_traversal.py::test_pagerank_sums_and_ranks",  # 10s
     "test_oracle_parity.py::test_oracle_parity[q228_streaming_fingerprint_neardup]",  # 10s
+    # a 40-hop BFS chain and four Louvain runs (release contract)
+    "test_plan_audit.py::test_kernel_rounds_release_their_blocks",
 ))
 
 

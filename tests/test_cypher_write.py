@@ -282,18 +282,19 @@ def test_nodes_df_edges_df_views(spark, writer):
 # ---------------------------------------------------------------------------
 
 
-def test_reference_template_parity_created_file(spark):
+def test_reference_template_parity_created_file(spark, trace_glob):
     """Replay events.py:102-106 (event 11 → CREATED_FILE) through the
-    generic writer over the REAL derived span stream and compare the
-    edge table bit-for-bit with the hand-built router's output."""
+    generic writer over the derived span stream (the reference corpus
+    where present, else written traces) and compare the edge table
+    bit-for-bit with the hand-built router's output."""
     from graphdb_neo4j_spark.operators import build_graph
     from graphdb_neo4j_spark.functions.etl import tag
 
-    g = build_graph(spark, "/root/reference/malware/*.json")
+    g = build_graph(spark, trace_glob)
     from graphdb_neo4j_spark.operators.ingest import _derive
     from graphdb_neo4j_spark.sources.jaeger import read_spans
 
-    d = _derive(read_spans(spark, "/root/reference/malware/*.json"))
+    d = _derive(read_spans(spark, trace_glob))
     t = F.col("tags")
     e11 = d.filter(
         (F.col("ev") == "11")
@@ -322,7 +323,7 @@ def test_reference_template_parity_created_file(spark):
     ref = rows(
         g.edges.filter(F.col("rel") == "CREATED_FILE"), "src", "dst", "event_id"
     )
-    assert ours == ref
+    assert ours and ours == ref
     # node side: every File the router knows from event 11 is present
     ref_files = rows(
         g.edges.filter(F.col("rel") == "CREATED_FILE").select(
@@ -333,22 +334,24 @@ def test_reference_template_parity_created_file(spark):
     assert rows(w.store.nodes["File"], "path") == ref_files
 
 
-def test_reference_process_pipeline_replay(spark):
+def test_reference_process_pipeline_replay(spark, trace_glob):
     """FLAGSHIP replay: the reference's process-merge core — the
     CYPHER["process"] template (events.py:79-92) for all three write
     classes (main span / parent stub / 8-10-25 target stub,
     events.py:300-320), the trace MERGE (events.py:75-77), and the
     spawn template (events.py:94-98) — executed as CYPHER TEXT through
-    the generic GraphWriter over the real derived span stream.  The
-    resulting Process table (with its ON CREATE guid-omission quirk),
-    HAS_PROCESS, and SPAWNS edge sets must equal the hand-built
-    router's tables EXACTLY (golden: 8921 processes, 10614 HAS_PROCESS,
-    10984 SPAWNS)."""
+    the generic GraphWriter over the derived span stream (the reference
+    corpus where present, else written traces).  The resulting Process
+    table (with its ON CREATE guid-omission quirk), HAS_PROCESS, and
+    SPAWNS edge sets must equal the hand-built router's tables EXACTLY
+    (golden on the corpus: 8921 processes, 10614 HAS_PROCESS, 10984
+    SPAWNS)."""
     from graphdb_neo4j_spark.operators import build_graph
     from graphdb_neo4j_spark.operators.ingest import _derive
     from graphdb_neo4j_spark.sources.jaeger import read_spans, read_traces
 
-    corpus = "/root/reference/malware/*.json"
+    corpus = trace_glob
+    golden = corpus.startswith("/root/reference/")
     g = build_graph(spark, corpus)
     spans = read_spans(spark, corpus)
     d = _derive(spans).persist()
@@ -435,24 +438,27 @@ def test_reference_process_pipeline_replay(spark):
         g.process,
         "key", "image", "command_line", "process_guid", "parent_process_guid",
     )
-    assert len(ours_proc) == 8921
-    assert ours_proc == ref_proc
+    if golden:
+        assert len(ours_proc) == 8921
+    assert ours_proc and ours_proc == ref_proc
 
     ours_hp = rows(w.store.edges["HAS_PROCESS"], "src", "dst")
     ref_hp = rows(
         g.edges.filter(F.col("rel") == "HAS_PROCESS").dropDuplicates(["src", "dst"]),
         "src", "dst",
     )
-    assert len(ours_hp) == 10614
-    assert ours_hp == ref_hp
+    if golden:
+        assert len(ours_hp) == 10614
+    assert ours_hp and ours_hp == ref_hp
 
     ours_sp = rows(w.store.edges["SPAWNS"], "src", "dst")
     ref_sp = rows(
         g.edges.filter(F.col("rel") == "SPAWNS").dropDuplicates(["src", "dst"]),
         "src", "dst",
     )
-    assert len(ours_sp) == 10984
-    assert ours_sp == ref_sp
+    if golden:
+        assert len(ours_sp) == 10984
+    assert ours_sp and ours_sp == ref_sp
     d.unpersist()
 
 

@@ -9,6 +9,7 @@ the driver hashes values, so approximate equality is not enough.
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -17,6 +18,8 @@ from graphdb_neo4j_spark.sources.tables import TABLE_NAMES
 from graphdb_neo4j_spark.workloads import ORACLES, QUERY_FNS
 
 SF_DIR = "/root/testdata/sf0.01"
+# the reference trace corpus the graph-tier (g*) cases read
+REFERENCE_MALWARE = "/root/reference/malware"
 
 
 @pytest.fixture(scope="module")
@@ -79,9 +82,12 @@ def test_oracle_parity(spark, ddb, name, request):
 def test_all_queries_run(spark):
     """Every queries() entry (incl. rows-only) returns a DataFrame with a
     stable schema and executes without error at small scale."""
+    corpus = os.path.isdir(REFERENCE_MALWARE)
     for name, fn in QUERY_FNS.items():
         if name.startswith("g4"):
             continue  # corpus analytics exercised in test_corpus_analytics
+        if _reads_corpus(name) and not corpus:
+            continue  # answers over the reference corpus, absent here
         df = fn(spark, "/root/testdata/sf0.001")
         assert df.columns, name
         df.limit(5).collect()

@@ -1843,3 +1843,184 @@ def test_q225_phash_dedup_plan(spark):
     )
     for marker in ("CartesianProduct", "BroadcastNestedLoopJoin"):
         assert marker not in p3, p3
+
+
+# ---------------------------------------------------------------------------
+# one freeze primitive: release and recovery contracts of the kernel rounds
+# ---------------------------------------------------------------------------
+
+
+def _persistent_rdds(spark) -> dict:
+    """id -> JVM RDD for every RDD the session currently persists."""
+    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
+    it = jmap.keySet().iterator()
+    out = {}
+    while it.hasNext():
+        rdd_id = it.next()
+        out[rdd_id] = jmap.get(rdd_id).get()
+    return out
+
+
+def _left_behind(spark, run):
+    """(rows, n) — ``run()``'s sorted result rows, and how many RDDs
+    created during the call are still persisted after it.  RDD ids grow
+    monotonically, so blocks of earlier calls (which a JVM GC may free
+    at any moment) never enter the count."""
+    floor = spark.sparkContext.emptyRDD().id()
+    df = run()
+    rows = sorted(map(tuple, df.collect()))
+    return rows, sum(1 for i in _persistent_rdds(spark) if i > floor)
+
+
+def _chain(spark, n: int):
+    return spark.createDataFrame(
+        [(f"v{i:03d}", f"v{i + 1:03d}") for i in range(n)], ["src", "dst"]
+    )
+
+
+def _two_cliques(spark, chain: int = 30):
+    """Two 5-cliques joined by one bridge, plus a ``chain``-edge path:
+    every kernel below runs several rounds on it."""
+    e = [(f"a{i}", f"a{j}") for i in range(5) for j in range(i + 1, 5)]
+    e += [(f"b{i}", f"b{j}") for i in range(5) for j in range(i + 1, 5)]
+    e += [("a0", "b0")]
+    e += [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(chain)]
+    return spark.createDataFrame(e, ["src", "dst"])
+
+
+def test_kernel_rounds_release_their_blocks(spark):
+    """Release contract on every kernel round: the persisted RDDs one
+    call leaves behind do not grow with the number of rounds it runs —
+    round r−1 is released once round r has materialized, so a
+    long-lived session looping over kernels does not accumulate blocks.
+    (Before the rounds went through checkpoint_eager, one
+    pagerank(iterations=10) left 11 blocks, and Louvain on the two
+    cliques left 6 at max_iter=1 and 4 at max_iter=8.)"""
+    from graphdb_neo4j_spark.operators.traversal import (
+        bfs,
+        connected_components_twophase,
+        louvain,
+        pagerank,
+    )
+
+    g = _two_cliques(spark)
+    nodes = g.select(F.col("src").alias("key")).union(
+        g.select(F.col("dst").alias("key"))
+    ).distinct()
+    few_pr, n_few_pr = _left_behind(spark, lambda: pagerank(g, iterations=2))
+    many_pr, n_many_pr = _left_behind(spark, lambda: pagerank(g, iterations=10))
+    assert len(few_pr) == len(many_pr) == 41
+    assert n_few_pr == n_many_pr, (n_few_pr, n_many_pr)
+
+    root = spark.createDataFrame([("v000",)], ["key"])
+    short, n_short = _left_behind(spark, lambda: bfs(_chain(spark, 5), root))
+    deep, n_deep = _left_behind(spark, lambda: bfs(_chain(spark, 40), root))
+    assert [d for _, d in short] == list(range(6))
+    assert [d for _, d in deep] == list(range(41))
+    assert n_short == n_deep, (n_short, n_deep)
+
+    short_cc, n_short_cc = _left_behind(
+        spark, lambda: connected_components_twophase(nodes, _chain(spark, 3))
+    )
+    long_cc, n_long_cc = _left_behind(
+        spark, lambda: connected_components_twophase(nodes, g)
+    )
+    assert {c for _, c in long_cc} == {"a0", "c00"}
+    assert n_short_cc == n_long_cc, (n_short_cc, n_long_cc)
+
+    cliques = _two_cliques(spark, chain=0)
+    one, n_one = _left_behind(spark, lambda: louvain(cliques, max_iter=1))
+    eight, n_eight = _left_behind(spark, lambda: louvain(cliques, max_iter=8))
+    assert len(one) == len(eight) == 10
+    assert n_one == n_eight, (n_one, n_eight)
+
+
+def test_reliable_freeze_reaches_kernel_rounds(spark, monkeypatch):
+    """Recovery contract on every kernel round: with
+    SPARK_GRAFT_RELIABLE_FREEZE=1 the kernels freeze their rounds by
+    reliable checkpoints — same rows as the local default, and no
+    locally checkpointed (executor-loss-fragile) block left behind."""
+    from graphdb_neo4j_spark.operators.traversal import (
+        bfs,
+        connected_components_twophase,
+        pagerank,
+    )
+
+    g = _two_cliques(spark)
+    nodes = g.select(F.col("src").alias("key")).distinct()
+    root = spark.createDataFrame([("a1",), ("c05",)], ["key"])
+    runs = {
+        "pagerank": lambda: pagerank(g, iterations=4),
+        "bfs": lambda: bfs(g, root, directed=False),
+        "twophase": lambda: connected_components_twophase(nodes, g),
+    }
+    local = {k: sorted(map(tuple, f().collect())) for k, f in runs.items()}
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_FREEZE", "1")
+    for name, f in runs.items():
+        floor = spark.sparkContext.emptyRDD().id()
+        assert sorted(map(tuple, f().collect())) == local[name], name
+        fragile = [
+            i for i, rdd in _persistent_rdds(spark).items()
+            if i > floor and rdd.isLocallyCheckpointed()
+        ]
+        assert not fragile, (name, fragile)
+
+
+def test_reliable_freeze_computes_once_and_observes(spark):
+    """checkpoint_eager(reliable=True) evaluates each row once (the
+    eager reliable checkpoint's file-writing job is the only job over
+    the plan), and an Observation attached before the freeze reports
+    the frozen frame's row count — the convergence-count fold the
+    kernels rely on works under the recovery contract too."""
+    from pyspark.sql import Observation
+    from pyspark.sql.types import LongType
+
+    from graphdb_neo4j_spark.operators.order import checkpoint_eager
+
+    calls = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        calls.add(1)
+        return x
+
+    df = (
+        spark.range(0, 200, numPartitions=4)
+        .select(F.udf(tick, LongType())("id").alias("id"))
+        .groupBy((F.col("id") % 50).alias("k"))
+        .agg(F.count("*").alias("n"))
+    )
+    for reliable in (True, False):
+        calls.value = 0
+        obs = Observation()
+        out, handle = checkpoint_eager(
+            df.observe(obs, F.count(F.lit(1)).alias("rows")), reliable=reliable
+        )
+        assert obs.get["rows"] == 50, reliable
+        assert calls.value == 200, (reliable, calls.value)
+        assert out.count() == 50
+        handle.release()
+
+
+def test_local_checkpoint_only_inside_checkpoint_eager():
+    """One freeze primitive: ``localCheckpoint`` appears in the library
+    only inside ``order.checkpoint_eager``."""
+    import ast
+    import pathlib
+
+    import graphdb_neo4j_spark
+
+    pkg = pathlib.Path(graphdb_neo4j_spark.__file__).parent
+    order = pkg / "operators" / "order.py"
+    fn = next(
+        n for n in ast.parse(order.read_text()).body
+        if isinstance(n, ast.FunctionDef) and n.name == "checkpoint_eager"
+    )
+    inside = range(fn.body[1].lineno, fn.end_lineno + 1)  # past the docstring
+    hits = [
+        (str(p.relative_to(pkg)), i)
+        for p in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(p.read_text().splitlines(), 1)
+        if "localCheckpoint" in line
+    ]
+    assert hits, "the primitive itself must freeze with localCheckpoint"
+    assert all(p == "operators/order.py" and i in inside for p, i in hits), hits

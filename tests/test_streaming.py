@@ -17,6 +17,7 @@ from graphdb_neo4j_spark.streaming import (
 )
 
 N_FILES = 40
+HOUR_US = 3_600_000_000
 
 
 @pytest.fixture(scope="module")
@@ -151,7 +152,53 @@ def test_windowed_event_counts(spark, trace_dir, tmp_path):
     # the final watermark closes all but the last window(s)
     res = spark.read.parquet(out)
     assert res.columns == ["window_start_epoch", "ev", "n_spans"]
-    assert res.count() >= 0  # schema-stable; closed-window rows present
+    got = sorted(map(tuple, res.collect()), key=repr)
+    want = _closed_window_counts(trace_dir, window_us=HOUR_US, delay_us=2 * HOUR_US)
+    assert got == want
+    assert got  # the watermark closed windows (13 on the written traces)
+
+
+def _closed_window_counts(trace_dir, window_us, delay_us):
+    """``(window_start_epoch, ev, n_spans)`` rows of the tumbling
+    windows that the final watermark (max event time − delay) closes,
+    computed in Python from the trace files: the reader's falsy-tag
+    rule (``tags_map``) and EventID canonicalization
+    (``canon_event_id``), with every file in one micro-batch so no row
+    is late."""
+    import json
+    from collections import Counter
+
+    spans = []
+    for path in sorted(glob.glob(f"{trace_dir}/*.json")):
+        with open(path, encoding="utf-8-sig") as f:
+            doc = json.load(f)
+        for s in doc.get("spans") or []:
+            tags = {}
+            for t in s.get("tags") or []:
+                v = t.get("value")
+                v = None if v is None else (
+                    str(v).lower() if isinstance(v, bool) else str(v)
+                )
+                falsy = (
+                    (t.get("type") == "int64" and v == "0")
+                    or (t.get("type") == "bool" and v == "false")
+                    or v == ""
+                )
+                tags[t.get("key")] = None if falsy else v
+            ev = tags.get("EventID")
+            if ev is not None:
+                try:
+                    ev = None if int(ev) == 0 else str(int(ev))
+                except ValueError:
+                    pass
+            spans.append((s.get("startTime") or 0, ev or tags.get("ID")))
+    watermark = max(t for t, _ in spans) - delay_us
+    counts = Counter(
+        (t // window_us * window_us // 1_000_000, ev)
+        for t, ev in spans
+        if t // window_us * window_us + window_us <= watermark
+    )
+    return sorted(((w, ev, n) for (w, ev), n in counts.items()), key=repr)
 
 
 def test_stateful_process_tracker(spark, trace_dir, tmp_path):

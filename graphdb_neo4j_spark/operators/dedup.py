@@ -374,14 +374,12 @@ def minhash_signatures(
     num_hashes: int = 16,
     text_col: str = "text",
     id_col: str = "doc_id",
-    impl: str = "relational",
 ) -> DataFrame:
     """(id, mh_0..mh_{K-1}) minhash signature columns.
 
-    ``impl="relational"`` (default; the executable mirror of the
-    oracle SQL): explode all shingles (duplicates are
-    harmless under min), then ONE codegen'd hash-aggregate computes all
-    K mins — measured ~7× faster than K per-row array traversals through
+    The executable mirror of the oracle SQL: explode all shingles
+    (duplicates are harmless under min), then ONE codegen'd
+    hash-aggregate computes all K mins — measured ~7× faster than K per-row array traversals through
     interpreted higher-order lambdas, and it scales (the shuffle carries
     (id, shingle) rows with map-side partial mins, never the documents).
     Docs shorter than n chars have no shingles and are absent from the
@@ -396,68 +394,7 @@ def minhash_signatures(
     is a numeric min, not a string min.  At 10¹⁴ shingles (100 TB of
     text) the saved md5 calls are the dominant CPU term.  Portable to
     the DuckDB oracle via ``('0x' || substr(md5(s), …))::BIGINT``.
-
-    ``impl="arrow"``: an Arrow ``mapInPandas`` kernel (distinct
-    shingles, batch-wide md5 cache, numpy KM lanes) — bit-identical
-    (equality pinned in tests) and zero-shuffle, but measured SLOWER
-    than the codegen'd aggregate at sf0.1 (the per-shingle Python
-    slicing loop dominates; unlike the matmul-shaped hyperplane and
-    md5-vote simhash kernels, minhash's inner loop doesn't vectorize).
-    Kept for engines where the wide-aggregate plan is the bottleneck.
     """
-    if impl == "arrow":
-        import hashlib
-
-        import numpy as np
-        import pandas as pd
-
-        def sig(batches):
-            cache: dict[str, tuple[int, int]] = {}
-            lanes = np.arange(num_hashes, dtype=np.int64)
-            m = np.int64(4294967296)
-            for pdf in batches:
-                ids_out = []
-                mhs = []
-                for rid, txt in zip(pdf[id_col], pdf[text_col]):
-                    if txt is None:
-                        continue
-                    lt = txt.lower()
-                    if len(lt) < n:
-                        continue
-                    shset = {lt[i: i + n] for i in range(len(lt) - n + 1)}
-                    h1 = np.empty(len(shset), dtype=np.int64)
-                    h2 = np.empty(len(shset), dtype=np.int64)
-                    for j, s in enumerate(shset):
-                        v = cache.get(s)
-                        if v is None:
-                            hd = hashlib.md5(s.encode("utf-8")).hexdigest()
-                            v = (int(hd[:8], 16), int(hd[8:16], 16))
-                            cache[s] = v
-                        h1[j], h2[j] = v
-                    lane_vals = (h1[:, None] + lanes[None, :] * h2[:, None]) % m
-                    ids_out.append(rid)
-                    mhs.append(lane_vals.min(axis=0))
-                out = {"id": ids_out}
-                arr = (
-                    np.stack(mhs)
-                    if mhs
-                    else np.empty((0, num_hashes), dtype=np.int64)
-                )
-                for i in range(num_hashes):
-                    out[f"mh_{i}"] = arr[:, i]
-                yield pd.DataFrame(out)
-
-        id_type = df.schema[id_col].dataType.simpleString()
-        schema = f"id {id_type}, " + ", ".join(
-            f"mh_{i} bigint" for i in range(num_hashes)
-        )
-        return (
-            df.select(id_col, text_col)
-            .repartition(df.sparkSession.sparkContext.defaultParallelism)
-            .mapInPandas(sig, schema=schema)
-        )
-    if impl != "relational":
-        raise ValueError(f"unknown impl {impl!r}")
     sh = exploded_shingles(df, id_col=id_col, text_col=text_col, n=n)
     h = F.md5(F.col("sh"))
     hashed = sh.select(

@@ -16,6 +16,28 @@ is a driver-side loop over DataFrames:
   grouped by dst.  Fixed iteration count, no convergence test, matching
   GraphX's default mode.
 
+Each kernel family runs ONE private round loop, and its public names
+are front-ends that differ only where noted (Pregelix's shape: one
+runtime owns the supersteps of each algorithm shape):
+
+* power iteration, :func:`_power_iteration` — the three PageRanks
+  (restart column, contribution expression);
+* walks, :func:`_walk` — uniform, weighted and node2vec walks
+  (adjacency, per-step pick);
+* delta relaxation, :func:`_relax` — :func:`sssp_weighted`,
+  :func:`temporal_bfs` (candidate expression, value column);
+* tagged sweep, :func:`_tagged_sweep` — :func:`closeness_approx`,
+  :func:`harmonic_centrality_exact` (seeds);
+* predecessor BFS, :func:`_grow_tree` — :func:`bfs_tree` and both
+  sides of :func:`shortest_path_bidirectional`, the one two-endpoint
+  search;
+* min-label propagation, :func:`_min_label` — HashMin and ColorSCC;
+  peeling, :func:`_shrink` — k-core, coreness and k-truss.
+
+A kernel that calls another kernel uses its private core, which
+returns ``(frame, handle)``, and releases the handle once the frame is
+consumed.
+
 Round discipline, shared by every kernel here: each round's state is
 frozen through :func:`order.checkpoint_eager` (without a freeze the
 plan tree doubles every iteration and the driver OOMs on plan analysis
@@ -36,7 +58,9 @@ shrinks.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+import sys
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from graphdb_neo4j_spark.operators.order import (
@@ -45,10 +69,30 @@ from graphdb_neo4j_spark.operators.order import (
 )
 
 
-def _as_undirected(edges: DataFrame) -> DataFrame:
-    fwd = edges.select("src", "dst")
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+def _as_undirected(edges: DataFrame, *carry: Column) -> DataFrame:
+    fwd = edges.select("src", "dst", *carry)
+    rev = edges.select(
+        F.col("dst").alias("src"), F.col("src").alias("dst"), *carry
+    )
     return fwd.unionByName(rev)
+
+
+def _n_shuffle(df: DataFrame) -> int:
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _induced(e: DataFrame, keys: DataFrame, col: str = "key") -> DataFrame:
+    """The rows of ``e`` whose src and dst are both in ``keys``."""
+    return e.join(keys.select(F.col(col).alias("src")), "src", "left_semi").join(
+        keys.select(F.col(col).alias("dst")), "dst", "left_semi"
+    )
+
+
+def _simple_undirected(edges: DataFrame) -> tuple[DataFrame, CheckpointHandle]:
+    """Frozen (src, dst) both ways, without self-loops or duplicates."""
+    return checkpoint_eager(
+        _as_undirected(edges).filter(F.col("src") != F.col("dst")).distinct()
+    )
 
 
 def _release(*handles: CheckpointHandle | None) -> None:
@@ -101,12 +145,7 @@ def partitioned_cache(df: DataFrame, col: str) -> DataFrame:
     layout is a bucketed+sorted table (same metadata visibility);
     measured here, the one-time bucketed write cost exceeds the
     cache's at local scale (see the kernel's negative-result notes)."""
-    n_shuffle = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
-    out = (
-        df.repartition(n_shuffle, col).sortWithinPartitions(col).persist()
-    )
+    out = df.repartition(_n_shuffle(df), col).sortWithinPartitions(col).persist()
     out.count()
     return out
 
@@ -124,11 +163,7 @@ def bfs(
     for sources.  Semi-naive: only the newest frontier is expanded.
     """
     e = edges.select("src", "dst") if directed else _as_undirected(edges)
-    key_col = sources.columns[0]
-    visited, vh = checkpoint_eager(
-        sources.select(F.col(key_col).alias("key")).distinct()
-        .withColumn("dist", F.lit(0))
-    )
+    visited, vh = checkpoint_eager(_keys(sources).withColumn("dist", F.lit(0)))
     # visited stays a LAZY union of frozen frontier frames (r11): every
     # child is frozen, so the anti-join below scans the same rows either
     # way, and the per-hop re-freeze of the whole visited set — one
@@ -176,37 +211,55 @@ def reachable(edges: DataFrame, sources: DataFrame, directed: bool = True) -> Da
     return bfs(edges, sources, directed=directed)
 
 
-def shortest_path_length(
-    edges: DataFrame, src_key: str, dst_key: str, directed: bool = True,
-    max_hops: int = 64,
-) -> int | None:
-    """Hop-count shortest path between two keys; None if unreachable.
-    Early-exits as soon as the destination enters the visited set."""
-    spark = edges.sparkSession
-    e = edges.select("src", "dst") if directed else _as_undirected(edges)
-    visited, vh = checkpoint_eager(
-        spark.createDataFrame([(src_key, 0)], ["key", "dist"])
+def _tree_side(seeds: DataFrame) -> dict:
+    """A predecessor BFS at depth 0: the frozen (key, dist, pred)
+    ``seeds`` are both its visited set and its frontier."""
+    v, vh = checkpoint_eager(seeds)
+    return {"visited": v, "frontier": v, "depth": 0, "vh": vh, "fh": None}
+
+
+def _grow_tree(side: dict, e: DataFrame) -> int:
+    """Grow a predecessor BFS ``side`` one level over ``e``: the keys
+    first reached, with pred = min frontier key among their parents,
+    become the frontier and join the re-frozen visited set.  Returns
+    their count, observed in their freeze."""
+    side["depth"] += 1
+    frontier, visited = side["frontier"], side["visited"]
+    nxt, seen = _observing(
+        frontier.join(e, frontier["key"] == e["src"])
+        .select(F.col("dst").alias("key"), frontier["key"].alias("pred"))
+        .groupBy("key")
+        .agg(F.min("pred").alias("pred"))
+        .join(visited.select("key"), "key", "left_anti")
+        .withColumn("dist", F.lit(side["depth"]))
+        .select("key", "dist", "pred"),
+        n=F.count(F.lit(1)),
     )
-    frontier, fh = visited, None
-    found = None
-    for hop in range(1, max_hops + 1):
-        nxt, nh = checkpoint_eager(
-            frontier.join(e, frontier["key"] == e["src"])
-            .select(F.col("dst").alias("key"))
-            .distinct()
-            .join(visited.select("key"), "key", "left_anti")
-            .withColumn("dist", F.lit(hop))
-        )
-        _release(fh)
-        frontier, fh = nxt, nh
-        if nxt.isEmpty():
+    nxt, nh = checkpoint_eager(nxt)
+    if seen.get["n"] == 0:
+        nh.release()
+        return 0
+    side["visited"], side["vh"] = _step(
+        visited.unionByName(nxt), side["vh"], side["fh"]
+    )
+    side["frontier"], side["fh"] = nxt, nh
+    return seen.get["n"]
+
+
+def _bfs_tree(
+    edges: DataFrame, sources: DataFrame, max_hops: int | None, directed: bool
+) -> tuple[DataFrame, CheckpointHandle]:
+    e = edges.select("src", "dst") if directed else _as_undirected(edges)
+    side = _tree_side(
+        _keys(sources)
+        .withColumn("dist", F.lit(0))
+        .withColumn("pred", F.lit(None).cast(e.schema["src"].dataType))
+    )
+    while max_hops is None or side["depth"] < max_hops:
+        if not _grow_tree(side, e):
             break
-        if not nxt.filter(F.col("key") == dst_key).isEmpty():
-            found = hop
-            break
-        visited, vh = _step(visited.unionByName(nxt), vh)
-    _release(vh, fh)
-    return found
+    _release(side["fh"])
+    return side["visited"], side["vh"]
 
 
 def bfs_tree(
@@ -214,7 +267,6 @@ def bfs_tree(
     sources: DataFrame,
     max_hops: int | None = None,
     directed: bool = True,
-    until: DataFrame | None = None,
 ) -> DataFrame:
     """(key, dist, pred) — the BFS shortest-path FOREST from the source
     set: minimum hop count plus one deterministic predecessor per
@@ -222,49 +274,13 @@ def bfs_tree(
     tree — and every reconstructed path — is stable across runs and
     partitionings).  ``pred`` is NULL for sources.  Same semi-naive
     frontier shape as :func:`bfs`: one join + one grouped min per hop.
-    ``until`` (single-column key set) stops the expansion early once
-    every listed key is visited — the two-endpoint fast path.
     """
-    e = edges.select("src", "dst") if directed else _as_undirected(edges)
-    key_col = sources.columns[0]
-    stop = (
-        until.select(F.col(until.columns[0]).alias("key")).distinct()
-        if until is not None else None
-    )
-    visited, vh = checkpoint_eager(
-        sources.select(F.col(key_col).alias("key")).distinct()
-        .withColumn("dist", F.lit(0))
-        .withColumn("pred", F.lit(None).cast(e.schema["src"].dataType))
-    )
-    frontier, fh = visited, None
-    hop = 0
-    while True:
-        hop += 1
-        if max_hops is not None and hop > max_hops:
-            break
-        nxt, nh = checkpoint_eager(
-            frontier.join(e, frontier["key"] == e["src"])
-            .select(F.col("dst").alias("key"), frontier["key"].alias("pred"))
-            .groupBy("key")
-            .agg(F.min("pred").alias("pred"))
-            .join(visited.select("key"), "key", "left_anti")
-            .withColumn("dist", F.lit(hop))
-            .select("key", "dist", "pred")
-        )
-        if nxt.isEmpty():
-            nh.release()
-            break
-        visited, vh = _step(visited.unionByName(nxt), vh, fh)
-        frontier, fh = nxt, nh
-        if stop is not None and stop.join(visited, "key", "left_anti").isEmpty():
-            break
-    _release(fh)
-    return visited
+    return _bfs_tree(edges, sources, max_hops, directed)[0]
 
 
 def _backtrace_paths_doubling(
     tree: DataFrame, max_rounds: int | None = None
-) -> DataFrame:
+) -> tuple[DataFrame, CheckpointHandle]:
     """(key, dist, path) for EVERY row of a predecessor table via
     pointer doubling: each row carries (anc, seg) where ``seg`` is the
     path from ``anc`` (exclusive) to the row (inclusive); one self-join
@@ -278,23 +294,24 @@ def _backtrace_paths_doubling(
     nodes, and doubling covers length n in log rounds), which also
     caps segment growth at O(n) per row on a CYCLIC pred forest
     (zero-weight-cycle SSSP): cycle rows never reach a root and are
-    dropped at the bound instead of doubling forever."""
+    dropped at the bound instead of doubling forever.  Returns the
+    paths and the handle of the frozen frame they read."""
     import math
 
     if max_rounds is None:
         n = tree.count()
         max_rounds = math.ceil(math.log2(max(n, 2))) + 1
-    p, ph = checkpoint_eager(tree.select(
+    pending = F.count_if(F.col("anc").isNotNull())
+    p, obs = _observing(tree.select(
         "key", "dist",
         F.col("pred").alias("anc"),
         F.array("key").alias("seg"),
-    ))
+    ), n=pending)
+    p, ph = checkpoint_eager(p)
     rounds = 0
-    while rounds < max_rounds:
+    while rounds < max_rounds and obs.get["n"]:
         rounds += 1
         todo = p.filter(F.col("anc").isNotNull())
-        if todo.isEmpty():
-            break
         links = p.select(
             F.col("key").alias("anc"),
             F.col("anc").alias("anc2"),
@@ -305,20 +322,21 @@ def _backtrace_paths_doubling(
             F.col("anc2").alias("anc"),
             F.concat(F.col("seg2"), F.col("seg")).alias("seg"),
         )
-        p, ph = _step(
-            p.filter(F.col("anc").isNull()).unionByName(stepped), ph
+        p, obs = _observing(
+            p.filter(F.col("anc").isNull()).unionByName(stepped), n=pending
         )
+        p, ph = _step(p, ph)
     # rows still carrying an ancestor at the bound are cyclic pred
     # chains (never reach a root) — cut, not returned with partial paths
     return p.filter(F.col("anc").isNull()).select(
         "key", "dist", F.col("seg").alias("path")
-    )
+    ), ph
 
 
 def _backtrace_paths(
     tree: DataFrame, targets: DataFrame | None = None,
     max_rounds: int | None = None,
-) -> DataFrame:
+) -> tuple[DataFrame, CheckpointHandle]:
     """(key, dist, path) from a predecessor table (key, dist, pred):
     level-synchronous backtrace — ALL rows walk one pred-link per round
     (one equi-join), so rounds = max path length, never per-row work on
@@ -332,7 +350,8 @@ def _backtrace_paths(
     path visits each node at most once, so every acyclic path
     completes regardless of depth (the loop exits as soon as all rows
     finish); only cyclic pred chains (zero-weight-cycle SSSP) hit the
-    bound and are cut.
+    bound and are cut.  Returns the paths and the handle of the frozen
+    frame they read.
     """
     if max_rounds is None:
         max_rounds = tree.count() + 1
@@ -342,33 +361,38 @@ def _backtrace_paths(
             F.col(targets.columns[0]).alias("key")
         ).distinct()
         start = tree.join(t, "key", "left_semi")
-    paths, th = checkpoint_eager(start.select(
+    pending = F.count_if(F.col("cur").isNotNull())
+    paths, obs = _observing(start.select(
         "key", "dist",
         F.col("pred").alias("cur"),
         F.array("key").alias("path"),
-    ))
+    ), n=pending)
+    paths, th = checkpoint_eager(paths)
     done = paths.filter(F.col("cur").isNull()).select("key", "dist", "path")
     dh = None  # set once ``done`` is frozen apart from ``paths``
     todo = paths.filter(F.col("cur").isNotNull())  # th: its frozen source
     links = tree.select(F.col("key").alias("cur"), F.col("pred").alias("nxt"))
     rounds = 0
-    while not todo.isEmpty() and rounds < max_rounds:
+    while obs.get["n"] and rounds < max_rounds:
         rounds += 1
-        stepped, sh = checkpoint_eager(
+        stepped, obs = _observing(
             todo.join(links, "cur")
             .select(
                 "key", "dist",
                 F.col("nxt").alias("cur"),
                 F.concat(F.array(F.col("cur")), F.col("path")).alias("path"),
-            )
+            ),
+            n=pending,
         )
+        stepped, sh = checkpoint_eager(stepped)
         done, dh = _step(done.unionByName(
             stepped.filter(F.col("cur").isNull()).select("key", "dist", "path")
         ), dh, th)
         todo, th = stepped.filter(F.col("cur").isNotNull()), sh
-    if dh is not None:
-        th.release()
-    return done
+    if dh is None:
+        return done, th
+    th.release()
+    return done, dh
 
 
 def bfs_paths(
@@ -386,30 +410,22 @@ def bfs_paths(
     scale, not the traversal).  Whole-table materialization uses the
     pointer-doubling backtrace (O(log depth) rounds); a targeted one
     walks single links (O(depth) rounds over only the targets' rows)."""
-    tree = bfs_tree(edges, sources, max_hops=max_hops, directed=directed)
-    if targets is None:
-        return _backtrace_paths_doubling(tree)
-    return _backtrace_paths(tree, targets=targets)
-
-
-def shortest_path(
-    edges: DataFrame, src_key: str, dst_key: str, directed: bool = True,
-    max_hops: int = 64,
-) -> list | None:
-    """The actual shortest path [src, ..., dst] between two keys (hop
-    metric), or None if unreachable — :func:`shortest_path_length` with
-    reconstruction.  Deterministic: min-predecessor tie-break."""
-    spark = edges.sparkSession
-    srcs = spark.createDataFrame([(src_key,)], ["key"])
-    dst_set = spark.createDataFrame([(dst_key,)], ["key"])
-    tree = bfs_tree(
-        edges, srcs, max_hops=max_hops, directed=directed, until=dst_set
+    return _paths_of(
+        *_bfs_tree(edges, sources, max_hops, directed), targets
     )
-    hit = tree.filter(F.col("key") == dst_key)
-    if hit.isEmpty():
-        return None
-    row = _backtrace_paths(tree, targets=dst_set).head()
-    return list(row["path"])
+
+
+def _paths_of(
+    tree: DataFrame, th: CheckpointHandle, targets: DataFrame | None
+) -> DataFrame:
+    """Backtrace paths from a frozen predecessor table, then release
+    it: the paths read only the backtrace's frozen frame."""
+    if targets is None:
+        paths, _ = _backtrace_paths_doubling(tree)
+    else:
+        paths, _ = _backtrace_paths(tree, targets=targets)
+    th.release()
+    return paths
 
 
 def connected_components(
@@ -418,33 +434,44 @@ def connected_components(
     """(key, component) — component = min key (lexicographic) in the
     weakly-connected component.  HashMin label propagation.
     """
+    return _connected_components(nodes, edges, max_iter)[0]
+
+
+def _connected_components(
+    nodes: DataFrame, edges: DataFrame, max_iter: int = 50
+) -> tuple[DataFrame, CheckpointHandle]:
     e, eh = checkpoint_eager(_as_undirected(edges).distinct())
-    key_col = nodes.columns[0]
-    comp, ch = checkpoint_eager(
-        nodes.select(F.col(key_col).alias("key")).distinct()
-        .withColumn("component", F.col("key"))
-    )
+    comp, ch = checkpoint_eager(_keys(nodes).withColumn("component", F.col("key")))
+    comp, ch = _min_label(comp, ch, e, "component", max_iter)
+    eh.release()
+    return comp, ch
+
+
+def _min_label(
+    labels: DataFrame, lh: CheckpointHandle, e: DataFrame, col: str,
+    max_iter: int,
+) -> tuple[DataFrame, CheckpointHandle]:
+    """Min-label propagation along ``e`` to a fixed point: a key's
+    ``col`` becomes the min over its own and its in-neighbors' labels;
+    the self row carries the old label, so the changed count rides in
+    the freeze's own job."""
     for _ in range(max_iter):
-        # candidate component = min over self and neighbors' components;
-        # the self row also carries the old component, so the changed
-        # count rides in the freeze's own job
         msgs = (
-            comp.join(e, comp["key"] == e["src"])
-            .select(F.col("dst").alias("key"), "component")
-            .withColumn("old", F.lit(None).cast(comp.schema["component"].dataType))
+            labels.join(e, labels["key"] == e["src"])
+            .select(F.col("dst").alias("key"), col)
+            .withColumn("old", F.lit(None).cast(labels.schema[col].dataType))
         )
-        new_comp, changed = _observing(
-            comp.select("key", "component", F.col("component").alias("old"))
+        new, changed = _observing(
+            labels.select("key", col, F.col(col).alias("old"))
             .unionByName(msgs)
             .groupBy("key")
-            .agg(F.min("component").alias("component"), F.min("old").alias("old")),
-            n=F.count_if(F.col("component") != F.col("old")),
+            .agg(F.min(col).alias(col), F.min("old").alias("old")),
+            n=F.count_if(F.col(col) != F.col("old")),
         )
-        comp, ch = _step(new_comp.select("key", "component"), ch)
+        labels, lh = _step(new.select("key", col), lh)
         if changed.get["n"] == 0:
             break
-    eh.release()
-    return comp
+    return labels, lh
 
 
 def connected_components_twophase(
@@ -460,6 +487,12 @@ def connected_components_twophase(
     contracts toward a star per component, whose center is the
     component minimum.  Results are identical to HashMin.
     """
+    return _connected_components_twophase(nodes, edges, max_iter)[0]
+
+
+def _connected_components_twophase(
+    nodes: DataFrame, edges: DataFrame, max_iter: int = 30
+) -> tuple[DataFrame, CheckpointHandle]:
     e, eh = checkpoint_eager(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
@@ -469,9 +502,7 @@ def connected_components_twophase(
     for _ in range(max_iter):
         # large-star: for every u, attach its LARGER neighbors to
         # m(u) = min(N(u) ∪ {u})
-        sym = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        sym = _as_undirected(e)
         grouped = sym.groupBy("src").agg(
             F.min("dst").alias("min_n"), F.collect_set("dst").alias("ns")
         )
@@ -513,12 +544,10 @@ def connected_components_twophase(
         if sig == prev_sig:
             break
         prev_sig = sig
-    key_col = nodes.columns[0]
-    verts = nodes.select(F.col(key_col).alias("key")).distinct()
     roots = e.select(F.col("src").alias("key"), F.col("dst").alias("component"))
-    return verts.join(roots, "key", "left").select(
+    return _keys(nodes).join(roots, "key", "left").select(
         "key", F.coalesce(F.col("component"), F.col("key")).alias("component")
-    )
+    ), eh
 
 
 def pagerank(
@@ -533,62 +562,88 @@ def pagerank(
     incoming rank/out_degree; dangling nodes keep their base rank.
     """
     e = edges.select("src", "dst")
-    if nodes is None:
-        verts = (
-            e.select(F.col("src").alias("key"))
-            .unionByName(e.select(F.col("dst").alias("key")))
-            .distinct()
-        )
-    else:
-        verts = nodes.select(F.col(nodes.columns[0]).alias("key")).distinct()
-    verts, vh = checkpoint_eager(verts)
-    # the edge table is partitioned on src ONCE, up front: the
-    # out-degree aggregate and its join back reuse that single
-    # exchange during SETUP.  Honesty note (r7 finding): the
-    # checkpointed `links` scans as UnknownPartitioning, so each
-    # ITERATION's join still re-exchanges it — on the small corpus
-    # graph this is sub-noise; converting to partitioned_cache (the
-    # Louvain fix) is the lever if a big graph ever lands here, but
-    # beware: cached stats let AQE broadcast the rank side, and a
-    # per-iteration rank broadcast measured 1.5-2s SLOWER on the
-    # corpus graph (driver collect + rebroadcast each round).
-    # grouped-double-sum caveat: rank contributions sum as doubles, so
-    # any layout change can move float partial order; g41 is
-    # rows-only-by-design for exactly this reason.
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    verts, vh = checkpoint_eager(_vertex_set(e, nodes))
+    # Honesty note (r7 finding): the checkpointed `links` scans as
+    # UnknownPartitioning, so each ITERATION's join still re-exchanges
+    # it — on the small corpus graph this is sub-noise; converting to
+    # partitioned_cache (the Louvain fix) is the lever if a big graph
+    # ever lands here, but beware: cached stats let AQE broadcast the
+    # rank side, and a per-iteration rank broadcast measured 1.5-2s
+    # SLOWER on the corpus graph (driver collect + rebroadcast each
+    # round).  grouped-double-sum caveat: rank contributions sum as
+    # doubles, so any layout change can move float partial order; g41
+    # is rows-only-by-design for exactly this reason.
+    links, lh = _src_links(
+        e, F.count("*").alias("out_degree"), F.col("out_degree")
     )
-    e_p = e.repartition(n_shuffle, "src")
-    out_deg = e_p.groupBy(F.col("src").alias("key")).agg(
-        F.count("*").alias("out_degree")
+    return _power_iteration(
+        links, lh, verts, vh, F.lit(1.0),
+        F.col("rank") / F.col("out_degree"), iterations, damping,
     )
-    links, lh = checkpoint_eager(
-        e_p.join(out_deg, e_p["src"] == out_deg["key"])
-        .select("src", "dst", "out_degree")
+
+
+def _keys(df: DataFrame) -> DataFrame:
+    """(key) — the distinct values of ``df``'s first column."""
+    return df.select(F.col(df.columns[0]).alias("key")).distinct()
+
+
+def _vertex_set(e: DataFrame, nodes: DataFrame | None) -> DataFrame:
+    """(key) — ``nodes``' first column, or else the endpoints of ``e``."""
+    if nodes is not None:
+        return _keys(nodes)
+    return (
+        e.select(F.col("src").alias("key"))
+        .unionByName(e.select(F.col("dst").alias("key")))
+        .distinct()
     )
-    ranks, rh = verts.withColumn("rank", F.lit(1.0)), None
+
+
+def _src_links(
+    e: DataFrame, out: Column, link: Column
+) -> tuple[DataFrame, CheckpointHandle]:
+    """(src, dst, link), frozen: ``e`` partitioned on src ONCE, so the
+    per-src aggregate ``out`` and its join back reuse one exchange."""
+    e_p = e.repartition(_n_shuffle(e), "src")
+    agg = e_p.groupBy(F.col("src").alias("key")).agg(out)
+    return checkpoint_eager(
+        e_p.join(agg, e_p["src"] == agg["key"]).select("src", "dst", link)
+    )
+
+
+def _power_iteration(
+    links: DataFrame,
+    lh: CheckpointHandle,
+    base: DataFrame,
+    bh: CheckpointHandle,
+    restart: Column,
+    contrib: Column,
+    iterations: int,
+    damping: float,
+) -> DataFrame:
+    """The PageRank loop: from rank = ``restart``, ``iterations``
+    frozen rounds of rank(v) = (1-d)·restart(v) + d·Σ_{u→v} contrib,
+    ``restart`` read from the vertex table ``base``, ``contrib`` from
+    ``links`` and the source's rank.  Releases ``links``, and ``base``
+    once a round has run."""
+    ranks, rh = base.select("key", restart.alias("rank")), None
     for _ in range(iterations):
         contribs = (
             links.join(ranks, links["src"] == ranks["key"])
-            .select(
-                F.col("dst").alias("key"),
-                (F.col("rank") / F.col("out_degree")).alias("contrib"),
-            )
+            .select(F.col("dst").alias("key"), contrib.alias("contrib"))
             .groupBy("key")
             .agg(F.sum("contrib").alias("contrib"))
         )
         ranks, rh = _step(
-            verts.join(contribs, "key", "left")
+            base.join(contribs, "key", "left")
             .select(
                 "key",
-                (F.lit(1.0 - damping)
+                (F.lit(1.0 - damping) * restart
                  + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
                  ).alias("rank"),
             ),
             rh,
         )
-    # the returned ranks are frozen apart from verts unless no round ran
-    _release(lh, vh if iterations > 0 else None)
+    _release(lh, bh if iterations > 0 else None)
     return ranks
 
 
@@ -599,33 +654,49 @@ def k_core(nodes: DataFrame, edges: DataFrame, k: int, max_iter: int = 100) -> D
     one degree aggregation + two semi-joins; rounds bounded by the
     peeling depth (small for provenance graphs).
     """
-    key_col = nodes.columns[0]
-    und, uh = checkpoint_eager(
-        _as_undirected(edges)
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
+    und, uh = _simple_undirected(edges)
+    remaining, seen = _observing(_keys(nodes), n=F.count(F.lit(1)))
+    remaining, rh = checkpoint_eager(remaining)
+    core, ch, _ = _shrink(
+        remaining, rh, seen.get["n"], _k_core_peel(und, k), max_iter
     )
-    remaining, rh = checkpoint_eager(
-        nodes.select(F.col(key_col).alias("key")).distinct()
-    )
-    for _ in range(max_iter):
-        e = (
-            und.join(remaining.select(F.col("key").alias("src")), "src", "left_semi")
-            .join(remaining.select(F.col("key").alias("dst")), "dst", "left_semi")
+    _release(uh, rh if ch is not rh else None)
+    return core
+
+
+def _k_core_peel(und: DataFrame, k: int):
+    """One k-core peel of a (key) set: keep the keys with at least
+    ``k`` neighbours in ``und`` inside the set."""
+    def keep_of(cur: DataFrame) -> DataFrame:
+        deg = _induced(und, cur).groupBy(F.col("src").alias("key")).agg(
+            F.count("*").alias("deg")
         )
-        deg = e.groupBy(F.col("src").alias("key")).agg(F.count("*").alias("deg"))
-        keep, kh = checkpoint_eager(
-            remaining.join(deg, "key", "left")
+        return (
+            cur.join(deg, "key", "left")
             .filter(F.coalesce(F.col("deg"), F.lit(0)) >= k)
             .select("key")
         )
-        if keep.count() == remaining.count():
+    return keep_of
+
+
+def _shrink(
+    cur: DataFrame, ch: CheckpointHandle, n: int, keep_of, max_iter: int
+) -> tuple[DataFrame, CheckpointHandle, int]:
+    """The peeling loop: freeze ``keep_of(cur)`` — the rows of ``cur``
+    (``n`` of them) that survive a peel — until a round drops none
+    (counted in its freeze).  Returns the survivors, their handle and
+    size; ``ch`` stays with the caller."""
+    first = ch
+    for _ in range(max_iter):
+        keep, seen = _observing(keep_of(cur), n=F.count(F.lit(1)))
+        keep, kh = checkpoint_eager(keep)
+        if seen.get["n"] == n:
             kh.release()
             break
-        rh.release()
-        remaining, rh = keep, kh
-    uh.release()
-    return remaining
+        if ch is not first:
+            ch.release()
+        cur, ch, n = keep, kh, seen.get["n"]
+    return cur, ch, n
 
 
 def core_decomposition(
@@ -645,43 +716,20 @@ def core_decomposition(
     round counts further at extreme scale; the staged peel keeps every
     step a plain aggregate.
     """
-    key_col = nodes.columns[0]
-    und, uh = checkpoint_eager(
-        _as_undirected(edges)
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    remaining, rh = checkpoint_eager(
-        nodes.select(F.col(key_col).alias("key")).distinct()
-    )
+    und, uh = _simple_undirected(edges)
+    remaining, seen = _observing(_keys(nodes), n=F.count(F.lit(1)))
+    remaining, rh = checkpoint_eager(remaining)
+    n = seen.get["n"]
     spark = nodes.sparkSession
     out, oh = checkpoint_eager(
         spark.createDataFrame([], "v string, coreness int")
     )
     for k in range(1, max_core + 1):
-        survivors, sh = remaining, rh
-        while True:
-            e = (
-                und.join(
-                    survivors.select(F.col("key").alias("src")), "src", "left_semi"
-                ).join(
-                    survivors.select(F.col("key").alias("dst")), "dst", "left_semi"
-                )
-            )
-            deg = e.groupBy(F.col("src").alias("key")).agg(
-                F.count("*").alias("deg")
-            )
-            keep, kh = checkpoint_eager(
-                survivors.join(deg, "key", "left")
-                .filter(F.coalesce(F.col("deg"), F.lit(0)) >= k)
-                .select("key")
-            )
-            if keep.count() == survivors.count():
-                kh.release()
-                break
-            if sh is not rh:  # remaining is read by this stage's peel
-                sh.release()
-            survivors, sh = keep, kh
+        # every round but the last drops a key, so n + 1 rounds never
+        # cut a peel; remaining is read by this stage's ``peeled``
+        survivors, sh, n = _shrink(
+            remaining, rh, n, _k_core_peel(und, k), n + 1
+        )
         peeled = remaining.join(survivors, "key", "left_anti").select(
             F.col("key").alias("v"), F.lit(k - 1).cast("int").alias("coreness")
         )
@@ -689,7 +737,7 @@ def core_decomposition(
         if sh is not rh:
             rh.release()
         remaining, rh = survivors, sh
-        if remaining.isEmpty():
+        if n == 0:
             break
     _release(uh, rh)
     return out
@@ -713,10 +761,7 @@ def strongly_connected_components(
     O(diameter) joins.  Every step is a DataFrame join/agg — no
     driver-side graph state.
     """
-    key_col = nodes.columns[0]
-    remaining, rh = checkpoint_eager(
-        nodes.select(F.col(key_col).alias("key")).distinct()
-    )
+    remaining, rh = checkpoint_eager(_keys(nodes))
     e_rem, eh = checkpoint_eager(
         edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     )
@@ -745,11 +790,7 @@ def strongly_connected_components(
             )[0])
             rh.release()
             rem, rh = keep, kh
-            e, eh = _step(
-                e.join(rem.select(F.col("key").alias("src")), "src", "left_semi")
-                .join(rem.select(F.col("key").alias("dst")), "dst", "left_semi"),
-                eh,
-            )
+            e, eh = _step(_induced(e, rem), eh)
         return rem, rh, e, eh
 
     # self-loops are cycles of length 1 but carry no inter-vertex SCC
@@ -761,60 +802,33 @@ def strongly_connected_components(
             break
         e = e_rem
         # forward min-propagation to fixed point: color(v) = min id
-        # reaching v (including v itself); the changed count rides in
-        # each round's freeze, as in :func:`connected_components`
-        color, ch = checkpoint_eager(
-            remaining.withColumn("color", F.col("key"))
+        # reaching v (including v itself)
+        color, ch = _min_label(
+            *checkpoint_eager(remaining.withColumn("color", F.col("key"))),
+            e, "color", max_prop,
         )
-        for _ in range(max_prop):
-            msgs = (
-                color.join(e, color["key"] == e["src"])
-                .select(F.col("dst").alias("key"), "color")
-                .withColumn("old", F.lit(None).cast(color.schema["color"].dataType))
-            )
-            new_color, changed = _observing(
-                color.select("key", "color", F.col("color").alias("old"))
-                .unionByName(msgs)
-                .groupBy("key")
-                .agg(F.min("color").alias("color"), F.min("old").alias("old")),
-                n=F.count_if(F.col("color") != F.col("old")),
-            )
-            color, ch = _step(new_color.select("key", "color"), ch)
-            if changed.get["n"] == 0:
-                break
-        # SCC of root r = backward closure of r within color class r
-        assigned, ah = checkpoint_eager(
+        # SCC of root r = backward closure of r within color class r:
+        # one tagged sweep from every root over the reversed edges that
+        # stay inside a color class
+        cs = color.select(F.col("key").alias("src"), F.col("color").alias("cs"))
+        cd = color.select(F.col("key").alias("dst"), F.col("color").alias("cd"))
+        same, sh = checkpoint_eager(
+            e.join(cs, "src").join(cd, "dst")
+            .filter(F.col("cs") == F.col("cd"))
+            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        assigned = _tagged_sweep(
+            same,
             color.filter(F.col("color") == F.col("key"))
-            .select("key", F.col("key").alias("component"))
-        )
-        frontier, fh = assigned, None
-        while True:
-            preds = (
-                frontier.join(e, frontier["key"] == e["dst"])
-                .select(F.col("src").alias("key"), "component")
-                .distinct()
-            )
-            preds, ph = checkpoint_eager(
-                preds.join(color, "key")
-                .filter(F.col("color") == F.col("component"))
-                .select("key", "component")
-                .join(assigned.select("key"), "key", "left_anti")
-            )
-            if preds.isEmpty():
-                ph.release()
-                break
-            assigned, ah = _step(assigned.unionByName(preds), ah, fh)
-            frontier, fh = preds, ph
-        _release(fh)
+            .select(F.col("key").alias("pivot")),
+            sys.maxsize,
+        ).select("key", F.col("pivot").alias("component"))
+        sh.release()
         parts.append(assigned)
         remaining, rh = _step(
             remaining.join(assigned.select("key"), "key", "left_anti"), rh
         )
-        e_rem, eh = _step(
-            e.join(remaining.select(F.col("key").alias("src")), "src", "left_semi")
-            .join(remaining.select(F.col("key").alias("dst")), "dst", "left_semi"),
-            eh, ch,
-        )
+        e_rem, eh = _step(_induced(e, remaining), eh, ch)
         # extraction exposes new zero-degree vertices — re-trim before
         # paying for another coloring fixed point
         remaining, rh, e_rem, eh = trim(remaining, rh, e_rem, eh)
@@ -822,6 +836,24 @@ def strongly_connected_components(
     from functools import reduce
 
     return reduce(DataFrame.unionByName, parts)
+
+
+def _pivots(
+    nodes: DataFrame, n_samples: int
+) -> tuple[DataFrame, CheckpointHandle, int, list]:
+    """The frozen key set of ``nodes``, its handle, its size (observed
+    in its freeze) and its ``n_samples`` smallest-md5(key) keys —
+    deterministic, reproducible pivots."""
+    verts, seen = _observing(_keys(nodes), n=F.count(F.lit(1)))
+    verts, vh = checkpoint_eager(verts)
+    pivots = [
+        r["key"]
+        for r in verts.withColumn("__h", F.md5(F.col("key")))
+        .orderBy("__h")
+        .limit(n_samples)
+        .collect()
+    ]
+    return verts, vh, seen.get["n"], pivots
 
 
 def betweenness_approx(
@@ -847,21 +879,10 @@ def betweenness_approx(
     at cluster scale.  A pivot with a shallower BFS than the global
     max simply contributes no rows at the deeper levels.
     """
-    key_col = nodes.columns[0]
-    verts, vh = checkpoint_eager(
-        nodes.select(F.col(key_col).alias("key")).distinct()
-    )
+    verts, vh, n_vertices, pivots = _pivots(nodes, n_samples)
     e, eh = checkpoint_eager(
         (edges.select("src", "dst") if directed else _as_undirected(edges)).distinct()
     )
-    n_vertices = verts.count()
-    pivots = [
-        r["key"]
-        for r in verts.withColumn("__h", F.md5(F.col("key")))
-        .orderBy("__h")
-        .limit(n_samples)
-        .collect()
-    ]
     spark = edges.sparkSession
     acc, ah = _step(verts.withColumn("betweenness", F.lit(0.0)), vh)
     if not pivots:
@@ -985,32 +1006,52 @@ def random_walks(
         .agg(F.sort_array(F.collect_set("dst")).alias("nbrs"))
         .persist()  # probed by every step's join AND the union branches
     )
+
+    def pick(frontier: DataFrame, h: Column) -> DataFrame:
+        return frontier.join(adj, frontier["cur"] == adj["src"]).select(
+            "start",
+            "w",
+            F.element_at(
+                F.col("nbrs"), (h % F.size("nbrs")).cast("int") + F.lit(1)
+            ).alias("cur"),
+        )
+
+    return _walk(adj, walks_per_node, walk_length, pick)
+
+
+def _walk(
+    adj: DataFrame,
+    walks_per_node: int,
+    walk_length: int,
+    pick,
+    *carry: Column,
+) -> DataFrame:
+    """The walk loop: ``walks_per_node`` walks from every ``adj`` src
+    (frontier (start, w, *carry, cur)); step s freezes
+    ``pick(frontier, h)``, h = md5_32(start|w|s|cur), and appends it
+    to the frozen output.  Unpersists ``adj`` at the end."""
     frontier = adj.select(
         F.col("src").alias("start"),
         F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("w"),
+        *carry,
         F.col("src").alias("cur"),
     )
-    out = frontier.select("start", "w", F.lit(0).alias("step"),
-                          F.col("cur").alias("node"))
+    out = frontier.select(
+        "start", "w", F.lit(0).alias("step"), F.col("cur").alias("node")
+    )
     fh = oh = None  # handles of the current frontier and output
     for step in range(1, walk_length + 1):
         key = F.concat_ws(
             "|", F.col("start"), F.col("w"), F.lit(step), F.col("cur")
         )
         h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint")
-        frontier, nfh = checkpoint_eager(
-            frontier.join(adj, frontier["cur"] == adj["src"]).select(
-                "start",
-                "w",
-                F.element_at(
-                    F.col("nbrs"), (h % F.size("nbrs")).cast("int") + F.lit(1)
-                ).alias("cur"),
-            )
-        )
+        frontier, nfh = checkpoint_eager(pick(frontier, h))
         out, oh = _step(
             out.unionByName(
-                frontier.select("start", "w", F.lit(step).alias("step"),
-                                F.col("cur").alias("node"))
+                frontier.select(
+                    "start", "w", F.lit(step).alias("step"),
+                    F.col("cur").alias("node"),
+                )
             ),
             oh, fh,
         )
@@ -1044,13 +1085,7 @@ def weighted_random_walks(
     adjacency; the per-step filter over the cumw array is O(degree)
     map-side work.
     """
-    und = edges.select("src", "dst", weight_col).unionByName(
-        edges.select(
-            F.col("dst").alias("src"),
-            F.col("src").alias("dst"),
-            F.col(weight_col),
-        )
-    )
+    und = _as_undirected(edges, F.col(weight_col))
     wedges = und.groupBy("src", "dst").agg(
         F.sum(weight_col).cast("long").alias("w")
     )
@@ -1075,42 +1110,17 @@ def weighted_random_walks(
         )
         .persist()
     )
-    frontier = adj.select(
-        F.col("src").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("w"),
-        F.col("src").alias("cur"),
-    )
-    out = frontier.select(
-        "start", "w", F.lit(0).alias("step"), F.col("cur").alias("node")
-    )
-    fh = oh = None  # handles of the current frontier and output
-    for step in range(1, walk_length + 1):
-        key = F.concat_ws(
-            "|", F.col("start"), F.col("w"), F.lit(step), F.col("cur")
-        )
-        h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint")
+
+    def pick(frontier: DataFrame, h: Column) -> DataFrame:
         r = h % F.col("total")
         idx = F.size(F.filter("cumw", lambda c: c <= r)) + F.lit(1)
-        frontier, nfh = checkpoint_eager(
-            frontier.join(adj, frontier["cur"] == adj["src"]).select(
-                "start",
-                "w",
-                F.element_at(F.col("nbrs"), idx).alias("cur"),
-            )
+        return frontier.join(adj, frontier["cur"] == adj["src"]).select(
+            "start",
+            "w",
+            F.element_at(F.col("nbrs"), idx).alias("cur"),
         )
-        out, oh = _step(
-            out.unionByName(
-                frontier.select(
-                    "start", "w", F.lit(step).alias("step"),
-                    F.col("cur").alias("node"),
-                )
-            ),
-            oh, fh,
-        )
-        fh = nfh
-    _release(fh)
-    adj.unpersist()
-    return out
+
+    return _walk(adj, walks_per_node, walk_length, pick)
 
 
 def node2vec_walks(
@@ -1154,23 +1164,10 @@ def node2vec_walks(
         .agg(F.sort_array(F.collect_set("dst")).alias("nbrs"))
         .persist()
     )
-    frontier = adj.select(
-        F.col("src").alias("start"),
-        F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("w"),
-        F.lit(None).cast("string").alias("prev"),
-        F.col("src").alias("cur"),
-    )
-    out = frontier.select(
-        "start", "w", F.lit(0).alias("step"), F.col("cur").alias("node")
-    )
     a_cur = adj.select(F.col("src").alias("__cs"), F.col("nbrs").alias("__cn"))
     a_prev = adj.select(F.col("src").alias("__ps"), F.col("nbrs").alias("__pn"))
-    fh = oh = None  # handles of the current frontier and output
-    for step in range(1, walk_length + 1):
-        key = F.concat_ws(
-            "|", F.col("start"), F.col("w"), F.lit(step), F.col("cur")
-        )
-        h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint")
+
+    def pick(frontier: DataFrame, h: Column) -> DataFrame:
         weights = F.when(
             F.col("prev").isNull(),
             F.transform(F.col("__cn"), lambda x: F.lit(1).cast("long")),
@@ -1195,7 +1192,7 @@ def node2vec_walks(
         # two-step select: computing the pick and renaming cur->prev in ONE
         # list would let Spark's lateral-column-alias resolution bind the
         # `prev` inside `weights` to the new alias instead of the input row
-        frontier, nfh = checkpoint_eager(
+        return (
             frontier.join(a_cur, frontier["cur"] == a_cur["__cs"])
             .join(a_prev, frontier["prev"] == a_prev["__ps"], "left")
             .select(
@@ -1209,19 +1206,11 @@ def node2vec_walks(
                 F.col("__next").alias("cur"),
             )
         )
-        out, oh = _step(
-            out.unionByName(
-                frontier.select(
-                    "start", "w", F.lit(step).alias("step"),
-                    F.col("cur").alias("node"),
-                )
-            ),
-            oh, fh,
-        )
-        fh = nfh
-    _release(fh)
-    adj.unpersist()
-    return out
+
+    return _walk(
+        adj, walks_per_node, walk_length, pick,
+        F.lit(None).cast("string").alias("prev"),
+    )
 
 
 def triangle_count(edges: DataFrame) -> int:
@@ -1231,6 +1220,18 @@ def triangle_count(edges: DataFrame) -> int:
     enumeration a<b<c — each triangle counted exactly once.  Shuffles:
     2 joins on node id; at scale pre-bucket the canonical edge table.
     """
+    _, eh, tri = _triangles(edges)
+    n = tri.count()
+    eh.release()
+    return n
+
+
+def _triangles(
+    edges: DataFrame,
+) -> tuple[DataFrame, CheckpointHandle, DataFrame]:
+    """The frozen canonical (a < b) edge table of ``edges``, its handle,
+    and its triangles a < b < c (columns a, b, c, …) — each enumerated
+    exactly once by two equi-joins."""
     e, eh = checkpoint_eager(
         _as_undirected(edges)
         .select(
@@ -1242,13 +1243,9 @@ def triangle_count(edges: DataFrame) -> int:
     ab = e.select(F.col("a"), F.col("b"))
     bc = e.select(F.col("a").alias("b2"), F.col("b").alias("c"))
     ac = e.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
-    n = (
-        ab.join(bc, ab["b"] == bc["b2"])
-        .join(ac, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
-        .count()
+    return e, eh, ab.join(bc, ab["b"] == bc["b2"]).join(
+        ac, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3"))
     )
-    eh.release()
-    return n
 
 
 def label_propagation(
@@ -1267,19 +1264,12 @@ def label_propagation(
     # UnknownPartitioning, so per-round joins still re-exchange the
     # edge frame; sub-noise on the corpus graph, and partitioned_cache
     # is the measured fix if a big graph lands here (Louvain kernel).
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     e, eh = checkpoint_eager(
         _as_undirected(edges)
-        .repartition(n_shuffle, "src")
+        .repartition(_n_shuffle(edges), "src")
         .distinct()
     )
-    key_col = nodes.columns[0]
-    labels, lh = checkpoint_eager(
-        nodes.select(F.col(key_col).alias("key")).distinct()
-        .withColumn("label", F.col("key"))
-    )
+    labels, lh = checkpoint_eager(_keys(nodes).withColumn("label", F.col("key")))
     for _ in range(max_iter):
         msgs = (
             labels.join(e, labels["key"] == e["src"])
@@ -1328,62 +1318,25 @@ def personalized_pagerank(
     convention.  The Python oracle in tests mirrors this exactly.
     """
     e = edges.select("src", "dst")
-    if nodes is None:
-        verts = (
-            e.select(F.col("src").alias("key"))
-            .unionByName(e.select(F.col("dst").alias("key")))
-            .distinct()
-        )
-    else:
-        verts = nodes.select(F.col(nodes.columns[0]).alias("key")).distinct()
-    verts, vh = checkpoint_eager(verts)
+    verts, vh = checkpoint_eager(_vertex_set(e, nodes))
     # restart mass is assigned to DISTINCT sources, so |S| must be the
     # distinct count too — a duplicated source row must not deflate the
     # restart vector below sum=1
-    src_distinct, sh = checkpoint_eager(
-        sources.select(F.col(sources.columns[0]).alias("key")).distinct()
+    src_distinct, seen = _observing(_keys(sources), n=F.count(F.lit(1)))
+    src_distinct, sh = checkpoint_eager(src_distinct)
+    restart = src_distinct.withColumn(
+        "restart", F.lit(1.0 / float(seen.get["n"]))
     )
-    n_src = src_distinct.count()
-    restart = src_distinct.withColumn("restart", F.lit(1.0 / float(n_src)))
     base, bh = _step(verts.join(restart, "key", "left").select(
         "key", F.coalesce(F.col("restart"), F.lit(0.0)).alias("restart")
     ), vh, sh)
-    # pagerank's layout discipline: one up-front src exchange reused by
-    # the out-degree aggregate, the join back, and the per-round layout
-    e_p = e.repartition(
-        int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        "src",
+    links, lh = _src_links(
+        e, F.count("*").alias("out_degree"), F.col("out_degree")
     )
-    out_deg = e_p.groupBy(F.col("src").alias("key")).agg(
-        F.count("*").alias("out_degree")
+    return _power_iteration(
+        links, lh, base, bh, F.col("restart"),
+        F.col("rank") / F.col("out_degree"), iterations, damping,
     )
-    links, lh = checkpoint_eager(
-        e_p.join(out_deg, e_p["src"] == out_deg["key"])
-        .select("src", "dst", "out_degree")
-    )
-    ranks, rh = base.select("key", F.col("restart").alias("rank")), None
-    for _ in range(iterations):
-        contribs = (
-            links.join(ranks, links["src"] == ranks["key"])
-            .select(
-                F.col("dst").alias("key"),
-                (F.col("rank") / F.col("out_degree")).alias("contrib"),
-            )
-            .groupBy("key")
-            .agg(F.sum("contrib").alias("contrib"))
-        )
-        ranks, rh = _step(
-            base.join(contribs, "key", "left")
-            .select(
-                "key",
-                (F.lit(1.0 - damping) * F.col("restart")
-                 + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                 ).alias("rank"),
-            ),
-            rh,
-        )
-    _release(lh, bh if iterations > 0 else None)
-    return ranks
 
 
 def sssp_weighted(
@@ -1414,27 +1367,27 @@ def sssp_weighted(
     improvement of pred's own distance re-improves — and re-parents —
     the child.
     """
-    w = F.col(weight_col).cast("double")
-    if directed:
-        e = edges.select("src", "dst", w.alias("w"))
-    else:
-        e = edges.select("src", "dst", w.alias("w")).unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), w.alias("w")
-            )
-        )
+    dist, _ = _sssp(edges, sources, weight_col, directed, max_iter)
+    return dist if with_pred else dist.select("key", "dist")
+
+
+def _sssp(
+    edges: DataFrame,
+    sources: DataFrame,
+    weight_col: str,
+    directed: bool,
+    max_iter: int,
+) -> tuple[DataFrame, CheckpointHandle]:
+    w = F.col(weight_col).cast("double").alias("w")
+    e = edges.select("src", "dst", w) if directed else _as_undirected(edges, w)
+    e, neg = _observing(e, n=F.count_if(F.col("w") < 0))
     e, eh = checkpoint_eager(e)
-    if not e.filter(F.col("w") < 0).isEmpty():
+    if neg.get["n"]:
         eh.release()
         raise ValueError("sssp_weighted requires non-negative weights")
-    dist, dh = checkpoint_eager(
-        sources.select(F.col(sources.columns[0]).alias("key")).distinct()
-        .withColumn("dist", F.lit(0.0))
-        .withColumn("pred", F.lit(None).cast(e.schema["src"].dataType))
-    )
-    frontier, fh = dist, None
-    for _ in range(max_iter):
-        cand = (
+
+    def candidates(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(e, frontier["key"] == e["src"])
             .select(
                 F.col("dst").alias("key"),
@@ -1445,27 +1398,56 @@ def sssp_weighted(
             # struct-min: least candidate distance, then least parent key
             .agg(F.min(F.struct("cand", "parent")).alias("m"))
             .select(
-                "key", F.col("m.cand").alias("cand"), F.col("m.parent").alias("parent")
+                "key", F.col("m.cand").alias("cand"), F.col("m.parent").alias("pred")
             )
         )
-        improved, ih = checkpoint_eager(
-            cand.join(dist.select("key", "dist"), "key", "left")
-            .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-            .select(
-                "key", F.col("cand").alias("dist"), F.col("parent").alias("pred")
-            )
+
+    return _relax(
+        e, eh,
+        _keys(sources)
+        .withColumn("dist", F.lit(0.0))
+        .withColumn("pred", F.lit(None).cast(e.schema["src"].dataType)),
+        "dist", candidates, max_iter,
+    )
+
+
+def _relax(
+    e: DataFrame,
+    eh: CheckpointHandle,
+    seeds: DataFrame,
+    value: str,
+    candidates,
+    max_iter: int,
+) -> tuple[DataFrame, CheckpointHandle]:
+    """The delta-relaxation loop over state (key, ``value``, ...) from
+    ``seeds``: each round, the rows of ``candidates(frontier)`` (key,
+    cand, ...) that beat ``value`` or are new are frozen as the next
+    frontier and anti-join-merged into the state, until none improves
+    (counted in that freeze).  Releases ``eh``; returns the state and
+    its handle."""
+    state, sh = checkpoint_eager(seeds)
+    frontier, fh = state, None
+    for _ in range(max_iter):
+        cand = candidates(frontier)
+        carry = [c for c in cand.columns if c not in ("key", "cand")]
+        improved, seen = _observing(
+            cand.join(state.select("key", value), "key", "left")
+            .filter(F.col(value).isNull() | (F.col("cand") < F.col(value)))
+            .select("key", F.col("cand").alias(value), *carry),
+            n=F.count(F.lit(1)),
         )
-        if improved.isEmpty():
+        improved, ih = checkpoint_eager(improved)
+        if seen.get["n"] == 0:
             ih.release()
             break
-        dist, dh = _step(
-            dist.join(improved.select("key"), "key", "left_anti")
+        state, sh = _step(
+            state.join(improved.select("key"), "key", "left_anti")
             .unionByName(improved),
-            dh, fh,
+            sh, fh,
         )
         frontier, fh = improved, ih
     _release(eh, fh)
-    return dist if with_pred else dist.select("key", "dist")
+    return state, sh
 
 
 def sssp_weighted_paths(
@@ -1482,13 +1464,9 @@ def sssp_weighted_paths(
     materialization (Σ|path| bytes is the real cost at scale).  Caveat:
     zero-weight cycles can make the pred forest cyclic; the backtrace
     round bound cuts such walks rather than looping forever."""
-    tree = sssp_weighted(
-        edges, sources, weight_col=weight_col, directed=directed,
-        max_iter=max_iter, with_pred=True,
+    return _paths_of(
+        *_sssp(edges, sources, weight_col, directed, max_iter), targets
     )
-    if targets is None:
-        return _backtrace_paths_doubling(tree)
-    return _backtrace_paths(tree, targets=targets)
 
 
 def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
@@ -1504,19 +1482,19 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
     join Catalyst plans — no driver-side adjacency.  Rounds are bounded
     by the peeling depth.  Returns canonical src < dst pairs.
     """
-    canon, ch = checkpoint_eager(
+    canon, seen = _observing(
         edges.select(
             F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
         )
         .filter(F.col("src") != F.col("dst"))
-        .distinct()
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
-    while max_iter > 0:
-        max_iter -= 1
+    canon, ch = checkpoint_eager(canon)
+
+    def keep_of(canon: DataFrame) -> DataFrame:
         # adjacency both ways: wedge (a<b, b<c) centered anywhere
-        und = canon.unionByName(
-            canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        und = _as_undirected(canon)
         # triangle (u,v,w): for edge (u,v), count common neighbors w
         a = und.select(F.col("src").alias("u"), F.col("dst").alias("w"))
         b = und.select(F.col("src").alias("v"), F.col("dst").alias("w2"))
@@ -1526,17 +1504,15 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 30) -> DataFrame:
             .groupBy(canon["src"], canon["dst"])
             .agg(F.count("*").alias("support"))
         )
-        keep, kh = checkpoint_eager(
+        return (
             canon.join(support, ["src", "dst"], "left")
             .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
             .select("src", "dst")
         )
-        if keep.count() == canon.count():
-            kh.release()
-            break
-        ch.release()
-        canon, ch = keep, kh
-    return canon
+
+    truss, th, _ = _shrink(canon, ch, seen.get["n"], keep_of, max_iter)
+    _release(ch if th is not ch else None)
+    return truss
 
 
 def temporal_bfs(
@@ -1559,38 +1535,25 @@ def temporal_bfs(
     Same execution shape as :func:`sssp_weighted`: one co-partitioned
     join + one grouped min per round.
     """
-    e = edges.select("src", "dst", F.col(time_col).cast("long").alias("t"))
-    e, eh = checkpoint_eager(e)
-    neg_inf = F.lit(-(1 << 62)).cast("long")
-    arrive, ah = checkpoint_eager(
-        sources.select(F.col(sources.columns[0]).alias("key")).distinct()
-        .withColumn("earliest", neg_inf)
+    e, eh = checkpoint_eager(
+        edges.select("src", "dst", F.col(time_col).cast("long").alias("t"))
     )
-    frontier, fh = arrive, None
-    for _ in range(max_iter):
-        cand = (
+
+    def candidates(frontier: DataFrame) -> DataFrame:
+        return (
             frontier.join(e, frontier["key"] == e["src"])
             .filter(F.col("t") >= F.col("earliest"))
             .select(F.col("dst").alias("key"), F.col("t").alias("cand"))
             .groupBy("key")
             .agg(F.min("cand").alias("cand"))
         )
-        improved, ih = checkpoint_eager(
-            cand.join(arrive, "key", "left")
-            .filter(F.col("earliest").isNull() | (F.col("cand") < F.col("earliest")))
-            .select("key", F.col("cand").alias("earliest"))
-        )
-        if improved.isEmpty():
-            ih.release()
-            break
-        arrive, ah = _step(
-            arrive.join(improved.select("key"), "key", "left_anti")
-            .unionByName(improved),
-            ah, fh,
-        )
-        frontier, fh = improved, ih
-    _release(eh, fh)
-    return arrive
+
+    return _relax(
+        e, eh,
+        _keys(sources)
+        .withColumn("earliest", F.lit(-(1 << 62)).cast("long")),
+        "earliest", candidates, max_iter,
+    )[0]
 
 
 def closeness_approx(
@@ -1614,47 +1577,16 @@ def closeness_approx(
     long table folded once at the end, so per-round state is one
     frontier DataFrame.
     """
-    key_col = nodes.columns[0]
-    verts, _ = checkpoint_eager(  # the returned frame reads it
-        nodes.select(F.col(key_col).alias("key")).distinct()
-    )
-    n_vertices = verts.count()
-    pivots = [
-        r["key"]
-        for r in verts.withColumn("__h", F.md5(F.col("key")))
-        .orderBy("__h")
-        .limit(n_samples)
-        .collect()
-    ]
+    # the returned frame reads verts
+    verts, _, n_vertices, pivots = _pivots(nodes, n_samples)
     spark = edges.sparkSession
     e, eh = checkpoint_eager(
         edges.select("src", "dst") if directed else _as_undirected(edges)
     )
-    # ONE tagged multi-source BFS: frontier rows carry their pivot, so
-    # all k sweeps advance together — k× fewer rounds/jobs than looping
-    # pivots, and each round is still a single co-partitioned join
-    visited, vh = checkpoint_eager(
-        spark.createDataFrame([(p,) for p in pivots], ["pivot"])
-        .select("pivot", F.col("pivot").alias("key"))
-        .withColumn("dist", F.lit(0))
+    visited = _tagged_sweep(
+        e, spark.createDataFrame([(p,) for p in pivots], ["pivot"]), max_hops
     )
-    frontier, fh = visited, None
-    hop = 0
-    while hop < max_hops:
-        hop += 1
-        nxt, nh = checkpoint_eager(
-            frontier.join(e, frontier["key"] == e["src"])
-            .select("pivot", F.col("dst").alias("key"))
-            .distinct()
-            .join(visited.select("pivot", "key"), ["pivot", "key"], "left_anti")
-            .withColumn("dist", F.lit(hop))
-        )
-        if nxt.isEmpty():
-            nh.release()
-            break
-        visited, vh = _step(visited.unionByName(nxt), vh, fh)
-        frontier, fh = nxt, nh
-    _release(eh, fh)
+    eh.release()
     scale = float(n_vertices) / float(len(pivots)) if pivots else 0.0
     summed = (
         visited.filter(F.col("dist") > 0)
@@ -1664,6 +1596,41 @@ def closeness_approx(
     return verts.join(summed, "key", "left").select(
         "key", F.coalesce(F.col("closeness"), F.lit(0.0)).alias("closeness")
     )
+
+
+def _tagged_sweep(
+    e: DataFrame, pivots: DataFrame, max_hops: int, *done: CheckpointHandle
+) -> DataFrame:
+    """(pivot, key, dist) — ONE BFS from every ``pivots`` row, its
+    frontier rows tagged with their pivot so all sweeps advance
+    together: k× fewer rounds/jobs than looping pivots.  The visited
+    set is re-frozen every round (a float sum over it keeps its
+    layout); a round that reaches nothing new (counted in its freeze)
+    ends the sweep.  ``done`` are released once the seeds are
+    frozen."""
+    visited, vh = _step(
+        pivots.select("pivot", F.col("pivot").alias("key"))
+        .withColumn("dist", F.lit(0)),
+        *done,
+    )
+    frontier, fh = visited, None
+    for hop in range(1, max_hops + 1):
+        nxt, seen = _observing(
+            frontier.join(e, frontier["key"] == e["src"])
+            .select("pivot", F.col("dst").alias("key"))
+            .distinct()
+            .join(visited.select("pivot", "key"), ["pivot", "key"], "left_anti")
+            .withColumn("dist", F.lit(hop)),
+            n=F.count(F.lit(1)),
+        )
+        nxt, nh = checkpoint_eager(nxt)
+        if seen.get["n"] == 0:
+            nh.release()
+            break
+        visited, vh = _step(visited.unionByName(nxt), vh, fh)
+        frontier, fh = nxt, nh
+    _release(fh)
+    return visited
 
 
 def pagerank_weighted(
@@ -1683,53 +1650,14 @@ def pagerank_weighted(
     """
     w = F.col(weight_col).cast("double")
     e = edges.select("src", "dst", w.alias("w")).filter(F.col("w") > 0)
-    if nodes is None:
-        verts = (
-            e.select(F.col("src").alias("key"))
-            .unionByName(e.select(F.col("dst").alias("key")))
-            .distinct()
-        )
-    else:
-        verts = nodes.select(F.col(nodes.columns[0]).alias("key")).distinct()
-    verts, vh = checkpoint_eager(verts)
-    # same layout discipline as pagerank: one up-front src exchange
-    # reused by the out-weight aggregate, the join back, and the
-    # checkpointed per-round layout (same no-per-round-broadcast
-    # decision — see pagerank)
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    verts, vh = checkpoint_eager(_vertex_set(e, nodes))
+    links, lh = _src_links(
+        e, F.sum("w").alias("out_w"), (F.col("w") / F.col("out_w")).alias("frac")
     )
-    e_p = e.repartition(n_shuffle, "src")
-    out_w = e_p.groupBy(F.col("src").alias("key")).agg(
-        F.sum("w").alias("out_w")
+    return _power_iteration(
+        links, lh, verts, vh, F.lit(1.0),
+        F.col("rank") * F.col("frac"), iterations, damping,
     )
-    links, lh = checkpoint_eager(
-        e_p.join(out_w, e_p["src"] == out_w["key"])
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("frac"))
-    )
-    ranks, rh = verts.withColumn("rank", F.lit(1.0)), None
-    for _ in range(iterations):
-        contribs = (
-            links.join(ranks, links["src"] == ranks["key"])
-            .select(
-                F.col("dst").alias("key"),
-                (F.col("rank") * F.col("frac")).alias("contrib"),
-            )
-            .groupBy("key")
-            .agg(F.sum("contrib").alias("contrib"))
-        )
-        ranks, rh = _step(
-            verts.join(contribs, "key", "left")
-            .select(
-                "key",
-                (F.lit(1.0 - damping)
-                 + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                 ).alias("rank"),
-            ),
-            rh,
-        )
-    _release(lh, vh if iterations > 0 else None)
-    return ranks
 
 
 def densest_subgraph(
@@ -1789,9 +1717,7 @@ def densest_subgraph(
             deg.filter(F.col("deg") > threshold).select("key")
         )
         cur_edges, ch = _step(
-            cur_edges.join(keep.withColumnRenamed("key", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("key", "dst"), "dst", "left_semi"),
-            ch, kh, None if dh is bh else dh,
+            _induced(cur_edges, keep), ch, kh, None if dh is bh else dh
         )
     ch.release()
     if best_verts is None:
@@ -1815,22 +1741,8 @@ def four_clique_count(edges: DataFrame) -> DataFrame:
     which AQE can broadcast when the graph is small and which should be
     pre-bucketed by src at 100 TB.
     """
-    e, _ = checkpoint_eager(
-        _as_undirected(edges)
-        .select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    ab = e.select(F.col("a"), F.col("b"))
-    bc = e.select(F.col("a").alias("b2"), F.col("b").alias("c"))
-    ac = e.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
-    tri = (
-        ab.join(bc, ab["b"] == bc["b2"])
-        .join(ac, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
-        .select("a", "b", "c")
-    )
+    e, _, tri = _triangles(edges)  # the returned frame reads e
+    tri = tri.select("a", "b", "c")
     # broadcast the (small) canonical edge table into every extension
     # join: the HUGE side is the triangle/extension intermediate, and
     # broadcasting e means it streams through build-side hash joins
@@ -1944,12 +1856,14 @@ def minimum_spanning_forest(
         cand = el.select(F.col("cu").alias("component"), pick.alias("s")).unionByName(
             el.select(F.col("cv").alias("component"), pick.alias("s"))
         )
-        chosen, chh = checkpoint_eager(
+        chosen, picked = _observing(
             cand.groupBy("component")
             .agg(F.min("s").alias("s"))
-            .select("s.u", "s.v", "s.w", "s.cu", "s.cv")
+            .select("s.u", "s.v", "s.w", "s.cu", "s.cv"),
+            n=F.count(F.lit(1)),
         )
-        if chosen.isEmpty():
+        chosen, chh = checkpoint_eager(chosen)
+        if picked.get["n"] == 0:
             chh.release()
             break
         forest, fh = _step(forest.unionByName(
@@ -1959,99 +1873,17 @@ def minimum_spanning_forest(
         # for chain-shaped merge patterns)
         cedges = chosen.select(F.col("cu").alias("src"), F.col("cv").alias("dst"))
         cnodes = labels.select(F.col("c").alias("key")).distinct()
-        cmap = connected_components_twophase(cnodes, cedges).select(
-            F.col("key").alias("c"), F.col("component").alias("c_new")
-        )
+        cmap, mh = _connected_components_twophase(cnodes, cedges)
         labels, lh = _step(
-            labels.join(cmap, "c", "left")
+            labels.join(
+                cmap.select(F.col("key").alias("c"), F.col("component").alias("c_new")),
+                "c", "left",
+            )
             .select("key", F.coalesce(F.col("c_new"), F.col("c")).alias("c")),
-            lh, chh,
+            lh, chh, mh,
         )
     _release(eh, lh)
     return forest
-
-
-def shortest_path_length_bidirectional(
-    edges: DataFrame,
-    src_key: str,
-    dst_key: str,
-    directed: bool = True,
-    max_hops: int = 64,
-) -> int | None:
-    """Hop-count shortest path between two keys via MEET-IN-THE-MIDDLE
-    BFS — the scale path for two-endpoint distance queries: each side
-    explores ~b^(d/2) nodes instead of the single-sided b^d, so on a
-    branching provenance graph the frontier (and every per-round
-    shuffle) is the square root of the one-sided cost.
-
-    Level-synchronous and exact: each round expands the SMALLER
-    frontier by one hop (forward over ``src→dst``, backward over the
-    reversed edges), records the best meeting distance
-    ``min(dist_f + dist_b)`` over the visited-set intersection, and
-    stops once ``depth_f + depth_b >= best`` — the standard proof that
-    no shorter crossing can still appear.  Equality with the one-sided
-    :func:`shortest_path_length` is pinned in tests/test_traversal.py.
-    """
-    if src_key == dst_key:
-        return 0
-    spark = edges.sparkSession
-    e = edges.select("src", "dst") if directed else _as_undirected(edges)
-    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-
-    def new_side(key):
-        v, vh = checkpoint_eager(
-            spark.createDataFrame([(key, 0)], ["key", "dist"])
-        )
-        return {"visited": v, "frontier": v, "depth": 0, "alive": True,
-                "vh": vh, "fh": None}
-
-    fwd, bwd = new_side(src_key), new_side(dst_key)
-    best: int | None = None
-    for _ in range(2 * max_hops):
-        # expand the cheaper side (smaller frontier) one level
-        side, graph = (
-            (fwd, e)
-            if (not bwd["alive"])
-            or (fwd["alive"] and fwd["frontier"].count() <= bwd["frontier"].count())
-            else (bwd, rev)
-        )
-        if not side["alive"]:
-            break
-        nxt = (
-            side["frontier"].join(graph, side["frontier"]["key"] == graph["src"])
-            .select(F.col("dst").alias("key"))
-            .distinct()
-            .join(side["visited"].select("key"), "key", "left_anti")
-            .withColumn("dist", F.lit(side["depth"] + 1))
-        )
-        nxt, nh = checkpoint_eager(nxt)
-        side["depth"] += 1
-        if nxt.isEmpty():
-            nh.release()
-            side["alive"] = False
-            if not fwd["alive"] and not bwd["alive"]:
-                break
-        else:
-            side["visited"], side["vh"] = _step(
-                side["visited"].unionByName(nxt), side["vh"], side["fh"]
-            )
-            side["frontier"], side["fh"] = nxt, nh
-        meet = (
-            fwd["visited"].alias("f")
-            .join(bwd["visited"].alias("b"), "key")
-            .agg(F.min(F.col("f.dist") + F.col("b.dist")).alias("d"))
-            .head()["d"]
-        )
-        if meet is not None:
-            best = meet if best is None else min(best, meet)
-        # no shorter crossing can appear once the combined reached depth
-        # meets the best known distance
-        if best is not None and fwd["depth"] + bwd["depth"] >= best:
-            break
-        if not fwd["alive"] and not bwd["alive"]:
-            break
-    _release(fwd["vh"], fwd["fh"], bwd["vh"], bwd["fh"])
-    return best
 
 
 def shortest_path_bidirectional(
@@ -2064,20 +1896,25 @@ def shortest_path_bidirectional(
     """The actual shortest path ``[src, ..., dst]`` between two keys
     via meet-in-the-middle BFS with PATH RECONSTRUCTION — the scale
     plan for two-pinned-endpoint ``shortestPath`` queries: each side
-    explores ~b^(d/2) nodes (square-root frontiers and shuffles vs the
-    one-sided :func:`shortest_path`), and BOTH sides keep a
-    predecessor forest so the answer is spliced from two backtraces at
-    the meet frontier instead of re-running a full BFS.
+    explores ~b^(d/2) nodes (square-root frontiers and shuffles vs a
+    one-sided BFS's b^d), and BOTH sides keep a predecessor forest so
+    the answer is spliced from two backtraces at the meet frontier
+    instead of re-running a full BFS.
 
     Deterministic end to end: each side's predecessor is the min
     frontier key among equal-distance parents (same rule as
     :func:`bfs_tree`), the meet node is the min key among the visited-
     set intersection realizing the optimal distance, and the expansion
     schedule (always the smaller frontier) depends only on the data.
-    Termination mirrors :func:`shortest_path_length_bidirectional`:
-    stop once ``depth_f + depth_b >= best`` — no shorter crossing can
-    still appear.  Hop-distance equality with the one-sided BFS and
-    path validity are pinned in tests/test_traversal.py.
+    Level-synchronous and exact: each round expands one side by one
+    hop (forward over ``src→dst``, backward over the reversed edges),
+    records the best meeting distance ``min(dist_f + dist_b)`` over the
+    visited-set intersection, and stops once ``depth_f + depth_b >=
+    best`` — no shorter crossing can still appear.  Each side's
+    frontier size — which side expands next, and whether it is
+    exhausted — is counted in its level's freeze.  Hop-distance
+    equality with networkx and path validity are pinned in
+    tests/test_traversal.py.
     """
     if src_key == dst_key:
         return [src_key]
@@ -2087,46 +1924,27 @@ def shortest_path_bidirectional(
     key_t = e.schema["src"].dataType
 
     def new_side(key):
-        v, vh = checkpoint_eager(
+        return {**_tree_side(
             spark.createDataFrame([(key, 0)], ["key", "dist"])
             .select(F.col("key").cast(key_t).alias("key"), "dist")
             .withColumn("pred", F.lit(None).cast(key_t))
-        )
-        return {"visited": v, "frontier": v, "depth": 0, "alive": True,
-                "vh": vh, "fh": None}
+        ), "size": 1}
 
     fwd, bwd = new_side(src_key), new_side(dst_key)
     best: int | None = None
     for _ in range(2 * max_hops):
+        # expand the cheaper side (smaller frontier) one level; a side
+        # whose last level reached nothing (size 0) is exhausted
         side, graph = (
             (fwd, e)
-            if (not bwd["alive"])
-            or (fwd["alive"] and fwd["frontier"].count() <= bwd["frontier"].count())
+            if not bwd["size"] or 0 < fwd["size"] <= bwd["size"]
             else (bwd, rev)
         )
-        if not side["alive"]:
+        if not side["size"]:
             break
-        nxt = (
-            side["frontier"].join(graph, side["frontier"]["key"] == graph["src"])
-            .select(F.col("dst").alias("key"), side["frontier"]["key"].alias("pred"))
-            .groupBy("key")
-            .agg(F.min("pred").alias("pred"))
-            .join(side["visited"].select("key"), "key", "left_anti")
-            .withColumn("dist", F.lit(side["depth"] + 1))
-            .select("key", "dist", "pred")
-        )
-        nxt, nh = checkpoint_eager(nxt)
-        side["depth"] += 1
-        if nxt.isEmpty():
-            nh.release()
-            side["alive"] = False
-            if not fwd["alive"] and not bwd["alive"]:
-                break
-        else:
-            side["visited"], side["vh"] = _step(
-                side["visited"].unionByName(nxt), side["vh"], side["fh"]
-            )
-            side["frontier"], side["fh"] = nxt, nh
+        side["size"] = _grow_tree(side, graph)
+        if not fwd["size"] and not bwd["size"]:
+            break
         meet = (
             fwd["visited"].alias("f")
             .join(bwd["visited"].alias("b"), "key")
@@ -2135,34 +1953,32 @@ def shortest_path_bidirectional(
         )
         if meet is not None:
             best = meet if best is None else min(best, meet)
+        # no shorter crossing can appear once the combined reached depth
+        # meets the best known distance
         if best is not None and fwd["depth"] + bwd["depth"] >= best:
             break
-        if not fwd["alive"] and not bwd["alive"]:
-            break
-    if best is None or best > max_hops:
-        _release(fwd["vh"], fwd["fh"], bwd["vh"], bwd["fh"])
-        return None
-    # deterministic meet node: min key realizing the optimal crossing
-    meet_row = (
-        fwd["visited"].alias("f")
-        .join(bwd["visited"].alias("b"), "key")
-        .filter(F.col("f.dist") + F.col("b.dist") == F.lit(best))
-        .orderBy("key")
-        .select("key")
-        .head()
-    )
-    meet_key = meet_row["key"]
-    meet_df = fwd["visited"].sparkSession.createDataFrame(
-        [(meet_key,)], ["key"]
-    ).select(F.col("key").cast(key_t).alias("key"))
-    f_path = list(
-        _backtrace_paths(fwd["visited"], targets=meet_df).head()["path"]
-    )  # [src .. meet]
-    b_path = list(
-        _backtrace_paths(bwd["visited"], targets=meet_df).head()["path"]
-    )  # [dst .. meet] (backward tree is rooted at dst)
+    path = None
+    if best is not None and best <= max_hops:
+        # deterministic meet node: min key realizing the optimal crossing
+        meet_key = (
+            fwd["visited"].alias("f")
+            .join(bwd["visited"].alias("b"), "key")
+            .filter(F.col("f.dist") + F.col("b.dist") == F.lit(best))
+            .orderBy("key")
+            .select("key")
+            .head()["key"]
+        )
+        meet_df = spark.createDataFrame([(meet_key,)], ["key"]).select(
+            F.col("key").cast(key_t).alias("key")
+        )
+        halves = []  # [src .. meet], then [dst .. meet]: bwd is rooted at dst
+        for tree in (fwd["visited"], bwd["visited"]):
+            paths, ph = _backtrace_paths(tree, targets=meet_df)
+            halves.append(list(paths.head()["path"]))
+            ph.release()
+        path = halves[0] + halves[1][-2::-1]
     _release(fwd["vh"], fwd["fh"], bwd["vh"], bwd["fh"])
-    return f_path + b_path[-2::-1]
+    return path
 
 
 def hyperball(
@@ -2209,9 +2025,7 @@ def hyperball(
 
     e = edges.select("src", "dst") if directed else _as_undirected(edges)
     e, eh = checkpoint_eager(e.distinct())
-    nodes = e.select(F.col("src").alias("key")).union(
-        e.select(F.col("dst").alias("key"))
-    ).distinct()
+    nodes = _vertex_set(e, None)
     bucket, rho = hll_bucket_rho(F.col("key"))
     state, sh = checkpoint_eager(nodes.select("key", bucket, rho.alias("reg")))
     frontier, fh = state, None
@@ -2411,49 +2225,33 @@ def hits(
         .union(e.select(F.col("dst").alias("v")))
         .distinct()
     )
+    def renorm(scores: DataFrame, frm: str, to: str, out: str) -> DataFrame:
+        # ``out`` per node: Σ ``scores`` over edges frm→to, renormalized
+        raw = (
+            e.join(scores, scores["v"] == e[frm])
+            .groupBy(F.col(to).alias("sv"))
+            .agg(F.sum(scores.columns[1]).alias("raw"))
+        )
+        tot = raw.agg(F.sum("raw").alias("tot"))
+        return (
+            nodes.join(raw, nodes["v"] == raw["sv"], "left")
+            .crossJoin(tot)  # 1x1 scalar join, broadcast by AQE
+            .select(
+                "v",
+                F.expr(
+                    f"COALESCE(raw, 0) DIV "
+                    f"GREATEST(CAST(1 AS BIGINT), tot DIV CAST({scale} AS BIGINT))"
+                )
+                .cast("bigint")
+                .alias(out),
+            )
+        )
+
     h, hh = nodes.withColumn("h", F.lit(int(scale)).cast("bigint")), None
     a, ah = None, None
     for _ in range(iters):
-        a_raw = (
-            e.join(h, h["v"] == e["src"])
-            .groupBy(F.col("dst").alias("av"))
-            .agg(F.sum("h").alias("raw"))
-        )
-        a_tot = a_raw.agg(F.sum("raw").alias("tot"))
-        a, ah = _step(
-            nodes.join(a_raw, nodes["v"] == a_raw["av"], "left")
-            .crossJoin(a_tot)  # 1x1 scalar join, broadcast by AQE
-            .select(
-                "v",
-                F.expr(
-                    f"COALESCE(raw, 0) DIV "
-                    f"GREATEST(CAST(1 AS BIGINT), tot DIV CAST({scale} AS BIGINT))"
-                )
-                .cast("bigint")
-                .alias("a"),
-            ),
-            ah,
-        )
-        h_raw = (
-            e.join(a, a["v"] == e["dst"])
-            .groupBy(F.col("src").alias("hv"))
-            .agg(F.sum("a").alias("raw"))
-        )
-        h_tot = h_raw.agg(F.sum("raw").alias("tot"))
-        h, hh = _step(
-            nodes.join(h_raw, nodes["v"] == h_raw["hv"], "left")
-            .crossJoin(h_tot)
-            .select(
-                "v",
-                F.expr(
-                    f"COALESCE(raw, 0) DIV "
-                    f"GREATEST(CAST(1 AS BIGINT), tot DIV CAST({scale} AS BIGINT))"
-                )
-                .cast("bigint")
-                .alias("h"),
-            ),
-            hh,
-        )
+        a, ah = _step(renorm(h, "src", "dst", "a"), ah)
+        h, hh = _step(renorm(a, "dst", "src", "h"), hh)
     eh.release()
     return (
         nodes.join(h, "v", "left")
@@ -2489,13 +2287,10 @@ def louvain_undirected_edges(
     groups (r10: ~2/3 of the one-off edge-build exec on the copurchase
     graph).  Emit ``w=1`` directly; the repartition still pins
     hashpartitioning(dst)."""
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     und = (
         _as_undirected(edges.select("src", "dst"))
         .filter(F.col("src") != F.col("dst"))
-        .repartition(n_shuffle, "dst")
+        .repartition(_n_shuffle(edges), "dst")
     )
     if edges_distinct:
         und = und.select(
@@ -2585,11 +2380,7 @@ def maximal_independent_set(
     driver sees only the loop counter and emptiness probes.
     """
     key_col = nodes.columns[0]
-    und, uh = checkpoint_eager(
-        _as_undirected(edges)
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    und, uh = _simple_undirected(edges)
     act, ah = checkpoint_eager(
         nodes.select(F.col(key_col).alias("v")).distinct()
         .withColumn("pri", F.md5(F.col("v")))
@@ -2599,10 +2390,7 @@ def maximal_independent_set(
     for _ in range(max_iter):
         if act.isEmpty():
             break
-        e_act = (
-            und.join(act.select(F.col("v").alias("src")), "src", "left_semi")
-            .join(act.select(F.col("v").alias("dst")), "dst", "left_semi")
-        )
+        e_act = _induced(und, act, "v")
         nbr_min = (
             e_act.join(
                 act.select(F.col("v").alias("dst"), F.col("pri").alias("npri")),
@@ -2654,11 +2442,7 @@ def greedy_coloring(
     count is (Δ+1)-bounded like any greedy scheme.
     """
     key_col = nodes.columns[0]
-    und, uh = checkpoint_eager(
-        _as_undirected(edges)
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    und, uh = _simple_undirected(edges)
     pending, ph = checkpoint_eager(
         nodes.select(F.col(key_col).alias("v")).distinct()
     )
@@ -3111,16 +2895,9 @@ def louvain(
     # dst-repartition BEFORE the dedup groupBy: hashpartitioning(dst)
     # satisfies the (src, dst) clustering (subset rule), so one 2|E|
     # exchange yields both the dedup and the per-round join layout
-    n_shuffle = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    )
     und = (
-        base.unionByName(
-            base.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
-        )
-        .repartition(n_shuffle, "dst")
+        _as_undirected(base, F.col("w"))
+        .repartition(_n_shuffle(edges), "dst")
         .groupBy("src", "dst")
         .agg(F.max("w").alias("w"))
         .sortWithinPartitions("dst")
@@ -3217,13 +2994,10 @@ def topological_levels(
     verts, _ = checkpoint_eager(  # the returned frame reads it
         nodes.select(F.col(key_col).alias("v")).distinct()
     )
-    e, eh = checkpoint_eager(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .join(verts.select(F.col("v").alias("src")), "src", "left_semi")
-        .join(verts.select(F.col("v").alias("dst")), "dst", "left_semi")
-    )
+    e, eh = checkpoint_eager(_induced(
+        edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct(),
+        verts, "v",
+    ))
     spark = nodes.sparkSession
     out, oh = checkpoint_eager(spark.createDataFrame([], "v string, level int"))
     remaining, rh = verts, None
@@ -3277,36 +3051,11 @@ def harmonic_centrality_exact(
     e, eh = checkpoint_eager(
         edges.select("src", "dst") if directed else _as_undirected(edges)
     )
-    verts, uh = checkpoint_eager(
-        e.select(F.col("src").alias("key"))
-        .unionByName(e.select(F.col("dst").alias("key")))
-        .distinct()
+    verts, uh = checkpoint_eager(_vertex_set(e, None))
+    visited = _tagged_sweep(
+        e, verts.select(F.col("key").alias("pivot")), max_hops, uh
     )
-    visited, vh = _step(
-        verts.select(F.col("key").alias("pivot"))
-        .select("pivot", F.col("pivot").alias("key"))
-        .withColumn("dist", F.lit(0)),
-        uh,
-    )
-    frontier, fh = visited, None
-    hop = 0
-    while hop < max_hops:
-        hop += 1
-        nxt, nh = checkpoint_eager(
-            frontier.join(e, frontier["key"] == e["src"])
-            .select("pivot", F.col("dst").alias("key"))
-            .distinct()
-            .join(
-                visited.select("pivot", "key"), ["pivot", "key"], "left_anti"
-            )
-            .withColumn("dist", F.lit(hop))
-        )
-        if nxt.isEmpty():
-            nh.release()
-            break
-        visited, vh = _step(visited.unionByName(nxt), vh, fh)
-        frontier, fh = nxt, nh
-    _release(eh, fh)
+    eh.release()
     return (
         visited.filter(F.col("dist") > 0)
         .groupBy("key")

@@ -115,7 +115,7 @@ def streaming_connected_components(
     ``n_shards`` fixes the state sharding for the lifetime of the
     state directory (do not change it between runs).
     """
-    from graphdb_neo4j_spark.operators.traversal import connected_components
+    from graphdb_neo4j_spark.operators.traversal import _connected_components
     from graphdb_neo4j_spark.streaming.dim import _done_batches
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -164,8 +164,8 @@ def streaming_connected_components(
         # component ids are min member ids; since prior component ids
         # are min vertex ids of their sets, the merged min is the
         # global min vertex — batch-equivalent by induction.  (The
-        # kernel returns a frozen frame.)
-        merged = connected_components(cnodes, contracted)
+        # kernel returns a frozen frame, released with this batch's.)
+        merged, merged_handle = _connected_components(cnodes, contracted)
         # CHANGED component ids only: old component c now maps to m ≠ c
         mapping, mapping_handle = checkpoint_eager(
             merged.filter(F.col("key") != F.col("component")).select(
@@ -233,7 +233,7 @@ def streaming_connected_components(
                         and int(bname.split("=")[1]) < batch_id
                     ):
                         fs.delete(bdir.getPath(), True)
-        for handle in (e_handle, bverts_handle, mapping_handle):
+        for handle in (e_handle, bverts_handle, mapping_handle, merged_handle):
             handle.release()
 
     return edges_stream.writeStream.foreachBatch(_process).option(

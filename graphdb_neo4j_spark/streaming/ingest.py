@@ -254,10 +254,16 @@ def stateful_process_tracker(spans_stream: DataFrame, timeout_minutes: int = 60)
 
     ``applyInPandasWithState`` keyed by process GUID/pid key; state =
     (first_seen_us, last_seen_us, n_spans).  Emits one updated row per
-    key per micro-batch; state expires after ``timeout_minutes`` of
-    processing-time inactivity (bounded state — mandatory for an
-    unbounded stream).  This is the Spark-native shape for the
-    reference's implicit "process lifetime" notion (event 1 ↔ event 5).
+    key per micro-batch; state expires once the event-time watermark
+    (span start time, ``timeout_minutes`` of allowed lateness) passes
+    ``timeout_minutes`` after the key's last span (bounded state —
+    mandatory for an unbounded stream); spans later than the watermark
+    are dropped.  An event-time timeout lets a
+    ``trigger(availableNow=True)`` query finish: Spark runs one no-data
+    batch to expire state once the watermark moves, where a
+    processing-time timeout keeps it running empty batches forever.
+    This is the Spark-native shape for the reference's implicit
+    "process lifetime" notion (event 1 ↔ event 5).
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import (
@@ -269,8 +275,15 @@ def stateful_process_tracker(spans_stream: DataFrame, timeout_minutes: int = 60)
 
     from graphdb_neo4j_spark.operators.ingest import _derive
 
-    d = _derive(spans_stream).filter(F.col("pkey").isNotNull()).select(
-        F.col("pkey").alias("key"), F.col("ord.start_time").alias("start_us")
+    d = (
+        _derive(spans_stream)
+        .filter(F.col("pkey").isNotNull())
+        .select(
+            F.col("pkey").alias("key"),
+            F.col("ord.start_time").alias("start_us"),
+            F.timestamp_micros(F.col("ord.start_time")).alias("event_time"),
+        )
+        .withWatermark("event_time", f"{timeout_minutes} minutes")
     )
 
     out_schema = StructType(
@@ -307,7 +320,7 @@ def stateful_process_tracker(spans_stream: DataFrame, timeout_minutes: int = 60)
             last = hi if last is None else max(last, hi)
             n += len(pdf)
         state.update((first, last, n))
-        state.setTimeoutDuration(timeout_minutes * 60_000)
+        state.setTimeoutTimestamp(last // 1000 + timeout_minutes * 60_000)
         yield pd.DataFrame(
             {
                 "key": [key[0]],
@@ -322,7 +335,7 @@ def stateful_process_tracker(spans_stream: DataFrame, timeout_minutes: int = 60)
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
 

@@ -103,7 +103,6 @@ def spawn_chain_trace(tmp_path, write_traces):
 _SLOW_TESTS = frozenset((
     "test_oracle_parity.py::test_all_queries_run",  # 480s
     "test_traversal.py::test_backtrace_deep_chain_beyond_256",  # 333s
-    "test_streaming.py::test_stateful_process_tracker",  # 303s
     "test_property_parity.py::test_generated_traces_match_python_oracle",  # 79s
     "test_traversal.py::test_bidirectional_path_reconstruction",  # 79s
     "test_traversal.py::test_backtrace_doubling_equals_step",  # 68s
@@ -168,7 +167,6 @@ _SLOW_TESTS = frozenset((
     "test_streaming.py::test_interval_join_state_metrics",  # 12s
     "test_plan_audit.py::test_lsh_index_probe_prunes_partitions",  # 12s
     "test_oracle_parity.py::test_oracle_parity[g48_corpus_kcore]",  # 11s
-    "test_traversal.py::test_shortest_path",  # 11s
     "test_sketch_quality.py::test_prefix_sum_distributed_hypothesis_matches_window",  # 11s
     "test_traversal.py::test_greedy_coloring_equals_sequential_and_proper",  # 11s
     "test_plan_audit.py::test_graph_rel_filter_prunes_partitions",  # 11s
@@ -178,6 +176,10 @@ _SLOW_TESTS = frozenset((
     "test_oracle_parity.py::test_oracle_parity[q228_streaming_fingerprint_neardup]",  # 10s
     # a 40-hop BFS chain and four Louvain runs (release contract)
     "test_plan_audit.py::test_kernel_rounds_release_their_blocks",
+    # ten kernel calls / two MSF runs and a bidirectional search
+    # (release contract of the kernel families and nested calls)
+    "test_plan_audit.py::test_kernel_families_release_their_blocks",
+    "test_plan_audit.py::test_nested_kernel_calls_release_their_blocks",
 ))
 
 

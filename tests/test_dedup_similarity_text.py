@@ -774,26 +774,6 @@ def test_simhash_arrow_equals_relational(spark):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, r.collect()))
 
 
-def test_minhash_arrow_equals_relational(spark):
-    """Arrow KM-lane kernel ≡ relational explode + K-min aggregate,
-    incl. short-text and NULL-text edge cases."""
-    from graphdb_neo4j_spark.operators.dedup import minhash_signatures
-    from graphdb_neo4j_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    a = minhash_signatures(docs, impl="arrow")
-    r = minhash_signatures(docs, impl="relational")
-    assert a.columns == r.columns
-    assert a.exceptAll(r).isEmpty() and r.exceptAll(a).isEmpty()
-    edge = spark.createDataFrame(
-        [(1, "ABC def GHI"), (2, "ab"), (3, None), (4, "xyz")],
-        "doc_id long, text string",
-    )
-    a = minhash_signatures(edge, impl="arrow").collect()
-    r = minhash_signatures(edge, impl="relational").collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, r))
-
-
 def test_short_text_shingles_and_fingerprint_empty(spark):
     """Texts shorter than n yield NO shingles / NULL fingerprint —
     pins the sequence(1,0)-descends guard in shingles_all and

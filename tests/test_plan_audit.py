@@ -1935,6 +1935,85 @@ def test_kernel_rounds_release_their_blocks(spark):
     assert n_one == n_eight, (n_one, n_eight)
 
 
+def test_kernel_families_release_their_blocks(spark):
+    """Release contract on the power-iteration, walk and relaxation
+    loops: the persisted RDDs one call leaves behind do not grow with
+    its rounds (iterations, walk length, chain depth)."""
+    from graphdb_neo4j_spark.operators.traversal import (
+        pagerank_weighted,
+        personalized_pagerank,
+        random_walks,
+        sssp_weighted,
+        temporal_bfs,
+    )
+
+    g = _two_cliques(spark, chain=6)
+    gw = g.withColumn("w", F.lit(2))
+    seed = spark.createDataFrame([("a1",)], ["key"])
+    runs = {  # name: (run, few rounds, many rounds)
+        "personalized_pagerank": (
+            lambda i: personalized_pagerank(g, seed, iterations=i), 2, 10
+        ),
+        "pagerank_weighted": (
+            lambda i: pagerank_weighted(gw, iterations=i), 2, 10
+        ),
+        "random_walks": (lambda i: random_walks(g, walk_length=i), 2, 8),
+    }
+    for name, (run, lo, hi) in runs.items():
+        few, n_few = _left_behind(spark, lambda: run(lo))
+        many, n_many = _left_behind(spark, lambda: run(hi))
+        assert few and many, name
+        assert n_few == n_many, (name, n_few, n_many)
+
+    def timed_chain(n):
+        return _chain(spark, n).withColumn(
+            "t", F.monotonically_increasing_id()
+        ).withColumn("w", F.lit(1.0))
+
+    root = spark.createDataFrame([("v000",)], ["key"])
+    for name, run in {
+        "sssp_weighted": lambda n: sssp_weighted(timed_chain(n), root),
+        "temporal_bfs": lambda n: temporal_bfs(timed_chain(n), root),
+    }.items():
+        short, n_short = _left_behind(spark, lambda: run(3))
+        deep, n_deep = _left_behind(spark, lambda: run(12))
+        assert (len(short), len(deep)) == (4, 13), name
+        assert n_short == n_deep, (name, n_short, n_deep)
+
+
+def test_nested_kernel_calls_release_their_blocks(spark):
+    """A kernel that calls another kernel releases the frame it
+    consumed: minimum_spanning_forest leaves no block per Borůvka
+    round, and shortest_path_bidirectional — whose answer is a Python
+    list — leaves none at all."""
+    from graphdb_neo4j_spark.operators.traversal import (
+        minimum_spanning_forest,
+        shortest_path_bidirectional,
+    )
+
+    def path_graph(n):
+        # ruler weights 1,3,1,5,1,3,1: Borůvka merges pairs, then
+        # quads, ... — log2(n) rounds on n vertices
+        ruler = [2 * ((i + 1) & -(i + 1)).bit_length() - 1 for i in range(n - 1)]
+        return spark.createDataFrame(
+            [(f"v{i}", f"v{i + 1}", w) for i, w in enumerate(ruler)],
+            "src string, dst string, w int",
+        )
+
+    one, n_one = _left_behind(spark, lambda: minimum_spanning_forest(path_graph(2)))
+    four, n_four = _left_behind(
+        spark, lambda: minimum_spanning_forest(path_graph(16))
+    )
+    assert (len(one), len(four)) == (1, 15)
+    assert n_one == n_four, (n_one, n_four)
+
+    floor = spark.sparkContext.emptyRDD().id()
+    path = shortest_path_bidirectional(_chain(spark, 6), "v000", "v006")
+    assert path == [f"v{i:03d}" for i in range(7)]
+    left = [i for i in _persistent_rdds(spark) if i > floor]
+    assert not left, left
+
+
 def test_reliable_freeze_reaches_kernel_rounds(spark, monkeypatch):
     """Recovery contract on every kernel round: with
     SPARK_GRAFT_RELIABLE_FREEZE=1 the kernels freeze their rounds by

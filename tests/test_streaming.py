@@ -218,7 +218,9 @@ def test_stateful_process_tracker(spark, trace_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    # the event-time timeout lets availableNow finish: one data batch,
+    # then one no-data batch that expires state behind the watermark
+    assert q.awaitTermination(300) is True
     res = spark.read.parquet(out)
     assert res.columns == ["key", "first_seen_us", "last_seen_us", "n_spans"]
     rows = res.collect()
@@ -238,6 +240,20 @@ def test_stateful_process_tracker(spark, trace_dir, tmp_path):
     # update-mode emits one row per key per batch; take the last per key
     latest = {r.key: r.n_spans for r in rows}
     assert latest == batch_counts
+    # state expires: the store keeps exactly the keys whose timeout (last
+    # span + 60 min of event time) the final watermark has not passed
+    from datetime import datetime
+
+    wm = q.lastProgress["eventTime"]["watermark"].replace("Z", "+00:00")
+    wm_ms = int(datetime.fromisoformat(wm).timestamp() * 1000)
+    due = {r.key for r in rows if r.last_seen_us // 1000 + 3_600_000 < wm_ms}
+    kept = {
+        r.key[0]
+        for r in spark.read.format("statestore")
+        .load(str(tmp_path / "state_ckpt"))
+        .collect()
+    }
+    assert kept == set(latest) - due
 
 
 def test_streaming_dedup_spans(spark, trace_dir, tmp_path):

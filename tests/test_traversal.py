@@ -9,7 +9,7 @@ from graphdb_neo4j_spark.operators.traversal import (
     bfs,
     connected_components,
     pagerank,
-    shortest_path_length,
+    shortest_path_bidirectional,
 )
 
 EDGES = [
@@ -61,12 +61,6 @@ def test_bfs_max_hops(spark, edges_df):
     sources = spark.createDataFrame([("a",)], ["key"])
     got = {r.key: r.dist for r in bfs(edges_df, sources, max_hops=1).collect()}
     assert got == {"a": 0, "b": 1, "e": 1}
-
-
-def test_shortest_path(spark, edges_df):
-    assert shortest_path_length(edges_df, "a", "d") == 3
-    assert shortest_path_length(edges_df, "a", "x") is None
-    assert shortest_path_length(edges_df, "d", "b") == 2  # via cycle d->a->b
 
 
 def test_connected_components(spark, edges_df):
@@ -618,19 +612,17 @@ def test_densest_subgraph_empty(spark):
 
 
 # ---------------------------------------------------------------------------
-# path reconstruction: bfs_tree / bfs_paths / shortest_path /
-# sssp_weighted_paths — NetworkX oracles + structural validity
+# path reconstruction: bfs_tree / bfs_paths / shortest_path_bidirectional
+# / sssp_weighted_paths — NetworkX oracles + structural validity
 # ---------------------------------------------------------------------------
 
 
 def test_shortest_path_reconstruction(spark, edges_df):
-    from graphdb_neo4j_spark.operators.traversal import shortest_path
-
     # EDGES: a->b->c->d, a->e, d->a cycle; x->y separate
-    assert shortest_path(edges_df, "a", "d") == ["a", "b", "c", "d"]
-    assert shortest_path(edges_df, "d", "b") == ["d", "a", "b"]
-    assert shortest_path(edges_df, "a", "x") is None
-    assert shortest_path(edges_df, "a", "a") == ["a"]
+    assert shortest_path_bidirectional(edges_df, "a", "d") == ["a", "b", "c", "d"]
+    assert shortest_path_bidirectional(edges_df, "d", "b") == ["d", "a", "b"]
+    assert shortest_path_bidirectional(edges_df, "a", "x") is None
+    assert shortest_path_bidirectional(edges_df, "a", "a") == ["a"]
 
 
 def test_bfs_paths_valid_and_deterministic(spark):
@@ -732,10 +724,13 @@ def test_backtrace_doubling_equals_step(spark):
     edges = spark.createDataFrame(chain + branches, ["src", "dst"])
     sources = spark.createDataFrame([("n0",)], ["key"])
     tree = bfs_tree(edges, sources)
-    step = {r.key: (r.dist, list(r.path)) for r in _backtrace_paths(tree).collect()}
+    step = {
+        r.key: (r.dist, list(r.path))
+        for r in _backtrace_paths(tree)[0].collect()
+    }
     dbl = {
         r.key: (r.dist, list(r.path))
-        for r in _backtrace_paths_doubling(tree).collect()
+        for r in _backtrace_paths_doubling(tree)[0].collect()
     }
     assert dbl == step
     assert dbl["n40"][0] == 40 and len(dbl["n40"][1]) == 41
@@ -869,12 +864,12 @@ def test_backtrace_deep_chain_beyond_256(spark):
         (f"n{i}", i, f"n{i-1}") for i in range(1, n + 1)
     ]
     tree = spark.createDataFrame(rows, "key string, dist int, pred string")
-    got = _backtrace_paths_doubling(tree).filter(F.col("key") == f"n{n}").head()
+    got = _backtrace_paths_doubling(tree)[0].filter(F.col("key") == f"n{n}").head()
     assert got is not None and len(got["path"]) == n + 1
     assert got["path"][0] == "n0" and got["path"][-1] == f"n{n}"
 
     targets = spark.createDataFrame([(f"n{n}",)], ["key"])
-    got2 = _backtrace_paths(tree, targets=targets).head()
+    got2 = _backtrace_paths(tree, targets=targets)[0].head()
     assert got2 is not None and list(got2["path"]) == list(got["path"])
 
 
@@ -890,7 +885,9 @@ def test_backtrace_doubling_cuts_cycles_without_blowup(spark):
         ("x", 5, "z"), ("y", 5, "x"), ("z", 5, "y"),
     ]
     tree = spark.createDataFrame(rows, "key string, dist int, pred string")
-    got = {r.key: list(r.path) for r in _backtrace_paths_doubling(tree).collect()}
+    got = {
+        r.key: list(r.path) for r in _backtrace_paths_doubling(tree)[0].collect()
+    }
     assert got == {"r": ["r"], "a": ["r", "a"], "b": ["r", "a", "b"]}
 
 
@@ -910,12 +907,11 @@ def test_four_clique_count_known_graphs(spark):
 
 
 def test_bidirectional_shortest_path_matches_one_sided(spark):
+    """Bidirectional hop distances equal networkx's one-sided BFS on a
+    random digraph, including an unreachable pair."""
     import random
 
-    from graphdb_neo4j_spark.operators.traversal import (
-        shortest_path_length,
-        shortest_path_length_bidirectional,
-    )
+    networkx = pytest.importorskip("networkx")
 
     rng = random.Random(11)
     n = 40
@@ -925,27 +921,29 @@ def test_bidirectional_shortest_path_matches_one_sided(spark):
         if a != b:
             edges.add((f"n{a}", f"n{b}"))
     df = spark.createDataFrame(sorted(edges), "src string, dst string")
+    g = networkx.DiGraph(sorted(edges))
     for s, d in [("n0", "n1"), ("n5", "n17"), ("n3", "n3"), ("n2", "n39")]:
-        one = shortest_path_length(df, s, d) if s != d else 0
-        bi = shortest_path_length_bidirectional(df, s, d)
+        try:
+            one = networkx.shortest_path_length(g, s, d)
+        except networkx.NetworkXNoPath:
+            one = None
+        path = shortest_path_bidirectional(df, s, d)
+        bi = None if path is None else len(path) - 1
         assert bi == one, (s, d, one, bi)
     # unreachable pair: an isolated node name never used as a dst
     df2 = spark.createDataFrame(
         [("a", "b"), ("b", "c")], "src string, dst string"
     )
-    assert shortest_path_length_bidirectional(df2, "c", "a") is None
-    assert shortest_path_length_bidirectional(df2, "a", "c") == 2
+    assert shortest_path_bidirectional(df2, "c", "a") is None
+    assert len(shortest_path_bidirectional(df2, "a", "c")) - 1 == 2
 
 
 def test_bidirectional_path_reconstruction(spark):
-    """Spliced bidirectional paths: same length as one-sided BFS, every
-    consecutive pair is a real edge, endpoints pin."""
+    """Spliced bidirectional paths: same length as networkx's one-sided
+    BFS, every consecutive pair is a real edge, endpoints pin."""
     import random
 
-    from graphdb_neo4j_spark.operators.traversal import (
-        shortest_path_bidirectional,
-        shortest_path_length,
-    )
+    networkx = pytest.importorskip("networkx")
 
     rng = random.Random(23)
     n = 40
@@ -955,13 +953,14 @@ def test_bidirectional_path_reconstruction(spark):
         if a != b:
             edges.add((f"n{a}", f"n{b}"))
     df = spark.createDataFrame(sorted(edges), "src string, dst string")
+    g = networkx.DiGraph(sorted(edges))
     eset = edges
     for s, d in [("n0", "n1"), ("n5", "n17"), ("n2", "n39"), ("n7", "n7")]:
         path = shortest_path_bidirectional(df, s, d)
-        one = shortest_path_length(df, s, d) if s != d else 0
-        if one is None:
+        if not networkx.has_path(g, s, d):
             assert path is None, (s, d, path)
             continue
+        one = networkx.shortest_path_length(g, s, d)
         assert path is not None and path[0] == s and path[-1] == d, (s, d, path)
         assert len(path) - 1 == one, (s, d, path, one)
         for a, b in zip(path, path[1:]):

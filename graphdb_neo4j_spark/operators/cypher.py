@@ -1,5 +1,5 @@
-"""Cypher front-end — the reference's ACTUAL analyst language, compiled
-to DataFrame plans.
+"""Cypher front-end — the reference's ACTUAL analyst language, lowered
+to one Spark SQL statement per query.
 
 The reference's deliverable is "open Neo4j Browser and run Cypher"
 (/root/reference/main.py:19).  `GraphQuery` re-expresses that surface as
@@ -9,8 +9,8 @@ reference's schema implies:
 
     MATCH (a:Process {image: 'powershell.exe'})-[:SPAWNS*1..3]->(b),
           (b)-[:CONNECTED_TO]->(ip:Ip)
-    OPTIONAL MATCH (b)-[:CREATED_FILE]->(f:File)
     WHERE ip.key STARTS WITH '10.' AND b <> a
+    OPTIONAL MATCH (b)-[:CREATED_FILE]->(f:File)
     RETURN a AS root, b, ip.key AS addr, count(f) AS n_files
     ORDER BY n_files DESC, root LIMIT 10
 
@@ -20,66 +20,88 @@ is interpreted row-by-row):
 * ``MATCH`` with comma-separated patterns; chains
   ``(a)-[:R]->(b)-[:S]->(c)``; reverse arrows ``<-[:R]-``; UNDIRECTED
   relationships ``(a)-[:R]-(b)`` (both traversal directions, one row
-  per binding, self-loops once — lowered as a bidirectional edge frame
-  for that hop, so k undirected hops stay k linear joins); node labels
-  ``(a:Label)``; inline property maps ``{p: lit}``; edge variables
-  ``[e:R]``; bounded variable-length ``[:R*lo..hi]`` (unbounded ``*``
-  is rejected — open-ended reach is `traversal.bfs`, not a join chain);
-  single-node patterns ``MATCH (n:Label)``.
-* any number of ``OPTIONAL MATCH`` groups — each clause is its own
-  left join on shared variables, and inline property maps inside an
-  optional pattern filter the OPTIONAL side before the join (a
-  non-matching optional NULL-extends; it never kills the outer row).
+  per binding, self-loops once); node labels ``(a:Label)``; inline
+  property maps ``{p: lit}``; edge variables ``[e:R]``; bounded
+  variable-length ``[:R*lo..hi]`` (unbounded ``*`` is rejected —
+  open-ended reach is `traversal.bfs`, not a join chain); single-node
+  patterns ``MATCH (n:Label)``.
+* any number of ``OPTIONAL MATCH`` groups, each with its own inline
+  maps and its own ``WHERE``: both restrict the OPTIONAL side only (a
+  non-matching optional row NULL-extends; it never kills the outer
+  row), exactly Cypher's scoping — a ``WHERE`` belongs to the clause
+  it follows.
 * ``WHERE`` — any Spark-SQL-expressible boolean over node variables
   (``a`` = the node key), node properties (``a.prop``, resolved through
   the per-label property tables), and edge-variable fields
   (``e.event_id``); Cypher spellings ``STARTS WITH`` / ``ENDS WITH`` /
   ``CONTAINS`` / ``<>`` / ``IN [..]`` are rewritten to their SQL
-  equivalents; ``EXISTS {(a)-[:R]->(b)}`` / ``NOT EXISTS (…)`` at
-  top-level AND conjuncts compile to semi/anti joins — including the
-  correlated property-filtered forms ``EXISTS { (a)-[:R]->(x:L
-  {prop: v}) }`` and ``EXISTS { (a)-[:R]->(x:L) WHERE x.prop > v }``
-  (the property join lands on the EXISTS side only, before the
-  semi/anti join).
+  equivalents; ``EXISTS {(a)-[:R]->(b)}`` / ``NOT EXISTS (…)`` and bare
+  pattern predicates ``[NOT] (p)-[:R]->(x)`` at top-level AND conjuncts
+  lower to semi/anti joins — including the correlated property-filtered
+  forms ``EXISTS { (a)-[:R]->(x:L {prop: v}) }`` and ``EXISTS {
+  (a)-[:R]->(x:L) WHERE x.prop > v }``.
 * ``RETURN [DISTINCT]`` items with ``AS`` aliases; aggregates
   count/sum/min/max/avg/collect with Cypher's implicit grouping (all
   non-aggregate items become the GROUP BY key).
-* ``ORDER BY`` on returned columns, ``LIMIT`` (a totally-ordered limit
-  plans as TakeOrderedAndProject — no global sort).
+* ``ORDER BY`` on returned columns, ``SKIP``, ``LIMIT`` (a
+  totally-ordered limit plans as TakeOrderedAndProject — no global
+  sort).
 * ``WITH`` pipelines: project/aggregate mid-query, ``WITH ... WHERE``
   (Cypher's HAVING), ``ORDER BY``/``LIMIT`` midstream, then MATCH again
-  from the carried variables — all folded into ONE Catalyst plan.
+  from the carried variables.
 * ``shortestPath((a {key:'x'})-[:REL*]->(b))`` — pinned source, pinned
-  or free destination; compiles to the iterative BFS + deterministic
-  backtrace in operators/traversal.py (the one construct that is not a
+  or free destination; runs the iterative BFS + deterministic
+  backtrace of operators/traversal.py (the one construct that is not a
   join chain), and ``length(p)`` works on the bound path.
-* ``UNWIND list AS var`` (map-side explode; ``nodes(p)`` unwraps a
-  bound path's key array) and ``SKIP n`` after ORDER BY.
-* pattern-count expressions ``size((n)-[:R]->())`` (classic degree
-  idiom) and ``COUNT { (n)-[:R]->() }`` (Neo4j 5 spelling) anywhere in
-  WHERE / RETURN — each lowers to ONE grouped count left-joined onto
-  the match, composable with arithmetic and aggregates; bare pattern
-  predicates ``WHERE [NOT] (p)-[:R]->(x)`` lower to semi/anti joins.
+* ``UNWIND list AS var`` (``nodes(p)`` unwraps a bound path's key
+  array).
+* pattern counts ``size((n)-[:R]->())`` and ``COUNT { (n)-[:R]->() }``
+  anywhere in WHERE / RETURN, composable with arithmetic and
+  aggregates.
+* top-level ``UNION`` / ``UNION ALL`` and ``CALL { subquery }``
+  post-union pipelines.
 * backtick escapes throughout: property names (``p.`sigma.alert```,
   exact column name, dots literal) and labels / relationship types
-  (``(a:`My Label`)-[:`HAS PART`]->(b)`` — data values once
-  unquoted).
+  (``(a:`My Label`)-[:`HAS PART`]->(b)`` — data values once unquoted).
 
-Execution inherits everything GraphQuery already guarantees: each hop
-is a key equi-join Catalyst/AQE may broadcast or bucket, labels are
-semi-joins against the pruned node table, and property access joins the
-label's property table only for properties the query actually touches.
+Lowering: :func:`cypher` turns the parsed query into ONE SQL text and
+runs it with a single ``spark.sql(text, args=…, **frames)``.  Hops,
+labels and variable-length unions come from the motif lowering of
+operators/graph.py (:func:`_pattern`), so each hop is a key equi-join
+Catalyst/AQE may broadcast or bucket and each label a semi-join against
+the pruned node table; ``a.prop`` is one join per variable against its
+label's property table, for the properties the query touches, as the
+column `` `a.prop` ``; each OPTIONAL MATCH is a ``LEFT JOIN (…) ON`` its
+shared variables; EXISTS and pattern predicates are ``LEFT SEMI`` /
+``LEFT ANTI`` joins; a pattern count is a grouped ``LEFT JOIN`` wrapped
+in ``coalesce(…, 0)``; each ``WITH`` / ``CALL {}`` stage is a CTE;
+``UNWIND`` is ``LATERAL VIEW explode``.  String literals, labels and
+relationship types go in as named parameters, never into the text; the
+graph tables (and a ``shortestPath``'s rows) go in as frame arguments.
 """
 
 from __future__ import annotations
 
+import itertools
 import re
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from graphdb_neo4j_spark.operators.graph import GraphQuery
+from graphdb_neo4j_spark.operators.graph import (
+    GraphQuery,
+    _Hop,
+    _join,
+    _labeled,
+    _parse_varlen,
+    _pattern,
+    _q,
+    _Rel,
+    _Sql,
+    _unq,
+)
+
 
 # -- clause-level splitting (quote-aware) -----------------------------------
 
@@ -168,7 +190,6 @@ def _split_top_commas(s: str) -> list[str]:
         parts.append("".join(cur).strip())
     return parts
 
-
 # -- pattern parsing ---------------------------------------------------------
 
 # an inline property map; quoted values may hold braces (Sysmon GUIDs
@@ -182,30 +203,6 @@ _EDGE_RE = re.compile(
     r"(?P<back><)?-\s*\[\s*(?:(?P<ev>\w+))?\s*:\s*(?P<rel>\w+|`[^`]+`)\s*"
     rf"(?P<vspec>\*[\d.\s]*)?\s*(?P<eprops>{_MAP})?\s*\]\s*-(?P<fwd>>)?"
 )
-
-
-def _unq_name(name: str | None) -> str | None:
-    """Strip backtick escapes from a label / rel-type token (they are
-    data values in the graph tables once unquoted)."""
-    if name and name.startswith("`") and name.endswith("`"):
-        return name[1:-1]
-    return name
-
-
-def _bt(name: str) -> str:
-    """Re-quote a label / rel type for the GraphQuery.find motif text
-    when it contains non-word characters."""
-    return f"`{name}`" if re.search(r"\W", name) else name
-
-
-@dataclass
-class _Hop:
-    src: str
-    rel: str
-    dst: str
-    ev: str | None
-    vspec: str | None  # raw "*lo..hi" text (validated by GraphQuery)
-    undirected: bool = False  # (a)-[R]-(b): match both directions
 
 
 @dataclass
@@ -222,13 +219,13 @@ class _ShortestPath:
 
 @dataclass
 class _OptGroup:
-    """One OPTIONAL MATCH clause — its own left-join group with its own
-    inline predicates (which must filter the optional side BEFORE the
-    left join, or NULL-extended rows would be wrongly dropped)."""
+    """One OPTIONAL MATCH clause: its hops, labels, inline-map predicates
+    and its own WHERE — all of which restrict the optional side only."""
 
     hops: list[_Hop] = field(default_factory=list)
     labels: dict[str, str] = field(default_factory=dict)
     preds: list[str] = field(default_factory=list)
+    where: str | None = None
 
 
 @dataclass
@@ -236,25 +233,27 @@ class _Parsed:
     hops: list[_Hop] = field(default_factory=list)
     single_nodes: list[str] = field(default_factory=list)  # vars with no hop
     labels: dict[str, str] = field(default_factory=dict)
-    inline_preds: list[str] = field(default_factory=list)  # SQL predicates
+    inline_preds: list[str] = field(default_factory=list)  # Cypher predicates
     optionals: list[_OptGroup] = field(default_factory=list)
     paths: list[_ShortestPath] = field(default_factory=list)
 
 
-def _parse_patterns(body: str, parsed: _Parsed, into_optional: bool) -> None:
+def _parse_patterns(
+    body: str, parsed: _Parsed, into_optional: bool, anon: Iterator[int]
+) -> None:
+    """Parse comma-separated patterns into ``parsed`` (or a new OPTIONAL
+    group).  ``anon`` numbers anonymous variables across the whole
+    query, so two patterns (a MATCH and an EXISTS, or two MATCH
+    clauses) never share one by accident."""
     group = _OptGroup() if into_optional else None
     hops = group.hops if group is not None else parsed.hops
     labels = group.labels if group is not None else parsed.labels
     preds = group.preds if group is not None else parsed.inline_preds
-    anon = [0]
 
     def node(m: re.Match) -> str:
-        var = m["var"]
-        if var is None:
-            anon[0] += 1
-            var = f"__anon{anon[0]}"
+        var = m["var"] or f"__anon{next(anon)}"
         if m["label"]:
-            lab = _unq_name(m["label"])
+            lab = _unq(m["label"])
             if labels.get(var, lab) != lab:
                 raise ValueError(f"conflicting labels for {var!r}")
             labels[var] = lab
@@ -307,21 +306,17 @@ def _parse_patterns(body: str, parsed: _Parsed, into_optional: bool) -> None:
                         "are not supported"
                     )
                 if einner:
-                    if ev is None:
-                        anon[0] += 1
-                        ev = f"__eanon{anon[0]}"
+                    ev = ev or f"__eanon{next(anon)}"
                     for kv in _split_top_commas(einner):
                         k, sep, v = kv.partition(":")
                         if not sep:
                             raise ValueError(f"bad property map entry {kv!r}")
                         preds.append(f"{ev}.{k.strip()} = {v.strip()}")
+            rel, span = _unq(em["rel"]), _parse_varlen(vspec, pat)
             if em["back"]:
-                hops.append(_Hop(nxt, _unq_name(em["rel"]), prev, ev, vspec))
+                hops.append(_Hop(nxt, rel, prev, ev, span))
             else:
-                hops.append(
-                    _Hop(prev, _unq_name(em["rel"]), nxt, ev, vspec,
-                         undirected)
-                )
+                hops.append(_Hop(prev, rel, nxt, ev, span, undirected))
             prev = nxt
             pos = nm.end()
             had_hop = True
@@ -361,7 +356,7 @@ def _parse_shortest_path(
 ) -> _ShortestPath:
     """``p = shortestPath((a {key:'X'})-[:REL*]->(b))`` — source pinned,
     destination pinned or free; ``*`` / ``*..k`` / ``*lo..hi`` bounds.
-    Unbounded reach is legal HERE (it compiles to the iterative BFS in
+    Unbounded reach is legal HERE (it runs the iterative BFS in
     operators/traversal.py, not a join chain)."""
     inner = sp["inner"].strip()
     m1 = _NODE_RE.match(inner)
@@ -392,7 +387,7 @@ def _parse_shortest_path(
     for m in (m1, m2):
         var = m["var"] or (src if m is m1 else dst)
         if m["label"]:
-            lab = _unq_name(m["label"])
+            lab = _unq(m["label"])
             if labels.get(var, lab) != lab:
                 raise ValueError(f"conflicting labels for {var!r}")
             labels[var] = lab
@@ -402,7 +397,7 @@ def _parse_shortest_path(
             "shortestPath source must be pinned: ({var} {key: 'literal'})"
         )
     return _ShortestPath(
-        path_var=sp["pv"], src=src, src_key=src_key, rel=_unq_name(em["rel"]),
+        path_var=sp["pv"], src=src, src_key=src_key, rel=_unq(em["rel"]),
         dst=dst, dst_key=_key_pin(m2["props"]), lo=lo, hi=hi,
     )
 
@@ -481,9 +476,10 @@ def _extract_pattern_counts(
     text: str | None, specs: list[tuple[str, str]]
 ) -> str | None:
     """Replace ``size((n)-[:R]->())`` and ``COUNT { (n)-[:R]->() }``
-    pattern-count expressions with placeholder columns, recording
-    (placeholder, pattern) — each becomes ONE grouped count joined onto
-    the match (Neo4j's degree idiom, old and new spelling)."""
+    pattern-count expressions with ``coalesce(col, 0)`` of a placeholder
+    column, recording (column, pattern) — each becomes ONE grouped count
+    left-joined onto the match (Neo4j's degree idiom, old and new
+    spelling)."""
     if not text:
         return text
     out = text
@@ -509,66 +505,60 @@ def _extract_pattern_counts(
             if m is not None:
                 col = f"__pcnt{len(specs)}"
                 specs.append((col, m[2]))
-                out = out[: m[0]] + col + out[m[1]:]
+                out = out[: m[0]] + f"coalesce({col}, 0)" + out[m[1]:]
                 changed = True
                 break
     return out
 
 
+
 # -- expression rewriting ----------------------------------------------------
 
 _PROP_REF = re.compile(r"\b(\w+)\s*\.\s*(\w+\b|`[^`]+`)")
-
-
-def _qcol(name: str):
-    """Exact-name column reference: dots and other specials in a
-    property name stay literal (``sigma.alert``), never struct access."""
-    return F.col(f"`{name}`") if re.search(r"\W", name) else F.col(name)
+_STRING = re.compile(r"'[^']*'|\"[^\"]*\"")
+_ESCAPES = {"n": "\n", "t": "\t", "r": "\r", "b": "\b", "0": "\0"}
 
 
 def _rewrite_expr(
-    expr: str, node_vars: set[str], edge_vars: set[str]
+    expr: str, node_vars: set[str], edge_vars: set[str], path_vars: set[str],
+    param,
 ) -> tuple[str, set[tuple[str, str]]]:
-    """Cypher expression → Spark SQL expression.  Returns the rewritten
-    text and the set of (node_var, prop) references that need property
-    joins.  Edge-variable fields stay dotted (struct access)."""
+    """Cypher expression → Spark SQL expression text (braces doubled for
+    the frame formatter).  String literals become named parameters
+    (``param(value)`` → ``:pN``); ``v.prop`` on a node variable becomes
+    the column `` `v.prop` `` and is returned among the (var, prop) refs
+    that need property joins (``v.key`` is ``v`` itself); edge-variable
+    fields stay struct access; ``length(p)`` of a path is its node
+    count − 1."""
     refs: set[tuple[str, str]] = set()
+
+    def lit(m: re.Match) -> str:
+        return param(re.sub(r"\\(.)", lambda e: _ESCAPES.get(e[1], e[1]), m[0][1:-1]))
 
     def prop(m: re.Match) -> str:
         var, p = m.group(1), m.group(2)
-        # `quoted` property names (Neo4j backtick escapes, e.g.
-        # p.`sigma.alert`) reference the exact column name
-        quoted = p.startswith("`")
-        pn = p[1:-1] if quoted else p
+        pn = p[1:-1] if p.startswith("`") else p
         if var in edge_vars:
             return f"{var}.{p}"  # struct field — Spark SQL native
         if var in node_vars:
             if pn == "key":
                 return var
             refs.add((var, pn))
-            helper = f"__{var}__{pn}"
-            return f"`{helper}`" if re.search(r"\W", helper) else helper
+            return f"`{var}.{pn}`"
         return m.group(0)  # function call like round(x, 2) — leave alone
 
-    # protect string literals from rewriting
-    chunks = re.split(r"('[^']*')", expr)
-    for i in range(0, len(chunks), 2):
-        c = _PROP_REF.sub(prop, chunks[i])
-        c = re.sub(r"\bSTARTS\s+WITH\b", "STARTSWITH_OP", c, flags=re.I)
-        c = re.sub(r"\bENDS\s+WITH\b", "ENDSWITH_OP", c, flags=re.I)
-        c = re.sub(r"\bCONTAINS\b", "CONTAINS_OP", c, flags=re.I)
-        chunks[i] = c
-    out = "".join(chunks)
-    # infix pseudo-ops → function calls: "x OP 'lit'" (rhs = literal or column)
+    out = _PROP_REF.sub(prop, _STRING.sub(lit, expr))
+    out = re.sub(r"\bSTARTS\s+WITH\b", "STARTSWITH_OP", out, flags=re.I)
+    out = re.sub(r"\bENDS\s+WITH\b", "ENDSWITH_OP", out, flags=re.I)
+    out = re.sub(r"\bCONTAINS\b", "CONTAINS_OP", out, flags=re.I)
+    # infix pseudo-ops → function calls: "x OP rhs"
     for op, fn in (
         ("STARTSWITH_OP", "startswith"),
         ("ENDSWITH_OP", "endswith"),
         ("CONTAINS_OP", "contains"),
     ):
         out = re.sub(
-            rf"((?:\w+\([^()]*\))|[^\s()]+)\s+{op}\s+('[^']*'|\S+)",
-            rf"{fn}(\1, \2)",
-            out,
+            rf"((?:\w+\([^()]*\))|[^\s()]+)\s+{op}\s+(\S+)", rf"{fn}(\1, \2)", out
         )
     # Cypher list literal in IN: [1, 2] → (1, 2)
     out = re.sub(
@@ -593,7 +583,18 @@ def _rewrite_expr(
         ("toUpper", "upper"),
     ):
         out = re.sub(rf"\b{cy}\s*\(", f"{sp}(", out, flags=re.I)
-    return out, refs
+    # Cypher length(path) = relationship count = node count - 1
+    for pv in path_vars:
+        out = re.sub(rf"\blength\s*\(\s*{pv}\s*\)", f"(size({pv}) - 1)", out, flags=re.I)
+    return out.replace("{", "{{").replace("}", "}}"), refs
+
+
+def _names(sql: str) -> set[str]:
+    """The bare identifiers a SQL expression names — not function calls,
+    struct fields, parameters or backticked columns."""
+    return set(re.findall(
+        r"(?<![\w.:`])([A-Za-z_]\w*)\b(?!\s*\()", re.sub(r"`[^`]*`", "``", sql)
+    ))
 
 
 _AGG_RE = re.compile(r"\b(count|sum|min|max|avg|collect)\s*\(", re.I)
@@ -612,7 +613,7 @@ def _default_alias(expr: str) -> str:
     return re.sub(r"\W+", "_", expr.strip()).strip("_")
 
 
-# -- the compiler ------------------------------------------------------------
+# -- the lowering --------------------------------------------------------------
 
 @dataclass
 class _Segment:
@@ -620,7 +621,7 @@ class _Segment:
     final RETURN) with its post-projection WHERE / ORDER BY / LIMIT."""
 
     parsed: _Parsed = field(default_factory=_Parsed)
-    where: str | None = None
+    where: list[str] = field(default_factory=list)  # one per MATCH clause
     proj: str | None = None
     is_return: bool = False
     post_where: str | None = None
@@ -630,22 +631,29 @@ class _Segment:
     unwinds: list[tuple[str, str]] = field(default_factory=list)  # (expr, var)
 
 
-def _segment_clauses(clauses: list[tuple[str, str]]) -> list[_Segment]:
+def _segment_clauses(
+    clauses: list[tuple[str, str]], anon: Iterator[int]
+) -> list[_Segment]:
     segs: list[_Segment] = []
     cur = _Segment()
+    last = None  # the pattern clause a following WHERE belongs to
     for kw, body in clauses:
         if kw in ("MATCH", "OPTIONAL MATCH"):
             if cur.proj is not None:
                 segs.append(cur)
                 cur = _Segment()
-            _parse_patterns(body, cur.parsed, kw == "OPTIONAL MATCH")
+            _parse_patterns(body, cur.parsed, kw == "OPTIONAL MATCH", anon)
+            last = kw
         elif kw == "WHERE":
-            if cur.proj is None:
-                if cur.where is not None:
-                    raise ValueError("two WHERE clauses in one MATCH block")
-                cur.where = body
-            else:
+            if cur.proj is not None:
                 cur.post_where = body
+            elif last == "OPTIONAL MATCH":
+                og = cur.parsed.optionals[-1]
+                if og.where is not None:
+                    raise ValueError("two WHERE clauses after one OPTIONAL MATCH")
+                og.where = body
+            else:
+                cur.where.append(body)
         elif kw in ("WITH", "RETURN"):
             if cur.proj is not None:
                 segs.append(cur)
@@ -685,496 +693,444 @@ def _segment_clauses(clauses: list[tuple[str, str]]) -> list[_Segment]:
 
 @dataclass
 class _Scope:
-    """What a WITH projection carries into the next segment."""
+    """What a WITH projection carries into the next segment: its rows
+    and the kinds of its bare-variable columns."""
 
-    df: DataFrame
+    rel: _Rel
     node_labels: dict[str, str | None] = field(default_factory=dict)
     edge_vars: set[str] = field(default_factory=set)
     path_vars: set[str] = field(default_factory=set)
 
 
-def _run_segment(
-    gq: GraphQuery,
-    props: dict[str, DataFrame],
-    seg: _Segment,
-    carried: _Scope | None,
-) -> _Scope:
-    parsed = seg.parsed
-    node_vars = {h.src for h in parsed.hops} | {h.dst for h in parsed.hops}
-    node_vars |= set(parsed.single_nodes)
-    for og in parsed.optionals:
-        node_vars |= {h.src for h in og.hops} | {h.dst for h in og.hops}
-    node_vars |= {p.src for p in parsed.paths} | {p.dst for p in parsed.paths}
-    path_vars = {p.path_var for p in parsed.paths}
-    edge_vars = {h.ev for h in parsed.hops if h.ev}
-    for og in parsed.optionals:
-        edge_vars |= {h.ev for h in og.hops if h.ev}
-    carried_labels: dict[str, str | None] = {}
-    if carried is not None:
-        carried_labels = carried.node_labels
-        node_vars |= set(carried.node_labels)
-        edge_vars |= carried.edge_vars
-        path_vars |= carried.path_vars
+@dataclass
+class _Sub:
+    """A subpattern joined onto a segment's rows — an OPTIONAL MATCH
+    group, an EXISTS / pattern predicate or a pattern count.  Its
+    predicates are SQL text: ``inner`` ones name only the subpattern's
+    own variables and filter it before the join (with the property
+    joins ``inner_refs`` inside it); ``on`` ones name outer variables
+    too and join the ON clause."""
 
-    # pattern-count expressions (size((n)-[:R]->()) / COUNT { ... })
-    # become placeholder columns computed as grouped counts below
-    pattern_counts: list[tuple[str, str]] = []
-    seg_where = _extract_pattern_counts(seg.where, pattern_counts)
-    seg_proj = _extract_pattern_counts(seg.proj, pattern_counts)
+    hops: list[_Hop]
+    labels: dict[str, str]
+    inner: list[str] = field(default_factory=list)
+    inner_refs: dict[str, set[str]] = field(default_factory=dict)
+    on: list[str] = field(default_factory=list)
 
-    def motif(hops: list[_Hop], labels: dict[str, str]) -> str:
-        pats = []
-        for h in hops:
-            s_lab = f":{_bt(labels[h.src])}" if h.src in labels else ""
-            d_lab = f":{_bt(labels[h.dst])}" if h.dst in labels else ""
-            ev = f"{h.ev}:" if h.ev else ""
-            star = f"*{h.vspec}" if h.vspec is not None else ""
-            head = "" if h.undirected else ">"
-            pats.append(
-                f"({h.src}{s_lab})-[{ev}{_bt(h.rel)}{star}]-{head}({h.dst}{d_lab})"
-            )
-        return "; ".join(pats)
 
-    df = gq.find(motif(parsed.hops, parsed.labels)) if parsed.hops else None
-    for var in parsed.single_nodes:
-        lab = parsed.labels.get(var)
-        if lab is None:
-            nd = gq.nodes.select(F.col("key").alias(var))
-        else:
-            nd = gq.match(lab).select(F.col("key").alias(var))
-        if df is None:
-            df = nd
-        elif var in df.columns:
-            df = df.join(nd, var, "left_semi")
-        else:
-            raise ValueError(
-                f"single-node pattern ({var}) shares no variable with the "
-                "rest of the MATCH — a cartesian product is never implicit"
-            )
-    for ps in parsed.paths:
-        # shortestPath compiles to the ITERATIVE BFS + backtrace
-        # (traversal.bfs_paths) — the documented home of unbounded
-        # reach; the result rejoins the relational plan as a
-        # (src, dst, path) table keyed on its endpoint variables
-        from graphdb_neo4j_spark.operators.traversal import (
-            bfs_paths,
-            shortest_path_bidirectional,
-        )
+def _add_refs(into: dict[str, set[str]], refs) -> None:
+    for var, p in refs:
+        into.setdefault(var, set()).add(p)
 
-        spark = gq.edges.sparkSession
-        e = gq.rel(ps.rel).select("src", "dst")
-        if ps.dst_key is not None:
-            # both endpoints pinned → MEET-IN-THE-MIDDLE BFS with pred
-            # trees spliced at the meet frontier (~√ the one-sided
-            # frontier/shuffle cost); result is a single-row table
-            from pyspark.sql.types import ArrayType, StructField, StructType
 
-            path = shortest_path_bidirectional(
-                e, ps.src_key, ps.dst_key,
-                max_hops=ps.hi if ps.hi is not None else 1 << 20,
-            )
-            key_t = e.schema["src"].dataType
-            schema = StructType([
-                StructField(ps.src, key_t),
-                StructField(ps.dst, key_t),
-                StructField(ps.path_var, ArrayType(key_t)),
-            ])
-            rows = (
-                [(ps.src_key, ps.dst_key, path)]
-                if path is not None and len(path) - 1 >= ps.lo
-                else []
-            )
-            pdf = spark.createDataFrame(rows, schema)
-        else:
-            srcs = spark.createDataFrame([(ps.src_key,)], ["key"])
-            pb = bfs_paths(e, srcs, targets=None, max_hops=ps.hi)
-            pb = pb.filter(F.col("dist") >= ps.lo)
-            pdf = pb.select(
-                F.lit(ps.src_key).alias(ps.src),
-                F.col("key").alias(ps.dst),
-                F.col("path").alias(ps.path_var),
-            )
-        for var in (ps.src, ps.dst):
-            lab = parsed.labels.get(var)
-            if lab is not None:
-                keys = gq.nodes.filter(F.col("label") == lab).select(
-                    F.col("key").alias(var)
-                )
-                pdf = pdf.join(keys, var, "left_semi")
-        if df is None:
-            df = pdf
-        else:
-            shared = [c for c in df.columns if c in pdf.columns]
-            if not shared:
-                raise ValueError(
-                    "shortestPath shares no variable with the rest of the "
-                    "MATCH — a cartesian product is never implicit"
-                )
-            df = df.join(pdf, on=shared, how="inner")
+def _conjuncts(where: str) -> list[str]:
+    """Top-level AND conjuncts; the whole expression when a top-level OR
+    would make the split change its meaning."""
+    return [where] if _has_top_level_or(where) else _split_top_and(where)
 
-    # splice the carried WITH scope in: inner join on shared variables
-    if carried is not None:
-        if df is None:
-            df = carried.df
-        else:
-            shared = [c for c in df.columns if c in carried.df.columns]
-            if not shared:
-                raise ValueError(
-                    "MATCH after WITH shares no variable with the carried "
-                    "scope — a cartesian product is never implicit"
-                )
-            df = carried.df.join(df, on=shared, how="inner")
 
-    for og in parsed.optionals:
-        opt = gq.find(motif(og.hops, og.labels))
-        # group-local inline predicates filter the OPTIONAL side BEFORE
-        # the left join (Cypher semantics: a non-matching optional row
-        # NULL-extends, it does not kill the outer row).  Property refs
-        # join the label's table onto the optional side only.
-        og_refs: set[tuple[str, str]] = set()
-        og_sql = []
-        for pred in og.preds:
-            out, refs = _rewrite_expr(pred, node_vars, edge_vars)
-            og_refs.update(refs)
-            og_sql.append(out)
-        helper_cols = []
-        og_by_var: dict[str, set[str]] = {}
-        for var, p in og_refs:
-            og_by_var.setdefault(var, set()).add(p)
-        for var, wanted in og_by_var.items():
-            lab = og.labels.get(var) or parsed.labels.get(var)
-            if lab is None:
-                raise ValueError(
-                    f"{var}: label the variable to use its properties "
-                    "in an OPTIONAL MATCH property map"
-                )
-            if lab not in props:
-                raise ValueError(
-                    f"no property table for label {lab!r} — pass "
-                    f"props={{{lab!r}: df}}"
-                )
-            sel = props[lab].select(
-                F.col("key").alias(var),
-                *[_qcol(p).alias(f"__{var}__{p}") for p in sorted(wanted)],
-            )
-            helper_cols.extend(f"__{var}__{p}" for p in sorted(wanted))
-            opt = opt.join(sel, var, "inner")
-        for s in og_sql:
-            opt = opt.filter(F.expr(s))
-        if helper_cols:
-            opt = opt.drop(*helper_cols)
-        shared = [c for c in df.columns if c in opt.columns]
-        if not shared:
-            raise ValueError(
-                "OPTIONAL MATCH shares no variable with the MATCH"
-            )
-        df = df.join(opt, on=shared, how="left")
+_PATTERN_PRED = re.compile(r"\bEXISTS\b|\)\s*(?:<-|-)\s*\[", re.I)
 
-    for idx, (cname, pat) in enumerate(pattern_counts):
-        sub = _Parsed()
-        _parse_patterns(pat, sub, into_optional=False)
-        if sub.paths or sub.single_nodes or not sub.hops:
-            raise ValueError(
-                "pattern counts support relationship patterns only"
-            )
-        # keep the count pattern's anonymous vars from colliding with
-        # the outer MATCH's (both parsers number them __anon1, ...)
-        ren = {}
-        for h in sub.hops:
-            for v in (h.src, h.dst):
-                if v.startswith("__anon"):
-                    ren[v] = f"__pc{idx}{v}"
-        sub.hops = [
-            _Hop(ren.get(h.src, h.src), h.rel, ren.get(h.dst, h.dst),
-                 h.ev, h.vspec, h.undirected)
-            for h in sub.hops
-        ]
-        sub.labels = {ren.get(v, v): l for v, l in sub.labels.items()}
-        sdf = gq.find(motif(sub.hops, sub.labels))
-        shared = [c for c in df.columns if c in sdf.columns]
-        if not shared:
-            raise ValueError(
-                "pattern count shares no variable with the MATCH"
-            )
-        cdf = sdf.groupBy(*shared).agg(F.count("*").alias(cname))
-        df = df.join(cdf, on=shared, how="left").withColumn(
-            cname, F.coalesce(F.col(cname), F.lit(0)).cast("bigint")
-        )
 
-    # gather every expression we must compile, collecting property refs
-    all_refs: set[tuple[str, str]] = set()
+class _Lowering:
+    """Lowers one Cypher read (its segments, OPTIONAL groups, shortest
+    paths, UNION arms and CALL subqueries) to one SQL statement: each
+    WITH / CALL stage becomes a CTE and the last stage the body."""
 
-    def compile_expr(e: str) -> str:
-        out, refs = _rewrite_expr(e, node_vars, edge_vars)
-        # Cypher length(path) = relationship count = node count - 1
-        for pv in path_vars:
-            out = re.sub(
-                rf"\blength\s*\(\s*{pv}\s*\)", f"(size({pv}) - 1)", out,
-                flags=re.I,
-            )
-        all_refs.update(refs)
-        return out
+    def __init__(self, gq: GraphQuery, props: dict[str, DataFrame]):
+        self.gq, self.props = gq, props
+        self.sql = _Sql(gq.edges.sparkSession)
+        self.ctes: list[str] = []
+        self.anon = itertools.count(1)
 
-    inline_sql = [compile_expr(p) for p in parsed.inline_preds]
-    # WHERE: lift EXISTS / NOT EXISTS subpatterns AND bare pattern
-    # predicates (Neo4j's classic ``WHERE NOT (p)-[:R]->()`` idiom,
-    # the pre-EXISTS spelling) out of the top-level AND conjuncts —
-    # each becomes a semi/anti join; the rest stays a boolean filter
-    where_plain: list[str] = []
-    exists_joins: list[tuple[_Parsed, bool]] = []
-    has_pattern_pred = bool(
-        seg_where
-        and (
-            re.search(r"\bEXISTS\b", seg_where, flags=re.I)
-            or re.search(r"\)\s*(?:<-|-)\s*\[", seg_where)
-        )
-    )
-    if seg_where and not has_pattern_pred:
-        where_plain.append(seg_where)  # untouched — no re-parenthesizing
-    elif seg_where:
-        if _has_top_level_or(seg_where):
-            raise ValueError(
-                "EXISTS must be a top-level AND conjunct "
-                "(OR over EXISTS is not supported)"
-            )
-        for conj in _split_top_and(seg_where):
-            m = _EXISTS_RE.match(conj.strip())
-            bp = None if m else _BARE_PAT_RE.match(conj.strip())
-            if bp:
-                sub = _Parsed()
-                _parse_patterns(bp["pat"].strip(), sub, into_optional=False)
-                if sub.paths or sub.single_nodes:
+    def statement(self, query: str) -> str:
+        body = self.query(query).rel.text
+        return (f"WITH {', '.join(self.ctes)} " if self.ctes else "") + body
+
+    def query(self, q: str) -> _Scope:
+        q = q.strip().rstrip(";")
+        m = re.match(r"^CALL\s*\{", q, flags=re.I)
+        if m:
+            # CALL { subquery } <pipeline>: the subquery (which may itself
+            # be a UNION) feeds its rows into the remaining clauses as the
+            # carried scope — Neo4j's post-UNION-processing idiom.  Carried
+            # columns flow as unlabeled variables; re-label (re-MATCH)
+            # before dereferencing properties on them.
+            depth, in_str, close = 0, False, None
+            for i in range(m.end() - 1, len(q)):
+                ch = q[i]
+                if ch == "'":
+                    in_str = not in_str
+                elif not in_str and ch == "{":
+                    depth += 1
+                elif not in_str and ch == "}":
+                    depth -= 1
+                    if depth == 0:
+                        close = i
+                        break
+            if close is None:
+                raise ValueError("CALL { … }: unbalanced braces")
+            rest = q[close + 1:].strip()
+            if not rest:
+                raise ValueError("CALL { … } must be followed by a pipeline "
+                                 "ending in RETURN")
+            inner = self.query(q[m.end(): close]).rel
+            scope = _Scope(inner, {c: None for c in inner.cols})
+            segments = _segment_clauses(_split_clauses(rest), self.anon)
+            return self.pipeline(segments, scope)
+        arms, is_all = _split_union(q)
+        if len(arms) > 1:
+            # arms aligned by column name: each is re-projected in the
+            # first arm's column order
+            rels = [self.query(arm).rel for arm in arms]
+            cols = rels[0].cols
+            for r in rels[1:]:
+                if set(r.cols) != set(cols):
                     raise ValueError(
-                        "pattern predicates support relationship "
-                        "patterns only"
+                        "UNION arms must return the same column names: "
+                        f"{sorted(cols)} vs {sorted(r.cols)}"
                     )
-                exists_joins.append((sub, bool(bp["neg"])))
+            sel = ", ".join(map(_q, cols))
+            text = (" UNION ALL " if is_all else " UNION ").join(
+                f"SELECT {sel} FROM ({r.text}) {self.sql.alias()}" for r in rels
+            )
+            return _Scope(_Rel(text, cols))
+        segments = _segment_clauses(_split_clauses(q), self.anon)
+        first = segments[0].parsed
+        if not first.hops and not first.single_nodes and not first.paths:
+            raise ValueError("query needs at least one MATCH pattern")
+        return self.pipeline(segments, None)
+
+    def pipeline(self, segments: list[_Segment], scope: _Scope | None) -> _Scope:
+        for seg in segments:
+            if scope is not None:  # the carried stage becomes a CTE
+                name = f"__s{len(self.ctes)}"
+                self.ctes.append(f"{name} AS ({scope.rel.text})")
+                scope.rel = _Rel(f"SELECT * FROM {name}", scope.rel.cols)
+            scope = self.segment(seg, scope)
+        return scope
+
+    # -- one segment ---------------------------------------------------------
+
+    def segment(self, seg: _Segment, carried: _Scope | None) -> _Scope:
+        p = seg.parsed
+        carried = carried or _Scope(_Rel("", []))
+        labels: dict[str, str | None] = dict(carried.node_labels)
+        labels.update(p.labels)
+        for og in p.optionals:
+            labels.update({v: l for v, l in og.labels.items() if v not in labels})
+        node_vars = set(carried.node_labels) | set(p.single_nodes)
+        for hops in [p.hops] + [og.hops for og in p.optionals]:
+            node_vars |= {v for h in hops for v in (h.src, h.dst)}
+        node_vars |= {v for ps in p.paths for v in (ps.src, ps.dst)}
+        edge_vars = set(carried.edge_vars) | {
+            h.ev for hops in [p.hops] + [og.hops for og in p.optionals]
+            for h in hops if h.ev
+        }
+        path_vars = set(carried.path_vars) | {ps.path_var for ps in p.paths}
+        known = node_vars | edge_vars | path_vars | set(carried.rel.cols)
+        refs: dict[str, set[str]] = {}  # properties read outside subpatterns
+
+        def rewrite(text: str, own: set[str] = frozenset()):
+            return _rewrite_expr(
+                text, node_vars | own, edge_vars, path_vars, self.sql.param
+            )
+
+        def expr(text: str) -> str:
+            out, r = rewrite(text)
+            _add_refs(refs, r)
+            return out
+
+        def sub(hops, sub_labels, preds) -> _Sub:
+            own = {v for h in hops for v in (h.src, h.dst, h.ev) if v}
+            s = _Sub(hops, sub_labels)
+            for pred in preds:
+                out, r = rewrite(pred, own)
+                inner = (_names(out) & (known | own)) | {v for v, _ in r} <= own
+                (s.inner if inner else s.on).append(out)
+                _add_refs(s.inner_refs if inner else refs, r)
+            return s
+
+        # pattern counts become grouped-count columns; WHERE's EXISTS and
+        # bare pattern conjuncts become semi/anti joins
+        counts: list[tuple[str, str]] = []
+        wheres = [_extract_pattern_counts(w, counts) for w in seg.where]
+        proj = _extract_pattern_counts(seg.proj, counts)
+        conds = [expr(pr) for pr in p.inline_preds]
+        exists: list[tuple[_Sub, bool]] = []
+        for w in wheres:
+            if not _PATTERN_PRED.search(w):
+                conds.append(expr(w))
                 continue
-            if m:
-                pat = (m["pat"] or m["pat2"] or "").strip()
-                neg = bool(m["neg"] or m["neg2"])
-                # optional trailing WHERE inside the braces — Cypher's
-                # correlated existential subquery form:
-                #   EXISTS { (p)-[:R]->(x:L) WHERE x.prop = v }
-                wm = re.search(r"\bWHERE\b", pat, flags=re.I)
-                inner_where = None
-                if wm:
-                    pat, inner_where = (
-                        pat[: wm.start()].strip(),
-                        pat[wm.end():].strip(),
-                    )
-                sub = _Parsed()
-                _parse_patterns(pat, sub, into_optional=False)
-                if sub.paths or sub.single_nodes:
-                    raise ValueError(
-                        "EXISTS supports relationship patterns only"
-                    )
-                if inner_where:
-                    sub.inline_preds.extend(
-                        f"({c})" for c in _split_top_and(inner_where)
-                    )
-                exists_joins.append((sub, neg))
-            elif re.search(r"\bEXISTS\b", conj, flags=re.I):
+            if _has_top_level_or(w):
                 raise ValueError(
                     "EXISTS must be a top-level AND conjunct "
                     "(OR over EXISTS is not supported)"
                 )
-            else:
-                where_plain.append(conj)
-    # UNWIND list AS var — a map-side explode; nodes(p) unwraps a bound
-    # path's key array
-    unwind_sql: list[tuple[str, str]] = []
-    for uexpr, uvar in seg.unwinds:
-        txt = uexpr
-        for pv in path_vars:
-            txt = re.sub(
-                rf"\bnodes\s*\(\s*{pv}\s*\)", pv, txt, flags=re.I
-            )
-        unwind_sql.append((compile_expr(txt), uvar))
-    where_compiled = (
-        compile_expr(" AND ".join(f"({c})" for c in where_plain))
-        if where_plain
-        else None
-    )
+            for conj in _split_top_and(w):
+                m = _EXISTS_RE.match(conj.strip())
+                bp = None if m else _BARE_PAT_RE.match(conj.strip())
+                if m or bp:
+                    pat = (bp["pat"] if bp else (m["pat"] or m["pat2"])).strip()
+                    neg = bool(bp["neg"] if bp else (m["neg"] or m["neg2"]))
+                    # optional trailing WHERE inside the braces — Cypher's
+                    # correlated existential subquery form:
+                    #   EXISTS { (p)-[:R]->(x:L) WHERE x.prop = v }
+                    wm = None if bp else re.search(r"\bWHERE\b", pat, flags=re.I)
+                    inner = []
+                    if wm:
+                        pat, inner = pat[: wm.start()].strip(), _conjuncts(pat[wm.end():])
+                    sp = _Parsed()
+                    _parse_patterns(pat, sp, False, self.anon)
+                    if sp.paths or sp.single_nodes:
+                        raise ValueError(
+                            "EXISTS and pattern predicates support relationship "
+                            "patterns only"
+                        )
+                    exists.append((sub(sp.hops, sp.labels, sp.inline_preds + inner), neg))
+                elif re.search(r"\bEXISTS\b", conj, flags=re.I):
+                    raise ValueError(
+                        "EXISTS must be a top-level AND conjunct "
+                        "(OR over EXISTS is not supported)"
+                    )
+                else:
+                    conds.append(expr(conj))
+        optionals = []
+        for og in p.optionals:
+            if og.where and _PATTERN_PRED.search(og.where):
+                raise ValueError(
+                    "pattern predicates and counts are not supported in an "
+                    "OPTIONAL MATCH's WHERE"
+                )
+            optionals.append(sub(og.hops, og.labels,
+                                 og.preds + (_conjuncts(og.where) if og.where else [])))
+        count_subs = []
+        for col, pat in counts:
+            sp = _Parsed()
+            _parse_patterns(pat, sp, False, self.anon)
+            if sp.paths or sp.single_nodes or not sp.hops:
+                raise ValueError("pattern counts support relationship patterns only")
+            count_subs.append((col, _Sub(sp.hops, sp.labels)))
+        unwinds = []
+        for uexpr, uvar in seg.unwinds:
+            for pv in path_vars:  # nodes(p) unwraps a bound path's key array
+                uexpr = re.sub(rf"\bnodes\s*\(\s*{pv}\s*\)", pv, uexpr, flags=re.I)
+            unwinds.append((expr(uexpr), uvar))
 
-    distinct = False
-    rb = seg_proj.strip()
-    if rb.upper().startswith("DISTINCT"):
-        distinct = True
-        rb = rb[len("DISTINCT"):].strip()
-    items: list[tuple[str, str, str, bool]] = []  # (raw, sql, alias, is_agg)
-    for item in _split_top_commas(rb):
-        m = re.search(r"\s+AS\s+(\w+)\s*$", item, flags=re.I)
-        if m:
-            expr_txt, alias = item[: m.start()].strip(), m.group(1)
-        else:
-            expr_txt = item.strip()
-            alias = (
-                expr_txt
-                if re.fullmatch(r"\w+", expr_txt)
-                else _default_alias(expr_txt)
+        distinct = proj.strip().upper().startswith("DISTINCT")
+        rb = proj.strip()[len("DISTINCT"):] if distinct else proj
+        items: list[tuple[str, str, str, bool]] = []  # (raw, sql, alias, is_agg)
+        for item in _split_top_commas(rb.strip()):
+            m = re.search(r"\s+AS\s+(\w+)\s*$", item, flags=re.I)
+            raw = item[: m.start()].strip() if m else item.strip()
+            alias = m.group(1) if m else (
+                raw if re.fullmatch(r"\w+", raw) else _default_alias(raw)
             )
-        items.append(
-            (expr_txt, compile_expr(expr_txt), alias, _is_agg(expr_txt))
-        )
-
-    order_items: list[tuple[str, bool]] = []
-    if seg.order:
-        for item in _split_top_commas(seg.order):
+            items.append((raw, expr(raw), alias, _is_agg(raw)))
+        order = []
+        for item in _split_top_commas(seg.order or ""):
             desc = bool(re.search(r"\s+DESC\s*$", item, flags=re.I))
             item = re.sub(r"\s+(ASC|DESC)\s*$", "", item, flags=re.I)
-            order_items.append((compile_expr(item), desc))
-    post_where_compiled = (
-        compile_expr(seg.post_where) if seg.post_where else None
-    )
+            order.append(expr(item) + (" DESC" if desc else ""))
+        # a post-WITH WHERE may read properties of the carried variables:
+        # they ride the projection as hidden columns
+        post, post_refs = rewrite(seg.post_where) if seg.post_where else (None, ())
+        _add_refs(refs, post_refs)
+        hidden = sorted(f"{v}.{x}" for v, x in post_refs)
 
-    # property joins — only the (var, prop) pairs actually referenced;
-    # each is ONE key join against the label's property table (broadcast
-    # when small), projecting just the needed columns
-    by_var: dict[str, set[str]] = {}
-    for var, p in all_refs:
-        by_var.setdefault(var, set()).add(p)
-    for var, wanted in by_var.items():
-        lab = parsed.labels.get(var) or carried_labels.get(var)
-        if lab is None:
-            for og in parsed.optionals:
-                lab = og.labels.get(var)
-                if lab is not None:
-                    break
-        if lab is None:
-            raise ValueError(
-                f"{var}.{next(iter(wanted))}: {var!r} has no label, so its "
-                "property table is unknown — label the variable"
-            )
-        if lab not in props:
-            raise ValueError(
-                f"{var}.{next(iter(wanted))}: no property table for label "
-                f"{lab!r} — pass props={{{lab!r}: df}}"
-            )
-        pt = props[lab]
-        missing = wanted - set(pt.columns)
-        if missing:
-            raise ValueError(f"label {lab!r} has no properties {sorted(missing)}")
-        sel = pt.select(
-            F.col("key").alias(var),
-            *[_qcol(p).alias(f"__{var}__{p}") for p in sorted(wanted)],
-        )
-        opt_vars = set()
-        for og in parsed.optionals:
-            opt_vars |= {h.src for h in og.hops} | {h.dst for h in og.hops}
-        main_vars = {h.src for h in parsed.hops} | {h.dst for h in parsed.hops}
-        how = (
-            "left"
-            if (var in opt_vars and var not in main_vars
-                and var not in parsed.labels)
-            else "inner"
-        )
-        df = df.join(sel, var, how)
+        rel = self.core(p, carried)
+        rel = self.with_props(rel, {v: refs[v] for v in refs if v in rel.cols}, "", labels)
+        for s in optionals:
+            rel = self.attach(rel, s, "LEFT", labels, refs,
+                              "OPTIONAL MATCH shares no variable with the MATCH")
+        for col, s in count_subs:
+            rel = self.attach(rel, s, "LEFT", labels, {},
+                              "pattern count shares no variable with the MATCH", col)
+        for u, uvar in unwinds:
+            a, b = self.sql.alias(), self.sql.alias()
+            rel = _Rel(f"SELECT * FROM ({rel.text}) {a} LATERAL VIEW explode({u}) {b} "
+                       f"AS {_q(uvar)}", rel.cols + [uvar])
+        for s, neg in exists:
+            rel = self.attach(rel, s, "LEFT ANTI" if neg else "LEFT SEMI", labels, {},
+                              "EXISTS pattern shares no variable with the MATCH")
 
-    for sql, uvar in unwind_sql:
-        df = df.withColumn(uvar, F.explode(F.expr(sql)))
-    for p in inline_sql:
-        df = df.filter(F.expr(p))
-    if where_compiled:
-        df = df.filter(F.expr(where_compiled))
-    for sub, neg in exists_joins:
-        sdf = gq.find(motif(sub.hops, sub.labels))
-        # property predicates inside EXISTS (inline props or the inner
-        # WHERE) join the label's property table onto the EXISTS side
-        # only — the existence test is property-filtered BEFORE the
-        # semi/anti join, never leaking columns into the outer scope
-        ex_node_vars = (
-            node_vars
-            | {h.src for h in sub.hops}
-            | {h.dst for h in sub.hops}
-        )
-        ex_refs: set[tuple[str, str]] = set()
-        ex_sql: list[str] = []
-        for p in sub.inline_preds:
-            out, refs = _rewrite_expr(p, ex_node_vars, edge_vars)
-            ex_refs.update(refs)
-            ex_sql.append(out)
-        ex_by_var: dict[str, set[str]] = {}
-        for var, p in ex_refs:
-            ex_by_var.setdefault(var, set()).add(p)
-        ex_helpers: list[str] = []
-        for var, wanted in ex_by_var.items():
-            lab = sub.labels.get(var) or parsed.labels.get(var)
-            if lab is None:
-                raise ValueError(
-                    f"{var}: label the variable to use its properties "
-                    "inside EXISTS"
-                )
-            if lab not in props:
-                raise ValueError(
-                    f"no property table for label {lab!r} — pass "
-                    f"props={{{lab!r}: df}}"
-                )
-            sel = props[lab].select(
-                F.col("key").alias(var),
-                *[_qcol(p).alias(f"__{var}__{p}") for p in sorted(wanted)],
-            )
-            ex_helpers.extend(f"__{var}__{p}" for p in sorted(wanted))
-            sdf = sdf.join(sel, var, "inner")
-        for s in ex_sql:
-            sdf = sdf.filter(F.expr(s))
-        if ex_helpers:
-            sdf = sdf.drop(*ex_helpers)
-        shared = [c for c in df.columns if c in sdf.columns]
-        if not shared:
-            raise ValueError(
-                "EXISTS pattern shares no variable with the MATCH"
-            )
-        df = df.join(
-            sdf.select(*shared).distinct(),
-            on=shared,
-            how="left_anti" if neg else "left_semi",
-        )
+        aggs = any(it[3] for it in items)
+        keys = [s for _, s, _, ag in items if not ag] + [_q(h) for h in hidden]
+        sel = [f"{s} AS {_q(al)}" for _, s, al, _ in items] + [_q(h) for h in hidden]
+        text = (f"SELECT {'DISTINCT ' if distinct and not aggs else ''}{', '.join(sel)} "
+                f"FROM ({rel.text}) {self.sql.alias()}")
+        if conds:
+            text += " WHERE " + " AND ".join(f"({c})" for c in conds)
+        if aggs and keys:
+            text += " GROUP BY " + ", ".join(keys)
+        aliases = [al for _, _, al, _ in items]
+        if post is not None:
+            text = (f"SELECT {', '.join(map(_q, aliases))} FROM ({text}) "
+                    f"{self.sql.alias()} WHERE {post}")
+        if order:
+            text += " ORDER BY " + ", ".join(order)
+        if seg.limit is not None:
+            text += f" LIMIT {seg.limit}"
+        if seg.skip is not None:
+            text += f" OFFSET {seg.skip}"
 
-    aggs = [it for it in items if it[3]]
-    if aggs:
-        keys = [F.expr(sql).alias(a) for _, sql, a, is_a in items if not is_a]
-        agg_cols = [F.expr(sql).alias(a) for _, sql, a, is_a in items if is_a]
-        if keys:
-            df = df.groupBy(*keys).agg(*agg_cols)
-        else:
-            df = df.agg(*agg_cols)
-        df = df.select(*[a for _, _, a, _ in items])
-    else:
-        df = df.select(*[F.expr(sql).alias(a) for _, sql, a, _ in items])
-        if distinct:
-            df = df.distinct()
-    if post_where_compiled:
-        df = df.filter(F.expr(post_where_compiled))
-    if order_items:
-        df = df.orderBy(
-            *[
-                F.expr(sql).desc() if desc else F.expr(sql)
-                for sql, desc in order_items
-            ]
-        )
-    if seg.skip is not None:
-        df = df.offset(seg.skip)
-    if seg.limit is not None:
-        df = df.limit(seg.limit)
-
-    # what flows into the next segment: bare-variable items keep their
-    # kind (node var with label / edge struct / path array)
-    out = _Scope(df=df)
-    all_labels: dict[str, str | None] = {}
-    all_labels.update(carried_labels)
-    all_labels.update(parsed.labels)
-    for og in parsed.optionals:
-        all_labels.update(og.labels)
-    for raw, _, alias, _ in items:
-        if re.fullmatch(r"\w+", raw):
+        # what flows into the next segment: bare-variable items keep their
+        # kind (node var with label / edge struct / path array)
+        out = _Scope(_Rel(text, aliases))
+        for raw, _, alias, _ in items:
             if raw in path_vars:
                 out.path_vars.add(alias)
             elif raw in edge_vars:
                 out.edge_vars.add(alias)
             elif raw in node_vars:
-                out.node_labels[alias] = all_labels.get(raw)
-    return out
+                out.node_labels[alias] = labels.get(raw)
+        return out
+
+    # -- relations -----------------------------------------------------------
+
+    def _inner(self, left: _Rel, right: _Rel, what: str) -> _Rel:
+        shared = [c for c in left.cols if c in right.cols]
+        if not shared:
+            raise ValueError(
+                f"{what} shares no variable with the rest of the query — "
+                "a cartesian product is never implicit"
+            )
+        return _join(self.sql, left, right, "INNER", shared)
+
+    def core(self, p: _Parsed, carried: _Scope) -> _Rel | None:
+        """The MATCH rows: hops, single nodes and shortest paths joined
+        on their shared variables, then the carried scope."""
+        rel = None
+        if p.hops:
+            hop_vars = {v for h in p.hops for v in (h.src, h.dst)}
+            rel = _pattern(self.sql, self.gq, p.hops,
+                           {v: l for v, l in p.labels.items() if v in hop_vars})
+        for var in p.single_nodes:
+            lab = p.labels.get(var)
+            if rel is None:
+                where = f" WHERE label = {self.sql.param(lab)}" if lab else ""
+                rel = _Rel(f"SELECT key AS {_q(var)} FROM "
+                           f"{self.sql.frame(self.gq.nodes, 'nodes')}{where}", [var])
+            elif var in rel.cols:
+                rel = _labeled(self.sql, self.gq, rel, var, lab)
+            else:
+                raise ValueError(
+                    f"single-node pattern ({var}) shares no variable with the "
+                    "rest of the MATCH — a cartesian product is never implicit"
+                )
+        for ps in p.paths:
+            pr = self.path(ps, p.labels)
+            rel = pr if rel is None else self._inner(rel, pr, "shortestPath")
+        if carried.rel.cols:
+            rel = carried.rel if rel is None else self._inner(
+                carried.rel, rel, "MATCH after WITH"
+            )
+        return rel
+
+    def path(self, ps: _ShortestPath, labels: dict[str, str]) -> _Rel:
+        """``shortestPath`` rows (src, dst, path): the traversal kernel
+        runs now and its rows join the statement as a frame argument.
+        Both endpoints pinned → the bidirectional meet-in-the-middle BFS
+        (one row or none); free destination → BFS + backtrace from the
+        source."""
+        from pyspark.sql.types import ArrayType, StructField, StructType
+
+        from graphdb_neo4j_spark.operators.traversal import (
+            bfs_paths,
+            shortest_path_bidirectional,
+        )
+
+        spark, e = self.sql.spark, self.gq.rel(ps.rel)
+        cols = [ps.src, ps.dst, ps.path_var]
+        if ps.dst_key is not None:
+            path = shortest_path_bidirectional(
+                e, ps.src_key, ps.dst_key,
+                max_hops=ps.hi if ps.hi is not None else 1 << 20,
+            )
+            key_t = e.schema["src"].dataType
+            schema = StructType([StructField(c, t) for c, t in
+                                 zip(cols, (key_t, key_t, ArrayType(key_t)))])
+            rows = ([(ps.src_key, ps.dst_key, path)]
+                    if path is not None and len(path) - 1 >= ps.lo else [])
+            frame = self.sql.frame(spark.createDataFrame(rows, schema), "path")
+            rel = _Rel(f"SELECT * FROM {frame}", cols)
+        else:
+            srcs = spark.createDataFrame([(ps.src_key,)], ["key"])
+            frame = self.sql.frame(bfs_paths(e, srcs, max_hops=ps.hi), "path")
+            rel = _Rel(
+                f"SELECT {self.sql.param(ps.src_key)} AS {_q(ps.src)}, key AS "
+                f"{_q(ps.dst)}, path AS {_q(ps.path_var)} FROM {frame} "
+                f"WHERE dist >= {ps.lo}", cols,
+            )
+        for var in (ps.src, ps.dst):
+            if labels.get(var) is not None:
+                rel = _labeled(self.sql, self.gq, rel, var, labels[var])
+        return rel
+
+    def with_props(self, rel: _Rel, refs: dict[str, set[str]], how: str,
+                   labels: dict[str, str | None]) -> _Rel:
+        """``rel`` plus the column `` `v.p` `` for each property p read of
+        each variable v: one ``{how}JOIN`` per variable against its
+        label's property table, on ``key``."""
+        if not refs:
+            return rel
+        a = self.sql.alias()
+        sel, joins, cols = [f"{a}.*"], "", list(rel.cols)
+        for var, wanted in refs.items():
+            lab, first = labels.get(var), f"{var}.{min(wanted)}"
+            if lab is None:
+                raise ValueError(
+                    f"{first}: {var!r} has no label, so its property table "
+                    "is unknown — label the variable"
+                )
+            if lab not in self.props:
+                raise ValueError(
+                    f"{first}: no property table for label {lab!r} — pass "
+                    f"props={{{lab!r}: df}}"
+                )
+            table = self.props[lab]
+            missing = wanted - set(table.columns)
+            if missing:
+                raise ValueError(f"label {lab!r} has no properties {sorted(missing)}")
+            b, names = self.sql.alias(), [(x, f"{var}.{x}") for x in sorted(wanted)]
+            psel = ", ".join(f"{_q(x)} AS {_q(n)}" for x, n in names)
+            joins += (f" {how}JOIN (SELECT key AS __k, {psel} FROM "
+                      f"{self.sql.frame(table, 'props')}) {b} ON {b}.__k = {a}.{_q(var)}")
+            sel += [f"{b}.{_q(n)}" for _, n in names]
+            cols += [n for _, n in names]
+        return _Rel(f"SELECT {', '.join(sel)} FROM ({rel.text}) {a}{joins}", cols)
+
+    def attach(self, rel: _Rel, s: _Sub, how: str, labels, refs, what: str,
+               count: str | None = None) -> _Rel:
+        """``rel {how} JOIN`` the subpattern ``s`` on their shared
+        variables.  OPTIONAL (``LEFT``) groups bring their new variables
+        and the properties read of them outside; ``count`` names the
+        grouped-count column of a pattern count instead."""
+        sub = _pattern(self.sql, self.gq, s.hops, s.labels)
+        shared = [c for c in rel.cols if c in sub.cols]
+        if not shared:
+            raise ValueError(what)
+        new = [c for c in sub.cols if c not in rel.cols]
+        if count is not None:
+            g = ", ".join(map(_q, shared))
+            sub = _Rel(f"SELECT {g}, count(*) AS {count} FROM ({sub.text}) "
+                       f"{self.sql.alias()} GROUP BY {g}", shared + [count])
+            return _join(self.sql, rel, sub, how, shared)
+        expose = {v: refs[v] for v in new if v in refs}
+        want = {v: s.inner_refs.get(v, set()) | expose.get(v, set())
+                for v in set(s.inner_refs) | set(expose)}
+        sub = self.with_props(sub, want, "LEFT " if how == "LEFT" else "",
+                              {**labels, **s.labels})
+        if s.inner:
+            sub = _Rel(f"SELECT * FROM ({sub.text}) {self.sql.alias()} WHERE "
+                       + " AND ".join(f"({c})" for c in s.inner), sub.cols)
+        keep = shared
+        if how == "LEFT":
+            keep = shared + new + [f"{v}.{x}" for v in expose for x in sorted(expose[v])]
+        sub = _Rel(f"SELECT {', '.join(map(_q, keep))} FROM ({sub.text}) "
+                   f"{self.sql.alias()}", keep)
+        return _join(self.sql, rel, sub, how, shared,
+                     " AND ".join(f"({c})" for c in s.on) or None)
 
 
 def _split_union(q: str) -> tuple[list[str], bool]:
@@ -1221,86 +1177,30 @@ def _split_union(q: str) -> tuple[list[str], bool]:
     return parts, bool(kinds and kinds[0])
 
 
+
 def cypher(
     gq: GraphQuery,
     query: str,
     props: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
-    """Compile a Cypher read query (see module docstring for the
-    subset) against a :class:`GraphQuery` and return the DataFrame.
+    """Run a Cypher read query (see module docstring for the subset)
+    against a :class:`GraphQuery` and return the DataFrame — ONE
+    ``spark.sql`` statement; no Spark job runs before the caller acts,
+    except a ``shortestPath``'s traversal kernel.
 
     ``props`` maps node label → property DataFrame keyed by ``key``
     (e.g. ``{"Process": g.process}``); it is only required when the
     query dereferences ``var.prop`` on that label.
 
-    ``WITH`` pipelines compile to nested plans: each segment projects
-    (aggregating if any item aggregates), the optional post-``WITH``
-    ``WHERE`` filters the projection (Cypher's HAVING), and the next
-    segment's patterns re-join the carried scope on shared variables —
-    all still one Catalyst plan, so the optimizer sees through the
-    whole pipeline.
+    ``WITH`` pipelines lower to CTEs: each segment projects (aggregating
+    if any item aggregates), the optional post-``WITH`` ``WHERE``
+    filters the projection (Cypher's HAVING), and the next segment's
+    patterns re-join the carried scope on shared variables — one
+    statement, so the optimizer sees through the whole pipeline.
 
-    Top-level ``UNION`` / ``UNION ALL`` combine full queries: each arm
-    compiles independently, arms must return the same column names
-    (Neo4j's rule), ``UNION ALL`` is a bag union (``unionByName``) and
-    ``UNION`` adds one global distinct — both still a single plan, so
-    Catalyst can pick partial-dedup / exchange-reuse strategies."""
-    q = query.strip().rstrip(";")
-    m = re.match(r"^CALL\s*\{", q, flags=re.I)
-    if m:
-        # CALL { subquery } <pipeline>: compile the subquery (which may
-        # itself be a UNION) and feed its rows into the remaining
-        # clauses as the carried scope — Neo4j's post-UNION-processing
-        # idiom.  Carried columns flow as unlabeled variables; re-label
-        # (re-MATCH) before dereferencing properties on them.
-        depth = 0
-        in_str = False
-        close = None
-        for i in range(m.end() - 1, len(q)):
-            ch = q[i]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str and ch == "{":
-                depth += 1
-            elif not in_str and ch == "}":
-                depth -= 1
-                if depth == 0:
-                    close = i
-                    break
-        if close is None:
-            raise ValueError("CALL { … }: unbalanced braces")
-        inner = q[m.end(): close].strip()
-        rest = q[close + 1:].strip()
-        if not rest:
-            raise ValueError("CALL { … } must be followed by a pipeline "
-                             "ending in RETURN")
-        inner_df = cypher(gq, inner, props)
-        scope = _Scope(
-            df=inner_df,
-            node_labels={c: None for c in inner_df.columns},
-        )
-        for seg in _segment_clauses(_split_clauses(rest)):
-            scope = _run_segment(gq, props or {}, seg, scope)
-        return scope.df
-    arms, is_all = _split_union(q)
-    if len(arms) > 1:
-        dfs = [cypher(gq, arm, props) for arm in arms]
-        cols0 = set(dfs[0].columns)
-        for d in dfs[1:]:
-            if set(d.columns) != cols0:
-                raise ValueError(
-                    "UNION arms must return the same column names: "
-                    f"{sorted(cols0)} vs {sorted(d.columns)}"
-                )
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out if is_all else out.distinct()
-    segments = _segment_clauses(_split_clauses(q))
-    first = segments[0].parsed
-    if not first.hops and not first.single_nodes and not first.paths:
-        raise ValueError("query needs at least one MATCH pattern")
-    scope: _Scope | None = None
-    for seg in segments:
-        scope = _run_segment(gq, props or {}, seg, scope)
-    return scope.df
+    Top-level ``UNION`` / ``UNION ALL`` combine full queries: arms must
+    return the same column names (Neo4j's rule) and are aligned by
+    name; ``UNION ALL`` is a bag union and ``UNION`` adds one global
+    distinct."""
+    low = _Lowering(gq, props or {})
+    return low.sql.run(low.statement(query))

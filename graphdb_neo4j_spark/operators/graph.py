@@ -14,7 +14,12 @@ surface (SURVEY.md §2.D) Spark-first:
   (union of chain joins, Cypher path multiplicity); unbounded reach →
   operators/traversal.py (iterative; no Catalyst recursion)
 
-Everything is a pure DataFrame transformation: no collect, no UDFs.
+Motifs lower to ONE Spark SQL statement over the graph tables
+(:func:`_pattern`), the same pattern lowering the Cypher front-end
+(operators/cypher.py) builds its statements from: hops are joins on
+``src``/``dst``, labels are semi-joins, rel types and labels are named
+parameters, and the tables are frame arguments of one ``spark.sql``.
+No collect, no UDFs.
 """
 
 from __future__ import annotations
@@ -68,6 +73,207 @@ def _parse_varlen(vspec: str | None, pat: str) -> tuple[int, int] | None:
     if lo < 1 or hi < lo:
         raise ValueError(f"bad variable-length bounds in {pat!r}: *{s}")
     return lo, hi
+
+
+# -- the SQL statement builder -------------------------------------------------
+
+
+@dataclass
+class _Hop:
+    """``(src)-[ev:rel*lo..hi]->(dst)``; an undirected hop matches the
+    relationship in both traversal directions."""
+
+    src: str
+    rel: str
+    dst: str
+    ev: str | None = None
+    span: tuple[int, int] | None = None  # (lo, hi) of a *lo..hi hop
+    undirected: bool = False
+
+
+@dataclass
+class _Rel:
+    """One relation of a statement under construction: its SELECT text
+    and its column names in order."""
+
+    text: str
+    cols: list[str]
+
+
+def _q(name: str) -> str:
+    """``name`` as a backticked SQL identifier, braces doubled for the
+    frame-argument formatter of ``spark.sql``."""
+    name = name.replace("`", "``").replace("{", "{{").replace("}", "}}")
+    return f"`{name}`"
+
+
+class _Sql:
+    """The parameters and frame arguments of one ``spark.sql`` statement:
+    values go in as named parameters (``:p0``), never into the text, and
+    DataFrames as ``{name}`` frame arguments."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.args: dict[str, object] = {}
+        self.frames: dict[str, DataFrame] = {}
+        self.n_alias = 0
+
+    def alias(self) -> str:
+        self.n_alias += 1
+        return f"__r{self.n_alias}"
+
+    def param(self, value) -> str:
+        for k, v in self.args.items():
+            if type(v) is type(value) and v == value:
+                return f":{k}"
+        k = f"p{len(self.args)}"
+        self.args[k] = value
+        return f":{k}"
+
+    def frame(self, df: DataFrame, stem: str) -> str:
+        for k, v in self.frames.items():
+            if v is df:
+                return f"{{{k}}}"
+        k = f"{stem}{len(self.frames)}"
+        self.frames[k] = df
+        return f"{{{k}}}"
+
+    def run(self, text: str) -> DataFrame:
+        # spark.sql drops each frame argument's temp view after analysis,
+        # and dropping a view uncaches every cached plan equal to the
+        # view's: a persisted graph table passed as is would lose its
+        # cache.  A no-op filter makes the view's plan differ from the
+        # cached one, which still substitutes inside it (the optimizer
+        # then removes the filter).
+        frames = {k: df.filter(F.lit(True)) for k, df in self.frames.items()}
+        return self.spark.sql(text, args=self.args or None, **frames)
+
+
+def _join(
+    sql: _Sql, left: _Rel, right: _Rel, how: str,
+    on: list[str], cond: str | None = None,
+) -> _Rel:
+    """``left {how} JOIN right`` on equal ``on`` columns, in USING-join
+    column order (``on``, then left's, then right's).  Right's copies of
+    ``on`` are renamed, so an extra predicate ``cond`` over both sides
+    names every column once."""
+    a, b = sql.alias(), sql.alias()
+    hid = {c: f"__j{i}" for i, c in enumerate(on)}
+    rsel = ", ".join(f"{_q(c)} AS {hid[c]}" if c in hid else _q(c) for c in right.cols)
+    conds = [f"{a}.{_q(c)} = {b}.{hid[c]}" for c in on] + ([f"({cond})"] if cond else [])
+    if how in ("LEFT SEMI", "LEFT ANTI"):
+        cols = left.cols
+    else:
+        cols = on + [c for c in left.cols if c not in on]
+        cols += [c for c in right.cols if c not in on]
+    sel = ", ".join(f"{a if c in left.cols else b}.{_q(c)}" for c in cols)
+    return _Rel(
+        f"SELECT {sel} FROM ({left.text}) {a} {how} JOIN "
+        f"(SELECT {rsel} FROM ({right.text})) {b} ON {' AND '.join(conds)}",
+        cols,
+    )
+
+
+def _labeled(sql: _Sql, gq: "GraphQuery", rel: _Rel, var: str, label: str | None) -> _Rel:
+    """``rel`` semi-joined on ``var`` against the keys of ``label``'s
+    nodes (any node when ``label`` is None) — Cypher's label predicate;
+    label is a partition column of the canonical layout, so the semi-join
+    side is a pruned scan."""
+    a, b = sql.alias(), sql.alias()
+    where = f" WHERE label = {sql.param(label)}" if label is not None else ""
+    return _Rel(
+        f"SELECT {a}.* FROM ({rel.text}) {a} LEFT SEMI JOIN "
+        f"(SELECT key FROM {sql.frame(gq.nodes, 'nodes')}{where}) {b} "
+        f"ON {b}.key = {a}.{_q(var)}",
+        rel.cols,
+    )
+
+
+def _hop_rel(sql: _Sql, gq: "GraphQuery", h: _Hop, prefer: str | None) -> str:
+    """(src, dst[, __ev]) rows of one hop: the ``rel`` edges from the
+    orientation bucketed on the hop's join key (``prefer`` ∈ {"src",
+    "dst", None}), both orientations for an undirected hop (self-loops
+    once), and for ``*lo..hi`` one row per path — a UNION ALL of the
+    k-fold chain joins for k in lo..hi.  Walk semantics: an edge may
+    repeat along a path (only on cyclic graphs; a DAG path never reuses
+    an edge, so there it is Cypher's relationship-unique semantics)."""
+    table = gq.edges
+    if prefer == "src" and gq.edges_by_src is not None:
+        table = gq.edges_by_src
+    elif prefer == "dst" and gq.edges_by_dst is not None:
+        table = gq.edges_by_dst
+    t, r = sql.frame(table, "edges"), sql.param(h.rel)
+    ev = ""
+    if h.ev:
+        props = [_q(c) for c in table.columns if c not in ("rel", "src", "dst")]
+        ev = f", struct({', '.join(props)}) AS __ev"
+    one = f"SELECT src, dst{ev} FROM {t} WHERE rel = {r}"
+    if h.undirected:
+        one += f" UNION ALL SELECT dst, src{ev} FROM {t} WHERE rel = {r} AND src <> dst"
+    if h.span is None:
+        return one
+    arms = []
+    for k in range(h.span[0], h.span[1] + 1):
+        chain = "".join(
+            f" JOIN ({one}) __v{j} ON __v{j}.src = __v{j - 1}.dst" for j in range(1, k)
+        )
+        arms.append(f"SELECT __v0.src, __v{k - 1}.dst FROM ({one}) __v0{chain}")
+    return " UNION ALL ".join(arms)
+
+
+def _pattern(sql: _Sql, gq: "GraphQuery", hops: list[_Hop], labels: dict[str, str]) -> _Rel:
+    """The rows of a chain of hops: one column per node variable (the
+    node key) and, for named edge variables, a struct of the edge's
+    props.  Each hop joins the earlier ones on the ``src``/``dst`` of
+    the variables it shares with them (a variable bound twice is an
+    equality, exactly like Cypher); each labeled variable adds one
+    semi-join.  Orientation: each hop reads the edge table bucketed on
+    its join key, so chained hops over ``save_bucketed`` tables need no
+    shuffle; hop 0 has no join yet and takes the key the NEXT hop
+    shares."""
+    bound: dict[str, str] = {}
+    cols: list[str] = []
+    sel: list[str] = []
+    body, where = "", []
+    for i, h in enumerate(hops):
+        if h.ev and h.span:
+            raise ValueError(
+                f"edge variable {h.ev!r} on a variable-length hop: a path "
+                "binds a list of edges, which has no struct column"
+            )
+        if i == 0:
+            nxt = {hops[1].src, hops[1].dst} if len(hops) > 1 else set()
+            prefer = "dst" if h.dst in nxt else "src" if h.src in nxt else None
+        else:
+            prefer = "src" if h.src in bound else "dst" if h.dst in bound else None
+            if prefer is None:
+                raise ValueError(
+                    f"pattern ({h.src})-[{h.rel}]-({h.dst}) shares no variable "
+                    "with earlier patterns"
+                )
+        e = f"__e{i}"
+        conds = [f"{e}.{end} = {bound[v]}" for end, v in (("src", h.src), ("dst", h.dst))
+                 if v in bound]
+        if h.src == h.dst and h.src not in bound:
+            conds.append(f"{e}.src = {e}.dst")  # self-loop pattern (a)-[R]->(a)
+        rel = _hop_rel(sql, gq, h, "src" if h.span else prefer)
+        if i == 0:
+            body, where = f"({rel}) {e}", conds
+        else:
+            body += f" JOIN ({rel}) {e} ON {' AND '.join(conds)}"
+        for end, v in (("src", h.src), ("dst", h.dst)):
+            if v not in bound:
+                bound[v] = f"{e}.{end}"
+                cols.append(v)
+                sel.append(f"{e}.{end} AS {_q(v)}")
+        if h.ev:
+            cols.append(h.ev)
+            sel.append(f"{e}.__ev AS {_q(h.ev)}")
+    where_sql = f" WHERE {' AND '.join(where)}" if where else ""
+    rel = _Rel(f"SELECT {', '.join(sel)} FROM {body}{where_sql}", cols)
+    for var, lab in labels.items():
+        rel = _labeled(sql, gq, rel, var, lab)
+    return rel
 
 
 @dataclass
@@ -127,16 +333,6 @@ class GraphQuery:
     def rel(self, rel: str) -> DataFrame:
         return self.edges.filter(F.col("rel") == rel)
 
-    def _rel_oriented(self, rel: str, prefer: str | None) -> DataFrame:
-        """``rel`` edges from the orientation bucketed on the join key
-        (``prefer`` ∈ {"src", "dst", None}); plain edges otherwise."""
-        table = self.edges
-        if prefer == "src" and self.edges_by_src is not None:
-            table = self.edges_by_src
-        elif prefer == "dst" and self.edges_by_dst is not None:
-            table = self.edges_by_dst
-        return table.filter(F.col("rel") == rel)
-
     # -- neighborhood ------------------------------------------------------
 
     def out_neighbors(self, keys: DataFrame, rel: str, key_col: str = "key") -> DataFrame:
@@ -158,99 +354,17 @@ class GraphQuery:
 
     # -- motif matching ----------------------------------------------------
 
-    def _rel_undirected(self, rel: str, prefer: str | None) -> DataFrame:
-        """``rel`` edges in BOTH orientations — the Cypher undirected
-        hop ``(a)-[R]-(b)``: one row per (edge, traversal direction),
-        except self-loops, which Cypher binds once (both directions
-        produce the identical assignment)."""
-        e = self._rel_oriented(rel, prefer)
-        swapped = [
-            F.col("dst").alias("src") if c == "src"
-            else F.col("src").alias("dst") if c == "dst"
-            else F.col(c)
-            for c in e.columns
-        ]
-        rev = e.filter(F.col("src") != F.col("dst")).select(*swapped)
-        return e.unionByName(rev)
-
-    def _varlen_pairs(
-        self, rel: str, lo: int, hi: int, undirected: bool = False
-    ) -> DataFrame:
-        """(src, dst) endpoint pairs of ``rel``-paths of length lo..hi,
-        ONE ROW PER PATH — Cypher's ``-[:REL*lo..hi]->`` multiplicity.
-        Built as a union of k-fold chain joins (k bounded by the
-        pattern), so Catalyst plans ordinary equi-joins; on a 1000-node
-        cluster each extension is one shuffle on the frontier key.
-
-        Walk semantics: an edge may repeat along a path (matters only on
-        cyclic graphs; on DAGs — process trees, order chains — this is
-        exactly Cypher's relationship-unique semantics, since a DAG path
-        can never reuse an edge).
-        """
-        e = (
-            self._rel_undirected(rel, "src")
-            if undirected
-            else self._rel_oriented(rel, "src")
-        ).select("src", "dst")
-        out: DataFrame | None = None
-        cur = e  # paths of length 1
-        for k in range(1, hi + 1):
-            if k >= lo:
-                out = cur if out is None else out.unionByName(cur)
-            if k < hi:
-                ext = e.select(
-                    F.col("src").alias(f"__h{k}"), F.col("dst").alias(f"__t{k}")
-                )
-                cur = cur.join(ext, cur["dst"] == ext[f"__h{k}"]).select(
-                    cur["src"].alias("src"), F.col(f"__t{k}").alias("dst")
-                )
-        return out
-
-    def find(self, motif: str) -> DataFrame:
-        """Bounded pattern match, GraphFrames-style.
-
-        ``find("(a)-[SPAWNS]->(b); (b)-[e:CONNECTED_TO]->(c)")`` returns a
-        DataFrame with one column per node variable (the node key) and,
-        for named edge variables, a struct column with the edge props.
-
-        Variable-length hops use Cypher's star syntax —
-        ``find("(a)-[SPAWNS*1..3]->(b)")`` — expanded as a union of
-        bounded chain joins, one row per path (see :meth:`_varlen_pairs`).
-        Edge variables are not allowed on a variable-length hop (a path
-        has a LIST of edges, not one).
-
-        Node labels use Cypher's colon syntax —
-        ``find("(a:Process)-[SPAWNS]->(b:Process)")`` — each labeled
-        variable adds one semi-join against the (label-pruned) node
-        table; the same variable must not claim two different labels.
-
-        UNDIRECTED hops drop the arrowhead — ``find("(a)-[R]-(b)")`` —
-        and match the relationship in both traversal directions (two
-        rows per edge, one per binding, exactly Cypher; self-loops
-        bind once).  Lowered as a bidirectional edge frame for that
-        hop, so a chain with k undirected hops stays k linear joins —
-        never a 2^k union of orientations.
-
-        Each pattern adds one hash join on key equality; Catalyst's CBO /
-        AQE pick broadcast vs shuffle per join.  Node variables repeat to
-        express shared endpoints; a variable bound twice becomes an
-        equality condition, exactly like Cypher.
-        """
+    def _motif(self, sql: _Sql, motif: str) -> _Rel:
+        """Parse ``motif`` and lower it through :func:`_pattern`."""
         patterns = [p.strip() for p in motif.split(";") if p.strip()]
         if not patterns:
             raise ValueError("empty motif")
-        parsed = []
+        hops: list[_Hop] = []
         labels: dict[str, str] = {}
         for pat in patterns:
             m = _MOTIF_RE.match(pat)
             if not m:
                 raise ValueError(f"bad motif pattern: {pat!r}")
-            vl = _parse_varlen(m["vspec"], pat)
-            if vl is not None and m["ev"]:
-                raise ValueError(
-                    f"edge variable on variable-length hop in {pat!r}: "
-                    "a path binds a list of edges, which has no struct column"
-                )
             for var, lab in (
                 (m["src"], _unq(m["src_label"])),
                 (m["dst"], _unq(m["dst_label"])),
@@ -262,90 +376,45 @@ class GraphQuery:
                             f"{labels[var]!r} vs {lab!r}"
                         )
                     labels[var] = lab
-            parsed.append(
-                (m["src"], _unq(m["rel"]), m["dst"], m["ev"], vl,
-                 m["arrow"] == "-", pat)
-            )
+            hops.append(_Hop(
+                m["src"], _unq(m["rel"]), m["dst"], m["ev"],
+                _parse_varlen(m["vspec"], pat), m["arrow"] == "-",
+            ))
+        return _pattern(sql, self, hops, labels)
 
-        result: DataFrame | None = None
-        bound: set[str] = set()
-        for i, (src, rel_name, dst, ev, vl, und, pat) in enumerate(parsed):
-            # orientation choice: use the edge table bucketed on this
-            # hop's JOIN key so chained hops need no shuffle.  Pattern 0
-            # has no join yet — orient it by whichever of its variables
-            # the NEXT pattern shares (the key it will be joined on).
-            if i == 0:
-                prefer = None
-                if len(parsed) > 1:
-                    nxt_vars = {parsed[1][0], parsed[1][2]}
-                    if dst in nxt_vars:
-                        prefer = "dst"
-                    elif src in nxt_vars:
-                        prefer = "src"
-            else:
-                prefer = "src" if src in bound else ("dst" if dst in bound else None)
-            if vl is not None:
-                e = self._varlen_pairs(rel_name, *vl, undirected=und).select(
-                    F.col("src").alias(f"__src{i}"),
-                    F.col("dst").alias(f"__dst{i}"),
-                )
-            else:
-                e = (
-                    self._rel_undirected(rel_name, prefer)
-                    if und
-                    else self._rel_oriented(rel_name, prefer)
-                )
-                prop_cols = [c for c in e.columns if c not in ("rel", "src", "dst")]
-                sel = [
-                    F.col("src").alias(f"__src{i}"),
-                    F.col("dst").alias(f"__dst{i}"),
-                ]
-                if ev:
-                    sel.append(F.struct(*[F.col(c) for c in prop_cols]).alias(ev))
-                e = e.select(*sel)
-            if result is None:
-                result = e
-            else:
-                conds = []
-                if src in bound:
-                    conds.append(result[src] == e[f"__src{i}"])
-                if dst in bound:
-                    conds.append(result[dst] == e[f"__dst{i}"])
-                if not conds:
-                    raise ValueError(
-                        f"pattern {pat!r} shares no variable with earlier patterns"
-                    )
-                cond = conds[0]
-                for c in conds[1:]:
-                    cond = cond & c
-                result = result.join(e, cond)
-            if src == dst:
-                # self-loop pattern "(a)-[R]->(a)": src and dst are the
-                # same variable, so the equality must be an explicit
-                # filter — otherwise __dst{i} would be silently dropped
-                # and the result would contain ALL R edges
-                result = result.filter(
-                    F.col(f"__src{i}") == F.col(f"__dst{i}")
-                )
-            renames = {}
-            if src not in bound:
-                renames[f"__src{i}"] = src
-            if dst not in bound and dst != src:
-                renames[f"__dst{i}"] = dst
-            for old, new in renames.items():
-                result = result.withColumnRenamed(old, new)
-            result = result.drop(f"__src{i}", f"__dst{i}")
-            bound.update((src, dst))
-        # label constraints — one semi-join per labeled variable against
-        # the node table ("(a:Process)" ≡ Cypher's label predicate);
-        # label is a partition column of the canonical layout, so each
-        # semi-join side is a pruned scan
-        for var, lab in labels.items():
-            keys = self.nodes.filter(F.col("label") == lab).select(
-                F.col("key").alias(var)
-            )
-            result = result.join(keys, var, "left_semi")
-        return result
+    def find(self, motif: str) -> DataFrame:
+        """Bounded pattern match, GraphFrames-style.
+
+        ``find("(a)-[SPAWNS]->(b); (b)-[e:CONNECTED_TO]->(c)")`` returns a
+        DataFrame with one column per node variable (the node key) and,
+        for named edge variables, a struct column with the edge props.
+
+        Variable-length hops use Cypher's star syntax —
+        ``find("(a)-[SPAWNS*1..3]->(b)")`` — expanded as a union of
+        bounded chain joins, one row per path.  Edge variables are not
+        allowed on a variable-length hop (a path has a LIST of edges,
+        not one).
+
+        Node labels use Cypher's colon syntax —
+        ``find("(a:Process)-[SPAWNS]->(b:Process)")`` — each labeled
+        variable adds one semi-join against the (label-pruned) node
+        table; the same variable must not claim two different labels.
+
+        UNDIRECTED hops drop the arrowhead — ``find("(a)-[R]-(b)")`` —
+        and match the relationship in both traversal directions (two
+        rows per edge, one per binding, exactly Cypher; self-loops
+        bind once).  Lowered as a bidirectional edge relation for that
+        hop, so a chain with k undirected hops stays k linear joins —
+        never a 2^k union of orientations.
+
+        Each pattern adds one hash join on key equality; Catalyst's CBO /
+        AQE pick broadcast vs shuffle per join.  Node variables repeat to
+        express shared endpoints; a variable bound twice becomes an
+        equality condition, exactly like Cypher.  The whole motif is one
+        ``spark.sql`` statement.
+        """
+        sql = _Sql(self.edges.sparkSession)
+        return sql.run(self._motif(sql, motif).text)
 
     def find_optional(self, motif: str, optional: str) -> DataFrame:
         """``MATCH motif OPTIONAL MATCH optional`` — the required motif
@@ -356,14 +425,14 @@ class GraphQuery:
         optional part matches several times, and survive (with NULLs)
         when it matches none.  One extra left hash join — AQE/CBO still
         free to broadcast the smaller side."""
-        req = self.find(motif)
-        opt = self.find(optional)
-        shared = [c for c in req.columns if c in opt.columns]
+        sql = _Sql(self.edges.sparkSession)
+        req, opt = self._motif(sql, motif), self._motif(sql, optional)
+        shared = [c for c in req.cols if c in opt.cols]
         if not shared:
             raise ValueError(
                 "optional pattern shares no node variable with the motif"
             )
-        return req.join(opt, on=shared, how="left")
+        return sql.run(_join(sql, req, opt, "LEFT", shared).text)
 
     # -- set-style patterns --------------------------------------------------
 
@@ -390,21 +459,17 @@ class GraphQuery:
             .withColumn("degree", F.col("in_degree") + F.col("out_degree"))
         )
 
+    def cypher(
+        self, query: str, props: dict[str, DataFrame] | None = None
+    ) -> DataFrame:
+        """Run Cypher text against this graph — the migrating analyst's
+        one-liner (`operators/cypher.py` documents the supported subset):
 
-def _graphquery_cypher(
-    self, query: str, props: dict[str, DataFrame] | None = None
-) -> DataFrame:
-    """Run Cypher text against this graph — the migrating analyst's
-    one-liner (`operators/cypher.py` documents the supported subset):
+        >>> gq.cypher("MATCH (a:Process)-[:SPAWNS*1..3]->(b) RETURN b")
+        """
+        from graphdb_neo4j_spark.operators.cypher import cypher
 
-    >>> gq.cypher("MATCH (a:Process)-[:SPAWNS*1..3]->(b) RETURN b")
-    """
-    from graphdb_neo4j_spark.operators.cypher import cypher as _cypher
-
-    return _cypher(self, query, props=props)
-
-
-GraphQuery.cypher = _graphquery_cypher
+        return cypher(self, query, props=props)
 
 
 def graph_diff(old, new) -> DataFrame:

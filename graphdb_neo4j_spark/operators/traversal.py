@@ -761,44 +761,50 @@ def strongly_connected_components(
     O(diameter) joins.  Every step is a DataFrame join/agg — no
     driver-side graph state.
     """
-    remaining, rh = checkpoint_eager(_keys(nodes))
+    remaining, seen = _observing(_keys(nodes), n=F.count(F.lit(1)))
+    remaining, rh = checkpoint_eager(remaining)
+    n_rem = seen.get["n"]
     e_rem, eh = checkpoint_eager(
         edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
     )
     parts: list[DataFrame] = []  # frozen; the returned union reads them
 
-    def trim(rem: DataFrame, rh, e: DataFrame, eh):
+    def trim(rem: DataFrame, n: int, rh, e: DataFrame, eh):
         """Bulk-peel trivial SCCs: a vertex with no incoming or no
         outgoing edge (within the remaining graph) cannot be on a
         cycle.  Peeling exposes new such vertices, so iterate to a
         fixed point — a DAG (the overwhelmingly common provenance
         shape) drains here entirely in ~depth/2 cheap rounds and the
-        expensive coloring loop below never touches it."""
-        while not rem.isEmpty():
+        expensive coloring loop below never touches it.  ``n`` is the
+        size of the distinct key set ``rem``; the kept subset's size,
+        observed in its freeze, tells whether anything peeled."""
+        while n:
             has_in = e.select(F.col("dst").alias("key")).distinct()
             has_out = e.select(F.col("src").alias("key")).distinct()
-            keep, kh = checkpoint_eager(
+            keep, kept = _observing(
                 rem.join(has_in, "key", "left_semi")
-                .join(has_out, "key", "left_semi")
+                .join(has_out, "key", "left_semi"),
+                n=F.count(F.lit(1)),
             )
-            trivial = rem.join(keep, "key", "left_anti")
-            if trivial.isEmpty():
+            keep, kh = checkpoint_eager(keep)
+            if kept.get["n"] == n:
                 kh.release()
                 break
             parts.append(checkpoint_eager(
-                trivial.select("key", F.col("key").alias("component"))
+                rem.join(keep, "key", "left_anti")
+                .select("key", F.col("key").alias("component"))
             )[0])
             rh.release()
-            rem, rh = keep, kh
+            rem, n, rh = keep, kept.get["n"], kh
             e, eh = _step(_induced(e, rem), eh)
-        return rem, rh, e, eh
+        return rem, n, rh, e, eh
 
     # self-loops are cycles of length 1 but carry no inter-vertex SCC
     # structure; with them filtered from the edges they trim as trivial,
     # which is correct (a self-loop vertex is its own SCC)
-    remaining, rh, e_rem, eh = trim(remaining, rh, e_rem, eh)
+    remaining, n_rem, rh, e_rem, eh = trim(remaining, n_rem, rh, e_rem, eh)
     for _ in range(max_outer):
-        if remaining.isEmpty():
+        if not n_rem:
             break
         e = e_rem
         # forward min-propagation to fixed point: color(v) = min id
@@ -825,13 +831,17 @@ def strongly_connected_components(
         ).select("key", F.col("pivot").alias("component"))
         sh.release()
         parts.append(assigned)
-        remaining, rh = _step(
-            remaining.join(assigned.select("key"), "key", "left_anti"), rh
+        remaining, seen = _observing(
+            remaining.join(assigned.select("key"), "key", "left_anti"),
+            n=F.count(F.lit(1)),
         )
+        remaining, rh = _step(remaining, rh)
         e_rem, eh = _step(_induced(e, remaining), eh, ch)
         # extraction exposes new zero-degree vertices — re-trim before
         # paying for another coloring fixed point
-        remaining, rh, e_rem, eh = trim(remaining, rh, e_rem, eh)
+        remaining, n_rem, rh, e_rem, eh = trim(
+            remaining, seen.get["n"], rh, e_rem, eh
+        )
     _release(rh, eh)
     from functools import reduce
 
@@ -1972,8 +1982,13 @@ def shortest_path_bidirectional(
             F.col("key").cast(key_t).alias("key")
         )
         halves = []  # [src .. meet], then [dst .. meet]: bwd is rooted at dst
-        for tree in (fwd["visited"], bwd["visited"]):
-            paths, ph = _backtrace_paths(tree, targets=meet_df)
+        for side in (fwd, bwd):
+            # a predecessor tree of depth d has no chain longer than d
+            # links, so the side's depth bounds its backtrace: no
+            # whole-tree count needed
+            paths, ph = _backtrace_paths(
+                side["visited"], targets=meet_df, max_rounds=side["depth"] + 1
+            )
             halves.append(list(paths.head()["path"]))
             ph.release()
         path = halves[0] + halves[1][-2::-1]
@@ -2381,14 +2396,16 @@ def maximal_independent_set(
     """
     key_col = nodes.columns[0]
     und, uh = _simple_undirected(edges)
-    act, ah = checkpoint_eager(
+    act, n_act = _observing(
         nodes.select(F.col(key_col).alias("v")).distinct()
-        .withColumn("pri", F.md5(F.col("v")))
+        .withColumn("pri", F.md5(F.col("v"))),
+        n=F.count(F.lit(1)),
     )
+    act, ah = checkpoint_eager(act)
     spark = nodes.sparkSession
     mis, mh = checkpoint_eager(spark.createDataFrame([], "v string"))
     for _ in range(max_iter):
-        if act.isEmpty():
+        if not n_act.get["n"]:
             break
         e_act = _induced(und, act, "v")
         nbr_min = (
@@ -2414,9 +2431,11 @@ def maximal_independent_set(
             .select(F.col("dst").alias("v"))
             .distinct()
         )
-        act, ah = _step(
-            act.join(winners.unionByName(nbrs), "v", "left_anti"), ah, wh
+        act, n_act = _observing(
+            act.join(winners.unionByName(nbrs), "v", "left_anti"),
+            n=F.count(F.lit(1)),
         )
+        act, ah = _step(act, ah, wh)
     _release(uh, ah)
     return mis
 
@@ -2443,9 +2462,10 @@ def greedy_coloring(
     """
     key_col = nodes.columns[0]
     und, uh = _simple_undirected(edges)
-    pending, ph = checkpoint_eager(
-        nodes.select(F.col(key_col).alias("v")).distinct()
+    pending, n_pending = _observing(
+        nodes.select(F.col(key_col).alias("v")).distinct(), n=F.count(F.lit(1))
     )
+    pending, ph = checkpoint_eager(pending)
     pri = pending.withColumn(
         "pri", F.struct(F.md5(F.col("v")).alias("h"), F.col("v"))
     )
@@ -2462,7 +2482,7 @@ def greedy_coloring(
         spark.createDataFrame([], "v string, color int")
     )
     for _ in range(max_iter):
-        if pending.isEmpty():
+        if not n_pending.get["n"]:
             break
         # a pending vertex is READY when no pending neighbor outranks it
         blockers = (
@@ -2493,9 +2513,10 @@ def greedy_coloring(
             )
         )
         colored, ch = _step(colored.unionByName(newly), ch)
-        pending, ph = _step(
-            pending.join(newly.select("v"), "v", "left_anti"), ph, nh
+        pending, n_pending = _observing(
+            pending.join(newly.select("v"), "v", "left_anti"), n=F.count(F.lit(1))
         )
+        pending, ph = _step(pending, ph, nh)
     _release(uh, dh, ph)
     return colored
 
@@ -2529,10 +2550,11 @@ def greedy_matching(edges: DataFrame, max_iter: int = 50) -> DataFrame:
             F.md5(F.concat_ws("|", "src", "dst")).alias("pri"),
         )
     )
+    und, n_und = _observing(und, n=F.count(F.lit(1)))
     und, uh = checkpoint_eager(und)
     matched_edges, mh = None, None
     for _ in range(max_iter):
-        if und.isEmpty():
+        if not n_und.get["n"]:
             break
         # every vertex's min-priority incident edge; ties (md5
         # collisions) break on (pri, src, dst) inside the min-struct
@@ -2542,13 +2564,15 @@ def greedy_matching(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         pick = incid.groupBy("v").agg(
             F.min(F.struct("pri", "src", "dst")).alias("e")
         ).select("v", F.col("e.src").alias("src"), F.col("e.dst").alias("dst"))
-        handshake, hh = checkpoint_eager(
+        handshake, n_hand = _observing(
             pick.groupBy("src", "dst")
             .agg(F.count("*").alias("n"))
             .filter(F.col("n") == 2)
-            .select("src", "dst")
+            .select("src", "dst"),
+            n=F.count(F.lit(1)),
         )
-        if handshake.isEmpty():
+        handshake, hh = checkpoint_eager(handshake)
+        if not n_hand.get["n"]:
             hh.release()
             break
         if matched_edges is None:
@@ -2558,11 +2582,12 @@ def greedy_matching(edges: DataFrame, max_iter: int = 50) -> DataFrame:
         mv = handshake.select(F.col("src").alias("v")).unionByName(
             handshake.select(F.col("dst").alias("v"))
         ).distinct()
-        und, uh = _step(
+        und, n_und = _observing(
             und.join(mv.select(F.col("v").alias("src")), "src", "left_anti")
             .join(mv.select(F.col("v").alias("dst")), "dst", "left_anti"),
-            uh, None if hh is mh else hh,
+            n=F.count(F.lit(1)),
         )
+        und, uh = _step(und, uh, None if hh is mh else hh)
     uh.release()
     if matched_edges is None:
         return edges.sparkSession.createDataFrame([], "src string, dst string")
@@ -2991,9 +3016,10 @@ def topological_levels(
     contraction first.
     """
     key_col = nodes.columns[0]
-    verts, _ = checkpoint_eager(  # the returned frame reads it
-        nodes.select(F.col(key_col).alias("v")).distinct()
+    verts, n_rem = _observing(
+        nodes.select(F.col(key_col).alias("v")).distinct(), n=F.count(F.lit(1))
     )
+    verts, _ = checkpoint_eager(verts)  # the returned frame reads it
     e, eh = checkpoint_eager(_induced(
         edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct(),
         verts, "v",
@@ -3002,19 +3028,23 @@ def topological_levels(
     out, oh = checkpoint_eager(spark.createDataFrame([], "v string, level int"))
     remaining, rh = verts, None
     for level in range(max_iter):
-        if remaining.isEmpty():
+        if not n_rem.get["n"]:
             break
         has_incoming = e.select(F.col("dst").alias("v")).distinct()
-        frontier, fh = checkpoint_eager(
-            remaining.join(has_incoming, "v", "left_anti")
+        frontier, n_front = _observing(
+            remaining.join(has_incoming, "v", "left_anti"), n=F.count(F.lit(1))
         )
-        if frontier.isEmpty():
+        frontier, fh = checkpoint_eager(frontier)
+        if not n_front.get["n"]:
             fh.release()
             break  # every remaining vertex sits on/behind a cycle
         out, oh = _step(
             out.unionByName(frontier.withColumn("level", F.lit(level))), oh
         )
-        remaining, rh = _step(remaining.join(frontier, "v", "left_anti"), rh)
+        remaining, n_rem = _observing(
+            remaining.join(frontier, "v", "left_anti"), n=F.count(F.lit(1))
+        )
+        remaining, rh = _step(remaining, rh)
         e, eh = _step(
             e.join(frontier.select(F.col("v").alias("src")), "src", "left_anti"),
             eh, fh,

@@ -25,10 +25,11 @@ def register_graph_views(spark: SparkSession, g: PropertyGraph) -> None:
     g.wmi_consumer.createOrReplaceTempView("wmi_consumer")
 
 
-# Cypher the analyst would have typed → the SQL they type now.
+# Cypher the analyst would have typed → the SQL they type now
+# (tests/test_sql_surface.py checks each pair on the every-route graph).
 ANALYST_QUERIES: dict[str, str] = {
-    # MATCH (p:Process)-[:SPAWNS]->(c) WHERE p.image CONTAINS 'powershell'
-    # RETURN c.image, count(*)
+    # MATCH (p:Process)-[:SPAWNS]->(c:Process)
+    # WHERE lower(p.image) CONTAINS 'powershell' RETURN c.image, count(*)
     "children_of_powershell": """
         SELECT child.image, COUNT(*) AS n
         FROM edges e
@@ -37,13 +38,13 @@ ANALYST_QUERIES: dict[str, str] = {
         WHERE e.rel = 'SPAWNS' AND lower(parent.image) LIKE '%powershell%'
         GROUP BY child.image ORDER BY n DESC
     """,
-    # MATCH (p)-[:CONNECTED_TO]->(ip:Ip) RETURN ip.addr, count(DISTINCT p)
+    # MATCH (p)-[:CONNECTED_TO]->(ip:Ip) RETURN ip, count(DISTINCT p)
     "top_contacted_addresses": """
         SELECT e.dst AS addr, COUNT(DISTINCT e.src) AS n_processes
         FROM edges e WHERE e.rel = 'CONNECTED_TO'
         GROUP BY e.dst ORDER BY n_processes DESC, addr
     """,
-    # MATCH (a)-[:SPAWNS]->(b)-[:CREATED_FILE]->(f) RETURN a.image, f
+    # MATCH (a:Process)-[:SPAWNS]->(b)-[:CREATED_FILE]->(f) RETURN a.image, f
     "grandparent_file_drops": """
         SELECT p.image AS spawner_image, cf.dst AS file_path
         FROM edges s
@@ -51,20 +52,21 @@ ANALYST_QUERIES: dict[str, str] = {
         JOIN process p ON s.src = p.key
         WHERE s.rel = 'SPAWNS'
     """,
-    # MATCH (p) WHERE NOT (p)-[:SPAWNS]->() RETURN count(p)  (leaves)
+    # MATCH (p:Process) WHERE NOT (p)-[:SPAWNS]->() RETURN count(p)  (leaves)
     "leaf_processes": """
         SELECT COUNT(*) AS n FROM process p
         WHERE NOT EXISTS (
           SELECT 1 FROM edges e WHERE e.rel = 'SPAWNS' AND e.src = p.key)
     """,
-    # MATCH (t:Trace)-[:HAS_PROCESS]->(p) RETURN t, count(p) ORDER BY count DESC
+    # MATCH (t:Trace)-[:HAS_PROCESS]->(p) RETURN t, count(p) AS n
+    # ORDER BY n DESC, t LIMIT 20
     "busiest_traces": """
         SELECT e.src AS trace_id, COUNT(*) AS n_processes
         FROM edges e WHERE e.rel = 'HAS_PROCESS'
         GROUP BY e.src ORDER BY n_processes DESC, trace_id LIMIT 20
     """,
-    # MATCH (p)-[:SET_REG_VALUE]->(rv)-[:UNDER_KEY]->(rk)
-    # WHERE rk.path CONTAINS 'Run' RETURN p.image, rv.path
+    # MATCH (p:Process)-[:SET_REG_VALUE]->(rv)-[:UNDER_KEY]->(rk)
+    # WHERE lower(rk.key) CONTAINS 'run' RETURN p.image, rv
     "run_key_persistence": """
         SELECT p.image, srv.dst AS value_path
         FROM edges srv

@@ -1,6 +1,6 @@
-"""Cypher front-end tests: the reference's analyst language compiled to
-DataFrame plans (operators/cypher.py), checked against hand-built
-GraphQuery/DataFrame equivalents on a process-tree fixture."""
+"""Cypher front-end tests: the reference's analyst language lowered to
+one Spark SQL statement (operators/cypher.py), checked against
+hand-built GraphQuery/DataFrame equivalents on a process-tree fixture."""
 
 from __future__ import annotations
 
@@ -852,3 +852,82 @@ def test_exists_multi_hop_chain(spark):
         "MATCH (a)-[:R]->(b) WHERE EXISTS { (b)-[:S]-(m) } RETURN a, b"
     ).collect())
     assert got == [("w", "x")]
+
+
+@pytest.fixture(scope="module")
+def two_trees(spark):
+    """SPAWNS a→b and x→y; only b created a file (f1)."""
+    nodes = spark.createDataFrame(
+        [("Process", k) for k in "abxy"] + [("File", "f1")], ["label", "key"]
+    )
+    edges = spark.createDataFrame(
+        [("SPAWNS", "a", "b", 1), ("SPAWNS", "x", "y", 1),
+         ("CREATED_FILE", "b", "f1", 11)],
+        ["rel", "src", "dst", "event_id"],
+    )
+    return GraphQuery(nodes=nodes, edges=edges)
+
+
+def test_optional_match_where_restricts_only_the_optional_side(two_trees):
+    """A WHERE after OPTIONAL MATCH belongs to the OPTIONAL MATCH, even
+    when it names an outer variable: an outer row it rejects keeps its
+    NULLs instead of disappearing."""
+    rows = cypher(
+        two_trees,
+        "MATCH (a:Process)-[:SPAWNS]->(b:Process) "
+        "OPTIONAL MATCH (b)-[:CREATED_FILE]->(f:File) WHERE a = 'a' "
+        "RETURN a, b, f",
+    ).collect()
+    assert sorted((r.a, r.b, r.f) for r in rows) == [
+        ("a", "b", "f1"), ("x", "y", None),
+    ]
+
+
+def test_each_where_attaches_to_the_clause_it_follows(two_trees):
+    """MATCH … WHERE … OPTIONAL MATCH … WHERE …: the first WHERE filters
+    the MATCH rows, the second the optional side."""
+    q = (
+        "MATCH (a:Process)-[:SPAWNS]->(b:Process) WHERE b <> '{b}' "
+        "OPTIONAL MATCH (b)-[:CREATED_FILE]->(f:File) WHERE f = '{f}' "
+        "RETURN a, b, f"
+    )
+
+    def run(b, f):
+        rows = cypher(two_trees, q.format(b=b, f=f)).collect()
+        return sorted((r.a, r.b, r.f) for r in rows)
+
+    assert run("zz", "f1") == [("a", "b", "f1"), ("x", "y", None)]
+    assert run("zz", "f9") == [("a", "b", None), ("x", "y", None)]
+    assert run("y", "f1") == [("a", "b", "f1")]
+
+
+def test_statement_keeps_the_callers_cached_tables(spark):
+    """cypher() and find() hand the graph tables to spark.sql as frame
+    arguments, whose temp views spark.sql drops again; a table the
+    caller persisted stays cached, so later reads still scan the cache
+    instead of recomputing the table."""
+    from pyspark import StorageLevel
+
+    nodes = spark.createDataFrame(
+        [("Process", "a"), ("Process", "b")], ["label", "key"]
+    ).persist()
+    edges = spark.createDataFrame(
+        [("SPAWNS", "a", "b", 1)], ["rel", "src", "dst", "event_id"]
+    ).persist()
+    process = spark.createDataFrame([("a", "a.exe"), ("b", "b.exe")], ["key", "image"]).persist()
+    try:
+        for t in (nodes, edges, process):
+            t.count()
+        gq = GraphQuery(nodes=nodes, edges=edges)
+        rows = gq.cypher(
+            "MATCH (a:Process)-[:SPAWNS]->(b:Process) RETURN a, b.image AS image",
+            props={"Process": process},
+        ).collect()
+        assert [(r.a, r.image) for r in rows] == [("a", "b.exe")]
+        assert gq.find("(a)-[SPAWNS]->(b)").count() == 1
+        assert [t.storageLevel for t in (nodes, edges, process)] == [
+            StorageLevel.MEMORY_AND_DISK_DESER
+        ] * 3
+    finally:
+        for t in (nodes, edges, process):
+            t.unpersist()

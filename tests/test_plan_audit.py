@@ -2103,3 +2103,158 @@ def test_local_checkpoint_only_inside_checkpoint_eager():
     ]
     assert hits, "the primitive itself must freeze with localCheckpoint"
     assert all(p == "operators/order.py" and i in inside for p, i in hits), hits
+
+
+def test_cypher_builds_no_dataframe_plan():
+    """One compile path: operators/cypher.py lowers a Cypher read to SQL
+    text and builds no DataFrame plan of its own — no DataFrame
+    join/filter/select/… call and no pyspark.sql.functions, so a second
+    (DataFrame-chain) path cannot creep back beside the statement."""
+    import ast
+    import pathlib
+
+    import graphdb_neo4j_spark
+
+    src = pathlib.Path(graphdb_neo4j_spark.__file__).parent / "operators" / "cypher.py"
+    tree = ast.parse(src.read_text())
+
+    def is_text(node) -> bool:  # "sep".join(...) builds SQL text
+        if isinstance(node, ast.IfExp):
+            return is_text(node.body) and is_text(node.orelse)
+        return isinstance(node, ast.Constant) and isinstance(node.value, str)
+
+    frame_calls = {
+        "join", "filter", "where", "select", "selectExpr", "withColumn",
+        "groupBy", "agg", "union", "unionByName", "orderBy", "distinct",
+        "expr", "col", "explode", "drop", "limit", "offset",
+    }
+    bad = [
+        (n.lineno, n.func.attr)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+        and n.func.attr in frame_calls
+        and not (n.func.attr == "join" and is_text(n.func.value))
+    ]
+    bad += [
+        (n.lineno, a.name)
+        for n in ast.walk(tree)
+        if isinstance(n, ast.ImportFrom) and (n.module or "").startswith("pyspark.sql")
+        for a in n.names
+        if a.name == "functions"
+    ]
+    assert not bad, bad
+
+
+def _job_kinds(spark, run):
+    """(result, kinds) — ``run()``'s result and a Counter of the actions
+    behind the Spark jobs it started (``localCheckpoint``, ``head``,
+    ``count``, ``isEmpty`` …), read from each job's first stage once
+    the listener bus has drained.  AQE is off for the call: adaptive
+    query stages run as jobs of their own whose names carry no action,
+    and their number depends on timing."""
+    import uuid
+    from collections import Counter
+
+    sc = spark.sparkContext
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    group = f"audit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    st = sc.statusTracker()
+    kinds = Counter(
+        st.getStageInfo(min(st.getJobInfo(j).stageIds)).name.split(" at ")[0]
+        for j in st.getJobIdsForGroup(group)
+    )
+    return out, kinds
+
+
+def test_cypher_reads_run_no_job_until_the_caller_acts(spark):
+    """cypher() only builds the statement: the lookup, 2-hop motif,
+    SPAWNS*1..3 and OPTIONAL MATCH reads of the perfbench ``investigate``
+    op start no Spark job until the caller collects (only a
+    shortestPath's traversal kernel runs at call time)."""
+    from graphdb_neo4j_spark.operators.cypher import cypher
+    from graphdb_neo4j_spark.operators.graph import GraphQuery
+
+    procs = ["p0", "p1", "p2", "p3"]
+    gq = GraphQuery(
+        nodes=spark.createDataFrame(
+            [("Process", k) for k in procs] + [("File", "f1"), ("Ip", "1.2.3.4")],
+            ["label", "key"],
+        ),
+        edges=spark.createDataFrame(
+            [("SPAWNS", "p0", "p1", 1), ("SPAWNS", "p1", "p2", 1),
+             ("SPAWNS", "p2", "p3", 1), ("CREATED_FILE", "p1", "f1", 11),
+             ("CONNECTED_TO", "p2", "1.2.3.4", 3)],
+            ["rel", "src", "dst", "event_id"],
+        ),
+    )
+    props = {"Process": spark.createDataFrame(
+        [(k, f"{k}.exe") for k in procs], ["key", "image"]
+    )}
+    reads = {  # perfbench/workloads.py Investigate.op
+        "MATCH (p:Process)-[:CREATED_FILE]->(f:File) "
+        "WHERE p = 'p1' RETURN f, p.image AS image": [("f1", "p1.exe")],
+        "MATCH (a:Process)-[:SPAWNS]->(b:Process)-[:CONNECTED_TO]->(ip:Ip) "
+        "WHERE ip = '1.2.3.4' RETURN a, b": [("p1", "p2")],
+        "MATCH (a:Process)-[:SPAWNS*1..3]->(d:Process) "
+        "WHERE a = 'p0' RETURN DISTINCT d": [("p1",), ("p2",), ("p3",)],
+        "MATCH (a:Process)-[:SPAWNS]->(b:Process) WHERE a = 'p0' "
+        "OPTIONAL MATCH (b)-[:CREATED_FILE]->(f:File) RETURN b, f": [("p1", "f1")],
+    }
+    for q, want in reads.items():
+        df, kinds = _job_kinds(spark, lambda: cypher(gq, q, props=props))
+        assert not kinds, (q, kinds)
+        assert sorted(map(tuple, df.collect())) == want, q
+
+
+def test_shortest_path_backtrace_needs_no_tree_count(spark):
+    """A two-pinned shortestPath runs only its round freezes and the
+    reads of the meet distance, meet node and two half-paths: each
+    backtrace is bounded by its side's BFS depth, so neither runs a
+    whole-tree ``count`` job (the parent revision ran two)."""
+    from graphdb_neo4j_spark.operators.traversal import shortest_path_bidirectional
+
+    _, kinds = _job_kinds(
+        spark,
+        lambda: shortest_path_bidirectional(_chain(spark, 6), "v000", "v006"),
+    )
+    assert set(kinds) == {"localCheckpoint", "head"}, kinds
+    assert kinds["localCheckpoint"] == 28, kinds
+
+
+def test_peeling_kernels_run_only_their_round_freezes(spark):
+    """ColorSCC (trim and outer loop), topological levels, MIS, greedy
+    coloring and greedy matching read each round's emptiness from an
+    Observation on the frame the round freezes: every job they start is
+    a freeze, none a separate ``isEmpty`` probe."""
+    from graphdb_neo4j_spark.operators.traversal import (
+        greedy_coloring,
+        greedy_matching,
+        maximal_independent_set,
+        strongly_connected_components,
+        topological_levels,
+    )
+
+    e = [(f"a{i}", f"a{j}") for i in range(4) for j in range(i + 1, 4)]
+    e += [("a3", "b0"), ("b0", "b1"), ("b1", "b0"), ("b1", "c0")]
+    g = spark.createDataFrame(e, ["src", "dst"])
+    nodes = g.select(F.col("src").alias("key")).union(
+        g.select(F.col("dst").alias("key"))
+    ).distinct()
+    for name, run in {
+        "scc": lambda: strongly_connected_components(nodes, g),
+        "topological_levels": lambda: topological_levels(nodes, g),
+        "mis": lambda: maximal_independent_set(nodes, g),
+        "coloring": lambda: greedy_coloring(nodes, g),
+        "matching": lambda: greedy_matching(g),
+    }.items():
+        _, kinds = _job_kinds(spark, run)
+        assert set(kinds) == {"localCheckpoint"}, (name, kinds)

@@ -63,6 +63,12 @@ is interpreted row-by-row):
 * backtick escapes throughout: property names (``p.`sigma.alert```,
   exact column name, dots literal) and labels / relationship types
   (``(a:`My Label`)-[:`HAS PART`]->(b)`` — data values once unquoted).
+* string literals in single or double quotes with backslash escapes
+  (``'it\\'s'``, ``"y, z.exe"``).  One scanner skips strings and
+  backticked names and tracks bracket depth; a keyword splits a clause
+  only at depth 0 as a whole word (``n_match``, ``p.limit`` and
+  ``$skip`` are names).  Write templates (operators/cypher_write.py)
+  split and parse with the same scanner and pattern grammar.
 
 Lowering: :func:`cypher` turns the parsed query into ONE SQL text and
 runs it with a single ``spark.sql(text, args=…, **frames)``.  Hops,
@@ -82,6 +88,7 @@ graph tables (and a ``shortestPath``'s rows) go in as frame arguments.
 
 from __future__ import annotations
 
+import functools
 import itertools
 import re
 from collections.abc import Iterator
@@ -103,98 +110,126 @@ from graphdb_neo4j_spark.operators.graph import (
 )
 
 
-# -- clause-level splitting (quote-aware) -----------------------------------
+# -- the top-level scanner (shared with operators/cypher_write.py) -----------
 
-_CLAUSE_KEYWORDS = [
-    "OPTIONAL MATCH",
-    "MATCH",
-    "WHERE",
-    "WITH",
-    "RETURN",
-    "UNWIND",
-    "ORDER BY",
-    "SKIP",
-    "LIMIT",
-]
+_READ_CLAUSES = (
+    "OPTIONAL MATCH", "MATCH", "WHERE", "WITH", "RETURN", "UNWIND", "ORDER BY",
+    "SKIP", "LIMIT",
+)
+# infix operators that end in a clause keyword: consumed whole, never split on
+_OPERATORS = ("STARTS WITH", "ENDS WITH")
+_WORD = re.compile(r"[A-Za-z0-9_]")
 
 
-def _split_clauses(q: str) -> list[tuple[str, str]]:
-    """[(keyword, body)] in source order; single-quoted strings AND
-    brace blocks (EXISTS { … WHERE … }) are opaque to keyword
-    detection."""
-    # positions of every top-level keyword occurrence
-    upper = q.upper()
-    hits: list[tuple[int, str]] = []
-    in_str = False
-    depth = 0
-    i = 0
-    while i < len(upper):
-        ch = q[i]
-        if ch == "'":
-            in_str = not in_str
+def _scan(s: str) -> Iterator[tuple[int, int]]:
+    """``(i, depth)`` for every character of ``s`` outside ``'…'`` /
+    ``"…"`` string literals (backslash escapes honored) and backticked
+    names; ``depth`` counts the ``()[]{}`` open around it, a bracket
+    itself being reported at the depth outside it.  The one place the
+    read and write grammars keep quote or bracket state."""
+    depth, i = 0, 0
+    while i < len(s):
+        ch = s[i]
+        if ch in "'\"`":
             i += 1
-            continue
-        if not in_str and ch == "{":
-            depth += 1
-        elif not in_str and ch == "}":
-            depth -= 1
-        if not in_str and depth == 0:
-            for kw in _CLAUSE_KEYWORDS:
-                end = i + len(kw)
-                if (
-                    upper.startswith(kw, i)
-                    and (i == 0 or not upper[i - 1].isalnum())
-                    and (end >= len(upper) or not upper[end].isalnum())
-                ):
-                    # "MATCH" must not re-match inside "OPTIONAL MATCH"
-                    if kw == "MATCH" and hits and hits[-1][1] == "OPTIONAL MATCH" and (
-                        i - hits[-1][0] == len("OPTIONAL ")
-                    ):
-                        break
-                    # the WITH in "STARTS WITH" / "ENDS WITH" is an
-                    # operator, not a clause boundary
-                    if kw == "WITH":
-                        before = upper[:i].rstrip()
-                        if before.endswith("STARTS") or before.endswith("ENDS"):
-                            break
-                    hits.append((i, kw))
-                    i = end - 1
-                    break
+            while i < len(s) and s[i] != ch:
+                i += 2 if s[i] == "\\" and ch != "`" else 1
+        else:
+            if ch in ")]}":
+                depth -= 1
+            yield i, depth
+            if ch in "([{":
+                depth += 1
         i += 1
-    if not hits or hits[0][0] != 0:
-        raise ValueError("query must start with MATCH")
-    out = []
-    for n, (pos, kw) in enumerate(hits):
-        end = hits[n + 1][0] if n + 1 < len(hits) else len(q)
-        out.append((kw, q[pos + len(kw):end].strip()))
+
+
+@functools.lru_cache(maxsize=None)
+def _separators(seps: tuple[str, ...]) -> re.Pattern:
+    words = sorted({*seps, *_OPERATORS}, key=len, reverse=True)
+    return re.compile("|".join(
+        r"\s+".join(map(re.escape, w.split()))
+        + ("(?![A-Za-z0-9_])" if w[-1].isalnum() else "")
+        for w in words
+    ), re.I)
+
+
+def _split_top(s: str, seps: tuple[str, ...]) -> list[tuple[str | None, str]]:
+    """Split ``s`` at every top-level separator in ``seps`` (a keyword,
+    or punctuation like ``,``) into ``[(None, head), (sep, text), …]``.
+    Top level is bracket depth 0 outside strings and backticks.  A
+    keyword matches case-insensitively, longest first (``OPTIONAL
+    MATCH`` before ``MATCH``), with any whitespace between its words,
+    no word character on either side and no ``.`` or ``$`` just before
+    it — so ``n_match``, ``p.delete`` and ``$limit`` are names;
+    ``STARTS WITH`` / ``ENDS WITH`` are operators, never split on."""
+    rx, out, sep, start, resume = _separators(seps), [], None, 0, 0
+    for i, depth in _scan(s):
+        if depth or i < resume:
+            continue
+        m = rx.match(s, i)
+        if m is None or (
+            m[0][0].isalpha() and i and (_WORD.match(s[i - 1]) or s[i - 1] in ".$")
+        ):
+            continue
+        resume = m.end()
+        word = " ".join(m[0].upper().split())
+        if word not in _OPERATORS:
+            out.append((sep, s[start:i]))
+            sep, start = word, m.end()
+    out.append((sep, s[start:]))
     return out
 
 
-def _split_top_commas(s: str) -> list[str]:
-    """Split on commas outside (), [], {}, and quotes."""
-    parts, depth, in_str, cur = [], 0, False, []
-    for ch in s:
-        if ch == "'":
-            in_str = not in_str
-        if not in_str:
-            if ch in "([{":
-                depth += 1
-            elif ch in ")]}":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    if "".join(cur).strip():
-        parts.append("".join(cur).strip())
-    return parts
+def _split_clauses(q: str, keywords: tuple[str, ...]) -> list[tuple[str, str]]:
+    """[(keyword, body)] in source order — reads and write templates
+    split alike, each with its own keyword list."""
+    (_, head), *clauses = _split_top(q, keywords)
+    if head.strip() or not clauses:
+        raise ValueError(f"query must start with a clause keyword: {q[:40]!r}")
+    return [(kw, body.strip()) for kw, body in clauses]
+
+
+def _items(s: str) -> list[str]:
+    """The non-empty top-level comma-separated items of ``s``."""
+    return [p.strip() for _, p in _split_top(s, (",",)) if p.strip()]
+
+
+def _closing(s: str, start: int) -> int | None:
+    """Index of the bracket that closes the one opening at ``s[start]``."""
+    return next((start + i for i, depth in _scan(s[start:]) if i and not depth), None)
+
+
+def _has_top_or(s: str) -> bool:
+    return len(_split_top(s, ("OR",))) > 1
+
+
+def _conjuncts(where: str) -> list[str]:
+    """Top-level AND conjuncts; the whole expression when a top-level OR
+    would make the split change its meaning."""
+    if _has_top_or(where):
+        return [where]
+    return [p.strip() for _, p in _split_top(where, ("AND",)) if p.strip()]
+
+
+def _parse_map(text: str | None) -> dict[str, str]:
+    """An inline ``{k: v, …}`` map → {name: value text}, backticks
+    stripped from the names."""
+    out = {}
+    for kv in _items(text.strip()[1:-1]) if text else []:
+        k, sep, v = kv.partition(":")
+        if not sep or not k.strip():
+            raise ValueError(f"bad property map entry {kv!r}")
+        out[_unq(k.strip())] = v.strip()
+    return out
+
 
 # -- pattern parsing ---------------------------------------------------------
 
+# a string literal (backslash escapes honored) or a backticked name
+_QUOTED = r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"|`[^`]*`"
 # an inline property map; quoted values may hold braces (Sysmon GUIDs
 # are written '{...}')
-_MAP = r"\{(?:[^}'\"]|'[^']*'|\"[^\"]*\")*\}"
+_MAP = rf"\{{(?:[^}}'\"`]|{_QUOTED})*\}}"
 _NODE_RE = re.compile(
     r"\(\s*(?P<var>\w+)?\s*(?::\s*(?P<label>\w+|`[^`]+`))?\s*"
     rf"(?P<props>{_MAP})?\s*\)"
@@ -257,19 +292,11 @@ def _parse_patterns(
             if labels.get(var, lab) != lab:
                 raise ValueError(f"conflicting labels for {var!r}")
             labels[var] = lab
-        if m["props"]:
-            inner = m["props"].strip()[1:-1].strip()
-            if inner:
-                for kv in _split_top_commas(inner):
-                    k, _, v = kv.partition(":")
-                    if not _:
-                        raise ValueError(f"bad property map entry {kv!r}")
-                    k, v = k.strip(), v.strip()
-                    col = var if k == "key" else f"{var}.{k}"
-                    preds.append(f"{col} = {v}")
+        for k, v in _parse_map(m["props"]).items():
+            preds.append(f"{var if k == 'key' else f'{var}.`{k}`'} = {v}")
         return var
 
-    for pat in _split_top_commas(body):
+    for pat in _items(body):
         sp = _SSP_RE.match(pat)
         if sp:
             if into_optional:
@@ -298,20 +325,14 @@ def _parse_patterns(
             ev = em["ev"]
             # inline edge-property map [e:REL {prop: v}] — desugars to
             # an edge-var predicate (auto-naming the edge if needed)
-            if em["eprops"]:
-                einner = em["eprops"].strip()[1:-1].strip()
-                if einner and vspec is not None:
-                    raise ValueError(
-                        "property maps on variable-length relationships "
-                        "are not supported"
-                    )
-                if einner:
-                    ev = ev or f"__eanon{next(anon)}"
-                    for kv in _split_top_commas(einner):
-                        k, sep, v = kv.partition(":")
-                        if not sep:
-                            raise ValueError(f"bad property map entry {kv!r}")
-                        preds.append(f"{ev}.{k.strip()} = {v.strip()}")
+            eprops = _parse_map(em["eprops"])
+            if eprops and vspec is not None:
+                raise ValueError(
+                    "property maps on variable-length relationships are not supported"
+                )
+            if eprops:
+                ev = ev or f"__eanon{next(anon)}"
+                preds += [f"{ev}.`{k}` = {v}" for k, v in eprops.items()]
             rel, span = _unq(em["rel"]), _parse_varlen(vspec, pat)
             if em["back"]:
                 hops.append(_Hop(nxt, rel, prev, ev, span))
@@ -336,19 +357,12 @@ _SSP_RE = re.compile(
 
 def _key_pin(props_text: str | None) -> str | None:
     """Extract the literal from an endpoint's ``{key: 'lit'}`` map."""
-    if not props_text:
+    v = _parse_map(props_text).get("key")
+    if v is None:
         return None
-    inner = props_text.strip()[1:-1].strip()
-    for kv in _split_top_commas(inner):
-        k, _, v = kv.partition(":")
-        if k.strip() == "key":
-            v = v.strip()
-            if not (v.startswith("'") and v.endswith("'")):
-                raise ValueError(
-                    f"shortestPath endpoint key must be a string literal, got {v!r}"
-                )
-            return v[1:-1]
-    return None
+    if v[:1] not in ("'", '"') or not re.fullmatch(_QUOTED, v):
+        raise ValueError(f"shortestPath endpoint key must be a string literal, got {v!r}")
+    return _literal(v)
 
 
 def _parse_shortest_path(
@@ -374,15 +388,7 @@ def _parse_shortest_path(
         raise ValueError("shortestPath binds a path, not an edge variable")
     if em["vspec"] is None:
         raise ValueError("shortestPath needs a variable-length hop (e.g. *, *..8)")
-    s = em["vspec"][1:].replace(" ", "")
-    lo, hi = 1, None
-    if s:
-        if ".." in s:
-            lo_s, hi_s = s.split("..", 1)
-            lo = int(lo_s) if lo_s else 1
-            hi = int(hi_s) if hi_s else None
-        else:
-            lo = hi = int(s)
+    lo, hi = _parse_varlen(em["vspec"][1:], inner)
     src, dst = m1["var"] or "__sp_src", m2["var"] or "__sp_dst"
     for m in (m1, m2):
         var = m["var"] or (src if m is m1 else dst)
@@ -402,60 +408,6 @@ def _parse_shortest_path(
     )
 
 
-def _split_top_and(s: str) -> list[str]:
-    """Split a boolean expression on top-level AND (outside parens,
-    brackets, and quotes) — the conjunct granularity at which EXISTS
-    subpatterns are lifted into semi/anti joins."""
-    parts, depth, in_str, cur = [], 0, False, []
-    i = 0
-    up = s.upper()
-    while i < len(s):
-        ch = s[i]
-        if ch == "'":
-            in_str = not in_str
-        if not in_str:
-            if ch in "([{":
-                depth += 1
-            elif ch in ")]}":
-                depth -= 1
-            elif (
-                depth == 0
-                and up.startswith("AND", i)
-                and (i == 0 or not up[i - 1].isalnum())
-                and (i + 3 >= len(up) or not up[i + 3].isalnum())
-            ):
-                parts.append("".join(cur).strip())
-                cur = []
-                i += 3
-                continue
-        cur.append(ch)
-        i += 1
-    if "".join(cur).strip():
-        parts.append("".join(cur).strip())
-    return parts
-
-
-def _has_top_level_or(s: str) -> bool:
-    depth, in_str = 0, False
-    up = s.upper()
-    for i, ch in enumerate(s):
-        if ch == "'":
-            in_str = not in_str
-        if not in_str:
-            if ch in "([{":
-                depth += 1
-            elif ch in ")]}":
-                depth -= 1
-            elif (
-                depth == 0
-                and up.startswith("OR", i)
-                and (i == 0 or not up[i - 1].isalnum())
-                and (i + 2 >= len(up) or not up[i + 2].isalnum())
-            ):
-                return True
-    return False
-
-
 _EXISTS_RE = re.compile(
     r"^(?P<neg>NOT\s+)?EXISTS\s*\{(?P<pat>.+)\}$|"
     r"^(?P<neg2>NOT\s+)?EXISTS\s*\(\s*(?P<pat2>\(.+\))\s*\)$",
@@ -468,8 +420,8 @@ _BARE_PAT_RE = re.compile(
     re.I | re.S,
 )
 
-_SIZE_HEAD = re.compile(r"\bsize\s*\(", re.I)
-_COUNT_HEAD = re.compile(r"\bCOUNT\s*\{", re.I)
+_COUNT_HEAD = re.compile(r"\b(?:size\s*\(|COUNT\s*\{)", re.I)
+_HOP_TEXT = re.compile(r"\)\s*(?:<-|-)\s*\[")
 
 
 def _extract_pattern_counts(
@@ -482,41 +434,26 @@ def _extract_pattern_counts(
     spelling)."""
     if not text:
         return text
-    out = text
-    changed = True
-    while changed:
-        changed = False
-        for head in (_SIZE_HEAD, _COUNT_HEAD):
-            m = None
-            for cand in head.finditer(out):
-                start = cand.end()
-                depth = 1
-                i = start
-                while i < len(out) and depth:
-                    if out[i] in "([{":
-                        depth += 1
-                    elif out[i] in ")]}":
-                        depth -= 1
-                    i += 1
-                inner = out[start: i - 1].strip()
-                if re.search(r"\)\s*(?:<-|-)\s*\[", inner):
-                    m = (cand.start(), i, inner)
-                    break
-            if m is not None:
-                col = f"__pcnt{len(specs)}"
-                specs.append((col, m[2]))
-                out = out[: m[0]] + f"coalesce({col}, 0)" + out[m[1]:]
-                changed = True
-                break
-    return out
-
+    out, pos = [], 0
+    for m in _COUNT_HEAD.finditer(text):
+        close = _closing(text, m.end() - 1) if m.start() >= pos else None
+        if close is not None and _HOP_TEXT.search(text, m.end(), close):
+            col = f"__pcnt{len(specs)}"
+            specs.append((col, text[m.end():close].strip()))
+            out.append(f"{text[pos:m.start()]}coalesce({col}, 0)")
+            pos = close + 1
+    return "".join(out) + text[pos:]
 
 
 # -- expression rewriting ----------------------------------------------------
 
 _PROP_REF = re.compile(r"\b(\w+)\s*\.\s*(\w+\b|`[^`]+`)")
-_STRING = re.compile(r"'[^']*'|\"[^\"]*\"")
 _ESCAPES = {"n": "\n", "t": "\t", "r": "\r", "b": "\b", "0": "\0"}
+
+
+def _literal(quoted: str) -> str:
+    """A quoted string literal's value, backslash escapes decoded."""
+    return re.sub(r"\\(.)", lambda e: _ESCAPES.get(e[1], e[1]), quoted[1:-1])
 
 
 def _rewrite_expr(
@@ -533,7 +470,7 @@ def _rewrite_expr(
     refs: set[tuple[str, str]] = set()
 
     def lit(m: re.Match) -> str:
-        return param(re.sub(r"\\(.)", lambda e: _ESCAPES.get(e[1], e[1]), m[0][1:-1]))
+        return m[0] if m[0][0] == "`" else param(_literal(m[0]))
 
     def prop(m: re.Match) -> str:
         var, p = m.group(1), m.group(2)
@@ -547,7 +484,7 @@ def _rewrite_expr(
             return f"`{var}.{pn}`"
         return m.group(0)  # function call like round(x, 2) — leave alone
 
-    out = _PROP_REF.sub(prop, _STRING.sub(lit, expr))
+    out = _PROP_REF.sub(prop, re.sub(_QUOTED, lit, expr))
     out = re.sub(r"\bSTARTS\s+WITH\b", "STARTSWITH_OP", out, flags=re.I)
     out = re.sub(r"\bENDS\s+WITH\b", "ENDSWITH_OP", out, flags=re.I)
     out = re.sub(r"\bCONTAINS\b", "CONTAINS_OP", out, flags=re.I)
@@ -605,8 +542,7 @@ def _is_agg(expr: str) -> bool:
     string literals) — ``CASE WHEN count(*) > 1 …`` or
     ``round(avg(x), 2)`` are aggregate RETURN items, not grouping
     keys, exactly as Cypher's implicit-grouping rule treats them."""
-    without_strings = "".join(re.split(r"'[^']*'", expr))
-    return bool(_AGG_RE.search(without_strings))
+    return bool(_AGG_RE.search(re.sub(_QUOTED, "''", expr)))
 
 
 def _default_alias(expr: str) -> str:
@@ -723,12 +659,6 @@ def _add_refs(into: dict[str, set[str]], refs) -> None:
         into.setdefault(var, set()).add(p)
 
 
-def _conjuncts(where: str) -> list[str]:
-    """Top-level AND conjuncts; the whole expression when a top-level OR
-    would make the split change its meaning."""
-    return [where] if _has_top_level_or(where) else _split_top_and(where)
-
-
 _PATTERN_PRED = re.compile(r"\bEXISTS\b|\)\s*(?:<-|-)\s*\[", re.I)
 
 
@@ -756,18 +686,7 @@ class _Lowering:
             # carried scope — Neo4j's post-UNION-processing idiom.  Carried
             # columns flow as unlabeled variables; re-label (re-MATCH)
             # before dereferencing properties on them.
-            depth, in_str, close = 0, False, None
-            for i in range(m.end() - 1, len(q)):
-                ch = q[i]
-                if ch == "'":
-                    in_str = not in_str
-                elif not in_str and ch == "{":
-                    depth += 1
-                elif not in_str and ch == "}":
-                    depth -= 1
-                    if depth == 0:
-                        close = i
-                        break
+            close = _closing(q, m.end() - 1)
             if close is None:
                 raise ValueError("CALL { … }: unbalanced braces")
             rest = q[close + 1:].strip()
@@ -776,13 +695,16 @@ class _Lowering:
                                  "ending in RETURN")
             inner = self.query(q[m.end(): close]).rel
             scope = _Scope(inner, {c: None for c in inner.cols})
-            segments = _segment_clauses(_split_clauses(rest), self.anon)
+            segments = _segment_clauses(_split_clauses(rest, _READ_CLAUSES), self.anon)
             return self.pipeline(segments, scope)
-        arms, is_all = _split_union(q)
-        if len(arms) > 1:
+        (_, first), *more = _split_top(q, ("UNION ALL", "UNION"))
+        if more:
+            kinds = {kind for kind, _ in more}
+            if len(kinds) > 1:
+                raise ValueError("cannot mix UNION and UNION ALL in one query")
             # arms aligned by column name: each is re-projected in the
             # first arm's column order
-            rels = [self.query(arm).rel for arm in arms]
+            rels = [self.query(arm).rel for arm in [first, *(a for _, a in more)]]
             cols = rels[0].cols
             for r in rels[1:]:
                 if set(r.cols) != set(cols):
@@ -791,11 +713,11 @@ class _Lowering:
                         f"{sorted(cols)} vs {sorted(r.cols)}"
                     )
             sel = ", ".join(map(_q, cols))
-            text = (" UNION ALL " if is_all else " UNION ").join(
+            text = (" UNION ALL " if "UNION ALL" in kinds else " UNION ").join(
                 f"SELECT {sel} FROM ({r.text}) {self.sql.alias()}" for r in rels
             )
             return _Scope(_Rel(text, cols))
-        segments = _segment_clauses(_split_clauses(q), self.anon)
+        segments = _segment_clauses(_split_clauses(q, _READ_CLAUSES), self.anon)
         first = segments[0].parsed
         if not first.hops and not first.single_nodes and not first.paths:
             raise ValueError("query needs at least one MATCH pattern")
@@ -862,12 +784,12 @@ class _Lowering:
             if not _PATTERN_PRED.search(w):
                 conds.append(expr(w))
                 continue
-            if _has_top_level_or(w):
+            if _has_top_or(w):
                 raise ValueError(
                     "EXISTS must be a top-level AND conjunct "
                     "(OR over EXISTS is not supported)"
                 )
-            for conj in _split_top_and(w):
+            for conj in _conjuncts(w):
                 m = _EXISTS_RE.match(conj.strip())
                 bp = None if m else _BARE_PAT_RE.match(conj.strip())
                 if m or bp:
@@ -876,10 +798,8 @@ class _Lowering:
                     # optional trailing WHERE inside the braces — Cypher's
                     # correlated existential subquery form:
                     #   EXISTS { (p)-[:R]->(x:L) WHERE x.prop = v }
-                    wm = None if bp else re.search(r"\bWHERE\b", pat, flags=re.I)
-                    inner = []
-                    if wm:
-                        pat, inner = pat[: wm.start()].strip(), _conjuncts(pat[wm.end():])
+                    (_, pat), *cond = _split_top(pat, ("WHERE",))
+                    inner = [c for _, text in cond for c in _conjuncts(text)]
                     sp = _Parsed()
                     _parse_patterns(pat, sp, False, self.anon)
                     if sp.paths or sp.single_nodes:
@@ -917,10 +837,10 @@ class _Lowering:
                 uexpr = re.sub(rf"\bnodes\s*\(\s*{pv}\s*\)", pv, uexpr, flags=re.I)
             unwinds.append((expr(uexpr), uvar))
 
-        distinct = proj.strip().upper().startswith("DISTINCT")
-        rb = proj.strip()[len("DISTINCT"):] if distinct else proj
+        distinct = re.match(r"\s*DISTINCT(?![A-Za-z0-9_])", proj, flags=re.I)
+        rb = proj[distinct.end():] if distinct else proj
         items: list[tuple[str, str, str, bool]] = []  # (raw, sql, alias, is_agg)
-        for item in _split_top_commas(rb.strip()):
+        for item in _items(rb):
             m = re.search(r"\s+AS\s+(\w+)\s*$", item, flags=re.I)
             raw = item[: m.start()].strip() if m else item.strip()
             alias = m.group(1) if m else (
@@ -928,7 +848,7 @@ class _Lowering:
             )
             items.append((raw, expr(raw), alias, _is_agg(raw)))
         order = []
-        for item in _split_top_commas(seg.order or ""):
+        for item in _items(seg.order or ""):
             desc = bool(re.search(r"\s+DESC\s*$", item, flags=re.I))
             item = re.sub(r"\s+(ASC|DESC)\s*$", "", item, flags=re.I)
             order.append(expr(item) + (" DESC" if desc else ""))
@@ -1131,51 +1051,6 @@ class _Lowering:
                    f"{self.sql.alias()}", keep)
         return _join(self.sql, rel, sub, how, shared,
                      " AND ".join(f"({c})" for c in s.on) or None)
-
-
-def _split_union(q: str) -> tuple[list[str], bool]:
-    """Split on top-level ``UNION [ALL]`` (outside quotes and all
-    brackets).  Returns (parts, is_union_all).  Neo4j forbids mixing
-    UNION and UNION ALL in one query; so do we."""
-    upper = q.upper()
-    parts: list[str] = []
-    kinds: list[bool] = []  # True = ALL
-    depth = 0
-    in_str = False
-    start = 0
-    i = 0
-    while i < len(q):
-        ch = q[i]
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str and ch in "({[":
-            depth += 1
-        elif not in_str and ch in ")}]":
-            depth -= 1
-        if (
-            not in_str
-            and depth == 0
-            and upper.startswith("UNION", i)
-            and (i == 0 or not upper[i - 1].isalnum())
-            and (i + 5 >= len(upper) or not upper[i + 5].isalnum())
-        ):
-            parts.append(q[start:i])
-            rest = upper[i + 5:].lstrip()
-            is_all = rest.startswith("ALL") and (
-                len(rest) == 3 or not rest[3].isalnum()
-            )
-            kinds.append(is_all)
-            i += 5
-            if is_all:
-                i = upper.index("ALL", i) + 3
-            start = i
-            continue
-        i += 1
-    parts.append(q[start:])
-    if kinds and len(set(kinds)) > 1:
-        raise ValueError("cannot mix UNION and UNION ALL in one query")
-    return parts, bool(kinds and kinds[0])
-
 
 
 def cypher(

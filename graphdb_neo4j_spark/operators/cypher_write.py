@@ -45,6 +45,14 @@ Execution model (Spark-first, the whole point):
 * ``DELETE`` / ``DETACH DELETE`` compile to anti-joins; DETACH also
   removes incident edges in every relationship table.
 
+Parsing: a template is split into clauses, and its node and edge
+patterns and ``{k: v}`` maps are parsed, by the read grammar of
+`operators/cypher.py` (one quote-aware scanner, ``_NODE_RE`` /
+``_EDGE_RE``), so both sides accept the same literals.  The rules that
+hold only for writes are explicit checks: a node needs a variable and
+a label, MERGE / CREATE a key map, an edge joins two bound variables in
+one direction, and no edge is variable-length.
+
 100 TB shape: per label ONE union of narrow write projections + ONE
 window (shuffle on merge key); per rel the same on (src, dst).  Nothing
 row-at-a-time, nothing driver-side; store tables are plain DataFrames a
@@ -63,6 +71,15 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from graphdb_neo4j_spark.operators.cypher import (
+    _EDGE_RE,
+    _NODE_RE,
+    _items,
+    _parse_map,
+    _split_clauses,
+)
+from graphdb_neo4j_spark.operators.graph import _unq
+
 __all__ = ["GraphStore", "GraphWriter", "CypherWriteError"]
 
 
@@ -74,23 +91,13 @@ class CypherWriteError(ValueError):
 # parsing
 # --------------------------------------------------------------------------
 
-_NODE_PAT = re.compile(
-    r"^\(\s*(?P<var>[A-Za-z_]\w*)?\s*(?::\s*(?P<label>`[^`]+`|[A-Za-z_]\w*))?"
-    r"\s*(?:\{(?P<props>[^}]*)\})?\s*\)$"
-)
-_EDGE_PAT = re.compile(
-    r"^\(\s*(?P<a>[A-Za-z_]\w*)\s*\)\s*"
-    r"(?P<larr><-|-)\s*\[\s*(?P<evar>[A-Za-z_]\w*)?\s*:\s*"
-    r"(?P<rel>`[^`]+`|[A-Za-z_]\w*)\s*\]\s*(?P<rarr>->|-)\s*"
-    r"\(\s*(?P<b>[A-Za-z_]\w*)\s*\)$"
-)
 _SET_ITEM = re.compile(
     r"^(?P<var>[A-Za-z_]\w*)\.(?P<prop>`[^`]+`|[A-Za-z_]\w*)\s*=\s*(?P<expr>.+)$",
     re.S,
 )
 _PARAM = re.compile(r"\$([A-Za-z_]\w*)")
 
-_KEYWORDS = [
+_WRITE_CLAUSES = (
     "ON CREATE SET",
     "ON MATCH SET",
     "OPTIONAL MATCH",  # rejected later, but must split as its own clause
@@ -101,87 +108,7 @@ _KEYWORDS = [
     "DELETE",
     "REMOVE",
     "SET",
-]
-
-
-def _unbt(name: str) -> str:
-    return name[1:-1] if name.startswith("`") else name
-
-
-def _split_write_clauses(q: str) -> list[tuple[str, str]]:
-    """[(keyword, body)] in source order; single-quoted strings are
-    opaque (same scanner discipline as the read parser's
-    `cypher._split_clauses`)."""
-    upper = q.upper()
-    hits: list[tuple[int, str]] = []
-    in_str = False
-    i = 0
-    while i < len(upper):
-        if q[i] == "'":
-            in_str = not in_str
-            i += 1
-            continue
-        if not in_str:
-            for kw in _KEYWORDS:
-                end = i + len(kw)
-                if (
-                    upper.startswith(kw, i)
-                    and (i == 0 or not (upper[i - 1].isalnum() or upper[i - 1] == "_"))
-                    and (end >= len(upper) or not (upper[end].isalnum() or upper[end] == "_"))
-                ):
-                    # multi-word keywords are listed first, so the scanner
-                    # consumes "ON CREATE SET" whole and never re-matches
-                    # its inner SET/MATCH
-                    hits.append((i, kw))
-                    i = end - 1
-                    break
-        i += 1
-    if not hits or hits[0][0] != 0:
-        raise CypherWriteError(
-            "write template must start with MATCH, MERGE, or CREATE"
-        )
-    out = []
-    for n, (pos, kw) in enumerate(hits):
-        end = hits[n + 1][0] if n + 1 < len(hits) else len(q)
-        out.append((kw, q[pos + len(kw):end].strip().rstrip(",")))
-    return out
-
-
-def _split_top_commas(s: str) -> list[str]:
-    parts: list[str] = []
-    depth = 0
-    in_str = False
-    cur: list[str] = []
-    for ch in s:
-        if ch == "'":
-            in_str = not in_str
-        if not in_str:
-            if ch in "([{":
-                depth += 1
-            elif ch in ")]}":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                parts.append("".join(cur).strip())
-                cur = []
-                continue
-        cur.append(ch)
-    tail = "".join(cur).strip()
-    if tail:
-        parts.append(tail)
-    return parts
-
-
-def _parse_props(props: str | None) -> dict[str, str]:
-    """``{k: $p, l: 'lit'}`` body → {prop_name: value_expr_text}."""
-    if not props or not props.strip():
-        return {}
-    out = {}
-    for item in _split_top_commas(props):
-        k, sep, v = item.partition(":")
-        if not sep:
-            raise CypherWriteError(f"bad property map entry: {item!r}")
-        out[_unbt(k.strip())] = v.strip()
-    return out
+)
 
 
 @dataclass
@@ -264,9 +191,20 @@ def _compile_value(expr: str, var: str, prop: str) -> tuple[str, bool]:
 
 
 def parse_write_template(q: str) -> _Template:
-    """Parse a Cypher write template into node/edge/delete statements."""
+    """Parse a Cypher write template into node/edge/delete statements.
+    Every parse error is a :class:`CypherWriteError`, those of the
+    grammar shared with the read side included."""
+    try:
+        return _parse_template(q)
+    except CypherWriteError:
+        raise
+    except ValueError as e:
+        raise CypherWriteError(str(e)) from e
+
+
+def _parse_template(q: str) -> _Template:
     q = re.sub(r"//[^\n]*", "", q).strip().rstrip(";")
-    clauses = _split_write_clauses(q)
+    clauses = [(kw, body.rstrip(",")) for kw, body in _split_clauses(q, _WRITE_CLAUSES)]
     nodes: list[_NodeStmt] = []
     edges: list[_EdgeStmt] = []
     deletes: list[_DeleteStmt] = []
@@ -276,11 +214,11 @@ def parse_write_template(q: str) -> _Template:
     params: set[str] = set(_PARAM.findall(q))
 
     def add_set(items: list[_SetItem], body: str) -> None:
-        for item in _split_top_commas(body):
-            m = _SET_ITEM.match(item.strip())
+        for item in _items(body):
+            m = _SET_ITEM.match(item)
             if not m:
                 raise CypherWriteError(f"unsupported SET item: {item!r}")
-            var, prop = m.group("var"), _unbt(m.group("prop"))
+            var, prop = m.group("var"), _unq(m.group("prop"))
             sql, keep = _compile_value(m.group("expr"), var, m.group("prop"))
             items.append(_SetItem(var, prop, sql, keep))
 
@@ -288,44 +226,49 @@ def parse_write_template(q: str) -> _Template:
         if kw == "OPTIONAL MATCH":
             raise CypherWriteError("OPTIONAL MATCH is read-side; use cypher()")
         if kw in ("MATCH", "MERGE", "CREATE"):
-            em = _EDGE_PAT.match(body)
+            a = _NODE_RE.match(body)
+            em = a and _EDGE_RE.match(body, a.end())
             if em:
+                b = _NODE_RE.fullmatch(body, em.end())
+                if not b or em["eprops"] or any(n["label"] or n["props"] for n in (a, b)):
+                    raise CypherWriteError(
+                        f"unsupported pattern: {body!r} (an edge joins two bound "
+                        "variables: (a)-[r:REL]->(b))"
+                    )
                 if kw == "MATCH":
                     raise CypherWriteError(
                         "MATCH on edge patterns is not supported in write "
                         "templates (bind endpoints with node MATCH/MERGE)"
                     )
-                rev = em.group("larr") == "<-" and em.group("rarr") == "-"
-                fwd = em.group("larr") == "-" and em.group("rarr") == "->"
-                if not (rev or fwd):
-                    raise CypherWriteError(f"undirected edge not supported: {body!r}")
-                a, b = em.group("a"), em.group("b")
-                src, dst = (b, a) if rev else (a, b)
+                if em["vspec"]:
+                    raise CypherWriteError(f"variable-length edge not supported: {body!r}")
+                if bool(em["back"]) == bool(em["fwd"]):
+                    raise CypherWriteError(f"an edge needs one direction: {body!r}")
+                src, dst = (b["var"], a["var"]) if em["back"] else (a["var"], b["var"])
                 for v in (src, dst):
                     if v not in bound:
                         raise CypherWriteError(
                             f"edge endpoint {v!r} is not bound by an earlier "
                             "MATCH/MERGE node clause"
                         )
-                est = _EdgeStmt("merge", em.group("evar"), _unbt(em.group("rel")),
-                                src, dst, seq=seq)
+                est = _EdgeStmt("merge", em["ev"], _unq(em["rel"]), src, dst, seq=seq)
                 edges.append(est)
                 last_entity = est
             else:
-                nm = _NODE_PAT.match(body)
-                if not nm or not nm.group("label"):
+                nm = _NODE_RE.fullmatch(body)
+                if not nm or not nm["label"]:
                     raise CypherWriteError(f"unsupported pattern: {body!r}")
-                var = nm.group("var")
+                var = nm["var"]
                 if var is None:
                     raise CypherWriteError(f"node pattern needs a variable: {body!r}")
-                props = _parse_props(nm.group("props"))
+                props = _parse_map(nm["props"])
                 if kw != "MATCH" and not props:
                     raise CypherWriteError(
                         f"{kw} node pattern needs a merge-key property map: {body!r}"
                     )
                 key_props = {k: _subst_params(v) for k, v in props.items()}
                 nst = _NodeStmt("match" if kw == "MATCH" else "merge",
-                                var, _unbt(nm.group("label")), key_props, seq=seq)
+                                var, _unq(nm["label"]), key_props, seq=seq)
                 nodes.append(nst)
                 bound[var] = nst
                 last_entity = nst
@@ -359,17 +302,14 @@ def parse_write_template(q: str) -> _Template:
             # identity here and stays rejected.
             if last_entity is None:
                 raise CypherWriteError("REMOVE before any MATCH/MERGE")
-            for item in _split_top_commas(body):
-                m = re.match(
-                    r"^(?P<var>\w+)\s*\.\s*(?P<prop>\w+|`[^`]+`)$",
-                    item.strip(),
-                )
+            for item in _items(body):
+                m = re.match(r"^(?P<var>\w+)\s*\.\s*(?P<prop>\w+|`[^`]+`)$", item)
                 if not m:
                     raise CypherWriteError(
                         f"unsupported REMOVE item: {item!r} (only "
                         "var.prop — a label IS the node table here)"
                     )
-                it = _SetItem(m["var"], _unbt(m["prop"]), "NULL", False)
+                it = _SetItem(m["var"], _unq(m["prop"]), "NULL", False)
                 target = bound.get(it.var) or next(
                     (e for e in edges if e.var == it.var), None
                 )
@@ -382,7 +322,7 @@ def parse_write_template(q: str) -> _Template:
                     target.gated_update = True  # type: ignore[attr-defined]
                 target.bare_set.append(it)
         elif kw in ("DELETE", "DETACH DELETE"):
-            vars_ = [v.strip() for v in _split_top_commas(body)]
+            vars_ = _items(body)
             for v in vars_:
                 if v not in bound and not any(e.var == v for e in edges):
                     raise CypherWriteError(f"DELETE of unbound variable {v!r}")
@@ -425,6 +365,8 @@ class GraphStore:
     nodes: dict[str, DataFrame] = field(default_factory=dict)
     node_keys: dict[str, list[str]] = field(default_factory=dict)
     edges: dict[str, DataFrame] = field(default_factory=dict)
+    # (kind, name) -> the table the last compact froze and its handle
+    _frozen: dict = field(default_factory=dict, init=False, repr=False)
 
     def nodes_df(self) -> DataFrame:
         """Unified ``(label, key)`` view (composite keys are
@@ -510,14 +452,28 @@ class GraphStore:
         truncates the lineage that repeated ``execute`` calls grow (call
         between template batches on long pipelines; on a real cluster
         prefer ``save`` to a parquet stage, or set
-        ``SPARK_GRAFT_RELIABLE_FREEZE=1``, for fault tolerance).  The
-        previous tables' blocks are not released here."""
+        ``SPARK_GRAFT_RELIABLE_FREEZE=1``, for fault tolerance).
+
+        A table still frozen by the last compact (no ``execute`` replaced
+        it since) stays as it is.  Once the new tables are frozen, the
+        blocks of the frozen tables they replace are released, so the
+        store holds one frozen copy of each table however many batches
+        it takes; a frame taken from the store before then is unusable
+        afterwards (:class:`order.CheckpointHandle`'s contract)."""
         from graphdb_neo4j_spark.operators.order import checkpoint_eager
 
-        for label, df in self.nodes.items():
-            self.nodes[label] = checkpoint_eager(df)[0]
-        for rel, df in self.edges.items():
-            self.edges[rel] = checkpoint_eager(df)[0]
+        replaced = []
+        for kind, tables in (("node", self.nodes), ("edge", self.edges)):
+            for name, df in tables.items():
+                old = self._frozen.get((kind, name))
+                if old is not None and old[0] is df:
+                    continue
+                tables[name], handle = checkpoint_eager(df)
+                self._frozen[kind, name] = (tables[name], handle)
+                if old is not None:
+                    replaced.append(old[1])
+        for handle in replaced:
+            handle.release()
 
     def save(self, path: str) -> None:
         """Parquet layout mirroring `PropertyGraph.save`: per-label node

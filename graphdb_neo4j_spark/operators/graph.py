@@ -49,28 +49,22 @@ def _unq(name: str | None) -> str | None:
     return name
 
 
-def _parse_varlen(vspec: str | None, pat: str) -> tuple[int, int] | None:
-    """``*lo..hi`` / ``*..hi`` / ``*k`` → (lo, hi); ``None`` for a plain
-    single hop.  Unbounded forms (``*``, ``*2..``) are rejected — an
-    unbounded traversal belongs to :mod:`~graphdb_neo4j_spark.operators.
-    traversal` (iterative BFS), not a join chain."""
+def _parse_varlen(vspec: str | None, pat: str) -> tuple[int, int | None] | None:
+    """``*lo..hi`` / ``*..hi`` / ``*k`` → (lo, hi) and ``*`` / ``*lo..``
+    → (lo, None); ``None`` for a plain single hop.  A join chain needs
+    the upper bound (:class:`_Hop` rejects an unbounded one — open-ended
+    reach belongs to :mod:`~graphdb_neo4j_spark.operators.traversal`'s
+    iterative BFS); Cypher's ``shortestPath`` runs that BFS and takes
+    either."""
     if vspec is None:
         return None
     s = vspec.replace(" ", "")
-    unbounded = ValueError(
-        f"unbounded variable-length hop in {pat!r}: give an upper bound "
-        "(e.g. [REL*1..4]) or use traversal.bfs for open-ended reach"
-    )
-    if s == "":
-        raise unbounded
-    if ".." in s:
-        lo_s, hi_s = s.split("..", 1)
-        if hi_s == "" or ".." in hi_s:
-            raise unbounded
-        lo, hi = (int(lo_s) if lo_s else 1), int(hi_s)
-    else:
-        lo = hi = int(s)
-    if lo < 1 or hi < lo:
+    lo_s, dots, hi_s = s.partition("..")
+    if not dots:  # *k is exactly k hops; a bare * has no bound
+        hi_s = lo_s
+    lo = int(lo_s) if lo_s else 1
+    hi = int(hi_s) if hi_s else None
+    if lo < 1 or (hi is not None and hi < lo):
         raise ValueError(f"bad variable-length bounds in {pat!r}: *{s}")
     return lo, hi
 
@@ -89,6 +83,13 @@ class _Hop:
     ev: str | None = None
     span: tuple[int, int] | None = None  # (lo, hi) of a *lo..hi hop
     undirected: bool = False
+
+    def __post_init__(self):
+        if self.span and self.span[1] is None:
+            raise ValueError(
+                f"unbounded variable-length hop [:{self.rel}*]: give an upper "
+                "bound (e.g. [REL*1..4]) or use traversal.bfs for open-ended reach"
+            )
 
 
 @dataclass

@@ -908,14 +908,16 @@ def betweenness_approx(
     levels, level_handles = [level], [lh]
     seen, sh = checkpoint_eager(level.select("pivot", "key"))
     for _ in range(max_hops):
-        nxt, nh = checkpoint_eager(
+        nxt, got = _observing(
             level.join(e, level["key"] == e["src"])
             .groupBy("pivot", F.col("dst").alias("k2"))
             .agg(F.sum("sigma").alias("sigma"))
             .select("pivot", F.col("k2").alias("key"), "sigma")
-            .join(seen, ["pivot", "key"], "left_anti")
+            .join(seen, ["pivot", "key"], "left_anti"),
+            n=F.count(F.lit(1)),
         )
-        if nxt.isEmpty():
+        nxt, nh = checkpoint_eager(nxt)
+        if got.get["n"] == 0:
             nh.release()
             break
         levels.append(nxt)
@@ -2105,7 +2107,7 @@ def hyperball(
             F.col("bucket").alias("s_bucket"),
             F.col("reg").alias("old"),
         )
-        improved, ih = checkpoint_eager(
+        improved, got = _observing(
             cand.join(
                 old,
                 (cand["key"] == old["s_key"])
@@ -2113,9 +2115,11 @@ def hyperball(
                 "left",
             )
             .filter(F.col("old").isNull() | (F.col("reg") > F.col("old")))
-            .select("key", "bucket", "reg")
+            .select("key", "bucket", "reg"),
+            n=F.count(F.lit(1)),
         )
-        if improved.isEmpty():
+        improved, ih = checkpoint_eager(improved)
+        if got.get["n"] == 0:
             ih.release()
             break
         state, sh = _step(
@@ -2956,13 +2960,15 @@ def louvain(
             .join(asg.select(F.col("v").alias("dst"), F.col("c").alias("cd")), "dst")
             .select("cs", "cd", "w")
         )
-        # the metadata-visible layout every local-moving round joins on
-        new_und = partitioned_cache(
+        # the metadata-visible layout every local-moving round joins on;
+        # its edge count rides the cache's own count job
+        new_und, got = _observing(
             proj.filter(F.col("cs") != F.col("cd"))
             .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
             .agg(F.sum("w").cast("bigint").alias("w")),
-            "dst",
+            n=F.count(F.lit(1)),
         )
+        new_und = partitioned_cache(new_und, "dst")
         intra = (
             proj.filter(F.col("cs") == F.col("cd"))
             .groupBy(F.col("cs").alias("v"))
@@ -2987,7 +2993,7 @@ def louvain(
         # materialized — the previous level's cache can go
         und.unpersist()
         und = new_und
-        if und.isEmpty():
+        if got.get["n"] == 0:
             break
     und.unpersist()
     _release(lh)

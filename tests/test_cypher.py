@@ -931,3 +931,49 @@ def test_statement_keeps_the_callers_cached_tables(spark):
     finally:
         for t in (nodes, edges, process):
             t.unpersist()
+
+
+def test_keyword_like_names_are_not_clause_boundaries(gq):
+    """A keyword inside a longer name (``n_match``, ``has_limit``,
+    ``n_skip``, ``x_union``) is part of the name: clause and UNION
+    splitting need a non-word character on both sides."""
+    rows = cypher(
+        gq,
+        "MATCH (a:Process)-[:SPAWNS]->(b:Process) WITH a, count(b) AS n_match "
+        "RETURN a AS has_limit, n_match AS n_skip ORDER BY has_limit",
+    ).collect()
+    assert [(r.has_limit, r.n_skip) for r in rows] == [("a", 2), ("b", 1)]
+    rows = cypher(
+        gq,
+        "MATCH (a:Process {key: 'a'}) RETURN a AS x_union "
+        "UNION MATCH (a:Process {key: 'b'}) RETURN a AS x_union",
+    ).collect()
+    assert sorted(r.x_union for r in rows) == ["a", "b"]
+
+
+def test_double_quoted_literal_holding_a_comma(spark, gq):
+    props = {"Process": spark.createDataFrame(
+        [("a", "y, z.exe"), ("b", "y")], ["key", "image"]
+    )}
+    rows = cypher(
+        gq, 'MATCH (p:Process {image: "y, z.exe"}) RETURN p', props=props
+    ).collect()
+    assert [r.p for r in rows] == ["a"]
+    rows = cypher(
+        gq, "MATCH (p:Process) WHERE p.image = \"y, z.exe\" OR p.image = 'y' "
+        "RETURN p ORDER BY p", props=props,
+    ).collect()
+    assert [r.p for r in rows] == ["a", "b"]
+
+
+def test_where_property_named_like_or_next_to_exists(gq, props):
+    """``color_or`` is a property name, not a top-level OR, so the
+    EXISTS beside it stays a top-level AND conjunct."""
+    p = {"Process": props["Process"].withColumn(
+        "color_or", F.when(F.col("key") == "c", "red")
+    )}
+    q = ("MATCH (a:Process)-[:SPAWNS]->(b:Process) WHERE b.{} = '{}' "
+         "AND EXISTS {{ (b)-[:CREATED_FILE]->(f:File) }} RETURN b")
+    for prop, value in (("image", "powershell.exe"), ("color_or", "red")):
+        rows = cypher(gq, q.format(prop, value), props=p).collect()
+        assert [r.b for r in rows] == ["c"], prop

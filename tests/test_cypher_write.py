@@ -598,3 +598,97 @@ def test_delete_suppressed_by_earlier_failing_match(spark, writer):
         spark.createDataFrame([("GHOST", "a1")], "b string, a string"),
     )
     assert rows(writer.store.nodes["A"], "k") == [("a1",)]
+
+
+# ---------------------------------------------------------------------------
+# the grammar shared with the read side
+# ---------------------------------------------------------------------------
+
+
+def test_literal_merge_keys_hold_braces_and_commas(spark, writer):
+    writer.execute("MERGE (p:Process {key: '{a-1}'}) SET p.image = 'x.exe'")
+    writer.execute('MERGE (p:Process {key: "a,b"}) SET p.image = "y, z.exe"')
+    assert rows(writer.store.nodes["Process"], "key", "image") == [
+        ("a,b", "y, z.exe"), ("{a-1}", "x.exe")
+    ]
+
+
+def test_keyword_named_map_key_and_set_property(spark, writer):
+    """``match`` inside a map and ``delete`` after ``.`` are names, not
+    clause keywords."""
+    p = spark.createDataFrame([(1, "A")], "seq int, k string")
+    writer.execute("MERGE (n:N {match: $k}) SET n.delete = 1", p, order=["seq"])
+    assert writer.store.node_keys["N"] == ["match"]
+    assert rows(writer.store.nodes["N"], "match", "delete") == [("A", 1)]
+
+
+def test_shared_grammar_errors_are_write_errors():
+    with pytest.raises(CypherWriteError, match="bad property map entry"):
+        parse_write_template("MERGE (n:N {k}) SET n.v = 1")
+    with pytest.raises(CypherWriteError, match="clause keyword"):
+        parse_write_template("(n:N {k: 1})")
+    for bad in ("MERGE (a:A {k: 1}) MERGE (b:B {k: 2}) MERGE (a)-[:R*1..2]->(b)",
+                "MERGE (a:A {k: 1}) MERGE (b:B {k: 2}) MERGE (a)-[:R]-(b)",
+                "MERGE (a:A {k: 1}) MERGE (b:B {k: 2}) MERGE (a)-[:R]->(b:B)",
+                "MERGE (:A {k: 1})", "MERGE (a {k: 1})", "MERGE (a:A)"):
+        with pytest.raises(CypherWriteError):
+            parse_write_template(bad)
+
+
+def test_one_scanner_keeps_quote_and_bracket_state():
+    """Of the Cypher read and write parsers, only the shared scanner
+    compares characters against quotes or brackets; every splitter is
+    built on it."""
+    import ast
+    import inspect
+
+    from graphdb_neo4j_spark.operators import cypher, cypher_write
+
+    marks = set("'\"()[]{}")
+    stateful = set()
+    for mod in (cypher, cypher_write):
+        for fn in ast.walk(ast.parse(inspect.getsource(mod))):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Compare) and any(
+                    isinstance(c, ast.Constant) and isinstance(c.value, str)
+                    and set(c.value) & marks and set(c.value) <= marks | {"`"}
+                    for c in [node.left, *node.comparators]
+                ):
+                    stateful.add(fn.name)
+    assert stateful == {"_scan"}
+
+
+def test_compact_releases_the_tables_it_replaces(spark, writer):
+    """Each compact releases the frozen tables an execute replaced since
+    the last one: 2 and 8 rounds of execute + compact hold the same
+    persisted RDDs, and a compact with nothing replaced keeps its
+    tables."""
+    def persistent_ids() -> set[int]:
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keySet().iterator()
+        ids = set()
+        while it.hasNext():
+            ids.add(it.next())
+        return ids
+
+    # compare ID sets, not counts: the ContextCleaner may release an
+    # earlier test's blocks mid-test
+    before = persistent_ids()
+    held = []
+    for n in range(1, 9):
+        p = spark.createDataFrame([(n, f"k{n % 3}", n)], "seq int, k string, v int")
+        writer.execute(
+            "MERGE (a:N {key: $k}) SET a.v = $v MERGE (r:Root {key: 'root'}) "
+            "MERGE (r)-[:R]->(a)", p, order=["seq"],
+        )
+        writer.store.compact()
+        held.append(len(persistent_ids() - before))
+    assert held[1] == held[7] == 3, held
+    frozen = dict(writer.store.nodes)
+    writer.store.compact()
+    assert writer.store.nodes["N"] is frozen["N"]
+    assert rows(writer.store.nodes["N"], "key", "v") == [("k0", 6), ("k1", 7), ("k2", 8)]
+    assert rows(writer.store.edges["R"], "src", "dst") == [
+        ("root", "k0"), ("root", "k1"), ("root", "k2")
+    ]

@@ -2258,3 +2258,40 @@ def test_peeling_kernels_run_only_their_round_freezes(spark):
     }.items():
         _, kinds = _job_kinds(spark, run)
         assert set(kinds) == {"localCheckpoint"}, (name, kinds)
+
+
+def test_round_loops_start_no_emptiness_probe(spark, monkeypatch):
+    """betweenness_approx and hyperball read each round's emptiness from
+    an Observation on the frame the round freezes, and louvain each
+    level's from the count job its edge cache already runs: none of
+    them starts an ``isEmpty`` job."""
+    from pyspark.sql import DataFrame
+
+    from graphdb_neo4j_spark.operators.traversal import (
+        betweenness_approx,
+        hyperball,
+        louvain,
+    )
+
+    e = [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("d", "e"), ("e", "f"),
+         ("d", "f")]
+    g = spark.createDataFrame(e, ["src", "dst"])
+    nodes = g.select(F.col("src").alias("key")).union(
+        g.select(F.col("dst").alias("key"))
+    ).distinct()
+    for name, run, want in (
+        ("betweenness", lambda: betweenness_approx(nodes, g, n_samples=3),
+         {"localCheckpoint", "collect"}),
+        ("hyperball", lambda: hyperball(g, max_iters=4), {"localCheckpoint", "head"}),
+    ):
+        _, kinds = _job_kinds(spark, run)
+        assert set(kinds) == want, (name, kinds)
+    # louvain also starts asynchronous jobs whose names carry no action,
+    # so its probes are counted at the call instead
+    probes = []
+    is_empty = DataFrame.isEmpty
+    monkeypatch.setattr(
+        DataFrame, "isEmpty", lambda df: probes.append(df) or is_empty(df)
+    )
+    louvain(g)
+    assert probes == []
